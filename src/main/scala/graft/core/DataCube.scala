@@ -66,7 +66,6 @@ final case class CubeMetadata(
   */
 final case class DataCube(df: DataFrame, meta: CubeMetadata) {
   def value: Column = col(meta.valueCol)
-  def dimCols: Seq[Column] = meta.dimNames.map(col)
   /** All dimension columns except `dim` — the groupBy set when reducing over
     * `dim` (reference reduce semantics: cubes/reduce.py:13-46).
     */

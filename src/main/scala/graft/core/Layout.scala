@@ -45,10 +45,6 @@ object Layout {
       SaltedAgg(alias, sum(c), sum)
     def countAll(alias: String): SaltedAgg =
       SaltedAgg(alias, count(lit(1)), sum)
-    def minOf(c: Column, alias: String): SaltedAgg =
-      SaltedAgg(alias, min(c), min)
-    def maxOf(c: Column, alias: String): SaltedAgg =
-      SaltedAgg(alias, max(c), max)
   }
 
   /** Two-stage salted groupBy: rows of one key spread across `salt`

@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level optimizer tuning applied at every table load.
+/** Session-level optimizer tuning applied at every table load: the
+  * `InferFiltersFromGenerate` exclusion, the engine's optimizer rules, and
+  * defaults for native confs the caller has not set.
   *
   * `InferFiltersFromGenerate` clones the generator's child expression into a
   * `size(e) > 0` filter; predicate pushdown then sinks that clone below the
@@ -19,104 +21,44 @@ object SparkTuning {
   private val excluded =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  private val defaults = Seq(
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   def tune(spark: SparkSession): Unit = {
     val key = "spark.sql.optimizer.excludedRules"
     val cur = spark.conf.getOption(key).getOrElse("")
     if (!cur.contains(excluded)) {
       spark.conf.set(key, if (cur.isEmpty) excluded else s"$cur,$excluded")
     }
-    // Keep AQE's post-shuffle coalescing from serializing compute-heavy,
-    // tiny-byte stages. With parallelismFirst (the default) the coalescer
-    // targets max(totalBytes / defaultParallelism, minPartitionSize), so
-    // any stage under cores × 1 MB total collapses toward ONE task — and a
-    // stage whose rows are few but whose per-row compute is heavy
-    // (candidate-pair verification over shingle-set arrays, band tables)
-    // serializes: fuzzy_join's verify stage ran 3.0 s on 1 task at cpus=8
-    // over a 0.5 MB shuffle read; 64k keeps it at 8 tasks / 0.32 s.
-    // Scale-safe by the same formula: the floor only matters when
-    // totalBytes < cores × 1 MB — metadata-sized stages on a real cluster,
-    // where a few extra tiny tasks cost scheduling milliseconds. (The
-    // deprecated minPartitionNum knob is NOT read by the 4.1 coalescer —
-    // measured no-op.) `spark.graft.aqe.minPartitionSize` overrides the
-    // value; "default" leaves Spark's own setting untouched. NOTE: the
-    // native conf is otherwise overwritten on every tune() — a user who
-    // sets spark.sql.adaptive.coalescePartitions.minPartitionSize
-    // directly gets clobbered; the graft conf is the one escape hatch
-    // (r19 advisory, documented trade-off: tune() must win by default or
-    // a stray session default silently re-serializes the verify stages).
-    // Drop the codegen-stage id from generated class names so structurally
-    // identical stages (across queries, reps, and AQE re-plans) hash to the
-    // SAME source text and hit the compiled-class cache instead of paying a
-    // fresh Janino compile per stage id. The id exists only to label class
-    // names for profilers (SPARK-23032); execution is byte-identical.
-    // Pairs with the enlarged static codegen cache set in build.sbt
+    // Engine defaults for two native confs, each set only when the caller
+    // has not set it: a caller-set value is always respected.
+    //
+    // minPartitionSize=64k keeps AQE's post-shuffle coalescing from
+    // serializing compute-heavy, tiny-byte stages. With parallelismFirst
+    // (the default) the coalescer targets max(totalBytes /
+    // defaultParallelism, minPartitionSize), so any stage under cores × 1 MB
+    // total collapses toward ONE task — and a stage whose rows are few but
+    // whose per-row compute is heavy (candidate-pair verification over
+    // shingle-set arrays, band tables) serializes: fuzzy_join's verify
+    // stage ran 3.0 s on 1 task at cpus=8 over a 0.5 MB shuffle read; 64k
+    // keeps it at 8 tasks / 0.32 s. Scale-safe by the same formula: the
+    // floor only matters when totalBytes < cores × 1 MB — metadata-sized
+    // stages on a real cluster, where a few extra tiny tasks cost
+    // scheduling milliseconds. (The deprecated minPartitionNum knob is NOT
+    // read by the 4.1 coalescer — measured no-op.)
+    //
+    // useIdInClassName=false drops the codegen-stage id from generated
+    // class names so structurally identical stages (across queries, reps,
+    // and AQE re-plans) hash to the SAME source text and hit the
+    // compiled-class cache instead of paying a fresh Janino compile per
+    // stage id. The id exists only to label class names for profilers
+    // (SPARK-23032); execution is byte-identical. Pairs with the enlarged
+    // static codegen cache set in build.sbt
     // (spark.sql.codegen.cache.maxEntries) — see the comment there for the
     // measured compile-lock contention this removes.
-    // `spark.graft.codegen.useIdInClassName` overrides; "default" leaves
-    // Spark's own setting untouched (the minPartitionSize escape-hatch
-    // pattern below).
-    spark.conf.getOption("spark.graft.codegen.useIdInClassName")
-      .getOrElse("false") match {
-      case "default" => ()
-      case v => spark.conf.set("spark.sql.codegen.useIdInClassName", v)
-    }
-    val minPS = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    spark.conf.getOption("spark.graft.aqe.minPartitionSize")
-      .getOrElse("64k") match {
-      case "default" => ()
-      case v => spark.conf.set(minPS, v)
-    }
-    // engine-native codegen'd functions (see graft.functions.DotProduct)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => graft.functions.DotProduct(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_probe",
-      exprs => graft.functions.BloomProbe(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition",
-      exprs => graft.functions.RepetitionStats(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => exprs match {
-        case Seq(text, org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _)) =>
-          graft.functions.Shingles(text, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_shingles(text, n) requires a literal int n")
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_bits",
-      exprs => graft.functions.SimhashBits(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe",
-      exprs => graft.functions.BpeEncode(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_trigram_score",
-      exprs => graft.functions.TrigramScore(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dsir_units",
-      exprs => graft.functions.DsirUnits(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_html_extract",
-      exprs => graft.functions.HtmlExtract(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => exprs match {
-        case Seq(text, org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _)) =>
-          graft.functions.Shingles(text, n, distinct = false)
-        case _ => throw new IllegalArgumentException(
-          "graft_ngrams(text, n) requires a literal int n")
-      },
-      "built-in")
+    for ((k, v) <- defaults if !spark.sessionState.conf.contains(k))
+      spark.conf.set(k, v)
     // engine-native optimizer rules (see graft.plans.NanosPredicatePushdown)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.NanosPredicatePushdown)) {

@@ -81,9 +81,6 @@ object ArrayFns {
       .otherwise(raise_error(lit("ArrayElementNotAvailable: the array " +
         "has no element with the specified label")))
 
-  /** reference: arrays.py:189-225. */
-  def arrayConcat(a1: Column, a2: Column): Column = concat(a1, a2)
-
   /** reference: arrays.py:228-265. */
   def arrayAppend(arr: Column, value: Column): Column = concat(arr, array(value))
 

@@ -26,8 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * anti-join prefilters need this hand-built form.
   *
   * First argument: the serialized sketch (`BloomFilter.writeTo` bytes) as
-  * a foldable binary literal. Registered under the SQL name
-  * `graft_bloom_probe` by [[graft.core.SparkTuning]].
+  * a foldable binary literal.
   */
 case class BloomProbe(left: Expression, right: Expression)
     extends BinaryExpression {

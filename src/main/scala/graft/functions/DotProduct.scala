@@ -16,8 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * accumulation, so results stay bit-identical to the DuckDB oracle's
   * `list_reduce` and to the previous HOF implementation.
   *
-  * Registered under the SQL name `graft_dot` by [[graft.core.SparkTuning]];
-  * use via `Similarity.dot`.
+  * Use via `Similarity.dot`.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

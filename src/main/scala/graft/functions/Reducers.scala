@@ -132,7 +132,6 @@ object Reducers {
     */
   def countValid(v: Column): Column = count(v)
   def countAll(): Column = count(lit(1))
-  def countWhere(pred: Column): Column = count(when(pred, 1))
 
   /** 3-valued any/all over boolean-ish values (reference: logic.py:58-87). */
   def anyR(v: Column, ignoreNodata: Boolean = true): Column = {

@@ -71,13 +71,6 @@ object Geo {
     (ring.map(_._1).min, ring.map(_._1).max,
       ring.map(_._2).min, ring.map(_._2).max)
 
-  /** Envelope-overlap test between a ring's bbox and a query bbox. */
-  def envelopeIntersects(ring: Ring, west: Double, east: Double,
-      south: Double, north: Double): Boolean = {
-    val (w, e, s, n) = envelope(ring)
-    e >= west && w <= east && n >= south && s <= north
-  }
-
   // ---- CRS transforms (public formulas; the reference delegates to pyproj,
   // cubes/_filter.py:284-320) ----
 

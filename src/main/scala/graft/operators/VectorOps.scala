@@ -214,15 +214,6 @@ object VectorOps {
     points.unionByName(polys)
   }
 
-  /** vector_reproject EPSG:4326 → EPSG:3857 over every vertex
-    * (reference: cubes/geometries.py:149-170). Vertex-wise Column
-    * arithmetic; metadata CRS update is the caller's.
-    */
-  def reprojectToMercator(df: DataFrame, geomCol: String): DataFrame =
-    df.withColumn(geomCol, transform(col(geomCol), p =>
-      struct(Geo.lonToMercatorX(p.getField("x")).as("x"),
-        Geo.latToMercatorY(p.getField("y")).as("y"))))
-
   /** vector_reproject EPSG:4326 → EPSG:326xx/327xx (UTM zone) over every
     * vertex — the Snyder series in [[Geo.utmForward]] as a deterministic
     * scalar UDF (the transcendental series is too large to unroll as a

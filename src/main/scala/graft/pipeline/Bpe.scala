@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Byte-pair-encoding tokenizer TRAINING and ENCODING over a corpus — the
   * classic merge-learning algorithm (Sennrich et al. 2016, "Neural Machine
@@ -137,8 +138,9 @@ object Bpe {
     * [[graft.functions.BpeEncode]] expression; zero shuffles.
     */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
-    call_function("graft_bpe", text.cast("string"),
-      typedLit(merges.map(p => Seq(p._1, p._2))))
+    ColumnBridge.column(graft.functions.BpeEncode(
+      ColumnBridge.expression(text.cast("string")),
+      ColumnBridge.expression(typedLit(merges.map(p => Seq(p._1, p._2))))))
 
   /** Piece count per document under the given merges. */
   def pieceCount(text: Column, merges: Seq[(String, String)]): Column =

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.core.Joins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Deduplication operators for training-data pipelines, each designed
   * around the join/shuffle structure that survives 100 TB:
@@ -60,20 +61,28 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     val keyed = newDocs.withColumn("_k", key.cast("string"))
     val bloom = keyed.stat.bloomFilter("_k", expectedNewKeys, fpp)
-    val blmBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    }
     // codegen'd probe (graft.functions.BloomProbe): the sketch rides the
     // generated class as a reference object, the key's UTF-8 bytes are
     // hashed without a per-row String, and the filter stays inside the
     // scan's whole-stage-codegen span (a UDF here broke the span AND
     // forced the key expression to evaluate three times)
     val corpusHits = corpus.select(key.cast("string").as("_k"))
-      .filter(call_function("graft_bloom_probe", lit(blmBytes), col("_k")))
+      .filter(bloomProbe(bloom, col("_k")))
       .distinct()
     keyed.join(corpusHits, Seq("_k"), "left_anti").drop("_k")
+  }
+
+  /** Membership of a string `key` in `bloom` as the codegen'd
+    * [[graft.functions.BloomProbe]], the sketch serialized into a binary
+    * literal.
+    */
+  private def bloomProbe(bloom: org.apache.spark.util.sketch.BloomFilter,
+      key: Column): Column = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bos)
+    ColumnBridge.column(graft.functions.BloomProbe(
+      ColumnBridge.expression(lit(bos.toByteArray)),
+      ColumnBridge.expression(key)))
   }
 
   /** Standing MinHash-LSH corpus index for INCREMENTAL near-dup probes —
@@ -152,15 +161,10 @@ object Dedup {
     // materializes here, into its own cache)
     val keyed = sBands.select(concat_ws(":", col("band"), col("bkey")).as("_bk"))
     val bloom = keyed.stat.bloomFilter("_bk", expectedShardBands, fpp)
-    val blmBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    }
     // the corpus band scan, runtime-filtered by the broadcast bloom —
     // the codegen'd probe stays inside the scan's whole-stage span
-    val cBandHits = index.bands.filter(call_function("graft_bloom_probe",
-      lit(blmBytes), concat_ws(":", col("band"), col("bkey"))))
+    val cBandHits = index.bands.filter(
+      bloomProbe(bloom, concat_ws(":", col("band"), col("bkey"))))
     val pairs = sBands.select(col("band"), col("bkey"), col(idCol).as("id_new"))
       .join(cBandHits.select(col("band"), col("bkey"),
         col(idCol).as("id_corpus")), Seq("band", "bkey"))
@@ -255,25 +259,26 @@ object Dedup {
 
   /** Distinct word n-gram shingles per document as one array column —
     * the one-pass [[graft.functions.Shingles]] expression (identical
-    * semantics to [[shinglesHof]], property-spec-pinned). Requires
-    * `graft.core.SparkTuning.tune(session)` to have registered
-    * `graft_shingles` (every `Tables` load path does).
+    * semantics to [[shinglesHof]], property-spec-pinned).
     */
   def shingleArray(text: Column, n: Int): Column =
-    call_function("graft_shingles", text.cast("string"), lit(n))
+    ColumnBridge.column(graft.functions.Shingles(
+      ColumnBridge.expression(text.cast("string")), n))
 
   /** Word n-grams with multiplicity PRESERVED (no distinct) — the feature
     * form frequency-based consumers (DSIR importance weighting) need.
     * Same one-pass expression, `distinct = false`.
     */
   def ngramArray(text: Column, n: Int): Column =
-    call_function("graft_ngrams", text.cast("string"), lit(n))
+    ColumnBridge.column(graft.functions.Shingles(
+      ColumnBridge.expression(text.cast("string")), n, distinct = false))
 
   /** The 64 signed SimHash bits of a token (±1, MSB-first md5 bits) — the
     * one-pass [[graft.functions.SimhashBits]] expression.
     */
   def simhashBitArray(tok: Column): Column =
-    call_function("graft_simhash_bits", tok.cast("string"))
+    ColumnBridge.column(graft.functions.SimhashBits(
+      ColumnBridge.expression(tok.cast("string"))))
 
   /** Reference hex-nibble column formula for [[simhashBitArray]]
     * (interpreted; specs pin the expression against it — and it is the
@@ -356,12 +361,6 @@ object Dedup {
       min((lit(as_(i)) * col("h") + lit(bs(i))) % lit(MinhashP)).as(s"_m$i")
     joined.groupBy(col(idCol)).agg(minCols.head, minCols.tail: _*)
   }
-
-  def minhashSignatures(sh: DataFrame, idCol: String, k: Int): DataFrame =
-    minhashSignaturesWide(sh, idCol, k)
-      .select(col(idCol), posexplode(array((0 until k).map(i =>
-        struct(lit(i).as("i"), col(s"_m$i").as("sig"))): _*)).as(Seq("_p", "sl")))
-      .select(col(idCol), col("sl.i").as("i"), col("sl.sig").as("sig"))
 
   /** Band keys straight off the wide signature row — k/rowsPerBand codegen'd
     * md5 projections and one explode, no regroup of exploded signature rows

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.core.Joins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** DSIR-style importance weighting for data selection (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling" — public):
@@ -86,17 +87,20 @@ object Importance {
     * `score_units` — integer sums are summation-order-free, and every
     * gram's bucket is in the census by construction (the census scanned
     * the same corpus). Docs with no grams (null/short text) score 0L.
-    * Requires `graft.core.SparkTuning.tune` to have registered
-    * `graft_dsir_units` (every `Tables` load path does).
     */
   def dsirUnitsColumn(df: DataFrame, text: Column, isTarget: Column,
-      buckets: Int = 512, scale: Long = 1000000L): Column = {
-    val lrMap = censusWeights(df, text, isTarget, buckets, scale)
-    coalesce(
-      call_function("graft_dsir_units", text.cast("string"),
-        typedLit(lrMap), lit(buckets)),
-      lit(0L))
-  }
+      buckets: Int = 512, scale: Long = 1000000L): Column =
+    dsirUnits(text, censusWeights(df, text, isTarget, buckets, scale), buckets)
+
+  /** Σ lr_units[bucket(gram)] over `text`'s grams via the codegen'd
+    * [[graft.functions.DsirUnits]] expression, 0L for docs with no grams.
+    */
+  private def dsirUnits(text: Column, lrMap: Map[Long, Long],
+      buckets: Int): Column =
+    coalesce(ColumnBridge.column(graft.functions.DsirUnits(
+      ColumnBridge.expression(text.cast("string")),
+      ColumnBridge.expression(typedLit(lrMap)),
+      ColumnBridge.expression(lit(buckets)))), lit(0L))
 
   /** Reference HOF form of [[dsirUnitsColumn]] (interpreted per gram;
     * specs pin the expression's bit-identity against it — and it is the
@@ -134,11 +138,8 @@ object Importance {
     // Spark double arithmetic exactly, so scores are bit-identical to the
     // historical explode → map-lookup → groupBy → join form.
     val _ = cacheGrams
-    val lrMap = censusWeights(df, text, isTarget, buckets, scale)
-    val units = coalesce(
-      call_function("graft_dsir_units", text.cast("string"),
-        typedLit(lrMap), lit(buckets)),
-      lit(0L))
+    val units =
+      dsirUnits(text, censusWeights(df, text, isTarget, buckets, scale), buckets)
     df.select(col(idCol), units.as("score_units"))
       .withColumn("score", round(col("score_units") / scale.toDouble, 6))
       .withColumn("keep", (col("score_units") > 0L).cast("int"))

@@ -92,8 +92,7 @@ object LanguageModel {
         math.floor(StrictMath.log(1.0 / denom) * scale + 0.5).toLong
       // scan-speed scoring: the model rides in the plan (literal) or as a
       // broadcast handle (large models); both expressions are built
-      // DIRECTLY — no dependency on SparkTuning.tune's function registry,
-      // so the library API works on an untuned session. NULL text
+      // directly, so the library API works on an untuned session. NULL text
       // coalesces to "" so the doc scores (0, 0, 0.0) exactly like the
       // relational path (whose explode yields no rows + na.fill)
       import org.apache.spark.sql.graftbridge.ColumnBridge

@@ -125,20 +125,16 @@ object LinkGraph {
     // broadcast joins — so adaptive re-planning has nothing to adapt,
     // while its per-exchange query-stage scheduling charges one driver
     // job per shuffle per action (~45 jobs/invocation at k≈5 measured by
-    // Profile; interleaved A/B with AQE off: 1.36× at 32c/sf0.1, 1.56×
+    // Profile; interleaved A/B with AQE off: 1.20× at 32c/sf0.1, 1.56×
     // at 8c, 1.32× at 32c/sf1 — consistent across core counts and SFs
     // because the overhead is per-stage, not per-byte). Results are
     // execution-identical (AQE never changes query semantics).
-    // `spark.graft.pagerank.aqe=on` restores adaptive execution for
-    // graphs whose NODE set is itself exchange-heavy (≫ GBs of ranks).
     // The audit path (materialize = false) runs no actions here and the
     // session conf is left untouched for it.
     val sess = edges.sparkSession
     val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeScopedOff = materialize &&
-      sess.conf.getOption("spark.graft.pagerank.aqe").forall(_ != "on")
     val aqeSaved = sess.conf.getOption(aqeKey)
-    if (aqeScopedOff) sess.conf.set(aqeKey, "false")
+    if (materialize) sess.conf.set(aqeKey, "false")
     try {
     // project away extra payload columns so they can't collide with the
     // internal helper names (_n/_deg/_c/_in/node/rank_units)
@@ -231,7 +227,7 @@ object LinkGraph {
       // restore the caller's AQE state whatever happened above — the
       // scope must not leak into the session (the materialized result is
       // a checkpoint scan; nothing downstream re-plans this dataflow)
-      if (aqeScopedOff) aqeSaved match {
+      if (materialize) aqeSaved match {
         case Some(v) => sess.conf.set(aqeKey, v)
         case None    => sess.conf.unset(aqeKey)
       }

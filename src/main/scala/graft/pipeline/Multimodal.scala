@@ -76,15 +76,6 @@ object Multimodal {
     extractFeatures(ds).toDF()
   }
 
-  /** Stub resize: real implementation would decode, scale, re-encode inside
-    * mapPartitions; the stub proves the schema contract (binary in →
-    * binary out + updated metadata).
-    */
-  def resizeStub(blobs: Dataset[Blob], maxDim: Int): Dataset[Blob] = {
-    implicit val enc = Encoders.product[Blob]
-    blobs.mapPartitions(_.map(b => b.copy(blob = b.blob.take(maxDim * maxDim))))
-  }
-
   /** Decoded image metadata + channel statistics. `ok=false` rows carry
     * the blobs no installed codec recognises (kept, not dropped — a
     * pipeline filters or routes them explicitly).

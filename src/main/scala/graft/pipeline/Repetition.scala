@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.expressions.Window
 
 /** Repetition-based quality filters for training corpora — the standard
@@ -54,12 +55,10 @@ object Repetition {
     * ~50× cheaper: the HOF folds are interpreted per array element and each
     * re-tokenizes + re-sorts the doc. Prefer this in corpus-scale filters;
     * the HOF forms remain for arbitrary n and as the semantic reference.
-    *
-    * Requires `graft.core.SparkTuning.tune(session)` (every `Tables` load
-    * path calls it) to have registered `graft_repetition`.
     */
   def stats(text: Column): Column =
-    call_function("graft_repetition", text.cast("string"))
+    ColumnBridge.column(graft.functions.RepetitionStats(
+      ColumnBridge.expression(text.cast("string"))))
 
   // ---- scan-speed form: run-length fold over the sorted gram array ----
 

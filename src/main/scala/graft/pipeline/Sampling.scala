@@ -114,15 +114,11 @@ object Sampling {
     // probe populates the cache, the collect and the final plan read it,
     // and Caching.scoped hands back an eagerly-materialized result that
     // releases the cache without leaking it into the caller's session.
-    // `cacheBase = false` — or `spark.graft.pack.cache=off`, the session
-    // form plan audits use on registry entries that can't thread the
-    // flag — restores the fully lazy chain.
-    val useCache = cacheBase && !df.sparkSession.conf
-      .getOption("spark.graft.pack.cache").contains("off")
+    // `cacheBase = false` restores the fully lazy chain.
     val base0 = df.select(col(idCol).cast("long").as("_id"),
       tok.cast("long").as("n_tok"))
     val base =
-      if (useCache)
+      if (cacheBase)
         base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else base0
     val maxRow = base.agg(max(col("_id"))).first()
@@ -132,7 +128,7 @@ object Sampling {
     if (maxRow.isNullAt(0)) {
       val empty = base.select(col("_id").as(idCol), col("n_tok"),
         lit(0L).as("bin"), lit(0L).as("offset_in_bin"))
-      return if (useCache) graft.core.Caching.scoped(empty, base) else empty
+      return if (cacheBase) graft.core.Caching.scoped(empty, base) else empty
     }
     val maxId = maxRow.getLong(0)
     val span = maxId / nBuckets + 1
@@ -152,7 +148,7 @@ object Sampling {
     val out = withB.join(broadcast(offDf), "_b")
       .select(col("_id").as(idCol), col("n_tok"), bin.as("bin"),
         (start - bin * budget).as("offset_in_bin"))
-    if (useCache) graft.core.Caching.scoped(out, base) else out
+    if (cacheBase) graft.core.Caching.scoped(out, base) else out
   }
 
   /** EXACT per-stratum quota: ⌈frac·n⌉ rows of every stratum, chosen by

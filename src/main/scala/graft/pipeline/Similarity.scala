@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -22,15 +23,11 @@ object Similarity {
   /** Σ aᵢ·bᵢ in double, left-to-right — the codegen'd DotProduct expression.
     * Bit-identical to the interpreted HOF fold in [[dotHof]], ~6× faster on
     * pairwise workloads.
-    *
-    * Requires `graft.core.SparkTuning.tune(session)` to have registered the
-    * function — every `Tables` load path does; standalone sessions call it
-    * once at setup. (Registration is deliberately NOT triggered from here:
-    * mutating session state while building an expression is a side effect
-    * nobody expects of a Column factory.)
     */
   def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a.cast("array<double>"), b.cast("array<double>"))
+    ColumnBridge.column(graft.functions.DotProduct(
+      ColumnBridge.expression(a.cast("array<double>")),
+      ColumnBridge.expression(b.cast("array<double>"))))
 
   /** Reference HOF implementation of [[dot]] (interpreted; used by tests to
     * pin the codegen path's semantics).
@@ -333,20 +330,6 @@ object Similarity {
   /** Reconstruction from codes: qᵢ·scale. */
   def int8Dequantize(codes: Column, scale: Column): Column =
     transform(codes, q => q.cast("double") * scale)
-
-  /** Exact all-pairs near-dups within explicit blocks (a < b, cos ≥ t) —
-    * kept as the semantic-blocking baseline; use [[ivfNearDups]] when blocks
-    * grow with the corpus.
-    */
-  def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double): DataFrame = {
-    val a = df.select(col(blockCol), col(idCol).as("id_a"), col(vecCol).as("va"))
-    val b = df.select(col(blockCol), col(idCol).as("id_b"), col(vecCol).as("vb"))
-    a.join(b, Seq(blockCol)).filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(cosine(col("va"), col("vb")), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
-  }
 
   /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication" —

@@ -28,12 +28,6 @@ object TextAnalysis {
       size(regexp_extract_all(lower(text), lit("[0-9]+"), lit(0))) +
       size(regexp_extract_all(lower(text), lit("[^a-z0-9\\s]"), lit(0)))
 
-  /** Share of characters that are ASCII punctuation. */
-  def punctRatio(text: Column): Column = {
-    val punct = length(regexp_replace(text, "[^!-/:-@\\[-`{-~]", ""))
-    when(length(text) === 0, 0.0).otherwise(punct / length(text).cast("double"))
-  }
-
   /** Share of tokens that are in the (tiny, fixed) English stopword list —
     * a standard quality signal.
     */

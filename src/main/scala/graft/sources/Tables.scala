@@ -19,15 +19,7 @@ object Tables {
     // whether an events-based query happened to run first in the session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    // `spark.graft.scan.rebalance`: "off" disables every rebalance,
-    // "force" enables it on every loader (the A/B surface for re-auditing
-    // per-accessor opt-in defaults), anything else honors the call site.
-    val want = spark.conf.getOption("spark.graft.scan.rebalance") match {
-      case Some("off") => false
-      case Some("force") => true
-      case _ => rebalance
-    }
-    if (want)
+    if (rebalance)
       rebalanced(spark, df, s"$dir/$name.parquet", rowsPerTask)
     else df
   }
@@ -64,9 +56,7 @@ object Tables {
     * this is a no-op by file count alone — the rebalance can only fire on
     * inputs too small to occupy the session's cores, never on real tables.
     * Tiny dimension tables (< 2000 rows) are left alone: an exchange there
-    * costs more than the parallelism returns. `spark.graft.scan.rebalance=
-    * off` restores the raw scans (used by plan audits that pin operator
-    * shuffle budgets net of source layout).
+    * costs more than the parallelism returns.
     */
   // keyed by (path, cap): the None sentinel ("file count >= cap, skip
   // footers") depends on the caller's parallelism, so a later session
@@ -76,11 +66,9 @@ object Tables {
     scala.collection.mutable.HashMap[(String, Int), Option[(Long, Int)]]()
 
   private def rebalanced(spark: SparkSession, df: DataFrame,
-      path: String, rowsPerTaskDefault: Long = 500L): DataFrame = {
+      path: String, rowsPerTask: Long): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    if (par <= 1 ||
-      spark.conf.getOption("spark.graft.scan.rebalance").contains("off"))
-      return df
+    if (par <= 1) return df
     val meta = scanMeta.synchronized {
       scanMeta.getOrElseUpdate((path, par), parquetMeta(spark, path, cap = par))
     }
@@ -95,10 +83,7 @@ object Tables {
         // interleaved A/B at both core counts: text rows win at 500
         // (total 9.88 vs 12.98 uncapped at 32c), embedding rows — heavier
         // per row (corpus-side dot products) — win at 250 at both 8c and
-        // 32c. `spark.graft.scan.rebalance.rowsPerTask` overrides globally.
-        val rowsPerTask = spark.conf
-          .getOption("spark.graft.scan.rebalance.rowsPerTask")
-          .map(_.toLong).getOrElse(rowsPerTaskDefault)
+        // 32c.
         val width = math.min(par.toLong,
           (rows + rowsPerTask - 1) / rowsPerTask).toInt
         if (width > groups) df.repartition(width) else df

@@ -69,20 +69,17 @@ object StreamingOps {
       if (shm.isDirectory && shm.canWrite) "/dev/shm" else sys.props("java.io.tmpdir")
     val ckpt = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(ckptBase), s"graft_ckpt_$queryName").toFile
-    // Trigger.AvailableNow is the DEFAULT for these run-to-completion
-    // harness streams (r19 A/B, matched canary 0.196/0.189: family
-    // −3.8%, null-stream floor 0.44 → 0.37 s — the self-terminating
-    // trigger skips the processAllAvailable() wake-poll + stop()
-    // handshake; SCALE.md "streaming harness floor"). File sources
-    // implement admission control, so maxFilesPerTrigger (the
-    // multi-batch shard pacing) is still honored per micro-batch — all
-    // 21 rows hash-green under it with the requireMinBatches floors
-    // intact. SPARK_GRAFT_STREAM_TRIGGER=default restores the legacy
-    // continuous trigger for A/Bs. Production streams are unaffected:
-    // this helper IS the harness sink; a live stream picks its own
-    // trigger.
-    val availableNow = !sys.env.get("SPARK_GRAFT_STREAM_TRIGGER")
-      .exists(_.equalsIgnoreCase("default"))
+    // Trigger.AvailableNow for these run-to-completion harness streams
+    // (r19 A/B, matched canary 0.196/0.189: family −3.8%, null-stream
+    // floor 0.44 → 0.37 s — the self-terminating trigger skips the
+    // processAllAvailable() wake-poll + stop() handshake; SCALE.md
+    // "streaming harness floor"). File sources implement admission
+    // control, so maxFilesPerTrigger (the multi-batch shard pacing) is
+    // still honored per micro-batch — all 21 rows hash-green under it
+    // with the requireMinBatches floors intact. Production streams are
+    // unaffected: this helper IS the harness sink; a live stream picks
+    // its own trigger.
+    //
     // Skip the trailing NO-DATA micro-batch (r20 interleaved A/B: family
     // −7%, stream_join_attrib 2.82 → 1.94 s — the join re-commits FOUR
     // state stores per partition in that batch for zero rows). The extra
@@ -94,23 +91,19 @@ object StreamingOps {
     // oracle gate (182/182 with this set) is the proof. Scoped to this
     // run-to-completion harness via conf save/restore; a live stream that
     // wants append-mode watermark emission sets its own trigger loop and
-    // is unaffected. `spark.graft.stream.noDataBatches=default` leaves
-    // Spark's setting alone.
+    // is unaffected.
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndPrev = spark.conf.getOption(ndKey)
-    val ndOverride = !spark.conf
-      .getOption("spark.graft.stream.noDataBatches").contains("default")
-    if (ndOverride) spark.conf.set(ndKey, "false")
-    val writer = df.writeStream
+    spark.conf.set(ndKey, "false")
+    val q = df.writeStream
       .outputMode(mode)
       .format("memory")
       .queryName(queryName)
       .option("checkpointLocation", ckpt.getPath)
-    val q = (if (availableNow)
-      writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else writer).start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     try {
-      if (availableNow) q.awaitTermination() else q.processAllAvailable()
+      q.awaitTermination()
       val fed = q.recentProgress.count(_.numInputRows > 0)
       if (requireSingleBatch)
         require(fed <= 1,
@@ -133,44 +126,13 @@ object StreamingOps {
       }
       try q.stop() finally {
         rm(ckpt)
-        if (ndOverride) ndPrev match {
+        ndPrev match {
           case Some(v) => spark.conf.set(ndKey, v)
           case None => spark.conf.unset(ndKey)
         }
       }
     }
     spark.table(queryName)
-  }
-
-  /** Degenerate stream for the harness-floor measurement
-    * ([[graft.tools.StreamFloor]]): four constant rows through the FULL
-    * [[runToMemory]] machinery — tmpfs checkpoint, offset/commit logs,
-    * micro-batch planning, memory sink, stop — under a stateless
-    * projection, so its wall time IS the per-stream start/stop floor
-    * with zero real work inside. Measurement plumbing, not an operator;
-    * the tiny source parquet is written once per JVM.
-    */
-  private val floorSrcDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  private[graft] def floorProbe(spark: SparkSession,
-      queryName: String): DataFrame = {
-    graft.core.SparkTuning.tune(spark)
-    val dir = synchronized {
-      val cur = floorSrcDir.get()
-      if (cur != null) cur
-      else {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft_floor_src").toString
-        spark.range(0L, 4L, 1L, 1).write.mode("overwrite").parquet(d)
-        floorSrcDir.set(d)
-        d
-      }
-    }
-    val schema = cachedSchema(spark, dir)
-    runToMemory(
-      spark.readStream.schema(schema).parquet(dir).select(col("id")),
-      "append", queryName)
   }
 
   /** Split the events parquet into `shards` TIME-ORDERED single-file
@@ -268,13 +230,8 @@ object StreamingOps {
     */
   private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    // `spark.graft.stream.statePartitions` overrides every call site — the
-    // interleaved A/B surface for auditing the store count at a given core
-    // count (r20: the control arm runs the session's full 32)
-    val eff = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
     val prev = spark.conf.get(key)
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
 

@@ -2,11 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Generic interleaved A/B over ONE runtime session conf (the AbScan
-  * discipline — r19: serial arms are unreadable on this box; arms must
-  * alternate execution slot by slot under matched contention/JIT/page
-  * cache, with the arm ORDER rotated per (round, query) so no arm owns
-  * the recency-advantaged position).
+/** Generic interleaved A/B over ONE runtime session conf (r19: serial
+  * arms are unreadable on a contended box; arms must alternate execution
+  * slot by slot under matched contention/JIT/page cache, with the arm
+  * ORDER rotated per (round, query) so no arm owns the recency-advantaged
+  * position). `SparkTuning.tune` never overrides a conf set here, so any
+  * native Spark conf — including the ones it defaults — can be an arm.
   *
   * `runMain graft.tools.AbConf <confKey> <v1,v2,...> <q1,q2,...> [sfDir]`
   * AB_ROUNDS=n (default 3).

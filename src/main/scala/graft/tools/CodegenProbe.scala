@@ -30,9 +30,10 @@ object CodegenProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // CGP_USEID=default runs the control arm (stage-id'd class names)
+    // CGP_USEID=true runs the control arm (stage-id'd class names);
+    // SparkTuning.tune keeps a value the caller set
     sys.env.get("CGP_USEID").foreach(v =>
-      spark.conf.set("spark.graft.codegen.useIdInClassName", v))
+      spark.conf.set("spark.sql.codegen.useIdInClassName", v))
     val cm = org.apache.spark.metrics.source.CodegenMetrics
     def compiles: Long = cm.METRIC_COMPILATION_TIME.getCount
     def genSrc: Long = cm.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount

@@ -501,7 +501,6 @@ class GraphSweepSpec extends AnyFunSuite {
   }
 
   test("ngram_jaccard_dedup / simhash_dedup_survivors arms ≡ Dedup twins") {
-    graft.core.SparkTuning.tune(spark) // registers graft_shingles
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "the quick brown fox jumps over the lazy dog today"),

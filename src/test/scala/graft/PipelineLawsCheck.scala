@@ -127,7 +127,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
 
   property("bpe: piece count monotonically non-increasing in merge count") =
     forAll(Gen.listOfN(10, Gen.oneOf("aba", "abab", "bab", "aabb", "ba"))) { ws =>
-      graft.core.SparkTuning.tune(spark) // registers graft_bpe
       val text = ws.mkString(" ")
       val d = Seq((1L, text)).toDF("doc_id", "text")
       val merges = Bpe.trainLocal(
@@ -150,7 +149,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
 
   property("shingles: one-pass expression == HOF transform on random text") =
     forAll(Gen.listOfN(6, genText), Gen.choose(1, 4)) { (texts, n) =>
-      graft.core.SparkTuning.tune(spark) // registers graft_shingles
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       df.select(Dedup.shingleArray(col("text"), n).as("e"),
@@ -161,7 +159,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
   property("simhash bits: one-pass expression == hex-nibble formula") =
     forAll(Gen.listOfN(8, Gen.oneOf(Gen.alphaNumStr.map(_.take(12)),
         Gen.oneOf("é", "Ω", "", " ", "münchen")))) { toks =>
-      graft.core.SparkTuning.tune(spark)
       val df = toks.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("id", "tok")
       df.select(Dedup.simhashBitArray(col("tok")).as("e"),
@@ -172,7 +169,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
   property("dsir units: one-pass expression == HOF aggregate on random text") =
     forAll(Gen.listOfN(6, genText), Gen.listOfN(6, Gen.oneOf(true, false)),
         Gen.oneOf(16, 64, 512)) { (texts, tgts, buckets) =>
-      graft.core.SparkTuning.tune(spark) // registers graft_dsir_units
       val df = texts.zip(tgts).zipWithIndex.map { case ((t, g), i) =>
         (i.toLong, t, g)
       }.toDF("doc_id", "text", "tgt")
@@ -191,7 +187,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
         "a", "B", " ", "é", "Ω", "ß", "中", "😀", "\t", "z"))
     } yield cs.mkString), Gen.listOfN(5, Gen.oneOf(true, false))) {
       (texts, tgts) =>
-      graft.core.SparkTuning.tune(spark) // registers graft_trigram_score
       val df = texts.zip(tgts).zipWithIndex.map { case ((t, g), i) =>
         (i.toLong, t, g)
       }.toDF("doc_id", "text", "tgt")
@@ -234,7 +229,6 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
 
   property("repetition: one-pass expression == HOF folds on random text") =
     forAll(Gen.listOfN(6, genText)) { texts =>
-      graft.core.SparkTuning.tune(spark) // registers graft_repetition
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val rows = df.select(Repetition.stats(col("text")).as("st"),

@@ -14,7 +14,7 @@ class PipelineSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    graft.core.SparkTuning.tune(s) // registers graft_dot for Similarity
+    graft.core.SparkTuning.tune(s)
     s
   }
 
@@ -1484,7 +1484,6 @@ class PipelineSpec extends AnyFunSuite {
       assert(lmB == lm.map(r => r.getLong(0) -> r.getLong(2)).toMap)
       // the whole one-pass family: shingles/ngrams, simhash, repetition
       // folds, BPE encode
-      graft.core.SparkTuning.tune(spark)
       val fam = d.select(
         size(Dedup.shingleArray(col("text"), 2)).as("sh"),
         size(Dedup.ngramArray(col("text"), 1)).as("ng"),
@@ -1499,8 +1498,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("lm score: expression path builds without SparkTuning registration") {
     // direct-construction contract: the library API must work on a session
-    // that never called SparkTuning.tune (no temp-function registry entry)
-    val fresh = spark.newSession() // shares context, NOT the tuned registry
+    // that never called SparkTuning.tune — every native expression is built
+    // directly, none is looked up in a session function registry
+    val fresh = spark.newSession() // shares context, NOT the tuned conf
     assert(!fresh.catalog.functionExists("graft_trigram_score"))
     val d2 = fresh.createDataFrame(
       Seq((1L, "the quick brown fox", true), (2L, "zzz qqq", false)))
@@ -1508,6 +1508,54 @@ class PipelineSpec extends AnyFunSuite {
     val out = LanguageModel.charTrigramScore(d2, "doc_id", col("text"),
       col("tgt")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) == 17L && out(2L) == 5L, out)
+    // the rest of the native-expression family on the same untuned session
+    val docs = fresh.createDataFrame(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight", true),
+      (2L, "the quick brown fox jumps over the lazy dog today", false),
+      (3L, "completely different content about spark engines here", false)))
+      .toDF("doc_id", "text", "tgt")
+    val r = docs.filter(col("doc_id") === 1L).select(
+      Similarity.dot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))),
+      size(Dedup.shingleArray(col("text"), 2)),
+      size(Dedup.ngramArray(col("text"), 1)),
+      size(Dedup.simhashBitArray(col("text"))),
+      Repetition.stats(col("text")).getField("ttr"),
+      size(Bpe.encode(col("text"), Seq(("t", "h"), ("th", "e")))),
+      Importance.dsirUnitsColumn(docs, col("text"), col("tgt")),
+      Importance.dsirUnitsHofColumn(docs, col("text"), col("tgt"))).head()
+    assert(r.getDouble(0) == 11.0)
+    assert(r.getInt(1) == 9 && r.getInt(2) == 10 && r.getInt(3) == 64)
+    assert(r.getDouble(4) == 0.9 && r.getInt(5) >= 10)
+    assert(r.getLong(6) == r.getLong(7))
+    // both bloom-probe paths
+    val key = TextAnalysis.contentHash(col("text"))
+    assert(Dedup.incrementalNew(docs, docs.filter(col("doc_id") === 3L),
+      "doc_id", key).select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 2L))
+    val idx = Dedup.minhashIndex(docs.filter(col("doc_id") =!= 1L),
+      "doc_id", col("text"))
+    assert(Dedup.incrementalNearNew(docs.filter(col("doc_id") === 1L), idx,
+      col("text")).select("id_new", "id_corpus").as[(Long, Long)]
+      .collect().toSet == Set((1L, 2L)))
+  }
+
+  test("SparkTuning.tune sets its conf defaults only where the caller set none") {
+    val minPS = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val useId = "spark.sql.codegen.useIdInClassName"
+    val callerSet = spark.newSession()
+    callerSet.conf.set(minPS, "1m")
+    callerSet.conf.set(useId, "true")
+    graft.core.SparkTuning.tune(callerSet)
+    assert(callerSet.conf.get(minPS) == "1m")
+    assert(callerSet.conf.get(useId) == "true")
+    val untouched = spark.newSession()
+    assert(!untouched.sessionState.conf.contains(minPS) &&
+      !untouched.sessionState.conf.contains(useId))
+    graft.core.SparkTuning.tune(untouched)
+    assert(untouched.conf.get(minPS) == "64k")
+    assert(untouched.conf.get(useId) == "false")
+    assert(untouched.conf.get("spark.sql.optimizer.excludedRules").contains(
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
   }
 
   test("lm score: target-like text gets lower cross-entropy than alien text") {
