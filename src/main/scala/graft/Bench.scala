@@ -54,7 +54,6 @@ object Bench {
     val realOut = System.out
     System.setOut(new PrintStream(OutputStream.nullOutputStream(), true))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // ≥3 interleaved rounds: round-robin over the whole query list each round,
     // so machine-wide drift (GC, page cache, CPU contention) lands on every
     // query equally instead of biasing whichever query ran during the spike.
@@ -65,14 +64,7 @@ object Bench {
     // otherwise lands entirely in the recorded spread of whichever round ran
     // first and makes steady-state variance unreadable.
     val warmups = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").map(_.toInt).getOrElse(1).max(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SparkTuning.localSession()
     val only = args.headOption.map(_.split(',').toSet)
     // Contention canary: one FIXED, trivial, IO-free query measured with
     // the same rounds/min discipline as the registry. Its plan never

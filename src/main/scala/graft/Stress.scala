@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{Dedup, Importance, LanguageModel, Repetition, Similarity, TextAnalysis}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -30,18 +31,28 @@ import org.apache.spark.sql.functions._
   * Results are recorded in SCALE.md's measured-scale-up table.
   */
 object Stress {
+  /** Shuffle bytes written by the stages `f` runs. Sleeps before attaching
+    * the listener (straggler stages of earlier jobs drain first) and after
+    * `f` (the listener bus delivers the timed stages); the listener is
+    * always detached.
+    */
+  private def shuffleWritten(spark: SparkSession)(f: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        bytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    Thread.sleep(1500)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; Thread.sleep(1500); bytes.get() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val rep = args.headOption.map(_.toInt).getOrElse(100)
     val familyFilter = args.drop(1).headOption
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.core.SparkTuning.tune(spark)
+    val spark = graft.core.SparkTuning.localSession()
 
     // replicate under shifted ids and round-trip through PARQUET: the timed
     // plans must see real file statistics (size-gated broadcasts fire off
@@ -78,6 +89,13 @@ object Stress {
       df.write.format("noop").mode("overwrite").save()
     def family(name: String)(body: => Unit): Unit =
       if (familyFilter.forall(_ == name)) body
+    // wall-clock alone can't show an operator's point on one box — local
+    // shuffle runs at memory speed — so ALSO measure exchanged bytes: the
+    // quantity that crosses the network on a real cluster
+    def measured(name: String)(f: => Unit): Unit = {
+      val bytes = shuffleWritten(spark)(time(name)(f))
+      println(f"[stress]   $name shuffle write: ${bytes / 1e6}%.1f MB")
+    }
 
     family("dedup") { time("exact dedup (groups)") {
       force(Dedup.exact(corpus, "doc_id", md5(col("text").cast("binary"))))
@@ -111,34 +129,14 @@ object Stress {
       val key = md5(col("text").cast("binary"))
       val shardN = shard.count()
       println(s"[stress]   shard docs: $shardN")
-      // wall-clock alone can't show the operator's point on one box —
-      // local shuffle runs at memory speed — so ALSO measure exchanged
-      // bytes: the quantity that crosses the network on a real cluster
-      val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffled.addAndGet(
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      measured("incremental (bloom prefilter)") {
+        force(Dedup.incrementalNew(shard, uCorpus, "doc_id", key,
+          expectedNewKeys = math.max(shardN, 1024L)))
       }
-      Thread.sleep(1500) // drain stragglers from the count() jobs above
-      spark.sparkContext.addSparkListener(listener)
-      def measured(name: String)(f: => Unit): Unit = {
-        shuffled.set(0)
-        time(name)(f)
-        Thread.sleep(1500) // let the listener bus drain
-        println(f"[stress]   $name shuffle write: ${shuffled.get() / 1e6}%.1f MB")
+      measured("incremental (plain anti-join)") {
+        force(shard.withColumn("_k", key).join(
+          uCorpus.select(key.as("_k")), Seq("_k"), "left_anti").drop("_k"))
       }
-      try {
-        measured("incremental (bloom prefilter)") {
-          force(Dedup.incrementalNew(shard, uCorpus, "doc_id", key,
-            expectedNewKeys = math.max(shardN, 1024L)))
-        }
-        measured("incremental (plain anti-join)") {
-          force(shard.withColumn("_k", key).join(
-            uCorpus.select(key.as("_k")), Seq("_k"), "left_anti").drop("_k"))
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
     }
     // ---- R-S fuzzy join (PPJoin prefix filter): the sf0.1 probe verified
     // the set arrays stay scan-local; this family measures it AT SCALE.
@@ -165,26 +163,12 @@ object Stress {
       val probe = t.filter(pmod(col("doc_id"), lit(97L)) === 0L)
       val ref = t.filter(pmod(col("doc_id"), lit(97L)) =!= 0L)
       println(s"[stress]   probe docs: ${probe.count()}  ref docs: ${ref.count()}")
-      val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffled.addAndGet(
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      // drain straggler stages from the preceding count() jobs BEFORE
-      // attaching, so the counter sees only the timed join; detach in a
-      // finally so the listener never outlives the family
-      Thread.sleep(1500)
-      spark.sparkContext.addSparkListener(listener)
-      val exchanged = try {
+      val exchanged = shuffleWritten(spark) {
         time("fuzzy join (prefix)") {
           force(Dedup.jaccardJoin(probe, ref, "doc_id", col("text"),
             shingleLen = 3, threshold = 0.5, cachePrefix = false))
         }
-        Thread.sleep(1500) // let the listener bus drain
-        shuffled.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
       println(f"[stress]   prefix-join shuffle write: ${exchanged / 1e6}%.1f MB")
       // counterfactuals, COMPUTED not guessed: (a) the bytes the exchanges
       // would carry if the verification set arrays shuffled (sum of
@@ -230,44 +214,27 @@ object Stress {
       val qMod = math.max(nVec / 64L, 1L)
       val queries = emb.filter(pmod(col("vec_id"), lit(qMod)) === 0L)
       println(s"[stress]   queries: ${queries.count()}  cells: $nCells (probes 3)")
-      val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffled.addAndGet(
-            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      measured("ivfadc topk (k=3, sl=25)") {
+        force(Similarity.ivfPqTopK(queries, emb, "vec_id", "embedding",
+          cents, book, k = 3, shortlist = 25, probes = 3))
       }
-      Thread.sleep(1500) // drain stragglers from the counts above
-      spark.sparkContext.addSparkListener(listener)
-      def measured(name: String)(f: => Unit): Unit = {
-        shuffled.set(0)
-        time(name)(f)
-        Thread.sleep(1500) // let the listener bus drain
-        println(f"[stress]   $name shuffle write: ${shuffled.get() / 1e6}%.1f MB")
-      }
-      try {
-        measured("ivfadc topk (k=3, sl=25)") {
-          force(Similarity.ivfPqTopK(queries, emb, "vec_id", "embedding",
-            cents, book, k = 3, shortlist = 25, probes = 3))
+      // counterfactuals, COMPUTED not guessed: per corpus vector the
+      // code join moves 16 one-byte codes + an 8-byte id; shipping raw
+      // vectors would move 64 doubles + the id
+      val codeBytes = nVec * (16L + 8L)
+      val rawBytes = nVec * (64L * 8L + 8L)
+      println(f"[stress]   full-vector counterfactual: ${rawBytes / 1e6}%.1f MB " +
+        f"vs ${codeBytes / 1e6}%.1f MB of codes " +
+        f"(${rawBytes.toDouble / codeBytes}%.1f x)")
+      if (rep <= 10)
+        measured("pq-refine flat (no IVF)") {
+          force(Similarity.pqTopKRefined(queries, emb, "vec_id",
+            "embedding", book, k = 3, shortlist = 25))
         }
-        // counterfactuals, COMPUTED not guessed: per corpus vector the
-        // code join moves 16 one-byte codes + an 8-byte id; shipping raw
-        // vectors would move 64 doubles + the id
-        val codeBytes = nVec * (16L + 8L)
-        val rawBytes = nVec * (64L * 8L + 8L)
-        println(f"[stress]   full-vector counterfactual: ${rawBytes / 1e6}%.1f MB " +
-          f"vs ${codeBytes / 1e6}%.1f MB of codes " +
-          f"(${rawBytes.toDouble / codeBytes}%.1f x)")
-        if (rep <= 10)
-          measured("pq-refine flat (no IVF)") {
-            force(Similarity.pqTopKRefined(queries, emb, "vec_id",
-              "embedding", book, k = 3, shortlist = 25))
-          }
-        else
-          println("[stress]   pq-refine flat: skipped at this scale " +
-            "(O(n·q) by construction — SCALE.md pins flat as the " +
-            "probe-every-cell baseline)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      else
+        println("[stress]   pq-refine flat: skipped at this scale " +
+          "(O(n·q) by construction — SCALE.md pins flat as the " +
+          "probe-every-cell baseline)")
     }
     family("score") { time("repetition scan") {
       force(corpus.select(col("doc_id"), Repetition.stats(col("text")).as("s")))

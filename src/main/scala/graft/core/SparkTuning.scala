@@ -2,9 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level optimizer tuning applied at every table load: the
-  * `InferFiltersFromGenerate` exclusion, the engine's optimizer rules, and
-  * defaults for native confs the caller has not set.
+/** The engine's one local-session factory, [[localSession]], and the
+  * session-level tuning it applies at build: the `InferFiltersFromGenerate`
+  * exclusion, the engine's optimizer rules, the parquet nanos flag the
+  * loaders need, and defaults for native confs the caller has not set.
+  * `Tables.read` and the stream sources call [[tune]] again, for sessions
+  * built outside the engine.
   *
   * `InferFiltersFromGenerate` clones the generator's child expression into a
   * `size(e) > 0` filter; predicate pushdown then sinks that clone below the
@@ -24,6 +27,34 @@ object SparkTuning {
   private val defaults = Seq(
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
     "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** A `SPARK_GRAFT_CPUS` value as a core count: `default` when unset; a
+    * non-integer or a value below 1 throws instead of reaching the master
+    * URL as a confusing error or a silent `local[0]`.
+    */
+  def parseCpus(value: Option[String], default: Int): Int =
+    value.fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'"))
+    }
+
+  /** The local session every engine main and test suite runs on:
+    * `local[cpus]` with one shuffle partition per core, UTC session time,
+    * no UI, ERROR logging, tuned. `cpus` defaults to `SPARK_GRAFT_CPUS`,
+    * else the machine's core count.
+    */
+  def localSession(cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"),
+      Runtime.getRuntime.availableProcessors)): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    tune(spark)
+    spark
+  }
 
   def tune(spark: SparkSession): Unit = {
     val key = "spark.sql.optimizer.excludedRules"
@@ -59,6 +90,11 @@ object SparkTuning {
     // measured compile-lock contention this removes.
     for ((k, v) <- defaults if !spark.sessionState.conf.contains(k))
       spark.conf.set(k, v)
+    // Unconditional, and set BEFORE any read: an INT64 TIMESTAMP(NANOS)
+    // column in ANY table would otherwise throw or not depending on which
+    // query read first in the session. The loaders (Tables.normalizeTs)
+    // convert the raw nanos long themselves.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // engine-native optimizer rules (see graft.plans.NanosPredicatePushdown)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.NanosPredicatePushdown)) {

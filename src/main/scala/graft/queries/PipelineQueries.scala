@@ -97,8 +97,8 @@ object PipelineQueries {
         "embedding", 16)
     }
 
-  // ---- corpus-derived ANN geometry: the DEPLOYMENT law (SCALE.md /
-  // SfProbe — cells ∝ corpus, +1 LSH bit per band per corpus doubling),
+  // ---- corpus-derived ANN geometry: the DEPLOYMENT law (SCALE.md's
+  // sf-axis record — cells ∝ corpus, +1 LSH bit per band per corpus doubling),
   // exercised under the driver's hash gate by the *_scaled queries. The
   // oracle SQL derives the SAME numbers from count(*), so the sf axis
   // scales the geometry on both engines identically. Integer-exact
@@ -1250,8 +1250,9 @@ object PipelineQueries {
       // SF: most dsts are dangling and the src namespace overlaps dst
       // only through the shared "srcN" prefixes, so the exact fixed
       // point lands by i=4 — measured r4 == r5 at sf0.1 AND sf0.001,
-      // PageRankProbe). checkpointEvery=4 puts the FIRST boundary right
-      // at that depth: one convergence check confirms at i=5 (tally 5,
+      // SCALE.md "link_pagerank_converged: boundary fusion + cadence").
+      // checkpointEvery=4 puts the FIRST boundary right at that depth:
+      // one convergence check confirms at i=5 (tally 5,
       // RetrievalGraphSpec), where the former cpe=5 computed a deeper
       // chain and confirmed at i=6 — one whole iteration plus its jobs
       // for nothing (guide §1.2, cut driver-paced jobs). The hash match

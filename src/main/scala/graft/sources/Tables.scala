@@ -13,11 +13,9 @@ object Tables {
 
   def read(spark: SparkSession, dir: String, name: String,
       rebalance: Boolean = false, rowsPerTask: Long = 500L): DataFrame = {
+    // also sets the nanos flag before any read; sessions built outside
+    // SparkTuning.localSession get their tuning here
     graft.core.SparkTuning.tune(spark)
-    // set BEFORE any read, not just in events(): an INT64 TIMESTAMP(NANOS)
-    // column in ANY table would otherwise throw or not depending on
-    // whether an events-based query happened to run first in the session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (rebalance)
       rebalanced(spark, df, s"$dir/$name.parquet", rowsPerTask)

@@ -34,7 +34,6 @@ object StreamingOps {
   private def eventsFileStream(spark: SparkSession, eventsPath: String)
       : DataFrame = {
     graft.core.SparkTuning.tune(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = cachedSchema(spark, eventsPath)
     val dir = new java.io.File(eventsPath).getParent
     val fileName = new java.io.File(eventsPath).getName
@@ -189,7 +188,6 @@ object StreamingOps {
   private def shardedEventsStream(spark: SparkSession, eventsPath: String,
       shards: Int): DataFrame = {
     graft.core.SparkTuning.tune(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val shardDir = writeTimeOrderedShards(spark, eventsPath, shards)
     val schema = cachedSchema(spark, shardDir)
     graft.sources.Tables.normalizeTs(

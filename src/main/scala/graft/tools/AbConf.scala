@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic interleaved A/B over ONE runtime session conf (r19: serial
   * arms are unreadable on a contended box; arms must alternate execution
   * slot by slot under matched contention/JIT/page cache, with the arm
   * ORDER rotated per (round, query) so no arm owns the recency-advantaged
   * position). `SparkTuning.tune` never overrides a conf set here, so any
-  * native Spark conf — including the ones it defaults — can be an arm.
+  * native Spark conf — including the ones it defaults — can be an arm,
+  * except `spark.sql.legacy.parquet.nanosAsLong`, which it always sets.
   *
   * `runMain graft.tools.AbConf <confKey> <v1,v2,...> <q1,q2,...> [sfDir]`
   * AB_ROUNDS=n (default 3).
@@ -22,16 +21,8 @@ object AbConf {
       .getOrElse(sys.error("need query list"))
     val sfDir = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rounds = sys.env.get("AB_ROUNDS").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SparkTuning.localSession()
     val fns = names.map(n => n -> graft.SparkEntry.queries(n))
     for (v <- vals; (_, fn) <- fns) { // warmup: every (query, arm) once
       spark.conf.set(key, v)

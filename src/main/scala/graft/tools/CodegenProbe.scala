@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Direct codegen-compile census for one registry query (optimization
   * guide §1: measure the suspected cost, not a proxy). Thread dumps under
   * the bench showed executor threads serialized behind
@@ -20,16 +18,8 @@ object CodegenProbe {
       .getOrElse(sys.error("usage: CodegenProbe <q1,q2,...> [sfDir]"))
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.get("CGP_REPS").map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SparkTuning.localSession()
     // CGP_USEID=true runs the control arm (stage-id'd class names);
     // SparkTuning.tune keeps a value the caller set
     sys.env.get("CGP_USEID").foreach(v =>

@@ -76,12 +76,7 @@ object ExplainDump {
     // EXPLAIN_CONF="k=v;k=v" sets session confs before planning (the
     // before/after arms, e.g. spark.sql.adaptive.enabled=false with
     // link_pagerank_lazy reproduces the AQE-scoped executed form).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.SparkTuning.localSession()
     sys.env.get("EXPLAIN_CONF").foreach(parseConf(_).foreach {
       case (k, v) => spark.conf.set(k, v)
     })

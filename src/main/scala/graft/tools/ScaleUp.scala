@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing testdata dir by N×
@@ -25,14 +25,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, repStr) = args.take(3)
     val rep = repStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.core.SparkTuning.localSession()
     new java.io.File(outDir).mkdirs()
 
     val K = 1000000000L // key shift per replica

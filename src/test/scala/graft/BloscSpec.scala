@@ -240,11 +240,7 @@ class BloscSpec extends AnyFunSuite {
   // ---- end-to-end: a v2 blosc store through ZarrReader ----
 
   test("ZarrReader decodes a v2 blosc(lz4+shuffle) store incl. fill chunks") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = TestSession.spark
     val dir = java.nio.file.Files.createTempDirectory("blosc_store").toFile
     val (h, w, cr, cc) = (9, 7, 5, 4)
     java.nio.file.Files.writeString(

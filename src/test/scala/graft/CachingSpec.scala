@@ -14,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CachingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   test("scoped: computes through the cache, then releases it") {
     val sess = spark

@@ -232,11 +232,7 @@ class Mpeg1Spec extends AnyFunSuite {
   // ---- MP4 plumbing: mp1v track with the sequence header only in the
   // first sample; later samples decode against the carried context ----
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   test("MP4 mp1v track: carried sequence context, real luma per sampled frame") {
     import java.nio.ByteBuffer

@@ -19,12 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Mpeg2Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   // ---- bit-level stream assembler (Mpeg1Spec's, duplicated: both are
   // private test helpers) ----

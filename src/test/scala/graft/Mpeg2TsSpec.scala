@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Mpeg2TsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   private def aus: Seq[Array[Byte]] =
     Mpeg2Writer.ipbfPictures(32, 16, gray = 96, delta = 20)

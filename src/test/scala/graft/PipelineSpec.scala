@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.SparkTuning.tune(s)
-    s
-  }
+  lazy val spark: SparkSession = TestSession.spark
 
   import spark.implicits._
 
@@ -1542,6 +1533,8 @@ class PipelineSpec extends AnyFunSuite {
   test("SparkTuning.tune sets its conf defaults only where the caller set none") {
     val minPS = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     val useId = "spark.sql.codegen.useIdInClassName"
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     val callerSet = spark.newSession()
     callerSet.conf.set(minPS, "1m")
     callerSet.conf.set(useId, "true")
@@ -1549,13 +1542,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(callerSet.conf.get(minPS) == "1m")
     assert(callerSet.conf.get(useId) == "true")
     val untouched = spark.newSession()
-    assert(!untouched.sessionState.conf.contains(minPS) &&
-      !untouched.sessionState.conf.contains(useId))
+    assert(Seq(minPS, useId, nanos)
+      .forall(k => !untouched.sessionState.conf.contains(k)))
     graft.core.SparkTuning.tune(untouched)
     assert(untouched.conf.get(minPS) == "64k")
     assert(untouched.conf.get(useId) == "false")
-    assert(untouched.conf.get("spark.sql.optimizer.excludedRules").contains(
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
+    assert(untouched.conf.get(nanos) == "true")
+    assert(untouched.conf.get("spark.sql.optimizer.excludedRules").contains(rule))
+    // the factory session is tuned at build
+    val built = TestSession.spark
+    assert(built.conf.get("spark.sql.optimizer.excludedRules").contains(rule))
+    assert(built.experimental.extraOptimizations
+      .contains(graft.plans.NanosPredicatePushdown))
+    assert(built.conf.get(nanos) == "true")
+    assert(built.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(built.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("lm score: target-like text gets lower cross-entropy than alien text") {

@@ -16,16 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RetrievalGraphSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.SparkTuning.tune(s)
-    s
-  }
+  lazy val spark: SparkSession = TestSession.spark
 
   import spark.implicits._
 
@@ -250,7 +241,8 @@ class RetrievalGraphSpec extends AnyFunSuite {
     // the REAL query shape (PipelineQueries.pagerankEdges over the real
     // documents table): most dsts are dangling and rank flow settles in
     // a handful of iterations, with the exact fixed point landing by
-    // i=4 (r4 == r5, measured at sf0.001 and sf0.1 — PageRankProbe).
+    // i=4 (r4 == r5, measured at sf0.001 and sf0.1 — SCALE.md
+    // "link_pagerank_converged: boundary fusion + cadence").
     // The query's checkpointEvery=4 puts the first boundary right at
     // that depth, so ONE convergence check confirms at i=5 → tally 5.
     // The driver row's hash match against the 20-iteration unrolled

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SpaceSavingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   // deterministic skewed stream: key k_i appears (i+1)·7 times
   private def corpus(nKeys: Int): Seq[String] =

@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StacLoaderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   val item =
     """{"type":"Feature","stac_version":"1.0.0","id":"item-1",

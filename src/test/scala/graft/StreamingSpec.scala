@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   import spark.implicits._
 
@@ -168,7 +163,6 @@ class StreamingSpec extends AnyFunSuite {
     // like any built-in — an ingest-time quality filter + shingle extraction
     // must work inside a micro-batch plan with no batch-only assumptions
     import graft.pipeline.{Dedup, Repetition}
-    graft.core.SparkTuning.tune(spark)
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, String)]
     val scored = stream.toDS().toDF("doc_id", "text")

@@ -13,16 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ThetaSketchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.SparkTuning.tune(s)
-    s
-  }
+  lazy val spark: SparkSession = TestSession.spark
 
   private def sketch(hashes: Seq[Long], k: Int, chunks: Int): Array[Long] = {
     val agg = new ThetaSketchAgg(k)

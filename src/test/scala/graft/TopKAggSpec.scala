@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKAggSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   /** (group, id, value) rows; values collide across ids to exercise the
     * (v desc, id asc) tie-break.

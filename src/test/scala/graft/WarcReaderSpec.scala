@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WarcReaderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   private def rec(rtype: String, uri: String, block: Array[Byte]): Array[Byte] = {
     val head = s"WARC/1.0\r\nWARC-Type: $rtype\r\n" +

@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ZarrCubeSourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSession.spark
 
   /** Uncompressed rank-2 store: shape (4,6), chunks (2,3) → 2×2 grid,
     * v(r,c) = r*10 + c.
