@@ -280,19 +280,6 @@ object Dedup {
     ColumnBridge.column(graft.functions.SimhashBits(
       ColumnBridge.expression(tok.cast("string"))))
 
-  /** Reference hex-nibble column formula for [[simhashBitArray]]
-    * (interpreted; specs pin the expression against it — and it is the
-    * exact arithmetic the DuckDB oracle mirrors).
-    */
-  def simhashBitsHof(tok: Column): Column = {
-    val h = md5(tok.cast("binary"))
-    transform(sequence(lit(0), lit(63)), j => {
-      val nib = instr(lit("0123456789abcdef"),
-        substring(h, (j / 4).cast("int") + 1, lit(1))) - 1
-      (floor(nib / pow(lit(2.0), lit(3) - j % 4)).cast("int") % 2) * 2 - 1
-    })
-  }
-
   /** Distinct word n-gram shingles per document: one row per (id, shingle).
     * Shingling happens row-local in the scan — documents never leave the
     * executors and nothing shuffles until the downstream aggregation.

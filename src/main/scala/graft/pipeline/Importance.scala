@@ -65,7 +65,7 @@ object Importance {
     * bucket space, collected and folded driver-side into the per-bucket
     * integer log-ratio weights every scoring form probes.
     */
-  private def censusWeights(df: DataFrame, text: Column, isTarget: Column,
+  private[graft] def censusWeights(df: DataFrame, text: Column, isTarget: Column,
       buckets: Int, scale: Long): Map[Long, Long] = {
     require(buckets > 0 && buckets <= (1 << 20),
       s"buckets must be in (0, 2^20] (the census is collected), got $buckets")
@@ -101,19 +101,6 @@ object Importance {
       ColumnBridge.expression(text.cast("string")),
       ColumnBridge.expression(typedLit(lrMap)),
       ColumnBridge.expression(lit(buckets)))), lit(0L))
-
-  /** Reference HOF form of [[dsirUnitsColumn]] (interpreted per gram;
-    * specs pin the expression's bit-identity against it — and it is the
-    * exact per-gram arithmetic the DuckDB oracle mirrors).
-    */
-  def dsirUnitsHofColumn(df: DataFrame, text: Column, isTarget: Column,
-      buckets: Int = 512, scale: Long = 1000000L): Column = {
-    val lrMap = censusWeights(df, text, isTarget, buckets, scale)
-    coalesce(
-      aggregate(featureGrams(text), lit(0L),
-        (acc, gm) => acc + element_at(typedLit(lrMap), gramBucket(gm, buckets))),
-      lit(0L))
-  }
 
   /** Per-document DSIR importance scores: `(idCol, score_units, score,
     * keep)` where `score_units = Σ_grams lr_units[bucket(gram)]`,

@@ -98,16 +98,6 @@ object Mpeg1Writer {
     }
   }
 
-  /** One self-contained elementary stream (sequence header + pictures +
-    * sequence_end), decodable by [[Mpeg1.decodeIntra]] or any MPEG-1
-    * decoder.
-    */
-  def grayStream(width: Int, height: Int, grays: Seq[Int]): Array[Byte] = {
-    val aus = grayPictures(width, height, grays)
-    val end = Array[Byte](0, 0, 1, 0xb7.toByte)
-    (aus.flatten ++ end).toArray
-  }
-
   /** One P-picture access unit lifting every LUMA pel of the reference by
     * exactly `delta` (chroma untouched): zero-motion coded-pattern
     * macroblocks (type "01"), cbp 60 (the four luma blocks), each block a

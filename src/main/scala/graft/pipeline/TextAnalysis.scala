@@ -270,14 +270,6 @@ object TextAnalysis {
        |END""".stripMargin
   }
 
-  /** Naive registered domain: the host's last two labels. Kept as the
-    * fallback/reference form; [[registeredDomain]] is PSL-backed and is
-    * what domain quotas should use (`shop.example.co.uk` must group under
-    * `example.co.uk`, not `co.uk`).
-    */
-  def registeredDomainNaive(host: Column): Column =
-    regexp_extract(host, "([^.]+\\.[^.]+)$", 1)
-
   /** The full public-suffix list (`resources/graft/public_suffix_list.dat`
     * — the Mozilla PSL every browser and crawl toolchain ships, ICANN +
     * private sections, ~9.5k rules), parsed once into rule sets GROUPED BY

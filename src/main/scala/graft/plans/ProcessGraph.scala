@@ -2071,9 +2071,10 @@ object ProcessGraph {
             }.getOrElse(Map.empty)
           // spatial_extent prunes twice: item-level (assets whose bbox
           // misses the extent never plan any pixel work) and store-level
-          // (the extent maps to chunk/segment index ranges inside
-          // ZarrReader/TiffReader — a small bbox over a huge store decodes
-          // only intersecting chunks, reference cubes/load.py:245-310)
+          // (the extent becomes Catalyst filters that the load's one
+          // v2.CubeSource scan pushes down to chunk/segment index ranges —
+          // a small bbox over a huge store decodes only intersecting
+          // chunks, reference cubes/load.py:245-310)
           val bboxOpt = opt("spatial_extent").map { _ =>
             val e = JsonMethods.parse(str("spatial_extent"))
             def d(f: String): Option[Double] = (e \ f) match {

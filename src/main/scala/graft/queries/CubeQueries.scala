@@ -69,9 +69,9 @@ object CubeQueries {
       // the FILTER-AFTER-LOAD ordering the DataSourceV2 facade exists
       // for: load_stac with NO extents, then filter_bbox and
       // filter_temporal as downstream graph nodes. Catalyst pushes the
-      // x/y/t predicates into the ZarrCubeScan, which plans only the
+      // x/y/t predicates into the load's CubeScan, which plans only the
       // intersecting chunks (and the five stores whose constant datetime
-      // misses the window plan ZERO partitions) — same rows as extents
+      // misses the window plan ZERO reads) — same rows as extents
       // given at the loader, the reference's lazy xarray slicing
       // (cubes/load.py:245-310). The oracle mirrors the za store's
       // arithmetic under the extent.

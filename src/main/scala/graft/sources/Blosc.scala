@@ -572,15 +572,4 @@ object Blosc {
     require(got == n, s"ZarrCorrupt: lz4 buffer decoded $got of $n bytes")
     out
   }
-
-  /** numcodecs `LZ4` encode (size prefix + block). */
-  def lz4NumcodecsCompress(data: Array[Byte]): Array[Byte] = {
-    val c = lz4Factory.fastCompressor()
-    val max = c.maxCompressedLength(data.length)
-    val buf = new Array[Byte](4 + max)
-    java.nio.ByteBuffer.wrap(buf, 0, 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(data.length)
-    val n = c.compress(data, 0, data.length, buf, 4, max)
-    java.util.Arrays.copyOf(buf, 4 + n)
-  }
 }

@@ -10,18 +10,21 @@ import org.apache.spark.sql.functions._
   * The reference's pipeline is: validate STAC → search items by
   * bbox/time/properties → select band assets → lazy pixel load → post
   * filters. Here the catalog phase is driver-side metadata work (items are
-  * small JSON), producing an ASSET TABLE the executors load from: one row
-  * per (item, band asset) with href, datetime, bbox and band name. That
-  * table is the unit of parallelism at 100 TB — thousands of COG assets
-  * fan out across executors, each reading its own file.
+  * small JSON), producing an ASSET TABLE: one row per (item, band asset)
+  * with href, datetime, bbox and band name. The reachable assets of a load
+  * then mount as ONE DataSourceV2 scan ([[graft.sources.v2.CubeSource]])
+  * that plans every asset's chunk and strip/tile reads under the pushed
+  * extent and packs them into core-sized partitions — thousands of COG
+  * assets at 100 TB spread over every executor core, while a small raster
+  * runs as a few tasks instead of one per chunk.
   *
   * Pixel decode is REAL for reachable zarr v2 stores ([[ZarrReader]],
   * rank 2 and 3) and baseline GeoTIFF/COG files ([[TiffReader]]: strips,
   * tiles, overview pyramids, none/deflate, single- and multi-band chunky
   * interleave). Unreachable hrefs and unsupported codecs (JPEG/LZW,
   * BigTIFF) fall back to a deterministic fake grid so the plumbing
-  * (asset table → per-asset cell fan-out → long-form cube with dim
-  * inference) always runs end-to-end.
+  * (asset table → cell fan-out → long-form cube with dim inference)
+  * always runs end-to-end.
   */
 object StacLoader {
 
@@ -204,11 +207,11 @@ object StacLoader {
     * decode for REAL through [[ZarrReader]], and reachable GeoTIFF/COG
     * files through [[TiffReader]] (strips/tiles, none/LZW/JPEG/deflate/
     * PackBits, chunky and planar band layouts, classic and BigTIFF) —
-    * per-chunk/per-strip executor fan-out, row/col mapped onto the item
-    * bbox. Unreachable hrefs (object-store URIs in this offline
-    * environment) fall back to a deterministic fake grid; the plumbing
-    * (asset table → per-asset cell fan-out → long-form cube) is identical
-    * either way.
+    * one scan whose chunk and strip reads pack into core-sized
+    * partitions, row/col mapped onto the item bbox. Unreachable hrefs
+    * (object-store URIs in this offline environment) fall back to a
+    * deterministic fake grid; the plumbing (asset table → cell fan-out →
+    * long-form cube) is identical either way.
     *
     * `projection` / `resolution` / `resampling` mirror the reference
     * loader's convenience args (cubes/load.py:94-109): decode at the native
@@ -233,40 +236,26 @@ object StacLoader {
     val (tiffReal, faked) = rest.partition(a =>
       tiffPathOf(a).exists(p =>
         scala.util.Try(TiffReader.readMeta(p)).isSuccess))
-    val realParts = zarrReal.map { a =>
-      // zarr assets mount through the DataSourceV2 facade: a
-      // cube-coordinate table (x, y, t, bands, value) whose scan
-      // translates pushed x/y/t/bands predicates into chunk-index
-      // ranges ([[graft.sources.v2.ZarrCubeSource]]). The bbox and
-      // temporal extents below are then plain Catalyst filters, so
-      // pruning arrives via the optimizer — and a graph that filters
-      // AFTER loading (filter_bbox / filter_temporal post load_stac)
-      // prunes chunks the same way, the engine's twin of the
-      // reference's dask lazy slicing (cubes/load.py:245-310). Axis
-      // semantics live in the source: rank 2 = (row, col); rank 3 is a
-      // time axis when the item's cube:dimensions temporal labels match
-      // axis 0 (each slice carries its label as t), else the common
-      // Sentinel (band, row, col) with "<asset-band>_<index>" bands.
-      spark.read.format("graft.sources.v2.ZarrCubeSource")
-        .option("path", zarrDirOf(a).get)
-        .option("west", a.west.toString).option("south", a.south.toString)
-        .option("east", a.east.toString).option("north", a.north.toString)
-        .option("band", a.band)
-        .option("datetime", a.datetime)
-        .option("timeLabels", a.timeLabels.mkString(","))
-        .load()
-    } ++ tiffReal.map { a =>
-      // GeoTIFF/COG assets mount through the same facade shape
-      // ([[graft.sources.v2.TiffCubeSource]]): pushed x/y predicates
-      // become strip/tile footprints, one scan partition per segment
-      spark.read.format("graft.sources.v2.TiffCubeSource")
-        .option("path", tiffPathOf(a).get)
-        .option("west", a.west.toString).option("south", a.south.toString)
-        .option("east", a.east.toString).option("north", a.north.toString)
-        .option("band", a.band)
-        .option("datetime", a.datetime)
-        .load()
-    }
+    // reachable assets mount as ONE DataSourceV2 scan
+    // ([[graft.sources.v2.CubeSource]]): a cube-coordinate table
+    // (x, y, t, bands, value) whose scan translates pushed x/y/t/bands
+    // predicates into chunk-index and strip/tile ranges, then packs the
+    // planned reads into core-sized partitions. The bbox and temporal
+    // extents below are plain Catalyst filters, so pruning arrives via
+    // the optimizer — and a graph that filters AFTER loading
+    // (filter_bbox / filter_temporal post load_stac) prunes reads the
+    // same way, the engine's twin of the reference's dask lazy slicing
+    // (cubes/load.py:245-310). Zarr axis semantics live in the source:
+    // rank 3 is a time axis when the item's cube:dimensions temporal
+    // labels match axis 0, else the common Sentinel (band, row, col).
+    val real = zarrReal.map(a => v2.CubeSource.asset(v2.CubeSource.Zarr,
+      zarrDirOf(a).get, a.west, a.south, a.east, a.north, a.band,
+      a.datetime, a.timeLabels)) ++
+      tiffReal.map(a => v2.CubeSource.asset(v2.CubeSource.Tiff,
+        tiffPathOf(a).get, a.west, a.south, a.east, a.north, a.band,
+        a.datetime))
+    val realParts =
+      if (real.isEmpty) Nil else Seq(v2.CubeSource.frame(spark, real))
     val fakeParts =
       if (faked.isEmpty) Nil
       else {

@@ -1,0 +1,164 @@
+package graft.sources.v2
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import java.util
+
+/** DataSourceV2 facade over the raster readers: the reachable zarr and
+  * GeoTIFF/COG assets of one load exposed as ONE cube-coordinate table
+  * `(x, y, t, bands, value)` whose scan translates pushed Catalyst filters
+  * into chunk-index and strip/tile ranges.
+  *
+  * This is what makes extent pruning arrive via the OPTIMIZER instead of
+  * loader arguments: a graph that loads first and filters later —
+  * `load_stac` → `filter_bbox` → `filter_temporal`, the reference's lazy
+  * xarray-slicing ergonomics (cubes/load.py:245-310) — compiles to a
+  * `Filter` over this scan, Catalyst pushes the x/y/t/bands predicates
+  * down, and the scan plans ONLY the intersecting chunk and segment
+  * reads ([[ZarrChunks]], [[TiffSegments]]). At 100 TB the difference is
+  * reading a handful of chunk files versus the whole store.
+  *
+  * Scan layout: the planned reads of every asset are packed into
+  * core-sized partitions by Spark's file-scan rule ([[CubeScan]]), so a
+  * small raster runs as a few tasks and a large store still spreads over
+  * every core. Pushed filters are also RETURNED as residuals, so Spark
+  * re-applies them exactly: the index translation may keep a boundary
+  * cell (it widens one cell against float edges) but can never produce a
+  * wrong row.
+  *
+  * Axis semantics mirror [[graft.sources.StacLoader.loadCube]]: zarr
+  * rank 2 = (row=y, col=x); rank 3 with time labels matching axis 0 =
+  * (time, row, col) where each slice carries its label as `t`; any other
+  * rank 3 = (band, row, col) with `bands` = `<band>_<i>`. Single-sample
+  * TIFFs carry the asset band name, multi-sample ones `<band>_<i>` per
+  * sample. Column pruning is supported — a `value`-only aggregate never
+  * materialises coordinates.
+  *
+  * The engine builds the relation directly ([[CubeSource.frame]]);
+  * `spark.read.format("graft.sources.v2.CubeSource")` mounts ONE asset
+  * from string options (`path`, `west`, `south`, `east`, `north`, `band`,
+  * `datetime`, optional comma-separated `timeLabels`); a directory path is
+  * a zarr store, a file path a TIFF.
+  */
+class CubeSource extends TableProvider {
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    CubeSource.Schema
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: util.Map[String, String]): Table =
+    new CubeTable(Seq(CubeSource.assetFrom(properties)))
+  override def supportsExternalMetadata(): Boolean = false
+}
+
+object CubeSource {
+  val Schema: StructType = StructType(Seq(
+    StructField("x", DoubleType, nullable = false),
+    StructField("y", DoubleType, nullable = false),
+    StructField("t", TimestampType, nullable = false),
+    StructField("bands", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = false)))
+
+  sealed trait Format extends Serializable
+  case object Zarr extends Format
+  case object Tiff extends Format
+
+  /** Immutable asset description carried into every planned read: format,
+    * store/file path, geo transform corners, band name, the constant
+    * datetime, and (zarr only, optionally) per-slice time labels.
+    */
+  final case class Asset(format: Format, path: String, west: Double,
+      south: Double, east: Double, north: Double, band: String,
+      datetimeMicros: Long, labelMicros: Array[Long]) extends Serializable
+
+  /** An asset from STAC item fields (ISO datetimes). */
+  def asset(format: Format, path: String, west: Double, south: Double,
+      east: Double, north: Double, band: String, datetime: String,
+      timeLabels: Seq[String] = Nil): Asset =
+    Asset(format, path, west, south, east, north, band,
+      parseMicros(datetime), timeLabels.map(parseMicros).toArray)
+
+  /** One scan over `assets` as a DataFrame: the relation is built directly,
+    * so the asset list never round-trips through string options.
+    */
+  def frame(spark: SparkSession, assets: Seq[Asset]): DataFrame =
+    PlanBridge.frame(spark, DataSourceV2Relation.create(
+      new CubeTable(assets), None, None))
+
+  private[v2] def assetFrom(props: util.Map[String, String]): Asset = {
+    val ci = new CaseInsensitiveStringMap(props) // option case is caller's
+    def req(k: String): String = {
+      val v = ci.get(k)
+      require(v != null && v.nonEmpty, s"CubeSource: missing option $k")
+      v
+    }
+    val path = req("path")
+    val labels = Option(ci.get("timelabels")).filter(_.nonEmpty)
+      .map(_.split(",").toSeq).getOrElse(Nil)
+    asset(if (new java.io.File(path).isDirectory) Zarr else Tiff, path,
+      req("west").toDouble, req("south").toDouble, req("east").toDouble,
+      req("north").toDouble, req("band"), req("datetime"), labels)
+  }
+
+  /** ISO datetime → epoch micros (UTC). Accepts instants with offset,
+    * bare datetimes and bare dates — the forms STAC items carry.
+    */
+  private[v2] def parseMicros(s: String): Long = {
+    val inst =
+      try java.time.Instant.parse(s)
+      catch {
+        case _: java.time.format.DateTimeParseException =>
+          try java.time.LocalDateTime.parse(s)
+            .atOffset(java.time.ZoneOffset.UTC).toInstant
+          catch {
+            case _: java.time.format.DateTimeParseException =>
+              java.time.LocalDate.parse(s).atStartOfDay(
+                java.time.ZoneOffset.UTC).toInstant
+          }
+      }
+    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+  }
+
+  /** A pushed comparison value → epoch micros; the Filter API hands
+    * TimestampType literals as java.sql.Timestamp (default) or
+    * java.time.Instant (java8 datetime API).
+    */
+  private[v2] def toMicros(v: Any): Option[Long] = v match {
+    case ts: java.sql.Timestamp =>
+      Some(math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
+    case i: java.time.Instant =>
+      Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    case s: String => scala.util.Try(parseMicros(s)).toOption
+    case _ => None
+  }
+
+  private[v2] def toDouble(v: Any): Option[Double] = v match {
+    case d: Double => Some(d)
+    case f: Float => Some(f.toDouble)
+    case i: Int => Some(i.toDouble)
+    case l: Long => Some(l.toDouble)
+    case s: Short => Some(s.toDouble)
+    case b: Byte => Some(b.toDouble)
+    case d: java.math.BigDecimal => Some(d.doubleValue())
+    case _ => None
+  }
+}
+
+private[v2] class CubeTable(assets: Seq[CubeSource.Asset])
+    extends Table with SupportsRead {
+  override def name(): String = assets match {
+    case Seq(a) => s"cube:${a.path}"
+    case _ => s"cube:${assets.size} assets"
+  }
+  override def schema(): StructType = CubeSource.Schema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(
+      options: CaseInsensitiveStringMap): ScanBuilder =
+    new CubeExtentScanBuilder(assets)
+}

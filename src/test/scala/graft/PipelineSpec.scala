@@ -1107,7 +1107,7 @@ class PipelineSpec extends AnyFunSuite {
           .as("u"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hof = d.select(col("doc_id"),
-        Importance.dsirUnitsHofColumn(d, col("text"), col("tgt"), buckets = 64)
+        ReferenceForms.dsirUnitsHofColumn(d, col("text"), col("tgt"), buckets = 64)
           .as("u"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fused == hof)
@@ -1354,7 +1354,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(got(i.toLong) == want, s"host=$h got=${got(i.toLong)} want=$want")
     // the naive last-two-labels form groups co.uk hosts WRONG — that is
     // exactly why the PSL lookup exists
-    val naive = df.select(TextAnalysis.registeredDomainNaive(col("host")))
+    val naive = df.select(ReferenceForms.registeredDomainNaive(col("host")))
       .collect().map(_.getString(0))
     assert(naive(0) == "co.uk")
   }
@@ -1513,7 +1513,7 @@ class PipelineSpec extends AnyFunSuite {
       Repetition.stats(col("text")).getField("ttr"),
       size(Bpe.encode(col("text"), Seq(("t", "h"), ("th", "e")))),
       Importance.dsirUnitsColumn(docs, col("text"), col("tgt")),
-      Importance.dsirUnitsHofColumn(docs, col("text"), col("tgt"))).head()
+      ReferenceForms.dsirUnitsHofColumn(docs, col("text"), col("tgt"))).head()
     assert(r.getDouble(0) == 11.0)
     assert(r.getInt(1) == 9 && r.getInt(2) == 10 && r.getInt(3) == 64)
     assert(r.getDouble(4) == 0.9 && r.getInt(5) >= 10)

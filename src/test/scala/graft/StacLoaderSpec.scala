@@ -1123,7 +1123,7 @@ class StacLoaderSpec extends AnyFunSuite {
          |}}""".stripMargin
     val assets = StacLoader.parseItem(tItem)
     val cube = StacLoader.loadCube(spark, assets)
-    assert(cube.df.rdd.getNumPartitions == 2, "one scan partition per strip")
+    assert(CubeScans.plannedReads(cube.df) == 2, "one scan read per strip")
     val rows = cube.df.collect()
     assert(rows.length == 24)
     val got = rows.map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(4)).toMap
@@ -1133,12 +1133,12 @@ class StacLoaderSpec extends AnyFunSuite {
     // stay inside strip 0, so one strip of two is planned
     val cut = graft.operators.FilterOps.filterBbox(
       cube, west = 10.0, east = 11.0, south = 46.0, north = 46.2)
-    assert(cut.df.rdd.getNumPartitions == 1,
+    assert(CubeScans.plannedReads(cut.df) == 1,
       "filter_bbox AFTER load_stac must prune TIFF strips")
     assert(cut.df.count() == 6) // row 0 only (y = 46.0)
     assert(cut.df.queryExecution.executedPlan.toString.contains("PushedExtent"))
     // band mismatch empties the scan without touching the raster
-    assert(cube.df.filter(col("bands") === "NOPE").rdd.getNumPartitions == 0)
+    assert(CubeScans.plannedReads(cube.df.filter(col("bands") === "NOPE")) == 0)
   }
 
   /** Rank-3 zarr store with a TIME axis: shape (8,2,3), chunks (2,2,3) →

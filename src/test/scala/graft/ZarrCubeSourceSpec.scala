@@ -1,5 +1,6 @@
 package graft
 
+import graft.CubeScans.plannedReads
 import graft.sources.{StacLoader, ZarrReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -7,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** DataSourceV2 facade over zarr stores: extent predicates pushed by
   * CATALYST (not loader arguments) must prune the chunk fan-out — the
-  * partition count IS the planned chunk count, so pruning is observable
-  * as `rdd.getNumPartitions`. Covers rank-2, band-axis and time-axis
+  * scan description's planned read count (`reads=`) IS the planned chunk
+  * count, so pruning is observable as [[CubeScans.plannedReads]]. Covers rank-2, band-axis and time-axis
   * layouts, filters applied AFTER loading, column pruning, and the
   * load_stac → filter_bbox graph ordering the facade exists for.
   */
@@ -60,7 +61,7 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
 
   private def read(path: String, band: String = "B04",
       labels: Seq[String] = Nil): DataFrame =
-    spark.read.format("graft.sources.v2.ZarrCubeSource")
+    spark.read.format("graft.sources.v2.CubeSource")
       .option("path", path)
       .option("west", "10.0").option("south", "46.0")
       .option("east", "11.0").option("north", "47.0")
@@ -69,9 +70,9 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
       .option("timeLabels", labels.mkString(","))
       .load()
 
-  test("full rank-2 read: cube coordinates and values; one partition per chunk") {
+  test("full rank-2 read: cube coordinates and values; one read per chunk") {
     val df = read(writeRank2())
-    assert(df.rdd.getNumPartitions == 4) // 2×2 chunk grid
+    assert(plannedReads(df) == 4) // 2×2 chunk grid
     val rows = df.collect()
     assert(rows.length == 24)
     val got = rows.map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(4)).toMap
@@ -88,7 +89,7 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
     // south-west corner: the ±1-cell guard keeps the hull inside the
     // first (2,3) chunk — cols 0..2, rows 0..1
     val q = df.filter(col("x") <= 10.2 && col("y") <= 46.2)
-    assert(q.rdd.getNumPartitions == 1, "one chunk of four planned")
+    assert(plannedReads(q) == 1, "one chunk of four planned")
     val want = df.collect().filter(r => r.getDouble(0) <= 10.2 && r.getDouble(1) <= 46.2)
       .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(4)).toMap
     val got = q.collect()
@@ -98,36 +99,36 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
     assert(q.queryExecution.executedPlan.toString.contains("PushedExtent"),
       "scan description must advertise the pushed extent")
     // a disjoint extent plans nothing at all
-    assert(df.filter(col("x") > 50.0).rdd.getNumPartitions == 0)
+    assert(plannedReads(df.filter(col("x") > 50.0)) == 0)
   }
 
   test("time-axis: a temporal filter AFTER load prunes axis-0 chunks") {
     val labels = (1 to 4).map(d => s"2023-06-0${d}T00:00:00Z")
     val df = read(writeRank3(), labels = labels)
-    assert(df.rdd.getNumPartitions == 4)
+    assert(plannedReads(df) == 4)
     // each slice carries its own label
     assert(df.select("t").distinct().count() == 4)
     val q = df.filter(col("t") >= to_timestamp(lit("2023-06-02")) &&
       col("t") < to_timestamp(lit("2023-06-03")))
-    assert(q.rdd.getNumPartitions == 1, "one time chunk of four")
+    assert(plannedReads(q) == 1, "one time chunk of four")
     val got = q.collect()
     assert(got.length == 6 && got.forall(_.getDouble(4) >= 100.0) &&
       got.forall(_.getDouble(4) < 200.0))
     // constant-datetime mismatch on a rank-2 store empties the scan
     val flat = read(writeRank2())
-    assert(flat.filter(col("t") >= to_timestamp(lit("2024-01-01")))
-      .rdd.getNumPartitions == 0)
+    assert(plannedReads(
+      flat.filter(col("t") >= to_timestamp(lit("2024-01-01")))) == 0)
   }
 
   test("band-axis: filter bands = one band name prunes axis-0 chunks") {
     val df = read(writeRank3()) // no labels → band axis, bands B04_<i>
     assert(df.select("bands").distinct().count() == 4)
     val q = df.filter(col("bands") === "B04_2")
-    assert(q.rdd.getNumPartitions == 1)
+    assert(plannedReads(q) == 1)
     val got = q.collect()
     assert(got.length == 6 && got.forall(r =>
       r.getDouble(4) >= 200.0 && r.getDouble(4) < 300.0))
-    assert(df.filter(col("bands") === "NOPE").rdd.getNumPartitions == 0)
+    assert(plannedReads(df.filter(col("bands") === "NOPE")) == 0)
   }
 
   test("column pruning reaches the scan; value-only aggregate works") {
@@ -147,10 +148,10 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
          |}}""".stripMargin
     val assets = StacLoader.parseItem(zItem)
     val loaded = StacLoader.loadCube(spark, assets) // NO extent at load
-    assert(loaded.df.rdd.getNumPartitions == 4)
+    assert(plannedReads(loaded.df) == 4)
     val cut = graft.operators.FilterOps.filterBbox(
       loaded, west = 10.0, east = 10.2, south = 46.0, north = 46.2)
-    assert(cut.df.rdd.getNumPartitions == 1,
+    assert(plannedReads(cut.df) == 1,
       "filter_bbox AFTER load_stac must reach the scan and prune chunks")
     assert(cut.df.count() == 2 * 1) // cols {0,1} × row {0}
     assert(cut.df.queryExecution.executedPlan.toString.contains("PushedExtent"))
@@ -166,10 +167,10 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
          |  "store":{"href":"file://${writeRank3()}","type":"application/vnd+zarr"}
          |}}""".stripMargin
     val tLoaded = StacLoader.loadCube(spark, StacLoader.parseItem(tItem))
-    assert(tLoaded.df.rdd.getNumPartitions == 4)
+    assert(plannedReads(tLoaded.df) == 4)
     val tCut = graft.operators.FilterOps.filterTemporal(
       tLoaded, "2023-06-02", "2023-06-03")
-    assert(tCut.df.rdd.getNumPartitions == 1,
+    assert(plannedReads(tCut.df) == 1,
       "filter_temporal AFTER load_stac must prune time chunks")
     assert(tCut.df.count() == 6)
   }
@@ -196,7 +197,7 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
          |         "result": true}}}""".stripMargin
     val cube = graft.plans.ProcessGraph.execute(spark, g,
       _ => fail("no collections in this graph"))
-    assert(cube.df.rdd.getNumPartitions == 1,
+    assert(plannedReads(cube.df) == 1,
       "the openEO wire graph's post-load filter must prune chunks")
     assert(cube.df.count() == 2) // cols {0,1} × row {0}
   }
@@ -210,10 +211,10 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
          |"assets":{"store":{"href":"file://$dir",
          |  "type":"application/vnd+zarr"}}}""".stripMargin
     val loaded = StacLoader.loadCube(spark, StacLoader.parseItem(zItem))
-    assert(loaded.df.rdd.getNumPartitions == 4)
+    assert(plannedReads(loaded.df) == 4)
     val cut = graft.operators.FilterOps.filterBands(
       loaded, Seq("store_1", "store_2"))
-    assert(cut.df.rdd.getNumPartitions == 2,
+    assert(plannedReads(cut.df) == 2,
       "filter_bands AFTER load_stac must prune band-axis chunks")
     assert(cut.df.count() == 2 * 6)
   }
