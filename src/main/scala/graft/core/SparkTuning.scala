@@ -6,8 +6,12 @@ import org.apache.spark.sql.SparkSession
   * session-level tuning it applies at build: the `InferFiltersFromGenerate`
   * exclusion, the engine's optimizer rules, the parquet nanos flag the
   * loaders need, and defaults for native confs the caller has not set.
-  * `Tables.read` and the stream sources call [[tune]] again, for sessions
-  * built outside the engine.
+  * `Tables.read` and the stream harness (on its private clone) call
+  * [[tune]] again, for sessions built outside the engine. [[scopedSession]]
+  * is how a library entry point runs with settings of its own: on a
+  * private clone, never by writing the caller's conf. This is the one file
+  * under `src/main`, tools aside, that writes session conf
+  * (`SessionFactorySpec` enforces it).
   *
   * `InferFiltersFromGenerate` clones the generator's child expression into a
   * `size(e) > 0` filter; predicate pushdown then sinks that clone below the
@@ -54,6 +58,34 @@ object SparkTuning {
     spark.sparkContext.setLogLevel("ERROR")
     tune(spark)
     spark
+  }
+
+  /** A private clone of `spark` with `overrides` set on the clone only. The
+    * clone copies the caller's conf, temp views and optimizer rules and
+    * shares its SparkContext and cache; frames move between the two by
+    * logical plan (`PlanBridge.frame`). Concurrent callers of one session
+    * each get their own clone, so no one plans under another's override,
+    * and a streaming memory sink's query name and temp view live and die
+    * with the clone.
+    *
+    * The clone opts out of session artifact isolation. An isolated
+    * session's tasks run under a class loader of its own, and the codegen
+    * class cache is keyed by that loader, so every fresh isolated clone
+    * recompiled every stage (PageRank at sf0.01: 36 Janino compiles per
+    * warm run instead of 0, by `CodegenProbe`). Opted-out sessions share
+    * the executors' default loader, so a stage compiles once per JVM. A
+    * session reads the setting when it is created, from the conf it is
+    * cloned from, hence the intermediate clone that carries it. The engine
+    * adds no session artifacts, so the clone needs none of the caller's.
+    */
+  def scopedSession(spark: SparkSession,
+      overrides: (String, String)*): SparkSession = {
+    import org.apache.spark.sql.graftbridge.PlanBridge.cloneSession
+    val unisolated = cloneSession(spark)
+    unisolated.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    val clone = cloneSession(unisolated)
+    for ((k, v) <- overrides) clone.conf.set(k, v)
+    clone
   }
 
   def tune(spark: SparkSession): Unit = {

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -118,27 +119,34 @@ object LinkGraph {
     val cols = edges.columns.toSet
     require(cols.contains("src") && cols.contains("dst"),
       s"pageRank: edge frame needs (src, dst), got ${edges.columns.mkString(",")}")
-    // AQE is scoped OFF for the materialized run (optimization guide
-    // §1.2, cut driver-paced jobs): every exchange this dataflow runs is
-    // NODE-table-sized by construction — the rank/inflow/node frames are
-    // O(nodes); the edge-sized work rides the persisted cache and
-    // broadcast joins — so adaptive re-planning has nothing to adapt,
-    // while its per-exchange query-stage scheduling charges one driver
-    // job per shuffle per action (~45 jobs/invocation at k≈5 measured by
-    // Profile; interleaved A/B with AQE off: 1.20× at 32c/sf0.1, 1.56×
-    // at 8c, 1.32× at 32c/sf1 — consistent across core counts and SFs
-    // because the overhead is per-stage, not per-byte). Results are
-    // execution-identical (AQE never changes query semantics).
-    // The audit path (materialize = false) runs no actions here and the
-    // session conf is left untouched for it.
-    val sess = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeSaved = sess.conf.getOption(aqeKey)
-    if (materialize) sess.conf.set(aqeKey, "false")
-    try {
+    // The materialized run plans with AQE OFF (optimization guide §1.2,
+    // cut driver-paced jobs). Every exchange this dataflow runs is
+    // NODE-table-sized by construction: the rank/inflow/node frames are
+    // O(nodes), and the edge-sized work rides the persisted cache and
+    // broadcast joins. Adaptive re-planning has nothing to adapt here,
+    // while its query-stage scheduling charges one driver job per
+    // shuffle per action (~45 jobs/invocation at k≈5, measured by
+    // Profile). Interleaved A/B with AQE off: 1.20× at 32c/sf0.1, 1.56×
+    // at 8c, 1.32× at 32c/sf1; the gain holds across core counts and SFs
+    // because the overhead is per-stage, not per-byte. AQE never changes
+    // results.
+    // The loop runs on a private clone of the caller's session that
+    // carries the override (SparkTuning.scopedSession): the edges are
+    // rebound to the clone by logical plan, and the result is rebound to
+    // the caller's session the same way below. The caller's conf is never
+    // written, so a thread sharing its session keeps planning with AQE.
+    // The audit path (materialize = false) runs no actions and stays on
+    // the caller's session.
+    val caller = edges.sparkSession
+    val input =
+      if (!materialize) edges
+      else PlanBridge.frame(
+        graft.core.SparkTuning.scopedSession(caller,
+          "spark.sql.adaptive.enabled" -> "false"),
+        edges.queryExecution.analyzed)
     // project away extra payload columns so they can't collide with the
     // internal helper names (_n/_deg/_c/_in/node/rank_units)
-    val e = edges.select(col("src"), col("dst"))
+    val e = input.select(col("src"), col("dst"))
 
     // nodes and degree-annotated edges are read by EVERY iteration —
     // persist both (bounded: O(nodes) and O(edges); spill, not evict)
@@ -221,16 +229,7 @@ object LinkGraph {
       releases.foreach(_.apply())
       nodes.unpersist(blocking = false)
       ej.unpersist(blocking = false)
-      (out, i)
-    }
-    } finally {
-      // restore the caller's AQE state whatever happened above — the
-      // scope must not leak into the session (the materialized result is
-      // a checkpoint scan; nothing downstream re-plans this dataflow)
-      if (materialize) aqeSaved match {
-        case Some(v) => sess.conf.set(aqeKey, v)
-        case None    => sess.conf.unset(aqeKey)
-      }
+      (PlanBridge.frame(caller, out.queryExecution.analyzed), i)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.operators.MLOps
 import graft.sources.Tables
 import graft.streaming.StreamingOps
+import graft.streaming.StreamingOps.{multiBatch, singleFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,75 +51,50 @@ object MLQueries {
         .select(col("l_orderkey"), col("l_linenumber"),
           col("prediction").cast("bigint").as("pred_class"))
     },
-    "streaming_window" -> { (s, dir) =>
-      StreamingOps.windowedEventAggregate(s, s"$dir/events.parquet")
-    },
+    "streaming_window" -> singleFile(StreamingOps.WindowAgg),
     // Batch/stream parity: the flatMapGroupsWithState sessionizer driven to
     // completion over the same parquet must reproduce the batch `sessionize`
     // query exactly — it shares that query's DuckDB oracle.
-    "sessionize_stream" -> { (s, dir) =>
-      StreamingOps.sessionizeEventsFile(s, s"$dir/events.parquet")
-    },
+    "sessionize_stream" -> singleFile(StreamingOps.Sessionize),
     // Streaming exact dedup crossed under the oracle: exactly one survivor
     // per (user_id, event_type) key must emerge from
     // dropDuplicatesWithinWatermark — the key set is deterministic even
     // though the surviving physical row is not.
-    "dedup_stream" -> { (s, dir) =>
-      StreamingOps.dedupEventsFile(s, s"$dir/events.parquet")
-    },
+    "dedup_stream" -> singleFile(StreamingOps.Dedup),
     // MULTI-BATCH stateful evidence (r11): the same two operators driven
-    // over ≥5 time-ordered micro-batches — per-user/per-key state crosses
-    // real batch boundaries, with the watermark delay sized past the data
-    // span so no state expires mid-run and the fold stays exact. Shares
-    // the single-batch rows' oracles: parity must hold in both regimes.
-    "sessionize_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.sessionizeEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
-    "dedup_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.dedupEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    // over 3 time-ordered shards, one micro-batch each — per-user/per-key
+    // state crosses real batch boundaries, with the watermark delay sized
+    // past the data span so no state expires mid-run and the fold stays
+    // exact. Shares the single-batch rows' oracles: parity must hold in
+    // both regimes.
+    "sessionize_stream_multibatch" -> multiBatch(StreamingOps.Sessionize),
+    "dedup_stream_multibatch" -> multiBatch(StreamingOps.Dedup),
     // SpaceSaving heavy hitters on the stream: the sketch buffer IS the
     // streaming state (O(capacity), key-space independent); in the
     // no-eviction regime the terminal snapshot equals the batch groupBy
     // top-k, which is the shared oracle. Single- and multi-batch runs
     // must agree — the sketch is a pure merge across triggers.
-    "heavy_hitters_stream" -> { (s, dir) =>
-      StreamingOps.heavyHittersEventsFile(s, s"$dir/events.parquet")
-    },
-    "heavy_hitters_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.heavyHittersEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "heavy_hitters_stream" -> singleFile(StreamingOps.HeavyHitters),
+    "heavy_hitters_stream_multibatch" -> multiBatch(StreamingOps.HeavyHitters),
     // weighted-quantile sketch on the stream: the sketch buffer IS the
     // streaming state (O(capacity), row-count independent); values
     // quantize to deci-units so the distinct count is domain-bounded and
     // the no-compression regime makes the terminal snapshot equal the
     // exact batch quantiles, which is the shared oracle. Single- and
     // multi-batch runs must agree — the sketch is a pure merge.
-    "quantiles_stream" -> { (s, dir) =>
-      StreamingOps.quantilesEventsFile(s, s"$dir/events.parquet")
-    },
-    "quantiles_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.quantilesEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "quantiles_stream" -> singleFile(StreamingOps.Quantiles),
+    "quantiles_stream_multibatch" -> multiBatch(StreamingOps.Quantiles),
     // bounded-heap top-k per key on the stream: O(k) state per key vs
     // retaining every row; exact at ANY batching (total order, pure
     // merge) — no regime caveat, shares the batch window oracle
-    "topk_stream" -> { (s, dir) =>
-      StreamingOps.topkEventsFile(s, s"$dir/events.parquet")
-    },
-    "topk_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.topkEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "topk_stream" -> singleFile(StreamingOps.TopK),
+    "topk_stream_multibatch" -> multiBatch(StreamingOps.TopK),
     // CDC upsert view on the stream: latest change per (user_id,
     // event_type) held as max_by state — O(keys) state on an unbounded
     // change log, exact at ANY batching ((ts, event_id) is a total
     // order, pure merge); shares the batch cdc_latest oracle
-    "cdc_latest_stream" -> { (s, dir) =>
-      StreamingOps.cdcLatestEventsFile(s, s"$dir/events.parquet")
-    },
-    "cdc_latest_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.cdcLatestEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "cdc_latest_stream" -> singleFile(StreamingOps.CdcLatest),
+    "cdc_latest_stream_multibatch" -> multiBatch(StreamingOps.CdcLatest),
     // event-time-bounded STREAM-STREAM join (view → clicks within 60
     // min, same user): both sides buffered in the join state store, the
     // time bound + watermark making that state evictable on a live feed.
@@ -127,40 +103,24 @@ object MLQueries {
     // covers the table span, so both runs share the plain-SQL oracle.
     // The multibatch run is the real evidence: view and click routinely
     // arrive in DIFFERENT micro-batches, so every pair crosses state.
-    "stream_join_attrib" -> { (s, dir) =>
-      StreamingOps.attributionJoinEventsFile(s, s"$dir/events.parquet")
-    },
-    "stream_join_attrib_multibatch" -> { (s, dir) =>
-      StreamingOps.attributionJoinEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "stream_join_attrib" -> singleFile(StreamingOps.Attribution),
+    "stream_join_attrib_multibatch" -> multiBatch(StreamingOps.Attribution),
     // STREAM-STATIC enrichment: the event stream broadcast-joined to the
     // customer → nation dimension chain per micro-batch (stateless join,
     // dimensions never buffered) with a stateful per-(nation, type)
     // aggregate on top — exact at any batching, shared batch oracle
-    "stream_enrich" -> { (s, dir) =>
-      StreamingOps.enrichEventsFile(s, s"$dir/events.parquet", dir)
-    },
-    "stream_enrich_multibatch" -> { (s, dir) =>
-      StreamingOps.enrichEventsFileMultiBatch(s, s"$dir/events.parquet", dir)
-    },
+    "stream_enrich" -> singleFile(StreamingOps.Enrich),
+    "stream_enrich_multibatch" -> multiBatch(StreamingOps.Enrich),
     // streaming climatological anomaly: STATIC normals (batch-computed
     // baseline) broadcast onto the live stream — stateless, exactly-once
     // per event at any batching, shared batch oracle
-    "anomaly_stream" -> { (s, dir) =>
-      StreamingOps.anomalyEventsFile(s, s"$dir/events.parquet", dir)
-    },
-    "anomaly_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.anomalyEventsFileMultiBatch(s, s"$dir/events.parquet", dir)
-    },
+    "anomaly_stream" -> singleFile(StreamingOps.Anomaly),
+    "anomaly_stream_multibatch" -> multiBatch(StreamingOps.Anomaly),
     // KMV/theta distinct-count sketch on the stream: O(k) state vs a
     // key-space-sized dedup store; exact in the no-truncation regime
     // (distinct users ≪ k at every gate SF), which the oracle pins
-    "distinct_users_stream" -> { (s, dir) =>
-      StreamingOps.distinctUsersEventsFile(s, s"$dir/events.parquet")
-    },
-    "distinct_users_stream_multibatch" -> { (s, dir) =>
-      StreamingOps.distinctUsersEventsFileMultiBatch(s, s"$dir/events.parquet")
-    },
+    "distinct_users_stream" -> singleFile(StreamingOps.DistinctUsers),
+    "distinct_users_stream_multibatch" -> multiBatch(StreamingOps.DistinctUsers),
 
     // run_udf: user Python source executed against the cube through the
     // subprocess-pipe bridge (UdfOps) — truncation to cents happens INSIDE

@@ -100,7 +100,10 @@ object StacLoader {
 
   /** Read a static STAC catalog JSON — `links` with `rel = "item"`, hrefs
     * resolved against the catalog's own directory — and parse every item
-    * into its band assets. The offline twin of the reference's
+    * into its band assets. A relative asset href is resolved against its
+    * item file's directory, as STAC specifies, when that path exists;
+    * otherwise it is left as written (a path relative to the working
+    * directory). The offline twin of the reference's
     * `client.search()` phase (load.py:111-161): a filesystem catalog
     * instead of an API, the same item → asset-table product. Driver-side:
     * catalogs and items are kilobytes; the PIXELS fan out to executors.
@@ -118,10 +121,21 @@ object StacLoader {
             val hp = java.nio.file.Paths.get(href.stripPrefix("file://"))
             val p = if (hp.isAbsolute) hp else base.resolve(hp)
             parseItem(java.nio.file.Files.readString(p))
+              .map(a => a.copy(href = itemRelative(p.getParent, a.href)))
           case _ => Nil
         }
       }
       case _ => Nil
+    }
+  }
+
+  private def itemRelative(itemDir: java.nio.file.Path, href: String)
+      : String = {
+    val raw = href.stripPrefix("file://")
+    if (raw.contains("://") || java.nio.file.Paths.get(raw).isAbsolute) href
+    else {
+      val resolved = itemDir.resolve(raw)
+      if (java.nio.file.Files.exists(resolved)) resolved.toString else href
     }
   }
 

@@ -57,6 +57,41 @@ class StacLoaderSpec extends AnyFunSuite {
     assert(v.map(_.getAs[Double]("value")).toSeq == Seq(135.0, 1135.0))
   }
 
+  test("catalog load resolves relative asset hrefs against the item file") {
+    // STAC resolves a relative href against the document holding it: a
+    // catalog loaded from outside the working directory must decode the
+    // real raster, not fall back to the fake grid
+    val root = java.nio.file.Files.createTempDirectory("graft_stac_rel")
+    val items = java.nio.file.Files.createDirectory(root.resolve("items"))
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(writeTiffFixture(deflate = true)),
+      items.resolve("red.tif"))
+    java.nio.file.Files.writeString(items.resolve("item-rel.json"),
+      """{"type":"Feature","stac_version":"1.0.0","id":"item-rel",
+        |"bbox":[10.0,46.0,11.0,47.0],
+        |"properties":{"datetime":"2023-06-10T10:00:00Z"},
+        |"assets":{
+        |  "red":{"href":"red.tif",
+        |         "type":"image/tiff; application=geotiff; profile=cloud-optimized",
+        |         "eo:bands":[{"name":"B04"}]},
+        |  "nir":{"href":"absent.tif",
+        |         "type":"image/tiff; application=geotiff; profile=cloud-optimized",
+        |         "eo:bands":[{"name":"B08"}]}
+        |}}""".stripMargin)
+    java.nio.file.Files.writeString(root.resolve("catalog.json"),
+      """{"type":"Catalog","id":"rel","stac_version":"1.0.0",
+        |"links":[{"rel":"item","href":"items/item-rel.json"}]}""".stripMargin)
+    val assets = StacLoader.loadCatalogItems(root.resolve("catalog.json").toString)
+    val byBand = assets.map(a => a.band -> a.href).toMap
+    assert(byBand("B04") == items.resolve("red.tif").toString)
+    // a relative href that resolves to nothing is left as written
+    assert(byBand("B08") == "absent.tif")
+    val rows = StacLoader.loadCube(spark, assets.filter(_.band == "B04"))
+      .df.collect()
+    assert(rows.length == 24) // real raster shape, not the fake 8×8 grid
+    assert(rows.exists(r => r.getDouble(4) == 12.0)) // pixel (1, 2)
+  }
+
   test("TiffWriter deflate + multi-strip round-trips through TiffReader") {
     val vals = Array.tabulate(7 * 5)(i => (i * 3 + 1).toFloat)
     for (deflate <- Seq(false, true); rps <- Seq(0, 2, 5)) {

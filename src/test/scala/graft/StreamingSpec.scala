@@ -219,40 +219,37 @@ class StreamingSpec extends AnyFunSuite {
     val sessBatch = graft.queries.PipelineQueries.queries("sessionize")(spark, dir)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val sessStream = StreamingOps
-      .sessionizeEventsFile(spark, s"$dir/events.parquet",
-        queryName = "spec_sess_stream")
+      .singleFile(StreamingOps.Sessionize)(spark, dir)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(sessStream == sessBatch)
 
     val keysBatch = ev.select(col("user_id"), col("event_type")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val keysStream = StreamingOps
-      .dedupEventsFile(spark, s"$dir/events.parquet",
-        queryName = "spec_dedup_stream")
+      .singleFile(StreamingOps.Dedup)(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(keysStream.length == keysStream.toSet.size, "duplicate keys emitted")
     assert(keysStream.toSet == keysBatch)
   }
 
   test("MULTI-BATCH file-driven runners match batch twins at sf0.001") {
-    // the r11 evidence upgrade: state crosses ≥5 real micro-batch
-    // boundaries (asserted inside the runner) and parity must still hold
+    // the r11 evidence upgrade: state crosses the 3 time-ordered shards'
+    // micro-batch boundaries (asserted inside the runner) and parity must
+    // still hold
     val dir = "/root/testdata/sf0.001"
     val ev = graft.sources.Tables.events(spark, dir)
 
     val sessBatch = graft.queries.PipelineQueries.queries("sessionize")(spark, dir)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val sessStream = StreamingOps
-      .sessionizeEventsFileMultiBatch(spark, s"$dir/events.parquet",
-        queryName = "spec_sess_stream_mb")
+      .multiBatch(StreamingOps.Sessionize)(spark, dir)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(sessStream == sessBatch)
 
     val keysBatch = ev.select(col("user_id"), col("event_type")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val keysStream = StreamingOps
-      .dedupEventsFileMultiBatch(spark, s"$dir/events.parquet",
-        queryName = "spec_dedup_stream_mb")
+      .multiBatch(StreamingOps.Dedup)(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(keysStream.length == keysStream.toSet.size, "duplicate keys emitted")
     assert(keysStream.toSet == keysBatch)
@@ -269,15 +266,13 @@ class StreamingSpec extends AnyFunSuite {
       .toSet
     assert(batch.nonEmpty)
     val single = StreamingOps
-      .topkEventsFile(spark, s"$dir/events.parquet",
-        queryName = "spec_topk_stream")
+      .singleFile(StreamingOps.TopK)(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(single == batch)
     val multi = StreamingOps
-      .topkEventsFileMultiBatch(spark, s"$dir/events.parquet",
-        queryName = "spec_topk_stream_mb")
+      .multiBatch(StreamingOps.TopK)(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -297,13 +292,11 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(key).toSet
     assert(batch.nonEmpty)
     val single = StreamingOps
-      .cdcLatestEventsFile(spark, s"$dir/events.parquet",
-        queryName = "spec_cdc_stream")
+      .singleFile(StreamingOps.CdcLatest)(spark, dir)
       .collect().map(key).toSet
     assert(single == batch)
     val multi = StreamingOps
-      .cdcLatestEventsFileMultiBatch(spark, s"$dir/events.parquet",
-        queryName = "spec_cdc_stream_mb")
+      .multiBatch(StreamingOps.CdcLatest)(spark, dir)
       .collect().map(key).toSet
     assert(multi == batch)
   }
@@ -330,13 +323,11 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(batch.nonEmpty)
     val single = StreamingOps
-      .attributionJoinEventsFile(spark, s"$dir/events.parquet",
-        queryName = "spec_ssjoin")
+      .singleFile(StreamingOps.Attribution)(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(single == batch)
     val multi = StreamingOps
-      .attributionJoinEventsFileMultiBatch(spark, s"$dir/events.parquet",
-        queryName = "spec_ssjoin_mb")
+      .multiBatch(StreamingOps.Attribution)(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(multi == batch)
   }
@@ -361,15 +352,13 @@ class StreamingSpec extends AnyFunSuite {
       .toMap
     assert(batch.nonEmpty)
     val single = StreamingOps
-      .enrichEventsFile(spark, s"$dir/events.parquet", dir,
-        queryName = "spec_enrich_stream")
+      .singleFile(StreamingOps.Enrich)(spark, dir)
       .collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3))))
       .toMap
     assert(single == batch)
     val multi = StreamingOps
-      .enrichEventsFileMultiBatch(spark, s"$dir/events.parquet", dir,
-        queryName = "spec_enrich_stream_mb")
+      .multiBatch(StreamingOps.Enrich)(spark, dir)
       .collect()
       .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3))))
       .toMap
