@@ -627,6 +627,31 @@ object ProcessGraph {
       def opt(name: String): Option[PValue] =
         args.get(name).filterNot(_ == NullV)
 
+      /** an optional number: the default applies only when the argument
+        * is absent or null; any other non-number is an error, not the
+        * default
+        */
+      def optNum(name: String): Option[Double] = opt(name).map(_ => num(name))
+
+      /** the load processes' `spatial_extent` object as (west, south,
+        * east, north), if given
+        */
+      def spatialExtent: Option[(Double, Double, Double, Double)] =
+        opt("spatial_extent").map { _ =>
+          val e = JsonMethods.parse(str("spatial_extent"))
+          def d(f: String): Option[Double] = (e \ f) match {
+            case JDouble(x) => Some(x)
+            case JInt(x) => Some(x.toDouble)
+            case JDecimal(x) => Some(x.toDouble)
+            case _ => None
+          }
+          (d("west"), d("south"), d("east"), d("north")) match {
+            case (Some(w), Some(so), Some(ea), Some(no)) => (w, so, ea, no)
+            case _ => throw new IllegalArgumentException(
+              s"$pid.spatial_extent: need west/east/south/north")
+          }
+        }
+
       /** a nullable string element of an extent array: openEO allows
         * `null` for an open temporal bound (reference: cubes/load.py:140-149)
         */
@@ -728,20 +753,8 @@ object ProcessGraph {
               nullableStr(ext(0), "temporal_extent"),
               nullableStr(ext(1), "temporal_extent"), None)
           }
-          opt("spatial_extent").foreach { _ =>
-            val e = JsonMethods.parse(str("spatial_extent"))
-            def d(f: String): Option[Double] = (e \ f) match {
-              case JDouble(x) => Some(x)
-              case JInt(x) => Some(x.toDouble)
-              case JDecimal(x) => Some(x.toDouble)
-              case _ => None
-            }
-            (d("west"), d("east"), d("south"), d("north")) match {
-              case (Some(w), Some(ea), Some(so), Some(no)) =>
-                c = FilterOps.filterBbox(c, w, ea, so, no)
-              case _ => throw new IllegalArgumentException(
-                "load_collection.spatial_extent: need west/east/south/north")
-            }
+          spatialExtent.foreach { case (w, so, ea, no) =>
+            c = FilterOps.filterBbox(c, w, ea, so, no)
           }
           opt("bands").foreach(_ => c = FilterOps.filterBands(c, strs("bands")))
           CubeV(c)
@@ -905,7 +918,7 @@ object ProcessGraph {
           val kern = args("kernel").asInstanceOf[ArrV].v.map(
             _.asInstanceOf[ArrV].v.map(_.asInstanceOf[NumV].v))
           CubeV(KernelOps.applyKernel(cube("data"), kern,
-            args.get("factor").collect { case NumV(f) => f }.getOrElse(1.0)))
+            optNum("factor").getOrElse(1.0)))
         case "reduce_dimension" =>
           val dim = str("dimension")
           if (isPlainAggregateReducer(str("reducer")))
@@ -1013,8 +1026,7 @@ object ProcessGraph {
             case Some(StrV(p)) => ResampleOps.warpCube(cube("data"), p)
             case _ => cube("data")
           }
-          val res = args.get("resolution").collect {
-            case NumV(r) => r }.getOrElse(0.0)
+          val res = optNum("resolution").getOrElse(0.0)
           if (res == 0.0) CubeV(warped)
           else resampleByMethod(warped, res)
         case "run_udf" if args.get("chunked").contains(BoolV(true)) =>
@@ -1082,10 +1094,8 @@ object ProcessGraph {
           // boundary docs)
           val c = cube("data")
           val v = col(c.meta.valueCol)
-          val minTok = args.get("min_tokens").collect {
-            case NumV(x) => x }.getOrElse(1.0)
-          val minTtr = args.get("min_ttr").collect {
-            case NumV(x) => x }.getOrElse(0.0)
+          val minTok = optNum("min_tokens").getOrElse(1.0)
+          val minTtr = optNum("min_ttr").getOrElse(0.0)
           CubeV(c.withDf(_.filter(
             graft.pipeline.TextAnalysis.tokenCount(v) >= minTok &&
               round(graft.pipeline.Repetition.typeTokenRatio(v), 6) >= minTtr)))
@@ -1118,8 +1128,7 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
-          val th = args.get("threshold").collect {
-            case NumV(x) => x }.getOrElse(0.5)
+          val th = optNum("threshold").getOrElse(0.5)
           CubeV(c.withDf(df => graft.pipeline.Dedup.survivorsCollapsed(
             df, idDim, col(c.meta.valueCol), threshold = th)))
         case "lm_score" =>
@@ -1138,8 +1147,8 @@ object ProcessGraph {
             .getOrElse(lit(true))
           val scored = graft.pipeline.LanguageModel
             .charTrigramScore(c.df, idDim, col(v), isTarget)
-          opt("max_xent") match {
-            case Some(NumV(mx)) =>
+          optNum("max_xent") match {
+            case Some(mx) =>
               val keep = scored.filter(col("xent") <= mx).select(col(idDim))
               CubeV(c.withDf(_.join(keep, Seq(idDim), "left_semi")))
             case _ =>
@@ -1204,8 +1213,7 @@ object ProcessGraph {
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
           val budget = num("budget").toInt
-          val nBuckets = args.get("buckets").collect {
-            case NumV(x) => x.toInt }.getOrElse(256)
+          val nBuckets = optNum("buckets").map(_.toInt).getOrElse(256)
           val packed = graft.pipeline.Sampling.packSequences(c.df, idDim,
             graft.pipeline.TextAnalysis.tokenCount(col(c.meta.valueCol)),
             budget, nBuckets)
@@ -1222,8 +1230,7 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
-          val maxHam = args.get("max_hamming").collect {
-            case NumV(x) => x.toInt }.getOrElse(3)
+          val maxHam = optNum("max_hamming").map(_.toInt).getOrElse(3)
           CubeV(c.withDf { df =>
             val pairs = graft.pipeline.Dedup.simhashNearDups(
               df, idDim, col(c.meta.valueCol), Seq.empty, maxHam)
@@ -1237,9 +1244,8 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
-          val n = args.get("n").collect { case NumV(x) => x.toInt }.getOrElse(3)
-          val th = args.get("threshold").collect {
-            case NumV(x) => x }.getOrElse(0.5)
+          val n = optNum("n").map(_.toInt).getOrElse(3)
+          val th = optNum("threshold").getOrElse(0.5)
           CubeV(c.withDf { df =>
             val pairs = graft.pipeline.Dedup.ngramJaccardNearDups(
               df, idDim, col(c.meta.valueCol), Seq.empty, n, th)
@@ -1257,14 +1263,14 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
-          val n = args.get("n").collect { case NumV(x) => x.toInt }.getOrElse(3)
+          val n = optNum("n").map(_.toInt).getOrElse(3)
           val v = c.meta.valueCol
           val scored = graft.pipeline.Dedup.ngramContainment(
             tr.df.select(col(tr.meta.dimNames.head).as(idDim),
               col(tr.meta.valueCol).as(v)),
             c.df.select(col(idDim), col(v)), idDim, col(v), n)
-          opt("max_containment") match {
-            case Some(NumV(mc)) =>
+          optNum("max_containment") match {
+            case Some(mc) =>
               // anti-join on the over-limit set (not semi on the keep set):
               // docs too short to yield a shingle have no containment row
               // and must be KEPT, not silently dropped
@@ -1289,8 +1295,7 @@ object ProcessGraph {
           val keyOf: Column => Column = opt("key")
             .map(_ => scalarCallback("key"))
             .getOrElse(graft.pipeline.TextAnalysis.contentHash(_))
-          val expected = args.get("expected_keys").collect {
-            case NumV(x) => x.toLong }.getOrElse(1L << 20)
+          val expected = optNum("expected_keys").map(_.toLong).getOrElse(1L << 20)
           CubeV(c.withDf(df => graft.pipeline.Dedup.incrementalNew(
             df, corp.df.select(col(corp.meta.valueCol).as(c.meta.valueCol)),
             idDim, keyOf(col(c.meta.valueCol)), expected)))
@@ -1303,10 +1308,8 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
-          val th = args.get("threshold").collect {
-            case NumV(x) => x }.getOrElse(0.95)
-          val cents = args.get("centroids").collect {
-            case NumV(x) => x.toInt }.getOrElse(16)
+          val th = optNum("threshold").getOrElse(0.95)
+          val cents = optNum("centroids").map(_.toInt).getOrElse(16)
           CubeV(c.withDf(df => graft.pipeline.Similarity.semDedupSurvivors(
             df, idDim, c.meta.valueCol, th, cents)))
         case "bm25" =>
@@ -1327,7 +1330,7 @@ object ProcessGraph {
             case other => throw new IllegalArgumentException(
               s"bm25.query: required string array (got $other)")
           }
-          val k = args.get("k").collect { case NumV(x) => x.toInt }.getOrElse(10)
+          val k = optNum("k").map(_.toInt).getOrElse(10)
           val top = graft.pipeline.Retrieval.bm25TopK(
             c.df.select(col(idDim), col(c.meta.valueCol).as("_text")),
             terms, k, idCol = idDim, textCol = "_text")
@@ -1339,8 +1342,7 @@ object ProcessGraph {
           // cube becomes the node → rank_units table, exact integer-unit
           // mass, damping 0.85
           val c = cube("data")
-          val iters = args.get("iterations").collect {
-            case NumV(x) => x.toInt }.getOrElse(3)
+          val iters = optNum("iterations").map(_.toInt).getOrElse(3)
           val edges = c.df.select(
             col(c.meta.dimNames.head).cast("string").as("src"),
             col(c.meta.valueCol).cast("string").as("dst"))
@@ -1357,9 +1359,8 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(qc.meta.dimNames.head)
           qc.requireDim(idDim)
-          val k = args.get("k").collect { case NumV(x) => x.toInt }.getOrElse(10)
-          val cents = args.get("centroids").collect {
-            case NumV(x) => x.toInt }.getOrElse(16)
+          val k = optNum("k").map(_.toInt).getOrElse(10)
+          val cents = optNum("centroids").map(_.toInt).getOrElse(16)
           val corpusDf = cc.df.select(
             col(cc.meta.dimNames.head).as(idDim),
             col(cc.meta.valueCol).as(qc.meta.valueCol))
@@ -1383,13 +1384,11 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(qc.meta.dimNames.head)
           qc.requireDim(idDim)
-          val k = args.get("k").collect { case NumV(x) => x.toInt }.getOrElse(10)
+          val k = optNum("k").map(_.toInt).getOrElse(10)
           val dims = num("dims").toInt
-          val m = args.get("m").collect { case NumV(x) => x.toInt }.getOrElse(16)
-          val cents = args.get("centroids").collect {
-            case NumV(x) => x.toInt }.getOrElse(32)
-          val shortlist = args.get("shortlist").collect {
-            case NumV(x) => x.toInt }.getOrElse(math.max(25, 5 * k))
+          val m = optNum("m").map(_.toInt).getOrElse(16)
+          val cents = optNum("centroids").map(_.toInt).getOrElse(32)
+          val shortlist = optNum("shortlist").map(_.toInt).getOrElse(math.max(25, 5 * k))
           val corpusDf = cc.df.select(
             col(cc.meta.dimNames.head).as(idDim),
             col(cc.meta.valueCol).as(qc.meta.valueCol))
@@ -1398,19 +1397,17 @@ object ProcessGraph {
           val qDf = qc.df.select(col(idDim), col(qc.meta.valueCol))
           // with `probes` set, the IVFADC composition bounds the ADC scan
           // to the probed coarse cells (`coarse_centroids`, default 16)
-          val top = (args.get("probes").collect { case NumV(x) => x.toInt }
-            match {
-              case Some(pr) =>
-                val coarse = args.get("coarse_centroids").collect {
-                  case NumV(x) => x.toInt }.getOrElse(16)
-                val ivf = graft.pipeline.Similarity.strideCentroids(
-                  corpusDf, idDim, qc.meta.valueCol, coarse)
-                graft.pipeline.Similarity.ivfPqTopK(qDf, corpusDf,
-                  idDim, qc.meta.valueCol, ivf, book, k, shortlist, pr)
-              case None =>
-                graft.pipeline.Similarity.pqTopKRefined(qDf, corpusDf,
-                  idDim, qc.meta.valueCol, book, k, shortlist)
-            }).select(col("query_id"), col("neighbor_id"), col("rk"), col("cos"))
+          val top = (optNum("probes").map(_.toInt) match {
+            case Some(pr) =>
+              val coarse = optNum("coarse_centroids").map(_.toInt).getOrElse(16)
+              val ivf = graft.pipeline.Similarity.strideCentroids(
+                corpusDf, idDim, qc.meta.valueCol, coarse)
+              graft.pipeline.Similarity.ivfPqTopK(qDf, corpusDf,
+                idDim, qc.meta.valueCol, ivf, book, k, shortlist, pr)
+            case None =>
+              graft.pipeline.Similarity.pqTopKRefined(qDf, corpusDf,
+                idDim, qc.meta.valueCol, book, k, shortlist)
+          }).select(col("query_id"), col("neighbor_id"), col("rk"), col("cos"))
           CubeV(DataCube(top, CubeMetadata(Seq(
             CubeDim("query_id", DimType.Other),
             CubeDim("neighbor_id", DimType.Other),
@@ -1423,9 +1420,8 @@ object ProcessGraph {
           val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse(lc.meta.dimNames.head)
           lc.requireDim(idDim)
-          val th = args.get("threshold").collect {
-            case NumV(x) => x }.getOrElse(0.5)
-          val n = args.get("n").collect { case NumV(x) => x.toInt }.getOrElse(3)
+          val th = optNum("threshold").getOrElse(0.5)
+          val n = optNum("n").map(_.toInt).getOrElse(3)
           val joined = graft.pipeline.Dedup.jaccardJoin(
             lc.df.select(col(idDim), col(lc.meta.valueCol)),
             rc.df.select(col(rc.meta.dimNames.head).as(idDim),
@@ -1443,8 +1439,7 @@ object ProcessGraph {
             .getOrElse(c.meta.dimNames.head)
           c.requireDim(idDim)
           val window = num("window").toInt
-          val stride = args.get("stride").collect {
-            case NumV(x) => x.toInt }.getOrElse(window)
+          val stride = optNum("stride").map(_.toInt).getOrElse(window)
           val chunked = graft.pipeline.Chunking.chunkDocs(
             c.df, idDim, col(c.meta.valueCol), window, stride)
             .withColumnRenamed("chunk", c.meta.valueCol)
@@ -1456,9 +1451,8 @@ object ProcessGraph {
           // terminal node — (rank, key) → count table, O(capacity) state,
           // no key-space shuffle (functions.SpaceSavingAgg)
           val c = cube("data")
-          val capacity = args.get("capacity").collect {
-            case NumV(x) => x.toInt }.getOrElse(8192)
-          val k = args.get("k").collect { case NumV(x) => x.toInt }.getOrElse(20)
+          val capacity = optNum("capacity").map(_.toInt).getOrElse(8192)
+          val k = optNum("k").map(_.toInt).getOrElse(20)
           val hh = c.df.filter(col(c.meta.valueCol).isNotNull)
             .agg(graft.functions.SpaceSavingAgg.column(
               col(c.meta.valueCol).cast("string"), capacity, k).as("hh"))
@@ -1477,8 +1471,7 @@ object ProcessGraph {
           // partition), vs a full-table shuffle + per-group sort for a
           // row_number() window
           val c = cube("data")
-          val k = args.get("k").collect {
-            case NumV(x) => x.toInt }.getOrElse(3)
+          val k = optNum("k").map(_.toInt).getOrElse(3)
           val idDim = str("id_dimension")
           val groupDim = opt("group").map {
             case StrV(s) => s
@@ -1514,10 +1507,8 @@ object ProcessGraph {
           // sort; functions.QuantileSketchAgg): terminal node — the
           // per-mille probe table (pm) → quantized value
           val c = cube("data")
-          val capacity = args.get("capacity").collect {
-            case NumV(x) => x.toInt }.getOrElse(16384)
-          val scale = args.get("scale").collect {
-            case NumV(x) => x }.getOrElse(10.0)
+          val capacity = optNum("capacity").map(_.toInt).getOrElse(16384)
+          val scale = optNum("scale").getOrElse(10.0)
           val probes = opt("permille").map {
             case ArrV(xs) => xs.map {
               case NumV(x) => x.toInt
@@ -1540,8 +1531,7 @@ object ProcessGraph {
           // (functions.ThetaSketchAgg): terminal node — a one-row
           // (metric) → estimate table; exact while distinct ≤ k
           val c = cube("data")
-          val k = args.get("k").collect {
-            case NumV(x) => x.toInt }.getOrElse(16384)
+          val k = optNum("k").map(_.toInt).getOrElse(16384)
           val dc = c.df.filter(col(c.meta.valueCol).isNotNull)
             .agg(graft.functions.ThetaSketchAgg.column(
               xxhash64(col(c.meta.valueCol).cast("string")), k).as("sk"))
@@ -1556,8 +1546,7 @@ object ProcessGraph {
           // one-row frame, never the data
           val a = cube("data")
           val b = cube("right")
-          val k = args.get("k").collect {
-            case NumV(x) => x.toInt }.getOrElse(16384)
+          val k = optNum("k").map(_.toInt).getOrElse(16384)
           val skA = a.df.filter(col(a.meta.valueCol).isNotNull)
             .agg(graft.functions.ThetaSketchAgg.column(
               xxhash64(col(a.meta.valueCol).cast("string")), k).as("a_sk"))
@@ -1729,16 +1718,22 @@ object ProcessGraph {
               s"ProcessUnsupported: predict_curve model $m (linear, harmonic)")
           }
           CubeV(DataCube.fromTable(out, series :+ dimName, "value"))
-        case "fit_regr_random_forest" =>
+        case "fit_regr_random_forest" | "fit_class_random_forest" =>
           // `predictors`: cube whose `dimension` (default bands) labels
           // are the feature names; `target`: cube over the same series
           // dims. The band pivot is a #features-wide reshape; the label
           // collect is metadata-scale (feature count), same class as dim
-          // labels. Training itself is MLlib's distributed forest.
+          // labels. Training itself is MLlib's distributed forest. The
+          // classifier (openEO ML proposal, beyond the reference's
+          // exports — the reference ships only the regressor) reads target
+          // labels as class indices 0..k−1; the two differ only in the fit.
           val pred = cube("predictors"); val tgt = cube("target")
           val bandDim = opt("dimension").map(_.asInstanceOf[StrV].v)
             .getOrElse("bands")
           pred.requireDim(bandDim)
+          val numTrees = optNum("num_trees").map(_.toInt).getOrElse(100)
+          val maxDepth = optNum("max_depth").map(_.toInt).getOrElse(8)
+          val seed = optNum("seed").map(_.toLong).getOrElse(42L)
           val series = pred.meta.dimNames.filterNot(_ == bandDim)
           val feats = pred.df.select(col(bandDim).cast("string"))
             .distinct().collect().map(_.getString(0)).sorted.toSeq
@@ -1747,39 +1742,12 @@ object ProcessGraph {
           val joined = wide.join(
             tgt.df.select((series.map(col) :+
               col(tgt.meta.valueCol).as("_target")): _*), series)
-          val numTrees = opt("num_trees").map(_.asInstanceOf[NumV].v.toInt)
-            .getOrElse(100)
-          val maxDepth = opt("max_depth").map(_.asInstanceOf[NumV].v.toInt)
-            .getOrElse(8)
-          val seed = opt("seed").map(_.asInstanceOf[NumV].v.toLong)
-            .getOrElse(42L)
-          ModelV(MLOps.fitRandomForest(joined, feats, "_target",
-            numTrees, maxDepth, seed), feats)
-        case "fit_class_random_forest" =>
-          // openEO ML proposal (beyond the reference's exports — the
-          // reference ships only the regressor): target labels are class
-          // indices 0..k−1; same band pivot and reproducibility contract
-          // as fit_regr_random_forest
-          val pred = cube("predictors"); val tgt = cube("target")
-          val bandDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse("bands")
-          pred.requireDim(bandDim)
-          val series = pred.meta.dimNames.filterNot(_ == bandDim)
-          val feats = pred.df.select(col(bandDim).cast("string"))
-            .distinct().collect().map(_.getString(0)).sorted.toSeq
-          val wide = pred.df.groupBy(series.map(col): _*)
-            .pivot(bandDim, feats).agg(first(col(pred.meta.valueCol)))
-          val joined = wide.join(
-            tgt.df.select((series.map(col) :+
-              col(tgt.meta.valueCol).as("_target")): _*), series)
-          val numTrees = opt("num_trees").map(_.asInstanceOf[NumV].v.toInt)
-            .getOrElse(100)
-          val maxDepth = opt("max_depth").map(_.asInstanceOf[NumV].v.toInt)
-            .getOrElse(8)
-          val seed = opt("seed").map(_.asInstanceOf[NumV].v.toLong)
-            .getOrElse(42L)
-          ModelV(MLOps.fitClassRandomForest(joined, feats, "_target",
-            numTrees, maxDepth, seed), feats)
+          ModelV(
+            if (pid == "fit_regr_random_forest")
+              MLOps.fitRandomForest(joined, feats, "_target", numTrees, maxDepth, seed)
+            else
+              MLOps.fitClassRandomForest(joined, feats, "_target", numTrees, maxDepth, seed),
+            feats)
         case "save_ml_model" =>
           // openEO ML proposal (beyond the reference's exports): persist a
           // fitted model + feature-order sidecar; pass-through like
@@ -1843,7 +1811,7 @@ object ProcessGraph {
           val targets = t.df.select(col(tdim).cast("timestamp")).distinct()
             .collect().map(_.getTimestamp(0)).sortBy(_.getTime).toSeq
           CubeV(ResampleOps.resampleCubeTemporal(d, targets, dim,
-            opt("valid_within").map(_.asInstanceOf[NumV].v)))
+            optNum("valid_within")))
 
         // ---- cumulative processes (reference: cubes/cummax.py etc. —
         // cube-level along a dimension, like the reference's dim-aware
@@ -2075,20 +2043,7 @@ object ProcessGraph {
           // v2.CubeSource scan pushes down to chunk/segment index ranges —
           // a small bbox over a huge store decodes only intersecting
           // chunks, reference cubes/load.py:245-310)
-          val bboxOpt = opt("spatial_extent").map { _ =>
-            val e = JsonMethods.parse(str("spatial_extent"))
-            def d(f: String): Option[Double] = (e \ f) match {
-              case JDouble(x) => Some(x)
-              case JInt(x) => Some(x.toDouble)
-              case JDecimal(x) => Some(x.toDouble)
-              case _ => None
-            }
-            (d("west"), d("east"), d("south"), d("north")) match {
-              case (Some(w), Some(ea), Some(so), Some(no)) => (w, so, ea, no)
-              case _ => throw new IllegalArgumentException(
-                "load_stac.spatial_extent: need west/east/south/north")
-            }
-          }
+          val bboxOpt = spatialExtent
           val sel = graft.sources.StacLoader.filterAssets(assets,
             bands = opt("bands").map(_ => strs("bands")),
             bbox = bboxOpt,
@@ -2117,8 +2072,8 @@ object ProcessGraph {
         case "linear_scale_range" =>
           ColV(Scalar.linearScaleRange(column("x"),
             num("inputMin"), num("inputMax"),
-            args.get("outputMin").collect { case NumV(v) => v }.getOrElse(0.0),
-            args.get("outputMax").collect { case NumV(v) => v }.getOrElse(1.0)))
+            optNum("outputMin").getOrElse(0.0),
+            optNum("outputMax").getOrElse(1.0)))
         case "e" => ColV(Scalar.e)
         case "pi" => ColV(Scalar.pi)
         case "nan" => ColV(Scalar.nan)
@@ -2131,7 +2086,7 @@ object ProcessGraph {
         case "ceil" => ColV(Scalar.ceilC(column("x")))
         case "int" => ColV(Scalar.int(column("x")))
         case "round" => ColV(Scalar.roundHalfEven(column("x"),
-          args.get("p").collect { case NumV(v) => v.toInt }.getOrElse(0)))
+          optNum("p").map(_.toInt).getOrElse(0)))
         case "sgn" => ColV(Scalar.sgn(column("x")))
         // trigonometry family (reference: math.py:240-285)
         case "sin" => ColV(Scalar.sinC(column("x")))
@@ -2156,7 +2111,7 @@ object ProcessGraph {
         case "lte" => ColV(Scalar.lte(column("x"), column("y")))
         case "eq" =>
           ColV(Scalar.eq(column("x"), column("y"),
-            delta = args.get("delta").collect { case NumV(d) => d },
+            delta = optNum("delta"),
             caseSensitive =
               !args.get("case_sensitive").contains(BoolV(false))))
         case "between" =>
@@ -2296,10 +2251,10 @@ object ProcessGraph {
             }).cast("boolean")))
         case "array_create" =>
           ColV(graft.functions.ArrayFns.arrayCreate(column("data"),
-            args.get("repeat").collect { case NumV(n) => n.toInt }.getOrElse(1)))
+            optNum("repeat").map(_.toInt).getOrElse(1)))
         case "array_modify" =>
           val mLen =
-            args.get("length").collect { case NumV(n) => n.toInt }.getOrElse(1)
+            optNum("length").map(_.toInt).getOrElse(1)
           (args("data"), args.get("values")) match {
             case (LabeledV(d), Some(LabeledV(v))) =>
               LabeledV(graft.functions.ArrayFns.labeledModify(

@@ -127,8 +127,8 @@ object RasterFixture {
     * the same lineitem grid written through [[graft.sources.TiffWriter]]
     * (deflate strips, rowsPerStrip=7 → 6 strips, so the multi-strip
     * offset/count arrays and the zlib codec are both on the hash path),
-    * read back through [[graft.sources.TiffReader.loadArray]]'s
-    * distributed segment fan-out. Row 0 is the TOP row (max y, north-up),
+    * read back through [[graft.sources.TiffReader.loadArray]], the
+    * packed cube scan's strip reads. Row 0 is the TOP row (max y, north-up),
     * matching the zarr layout; missing cells are NaN and drop on read.
     * The grid itself is bounded (gridH×gridW = 1000 cells) — collecting
     * it to write one driver-side file is the TIFF sink's real shape: a

@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
   * is clipped against the image size, like the zarr reader.
   *
   * Distribution shape mirrors [[ZarrReader]]: the driver parses only the
-  * kilobyte header/IFD into a SEGMENT TABLE (offset, byte count, position)
-  * and each executor task seeks and decodes its own strips/tiles — no
-  * driver data path, per-segment parallelism.
+  * kilobyte header/IFD into a SEGMENT TABLE (offset, byte count, position);
+  * this object holds that parse, the segment planner and the codecs, and
+  * the DataSourceV2 cube scan ([[graft.sources.v2.CubeSource]]) is the one
+  * reader that turns segment bytes into rows — each executor task seeks
+  * and decodes its own strips/tiles, no driver data path. [[loadArray]] is
+  * an index-column projection over that scan.
   */
 object TiffReader {
 
@@ -70,13 +73,19 @@ object TiffReader {
     v
   }
 
-  /** Parse the first IFD of a classic TIFF. Driver-side cost is METADATA
+  /** Parse IFD `level` of a TIFF (0 = the first, full resolution; a COG's
+    * overviews follow). Driver-side cost is METADATA
     * only: targeted range reads of the 8-byte header, the IFD, and any
     * out-of-line value arrays — never the raster bytes, so a 100 GB COG
     * costs the driver kilobytes (the IFD of a COG sits at the front by
     * construction; plain TIFFs may place it at the end, still one seek).
     */
-  def readMeta(path: String): TiffMeta = readMetaAll(path).head
+  def readMeta(path: String, level: Int = 0): TiffMeta = {
+    val all = readMetaAll(path)
+    require(level >= 0 && level < all.size,
+      s"TiffCorrupt: overview level $level of ${all.size}")
+    all(level)
+  }
 
   /** The full IFD chain — a COG carries its overview pyramid as chained
     * IFDs (level 0 = full resolution, then progressively reduced copies).
@@ -739,113 +748,29 @@ object TiffReader {
     }
   }
 
-  /** Load the raster as a long-form DataFrame (row, col, value), one
-    * executor task per group of segments, each seeking only its own bytes.
-    * `level` selects an overview IFD of a COG pyramid (0 = full
-    * resolution) — reading a reduced copy touches only ITS segments, the
-    * cloud-optimized cheap-zoom path. `rowRange`/`colRange` (inclusive)
-    * prune the segment fan-out via [[planSegments]] and clip decoded
-    * pixels to the exact range.
+  /** Load a single-sample raster as a long-form DataFrame: bigint
+    * `dimNames` (row, col) and a double `value`, one row per pixel. A
+    * projection over the file's one-asset cube scan
+    * ([[graft.sources.v2.CubeSource.unitGrid]]: x = col, y = row), so its
+    * strip/tile reads are packed into core-sized partitions and each task
+    * seeks only its own bytes. `level` selects an overview IFD of a COG
+    * pyramid (0 = full resolution) — reading a reduced copy touches only
+    * ITS segments, the cloud-optimized cheap-zoom path.
+    * `rowRange`/`colRange` (inclusive) become y/x filters, which the scan
+    * pushes down to [[planSegments]] ranges.
     */
   def loadArray(spark: SparkSession, path: String,
       dimNames: Seq[String] = Seq("row", "col"), level: Int = 0,
       rowRange: Option[(Long, Long)] = None,
       colRange: Option[(Long, Long)] = None): DataFrame = {
-    val all = readMetaAll(path)
-    require(level >= 0 && level < all.size,
-      s"TiffCorrupt: overview level $level of ${all.size}")
-    val meta = all(level)
-    require(meta.samplesPerPixel == 1,
-      "TiffUnsupported: multi-band raster — use loadArrayBands")
-    val bMeta = spark.sparkContext.broadcast(meta)
-    val bPath = spark.sparkContext.broadcast(path)
-    val (rLo, rHi) = rowRange.getOrElse((0L, meta.height - 1L))
-    val (cLo, cHi) = colRange.getOrElse((0L, meta.width - 1L))
-    val selSegs = planSegments(meta, rowRange, colRange)
-    import spark.implicits._
-    val rows = spark.createDataset(selSegs)
-      .repartition(math.max(1, math.min(selSegs.size, 64)))
-      .mapPartitions { it =>
-        val m = bMeta.value
-        val raf = new java.io.RandomAccessFile(bPath.value, "r")
-        val segs = it.toArray
-        val out = segs.iterator.flatMap { seg =>
-          val raw = new Array[Byte](seg.byteCount.toInt)
-          raf.seek(seg.offset)
-          raf.readFully(raw)
-          val vals = unpack(raw, m)
-          val (tileRow, tileCol) = (seg.index / m.tilesAcross, seg.index % m.tilesAcross)
-          val (baseR, baseC) = (tileRow * m.tileHeight, tileCol * m.tileWidth)
-          vals.indices.iterator.flatMap { flat =>
-            val r = baseR + flat / m.tileWidth
-            val c = baseC + flat % m.tileWidth
-            if (r < m.height && c < m.width &&
-              r >= rLo && r <= rHi && c >= cLo && c <= cHi)
-              Some((r.toLong, c.toLong, vals(flat)))
-            else None // tile edge padding / out-of-extent, clipped like zarr
-          }
-        }.toArray
-        raf.close()
-        out.iterator
+    require(readMeta(path, level).samplesPerPixel == 1,
+      "TiffUnsupported: multi-band raster — load it as a cube " +
+        "(load_stac names each sample <band>_<i>)")
+    Seq(rowRange.map("y" -> _), colRange.map("x" -> _)).flatten
+      .foldLeft(v2.CubeSource.unitGrid(spark, path, level)) {
+        case (df, (c, (lo, hi))) => df.where(col(c).between(lo, hi))
       }
-      .toDF(dimNames.head, dimNames(1), "value")
-    rows
-  }
-
-  /** Multi-band variant: one row per (row, col, band) sample. Same segment
-    * fan-out. Chunky interleave decomposes the flat sample index as
-    * pixel·spp + band; planar layout derives the band from the segment's
-    * position in the band-major segment table (each planar segment is a
-    * single-channel raster).
-    */
-  def loadArrayBands(spark: SparkSession, path: String,
-      level: Int = 0,
-      rowRange: Option[(Long, Long)] = None,
-      colRange: Option[(Long, Long)] = None): DataFrame = {
-    val all = readMetaAll(path)
-    require(level >= 0 && level < all.size,
-      s"TiffCorrupt: overview level $level of ${all.size}")
-    val meta = all(level)
-    require(!meta.planar || meta.segments.size % meta.samplesPerPixel == 0,
-      "TiffCorrupt: planar segment table not divisible by band count")
-    val bMeta = spark.sparkContext.broadcast(meta)
-    val bPath = spark.sparkContext.broadcast(path)
-    val (rLo, rHi) = rowRange.getOrElse((0L, meta.height - 1L))
-    val (cLo, cHi) = colRange.getOrElse((0L, meta.width - 1L))
-    val selSegs = planSegments(meta, rowRange, colRange)
-    import spark.implicits._
-    spark.createDataset(selSegs)
-      .repartition(math.max(1, math.min(selSegs.size, 64)))
-      .mapPartitions { it =>
-        val m = bMeta.value
-        val raf = new java.io.RandomAccessFile(bPath.value, "r")
-        val spp = m.samplesPerPixel
-        val segsPerBand = if (m.planar) m.segments.size / spp else m.segments.size
-        val out = it.toArray.iterator.flatMap { seg =>
-          val raw = new Array[Byte](seg.byteCount.toInt)
-          raf.seek(seg.offset)
-          raf.readFully(raw)
-          val vals = unpack(raw, m)
-          val (planarBand, within) =
-            if (m.planar) (seg.index / segsPerBand, seg.index % segsPerBand)
-            else (0, seg.index)
-          val perPixel = if (m.planar) 1 else spp
-          val (tileRow, tileCol) = (within / m.tilesAcross, within % m.tilesAcross)
-          val (baseR, baseC) = (tileRow * m.tileHeight, tileCol * m.tileWidth)
-          vals.indices.iterator.flatMap { flat =>
-            val pixel = flat / perPixel
-            val band = if (m.planar) planarBand else flat % spp
-            val r = baseR + pixel / m.tileWidth
-            val c = baseC + pixel % m.tileWidth
-            if (r < m.height && c < m.width &&
-              r >= rLo && r <= rHi && c >= cLo && c <= cHi)
-              Some((r.toLong, c.toLong, band, vals(flat)))
-            else None
-          }
-        }.toArray
-        raf.close()
-        out.iterator
-      }
-      .toDF("row", "col", "band", "value")
+      .select(col("y").cast("bigint").as(dimNames.head),
+        col("x").cast("bigint").as(dimNames(1)), col("value"))
   }
 }

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   * with nothing but the JDK).
   *
   * Distribution shape: the driver reads ONLY the kilobyte metadata
-  * document and lists chunk keys; each executor task then reads, inflates
-  * and unpacks its own chunk files — the same per-chunk fan-out a COG
-  * asset table gets, so a thousand-chunk store spreads over the cluster
-  * with no driver data path.
+  * document and lists chunk keys; this object holds the metadata, planning
+  * and codec primitives, and the DataSourceV2 cube scan
+  * ([[graft.sources.v2.CubeSource]]) is the one reader that turns chunk
+  * bytes into rows — each executor task reads, inflates and unpacks its
+  * own chunk files, so a thousand-chunk store spreads over the cluster
+  * with no driver data path. [[loadArray]] is an index-column projection
+  * over that scan.
   *
   * v2 support: dtypes `<f8 <f4 <i8 <i4 <i2 |i1 |u1 >f8 >f4 >i8 >i4 >i2`,
   * compressor `null`, `zlib`, `gzip`, `zstd`, numcodecs `lz4`, or `blosc`
@@ -38,8 +41,8 @@ import org.apache.spark.sql.functions._
   * `dimension_names`, and the `sharding_indexed` codec (one shard file =
   * an inner-chunk grid + an indexed footer, index crc32c verified; the
   * task that owns a shard decodes all of it — the v3 feature that keeps a
-  * 100-TB store's object count sane). Unsupported codecs (e.g.
-  * transpose) raise a NAMED ZarrUnsupported error.
+  * 100-TB store's object count sane). Unsupported codecs raise a NAMED
+  * ZarrUnsupported error.
   */
 object ZarrReader {
 
@@ -574,86 +577,58 @@ object ZarrReader {
       acc.flatMap(p => r.map(p :+ _)))
   }
 
-  /** Load a zarr array as a long-form DataFrame: one row per in-bounds
-    * element, columns `dimNames :+ "value"`. The chunk-key table is the
-    * unit of parallelism; every task decodes its own chunk files.
+  /** The chunk keys present in the store, checked against the `planned`
+    * ones: a planned chunk ABSENT from the store reads as `fill_value`
+    * (zarr semantics — writers omit all-fill chunks), so a store with
+    * missing planned chunks but no declared fill_value is corrupt and
+    * errors clearly. Driver-side listing only.
+    */
+  private[graft] def presentChunks(dir: String, meta: ZarrMeta,
+      planned: Seq[Seq[Int]]): Set[Seq[Int]] = {
+    val present = chunkKeys(dir, meta).toSet
+    require(planned.forall(present.contains) || meta.fillValue.isDefined,
+      "ZarrCorrupt: store has missing chunks but no fill_value")
+    present
+  }
+
+  /** Load a rank-2 or rank-3 zarr array as a long-form DataFrame: one row
+    * per in-bounds element, bigint index columns `dimNames` and a double
+    * `value`. A projection over the store's one-asset cube scan
+    * ([[graft.sources.v2.CubeSource.unitGrid]]: x = col, y = row, rank-3
+    * axis 0 = the `band_<i>` suffix), so the chunk reads are packed into
+    * core-sized partitions and every task decodes its own chunk files.
     *
-    * `slices` (optional, per-dim inclusive global-index ranges) prunes the
-    * fan-out to intersecting chunks via [[planChunks]] and clips decoded
-    * cells to the exact range — a bbox/time extent mapped onto the index
-    * grid reads only its own chunks, never the whole store.
-    *
-    * Chunks ABSENT from the store read as `fill_value` — zarr v2 semantics
-    * (writers omit all-fill chunks); the fill cells are generated on the
-    * executors with no file I/O. A store with missing chunks but no
-    * declared fill_value is corrupt and errors clearly.
+    * `slices` (optional, per-dim inclusive global-index ranges) become
+    * x/y/bands filters, which the scan pushes down to [[planChunks]]
+    * ranges — a bbox/time extent mapped onto the index grid reads only its
+    * own chunks, never the whole store. Absent chunks read as
+    * `fill_value` ([[presentChunks]]).
     */
   def loadArray(spark: SparkSession, dir: String,
       dimNames: Seq[String],
       slices: Seq[Option[(Long, Long)]] = Nil): DataFrame = {
+    import v2.CubeSource.UnitBand
     val meta = readMeta(dir)
-    require(dimNames.size == meta.shape.size,
-      s"need ${meta.shape.size} dim names, got ${dimNames.size}")
-    val selKeys = planChunks(meta, slices)
-    val present = chunkKeys(dir, meta).toSet
-    require(selKeys.forall(present.contains) || meta.fillValue.isDefined,
-      "ZarrCorrupt: store has missing chunks but no fill_value")
-    val keys = selKeys.map(k => (k, present.contains(k)))
-    val rank0 = meta.shape.size
-    val sliceLo = Array.tabulate(rank0)(d =>
-      slices.lift(d).flatten.map(_._1).getOrElse(0L))
-    val sliceHi = Array.tabulate(rank0)(d =>
-      slices.lift(d).flatten.map(_._2).getOrElse(meta.shape(d) - 1L))
-    val bMeta = spark.sparkContext.broadcast(meta)
-    val bDir = spark.sparkContext.broadcast(dir)
-    import spark.implicits._
-    val rows = spark.createDataset(keys)
-      .repartition(math.max(1, math.min(keys.size, 64)))
-      .mapPartitions { it =>
-        val m = bMeta.value
-        val base = bDir.value
-        it.flatMap { case (idx, isPresent) =>
-          val gridIdx = idx.toArray
-          val vals =
-            if (!isPresent) Array.fill(m.chunks.product)(m.fillValue.get)
-            else {
-              // encoding-aware relative path; "/"-separated keys resolve
-              // as nested paths on the executors unchanged
-              val raw = java.nio.file.Files.readAllBytes(
-                java.nio.file.Paths.get(base, m.keyOf(idx)))
-              if (m.shard.isDefined) decodeShard(raw, m)
-              else {
-                val u = unpack(decodeChunk(raw, m), m.dtype)
-                m.transpose.fold(u)(untranspose(u, m.chunks, _))
-              }
-            }
-          val rank = m.shape.size
-          val chunkShape = m.chunks.toArray
-          // C-order walk of the chunk, clipping edge padding against shape
-          val strides = new Array[Int](rank)
-          strides(rank - 1) = 1
-          var d = rank - 2
-          while (d >= 0) { strides(d) = strides(d + 1) * chunkShape(d + 1); d -= 1 }
-          (0 until vals.length).iterator.flatMap { flat =>
-            val coords = new Array[Long](rank)
-            var ok = true
-            var r = 0
-            while (r < rank) {
-              val local = (flat / strides(r)) % chunkShape(r)
-              val global = gridIdx(r).toLong * chunkShape(r) + local
-              if (global >= m.shape(r) ||
-                global < sliceLo(r) || global > sliceHi(r)) ok = false
-              coords(r) = global
-              r += 1
-            }
-            if (ok) Some((coords.toSeq, vals(flat))) else None
-          }
-        }
-      }
-      .toDF("_coords", "value")
-    dimNames.zipWithIndex.foldLeft(rows) { case (df, (name, i)) =>
-      df.withColumn(name, element_at(col("_coords"), i + 1))
-    }.select((dimNames.map(col) :+ col("value")): _*)
+    val rank = meta.shape.size
+    require(dimNames.size == rank, s"need $rank dim names, got ${dimNames.size}")
+    // a store without fill_value must hold every planned chunk: fail at
+    // the call, as the scan itself would only at execution
+    if (meta.fillValue.isEmpty) presentChunks(dir, meta, planChunks(meta, slices))
+    // array axis → scan column: rank 3 adds axis 0 as `bands`
+    val axes = (if (rank == 2) Nil else Seq("bands")) ++ Seq("y", "x")
+    val cut = slices.zip(axes).collect {
+      case (Some((lo, hi)), "bands") =>
+        col("bands").isin((math.max(lo, 0L) to math.min(hi, meta.shape(0) - 1L))
+          .map(i => s"${UnitBand}_$i"): _*)
+      case (Some((lo, hi)), c) => col(c).between(lo, hi)
+    }
+    val index = axes.map {
+      case "bands" => substring_index(col("bands"), "_", -1)
+      case c => col(c)
+    }
+    cut.foldLeft(v2.CubeSource.unitGrid(spark, dir))(_.where(_))
+      .select(index.zip(dimNames).map { case (c, n) => c.cast("bigint").as(n) }
+        :+ col("value"): _*)
   }
 
   /** Cube wrapper with name-guessed dim types. */

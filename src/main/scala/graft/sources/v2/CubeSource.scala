@@ -1,5 +1,6 @@
 package graft.sources.v2
 
+import graft.sources.{TiffReader, ZarrReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -70,11 +71,13 @@ object CubeSource {
 
   /** Immutable asset description carried into every planned read: format,
     * store/file path, geo transform corners, band name, the constant
-    * datetime, and (zarr only, optionally) per-slice time labels.
+    * datetime, (zarr only, optionally) per-slice time labels, and (TIFF
+    * only) the overview level of a COG pyramid (0 = full resolution).
     */
   final case class Asset(format: Format, path: String, west: Double,
       south: Double, east: Double, north: Double, band: String,
-      datetimeMicros: Long, labelMicros: Array[Long]) extends Serializable
+      datetimeMicros: Long, labelMicros: Array[Long], level: Int = 0)
+      extends Serializable
 
   /** An asset from STAC item fields (ISO datetimes). */
   def asset(format: Format, path: String, west: Double, south: Double,
@@ -89,6 +92,36 @@ object CubeSource {
   def frame(spark: SparkSession, assets: Seq[Asset]): DataFrame =
     PlanBridge.frame(spark, DataSourceV2Relation.create(
       new CubeTable(assets), None, None))
+
+  /** Band name of a [[unitGrid]] mount: rank-3 zarr axis 0 and TIFF
+    * samples read as `band_<i>`.
+    */
+  private[graft] val UnitBand = "band"
+
+  /** One asset mounted on its own index grid — west = south = 0,
+    * east = width, north = height — so `x` is the column and `y` the row
+    * index exactly. A directory is a zarr store (rank 2 or 3), a file a
+    * TIFF read at overview `level`. The index readers
+    * ([[graft.sources.ZarrReader.loadArray]],
+    * [[graft.sources.TiffReader.loadArray]]) are projections over it, so
+    * their slices push down like any extent filter.
+    */
+  private[graft] def unitGrid(spark: SparkSession, path: String,
+      level: Int = 0): DataFrame = {
+    val zarr = new java.io.File(path).isDirectory
+    val (h, w) =
+      if (zarr) {
+        val shape = ZarrReader.readMeta(path).shape
+        require(shape.size == 2 || shape.size == 3,
+          s"CubeSource: rank-${shape.size} zarr stores unsupported (2 or 3)")
+        (shape(shape.size - 2), shape.last)
+      } else {
+        val m = TiffReader.readMeta(path, level)
+        (m.height, m.width)
+      }
+    frame(spark, Seq(Asset(if (zarr) Zarr else Tiff, path, 0.0, 0.0, w, h,
+      UnitBand, 0L, Array.empty, level)))
+  }
 
   private[v2] def assetFrom(props: util.Map[String, String]): Asset = {
     val ci = new CaseInsensitiveStringMap(props) // option case is caller's

@@ -16,12 +16,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * (single-band) and prunes whole segments on PLANAR rasters, whose
   * band-major segment table makes per-band selection a segment subset;
   * chunky interleave keeps all segments (samples interleave within one
-  * strip) and relies on the residual.
+  * strip) and relies on the residual. The asset's `level` picks the
+  * overview IFD of a COG pyramid (0 = full resolution).
   */
 private[v2] object TiffSegments {
 
   def plan(a: CubeSource.Asset, e: Extent): Seq[CubeRead] = {
-    val meta = TiffReader.readMeta(a.path)
+    val meta = TiffReader.readMeta(a.path, a.level)
+    require(!meta.planar || meta.segments.size % meta.samplesPerPixel == 0,
+      "TiffCorrupt: planar segment table not divisible by band count")
     if (a.datetimeMicros < e.t._1 || a.datetimeMicros > e.t._2)
       return Nil // constant t outside the pushed window
     val multi = meta.samplesPerPixel > 1
@@ -76,8 +79,9 @@ private[v2] final case class TiffSegmentRead(asset: CubeSource.Asset,
 }
 
 /** Decodes ONE strip/tile (seeking only its bytes) and walks its samples,
-  * clipping edge padding and the pushed row/col bounds — the same pixel
-  * loop as `loadArrayBands`, emitting cube-coordinate rows directly.
+  * clipping edge padding and the pushed row/col bounds, emitting
+  * cube-coordinate rows directly — the one loop that turns TIFF segment
+  * bytes into rows (`TiffReader.loadArray` is a projection over it).
   */
 private[v2] class TiffSegmentReader(p: TiffSegmentRead, columns: Array[String])
     extends PartitionReader[InternalRow] {

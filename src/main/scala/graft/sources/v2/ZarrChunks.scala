@@ -51,9 +51,7 @@ private[v2] object ZarrChunks {
       }
     val slices = if (rank == 2) Seq(rr, cr) else Seq(axis0, rr, cr)
     val selKeys = ZarrReader.planChunks(meta, slices)
-    val present = ZarrReader.chunkKeys(a.path, meta).toSet
-    require(selKeys.forall(present.contains) || meta.fillValue.isDefined,
-      "ZarrCorrupt: store has missing chunks but no fill_value")
+    val present = ZarrReader.presentChunks(a.path, meta, selKeys)
     val lo = Array.tabulate(rank)(d => slices(d).map(_._1).getOrElse(0L))
     val hi = Array.tabulate(rank)(d =>
       slices(d).map(_._2).getOrElse(meta.shape(d) - 1L))
@@ -82,8 +80,9 @@ private[v2] final case class ZarrChunkRead(asset: CubeSource.Asset,
 }
 
 /** Decodes its chunk with the [[ZarrReader]] primitives and walks it in
-  * C order, clipping edge padding and the pushed slice bounds — the same
-  * cell loop as `loadArray`, emitting cube-coordinate rows directly.
+  * C order, clipping edge padding and the pushed slice bounds, emitting
+  * cube-coordinate rows directly — the one loop that turns zarr chunk
+  * bytes into rows (`ZarrReader.loadArray` is a projection over it).
   */
 private[v2] class ZarrChunkReader(p: ZarrChunkRead, columns: Array[String])
     extends PartitionReader[InternalRow] {

@@ -126,4 +126,26 @@ class CubeScanPackingSpec extends AnyFunSuite {
     assert(CubeScans.plannedReads(cut) == 0)
     assert(cut.count() == 0)
   }
+
+  test("index readers plan one cube scan, no exchange, and return the fixture's cells") {
+    import graft.sources.{TiffReader, ZarrReader}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object Plans extends AdaptiveSparkPlanHelper
+    val want = (for (r <- 0 until h; c <- 0 until w) yield (r, c)).toSet
+    for ((k, df) <- Seq(
+        0 -> ZarrReader.loadCube(spark, writeZarr(0), Seq("y", "x")).df,
+        1 -> TiffReader.loadArray(spark, writeTiff(1)))) {
+      val got = df.collect().map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getDouble(2)))
+      assert(got.length == w * h && got.map(_._1).toSet == want)
+      // the plan as run (an adaptive plan is final once executed)
+      val plan = df.queryExecution.executedPlan
+      val scans = Plans.collect(plan) { case b: BatchScanExec => b.scan.description() }
+      assert(scans.size == 1 && scans.head.startsWith("CubeScan "), plan)
+      assert(Plans.collect(plan) { case e: Exchange => e }.isEmpty, plan)
+      assert(df.schema.map(_.dataType.simpleString) == Seq("bigint", "bigint", "double"))
+      got.foreach { case ((r, c), v) => assert(v == cell(k, r, c), s"($r, $c)") }
+    }
+  }
 }

@@ -1,0 +1,32 @@
+package graft
+
+import graft.ScalaSources.scalaSources
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One read path for raster bytes: the DataSourceV2 cube scan under
+  * `sources/v2` is the only code that turns zarr chunk or TIFF segment
+  * bytes into rows, and the format objects keep no second, hand-rolled
+  * distributed loop (source scans, like SessionFactorySpec's, so a new
+  * decode loop elsewhere fails here).
+  */
+class DecodePathSpec extends AnyFunSuite {
+
+  private val formats = Seq("src/main/scala/graft/sources/ZarrReader.scala",
+    "src/main/scala/graft/sources/TiffReader.scala")
+
+  test("chunk and segment decoders are called only under sources/v2") {
+    val decode = """\b(decodeChunk|decodeShard)\s*\(|TiffReader\s*\.\s*unpack\s*\(""".r
+    val hits = scalaSources("src/main/scala").filterNot(p => formats.contains(p._1))
+      .flatMap { case (p, src) => decode.findAllMatchIn(src).map(_ => p) }.distinct
+    assert(hits.nonEmpty && hits.forall(_.startsWith("src/main/scala/graft/sources/v2/")),
+      hits)
+    assert(decode.findFirstIn("ZarrReader.decodeShard(raw, m)").nonEmpty)
+    assert(decode.findFirstIn("TiffReader.unpack(raw, m)").nonEmpty)
+  }
+
+  test("the zarr and TIFF readers build no dataset of their own") {
+    val loop = """\b(mapPartitions|createDataset)\b""".r
+    for ((p, src) <- scalaSources(formats: _*))
+      assert(loop.findFirstIn(src).isEmpty, p)
+  }
+}

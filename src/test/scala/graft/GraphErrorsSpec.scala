@@ -455,4 +455,20 @@ class GraphErrorsSpec extends AnyFunSuite {
         |      "result": true}""".stripMargin))
     assert(e.contains("MinMaxSwapped"), e)
   }
+
+  test("an optional number of the wrong type is an error, not its default") {
+    // `k` defaults to 10 only when absent or null; a string is rejected
+    val e = errorOf(g(
+      """"b": {"process_id": "bm25",
+        |      "arguments": {"data": {"from_node": "l"},
+        |                    "query": ["B1"], "k": "5"}, "result": true}""".stripMargin))
+    assert(e.contains("bm25.k: not a number (StrV(5))"), e)
+    val f = errorOf(g(
+      """"r": {"process_id": "fit_regr_random_forest",
+        |      "arguments": {"predictors": {"from_node": "l"},
+        |                    "target": {"from_node": "l"}, "dimension": "band",
+        |                    "num_trees": true}, "result": true}""".stripMargin))
+    assert(f.contains("fit_regr_random_forest.num_trees: not a number (BoolV(true))"), f)
+  }
 }
+

@@ -1,9 +1,8 @@
 package graft
 
 import graft.core.SparkTuning
+import graft.ScalaSources.scalaSources
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** The session factory's contracts: `SPARK_GRAFT_CPUS` parses in one place
   * and fails loudly, every session under `src/` is built by
@@ -23,14 +22,6 @@ class SessionFactorySpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
     }
   }
-
-  private def scalaSources(roots: String*): Seq[(String, String)] =
-    roots.flatMap { root =>
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.map(p => p.toString ->
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
 
   test("sessions are built only in core/SparkTuning.scala") {
     val builder = """SparkSession\s*\.\s*builder""".r

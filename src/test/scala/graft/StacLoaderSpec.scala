@@ -789,6 +789,17 @@ class StacLoaderSpec extends AnyFunSuite {
       assert(got((r.toLong, c.toLong)) == r * 10.0 + c)
   }
 
+  /** A multi-sample TIFF read through the cube scan on its index grid:
+    * (row, col, sample) → value.
+    */
+  private def bandRows(path: String): Map[(Long, Long, Int), Double] =
+    sources.v2.CubeSource.unitGrid(spark, path).collect().map { r =>
+      val band = r.getString(r.fieldIndex("bands"))
+      (r.getDouble(r.fieldIndex("y")).toLong, r.getDouble(r.fieldIndex("x")).toLong,
+        band.substring(band.lastIndexOf('_') + 1).toInt) ->
+        r.getDouble(r.fieldIndex("value"))
+    }.toMap
+
   test("TiffReader decodes planar (band-separate) multi-band rasters") {
     import java.nio.{ByteBuffer, ByteOrder}
     import graft.sources.TiffReader
@@ -834,10 +845,7 @@ class StacLoaderSpec extends AnyFunSuite {
     java.nio.file.Files.write(f, bb.array())
     val meta = TiffReader.readMeta(f.toAbsolutePath.toString)
     assert(meta.planar && meta.samplesPerPixel == 3 && meta.segments.size == 3)
-    val got = TiffReader.loadArrayBands(spark, f.toAbsolutePath.toString)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getDouble(3))
-      .toMap
+    val got = bandRows(f.toAbsolutePath.toString)
     assert(got.size == w * h * spp)
     for (r <- 0 until h; c <- 0 until w; b <- 0 until spp)
       assert(got((r.toLong, c.toLong, b)) == v(r, c, b).toDouble)
@@ -962,8 +970,7 @@ class StacLoaderSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { // single-band API refuses
       TiffReader.loadArray(spark, path)
     }
-    val got = TiffReader.loadArrayBands(spark, path).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getDouble(3)).toMap
+    val got = bandRows(path)
     assert(got.size == w * h * spp)
     for (r <- 0 until h; c <- 0 until w; s <- 0 until spp)
       assert(got((r.toLong, c.toLong, s)) == r * 100.0 + c * 10 + s)
