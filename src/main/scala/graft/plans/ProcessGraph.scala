@@ -93,18 +93,12 @@ object ProcessGraph {
     * backend's catalog).
     */
   def execute(spark: SparkSession, json: String,
-      collections: String => DataCube): DataCube = {
-    val root = JsonMethods.parse(json)
-    val pg = root \ "process_graph" match {
-      case JNothing => root
-      case x => x
-    }
-    evalGraph(pg, Map.empty, collections) match {
+      collections: String => DataCube): DataCube =
+    executeValue(spark, json, collections) match {
       case CubeV(c) => c
       case other => throw new IllegalArgumentException(
         s"graph result is not a cube: $other")
     }
-  }
 
   /** Like [[execute]] but returns whatever the result node produced —
     * needed for graphs ending in a vector/table node (dimension_labels,
@@ -445,11 +439,11 @@ object ProcessGraph {
                 JsonMethods.compact(JsonMethods.render(JObject(List(
                   "process_graph" -> (JObject(nodes.toList): JValue)))))
 
-              val aggs = sideOrder.toSeq.collect {
-                case (id, body) if ((body \ "process_id") match {
-                  case JString(p) => WindowAggIds(p)
-                  case _ => false
-                }) => id -> (body \ "process_id").asInstanceOf[JString].s
+              val aggs = sideOrder.toSeq.flatMap { case (id, body) =>
+                (body \ "process_id") match {
+                  case JString(p) if WindowAggIds(p) => Some(id -> p)
+                  case _ => None
+                }
               }
               val aggIds = aggs.map(_._1).toSet
               val combos = sideOrder.toSeq.collect {
@@ -476,7 +470,13 @@ object ProcessGraph {
               chain.foreach { case (id, body, pid, chainArg, _) =>
                 if (WindowChainIds(pid)) {
                   flushRun()
-                  val asc = (body \ "arguments" \ "asc") != JBool(false)
+                  // a non-boolean `asc` bails to the fold path, whose
+                  // sort arm rejects it by name
+                  val asc = (body \ "arguments" \ "asc") match {
+                    case JBool(b) => b
+                    case JNothing | JNull => true
+                    case v => throw new IllegalArgumentException(s"asc: $v")
+                  }
                   segs += WinSeg(pid, asc)
                 } else run = run :+ ((id, body, chainArg))
               }
@@ -528,17 +528,21 @@ object ProcessGraph {
     def evalArg(v: JValue): PValue = v match {
       case JObject(fields) =>
         val m = fields.toMap
-        if (m.contains("from_node")) evalNode(m("from_node").asInstanceOf[JString].s)
-        else if (m.contains("from_parameter")) {
-          val p = m("from_parameter").asInstanceOf[JString].s
-          params.getOrElse(p, throw new IllegalArgumentException(
-            s"ProcessParameterMissing: $p"))
+        def ref(key: String): Option[String] = m.get(key).map {
+          case JString(s) => s
+          case v => throw new IllegalArgumentException(
+            s"$key: not a string (${JsonMethods.compact(JsonMethods.render(v))})")
         }
-        else
-          // callback graphs stay unevaluated here (applyProcess re-walks
-          // them); GeoJSON geometries and options maps likewise pass through
-          // as raw JSON text for the receiving process to parse
-          StrV(JsonMethods.compact(JsonMethods.render(v)))
+        (ref("from_node"), ref("from_parameter")) match {
+          case (Some(id), _) => evalNode(id)
+          case (_, Some(p)) => params.getOrElse(p,
+            throw new IllegalArgumentException(s"ProcessParameterMissing: $p"))
+          case _ =>
+            // callback graphs stay unevaluated here (applyProcess re-walks
+            // them); GeoJSON geometries and options maps likewise pass
+            // through as raw JSON text for the receiving process to parse
+            StrV(JsonMethods.compact(JsonMethods.render(v)))
+        }
       case JString(s) => StrV(s)
       case JInt(i) => NumV(i.toDouble)
       case JDouble(d) => NumV(d)
@@ -585,53 +589,92 @@ object ProcessGraph {
         case None =>
       }
 
-      def cube(name: String): DataCube = args(name) match {
+      // Typed argument accessors: a wrong-typed value throws
+      // `pid.name: not a <type> (v)`. The `opt*` forms apply their default
+      // only when the argument is absent or null; any other type is an
+      // error, not the default.
+      def notA(name: String, what: String, v: PValue): Nothing =
+        throw new IllegalArgumentException(s"$pid.$name: not $what ($v)")
+      def arg(name: String): PValue = args.getOrElse(name,
+        throw new IllegalArgumentException(s"ProcessParameterRequired: $pid.$name"))
+      def cube(name: String): DataCube = arg(name) match {
         case CubeV(c) => c
-        case v => throw new IllegalArgumentException(s"$pid.$name: not a cube ($v)")
+        case v => notA(name, "a cube", v)
       }
-      def table(name: String): org.apache.spark.sql.DataFrame = args(name) match {
+      def table(name: String): org.apache.spark.sql.DataFrame = arg(name) match {
         case TableV(df) => df
         case CubeV(c) => c.df // a cube is also a table; vector ops accept both
-        case v => throw new IllegalArgumentException(s"$pid.$name: not a table ($v)")
+        case v => notA(name, "a table", v)
       }
-      def column(name: String): Column = args(name) match {
-        case ColV(c) => c
-        case LabeledV(c) => c
-        case NumV(v) => lit(v)
+      /** a scalar literal or column, as array-process and text_concat
+        * elements take them
+        */
+      def element(name: String, v: PValue): Column = v match {
+        case NumV(x) => lit(x)
         case StrV(s) => lit(s)
         case BoolV(b) => lit(b)
         case NullV => lit(null)
-        case ArrV(xs) => array(xs.map { // literal arrays for array processes
-          case NumV(v) => lit(v)
-          case StrV(s) => lit(s)
-          case BoolV(b) => lit(b)
-          case NullV => lit(null)
-          case ColV(c) => c
-          case v => throw new IllegalArgumentException(
-            s"$pid.$name: array element $v is not scalar")
-        }: _*)
-        case v => throw new IllegalArgumentException(s"$pid.$name: not scalar ($v)")
+        case ColV(c) => c
+        case other => throw new IllegalArgumentException(
+          s"$pid.$name: array element $other is not scalar")
       }
-      def str(name: String): String = args(name) match {
+      def column(name: String): Column = arg(name) match {
+        case LabeledV(c) => c
+        case ArrV(xs) => array(xs.map(element(name, _)): _*) // literal arrays
+        case v @ (ColV(_) | NumV(_) | StrV(_) | BoolV(_) | NullV) => element(name, v)
+        case v => notA(name, "scalar", v)
+      }
+      def strOf(name: String, v: PValue): String = v match {
         case StrV(s) => s
-        case v => throw new IllegalArgumentException(s"$pid.$name: not a string ($v)")
+        case v => notA(name, "a string", v)
       }
-      def num(name: String): Double = args(name) match {
-        case NumV(v) => v
-        case v => throw new IllegalArgumentException(s"$pid.$name: not a number ($v)")
+      def numOf(name: String, v: PValue): Double = v match {
+        case NumV(x) => x
+        case v => notA(name, "a number", v)
       }
-      def strs(name: String): Seq[String] = args(name) match {
-        case ArrV(xs) => xs.map { case StrV(s) => s; case v => v.toString }
-        case v => throw new IllegalArgumentException(s"$pid.$name: not an array ($v)")
+      def arrOf(name: String, v: PValue): Seq[PValue] = v match {
+        case ArrV(xs) => xs
+        case v => notA(name, "an array", v)
       }
+      def str(name: String): String = strOf(name, arg(name))
+      def num(name: String): Double = numOf(name, arg(name))
+      def arr(name: String): Seq[PValue] = arrOf(name, arg(name))
+      def nums(name: String): Seq[Double] = arr(name).map(numOf(name, _))
+      def strs(name: String): Seq[String] = arr(name).map(strOf(name, _))
       def opt(name: String): Option[PValue] =
         args.get(name).filterNot(_ == NullV)
-
-      /** an optional number: the default applies only when the argument
-        * is absent or null; any other non-number is an error, not the
-        * default
-        */
       def optNum(name: String): Option[Double] = opt(name).map(_ => num(name))
+      def optStr(name: String): Option[String] = opt(name).map(_ => str(name))
+      def optBool(name: String, default: Boolean): Boolean =
+        opt(name).fold(default) {
+          case BoolV(b) => b
+          case v => notA(name, "a boolean", v)
+        }
+
+      /** a [start, end] pair of nullable strings — openEO allows `null` for
+        * an open temporal bound (reference: cubes/load.py:140-149)
+        */
+      def interval(name: String): (Option[String], Option[String]) = {
+        def bound(v: PValue): Option[String] = v match {
+          case NullV => None
+          case StrV(s) => Some(s)
+          case other => throw new IllegalArgumentException(
+            s"$pid.$name: expected string or null, got $other")
+        }
+        arr(name) match {
+          case Seq(s, e) => (bound(s), bound(e))
+          case v => notA(name, "a [start, end] pair", ArrV(v))
+        }
+      }
+
+      /** the optional `dimension` argument naming a dimension of `c`;
+        * absent or null, `default`, else the cube's first dimension
+        */
+      def idDimOf(c: DataCube, default: Option[String] = None): String = {
+        val d = optStr("dimension").orElse(default).getOrElse(c.meta.dimNames.head)
+        c.requireDim(d)
+        d
+      }
 
       /** the load processes' `spatial_extent` object as (west, south,
         * east, north), if given
@@ -652,16 +695,6 @@ object ProcessGraph {
           }
         }
 
-      /** a nullable string element of an extent array: openEO allows
-        * `null` for an open temporal bound (reference: cubes/load.py:140-149)
-        */
-      def nullableStr(v: PValue, where: String): Option[String] = v match {
-        case NullV => None
-        case StrV(s) => Some(s)
-        case other => throw new IllegalArgumentException(
-          s"$pid.$where: expected string or null, got $other")
-      }
-
       /** The openEO `context` argument, forwarded into callback graphs as
         * the `context` parameter ({"from_parameter": "context"} — the
         * reference threads it through every cube process's callback).
@@ -669,18 +702,26 @@ object ProcessGraph {
       def callbackContext: Map[String, PValue] =
         args.get("context").map("context" -> _).toMap
 
+      /** a callback's result as a Column: a column, a constant number
+        * where `lits`, and a labeled array's raw map where `labeled`;
+        * anything else throws `what v`
+        */
+      def asColumn(result: PValue, what: String, lits: Boolean = true,
+          labeled: Boolean = false): Column = result match {
+        case ColV(out) => out
+        case LabeledV(out) if labeled => out
+        case NumV(v) if lits => lit(v)
+        case v => throw new IllegalArgumentException(s"$what $v")
+      }
+
       /** run a callback sub-graph (stored as JSON text) as a scalar
         * Column→Column process (reference: `apply`'s `process` argument)
         */
       def scalarCallback(name: String): Column => Column = {
         val cbJson = str(name)
-        c => runCallback(cbJson,
-          Map("x" -> ColV(c), "data" -> ColV(c)) ++ callbackContext) match {
-          case ColV(out) => out
-          case LabeledV(out) => out // labeled array result: the raw map
-          case NumV(v) => lit(v)
-          case v => throw new IllegalArgumentException(s"callback returned $v")
-        }
+        c => asColumn(runCallback(cbJson,
+          Map("x" -> ColV(c), "data" -> ColV(c)) ++ callbackContext),
+          "callback returned", labeled = true)
       }
 
       /** Polygon outer rings from GeoJSON text (Polygon / Feature /
@@ -732,10 +773,39 @@ object ProcessGraph {
       def reducerCallback(name: String, order: Option[Column] = None): Column => Column = {
         val cbJson = str(name)
         val ctx = order.map(o => "_order" -> ColV(o)).toMap ++ callbackContext
-        c => runCallback(cbJson, Map("data" -> ColV(c)) ++ ctx) match {
-          case ColV(out) => out
-          case v => throw new IllegalArgumentException(s"reducer returned $v")
-        }
+        c => asColumn(runCallback(cbJson, Map("data" -> ColV(c)) ++ ctx),
+          "reducer returned", lits = false)
+      }
+
+      /** the `_labels` context of an ordered-array callback over `dim`:
+        * the dimension's labels in native (= ordered-array) order,
+        * collected by one metadata-scale distinct only when the callback
+        * mentions labels
+        */
+      def dimLabels(c: DataCube, dim: String,
+          cbJson: String): Map[String, PValue] =
+        if (!cbJson.contains("\"label\"")) Map.empty
+        else Map("_labels" -> ArrV(
+          c.df.select(col(dim)).distinct()
+            .orderBy(col(dim)).collect().toSeq
+            .map(r => StrV(String.valueOf(r.get(0))))))
+
+      /** a statistical reducer: the array fold inside an `_array` reduce,
+        * else the partial-aggregation aggregate
+        */
+      def reducer(arrayForm: Column => Column,
+          aggForm: Column => Column): PValue =
+        ColV(if (ctx.contains("_array")) arrayForm(column("data"))
+        else aggForm(column("data")))
+
+      /** a cumulative process: the array fold over a series array (inside
+        * an ordered-array callback `data` is a column), else the window
+        * along the cube's `dimension`
+        */
+      def cumulative(arrayForm: Column => Column,
+          cubeForm: (DataCube, String) => DataCube): PValue = args("data") match {
+        case ColV(a) => ColV(arrayForm(a))
+        case _ => CubeV(cubeForm(cube("data"), str("dimension")))
       }
 
       pid match {
@@ -748,10 +818,8 @@ object ProcessGraph {
           // absent args, and Catalyst pushes the survivors into the scan)
           var c = collections(str("id"))
           opt("temporal_extent").foreach { _ =>
-            val ext = args("temporal_extent").asInstanceOf[ArrV].v
-            c = FilterOps.filterTemporal(c,
-              nullableStr(ext(0), "temporal_extent"),
-              nullableStr(ext(1), "temporal_extent"), None)
+            val (s, e) = interval("temporal_extent")
+            c = FilterOps.filterTemporal(c, s, e, None)
           }
           spatialExtent.foreach { case (w, so, ea, no) =>
             c = FilterOps.filterBbox(c, w, ea, so, no)
@@ -759,10 +827,9 @@ object ProcessGraph {
           opt("bands").foreach(_ => c = FilterOps.filterBands(c, strs("bands")))
           CubeV(c)
         case "filter_temporal" =>
-          val ext = args("extent").asInstanceOf[ArrV].v
-          CubeV(FilterOps.filterTemporal(cube("data"),
-            nullableStr(ext(0), "extent"), nullableStr(ext(1), "extent"),
-            opt("dimension").map(_.asInstanceOf[StrV].v)))
+          val (s, e) = interval("extent")
+          CubeV(FilterOps.filterTemporal(cube("data"), s, e,
+            optStr("dimension")))
         case "filter_bands" =>
           // reference _filter.py:133-140: absent `bands` and a missing
           // band dimension each have their own named error
@@ -771,7 +838,7 @@ object ProcessGraph {
               "requires the parameter `bands` to be set")
           CubeV(FilterOps.filterBands(cube("data"), strs("bands")))
         case "filter_bbox" =>
-          val e = args("extent").asInstanceOf[ArrV].v.map(_.asInstanceOf[NumV].v)
+          val e = nums("extent")
           CubeV(FilterOps.filterBbox(cube("data"), e(0), e(1), e(2), e(3)))
         case "filter_labels" =>
           CubeV(FilterOps.filterLabels(cube("data"), str("dimension"),
@@ -797,7 +864,7 @@ object ProcessGraph {
           val dim = str("dimension")
           val cbJson = str("process")
           val c = cube("data")
-          val target = opt("target_dimension").map(_.asInstanceOf[StrV].v)
+          val target = optStr("target_dimension")
           val elementwise = isElementwiseCallback(cbJson)
           if (elementwise && target.forall(_ == dim)) {
             c.requireDim(dim)
@@ -831,13 +898,9 @@ object ProcessGraph {
                 sbCols.map { case (id, sc) =>
                   s"_sb_$id" -> (ColV(sc): PValue) }.toMap
               side.combos.foreach { case (id, comboJson) =>
-                sbCols(id) = runCallback(comboJson,
-                  sbBinds ++ callbackContext) match {
-                  case ColV(out) => out
-                  case NumV(n) => lit(n)
-                  case other => throw new IllegalArgumentException(
-                    s"apply_dimension side branch returned $other")
-                }
+                sbCols(id) = asColumn(runCallback(comboJson,
+                  sbBinds ++ callbackContext),
+                  "apply_dimension side branch returned")
               }
               segs.foreach {
                 case WinSeg(p, asc) =>
@@ -852,14 +915,9 @@ object ProcessGraph {
                   }
                 case ScalSeg(segJson) =>
                   cur = ApplyOps.apply(cur, v =>
-                    runCallback(segJson, Map("x" -> ColV(v),
-                      "data" -> ColV(v)) ++ sbBinds ++
-                      callbackContext) match {
-                      case ColV(out) => out
-                      case NumV(n) => lit(n)
-                      case other => throw new IllegalArgumentException(
-                        s"apply_dimension callback returned $other")
-                    })
+                    asColumn(runCallback(segJson, Map("x" -> ColV(v),
+                      "data" -> ColV(v)) ++ sbBinds ++ callbackContext),
+                      "apply_dimension callback returned"))
               }
               if (side.aggs.nonEmpty)
                 cur = cur.withDf(
@@ -875,8 +933,11 @@ object ProcessGraph {
             // element-wise form compiles to a linear `transform`, so it
             // is exempt; the cap is a session conf escape hatch.
             if (!elementwise) {
-              val maxFold = c.df.sparkSession.conf
-                .get("graft.applyDimension.foldMaxLabels", "8192").toLong
+              val key = "graft.applyDimension.foldMaxLabels"
+              val raw = c.df.sparkSession.conf.get(key, "8192")
+              val maxFold = raw.trim.toLongOption.filter(_ >= 1).getOrElse(
+                throw new IllegalArgumentException(
+                  s"$key must be an integer >= 1, got '$raw'"))
               val nLabels = c.meta.dims.find(_.name == dim)
                 .flatMap(_.labels).map(_.size.toLong)
                 .getOrElse(c.df.select(col(dim)).distinct().count())
@@ -885,22 +946,13 @@ object ProcessGraph {
                   s"dimension '$dim' has $nLabels labels (> $maxFold); the " +
                   "array-fold path is O(n²) per series. Rewrite the " +
                   "callback as a chain of element-wise and window-class " +
-                  "processes, or raise " +
-                  "spark.conf graft.applyDimension.foldMaxLabels to override")
+                  s"processes, or raise spark.conf $key to override")
             }
             val labelCtx: Map[String, PValue] =
-              if (elementwise || !cbJson.contains("\"label\"")) Map.empty
-              else Map("_labels" -> ArrV(
-                c.df.select(col(dim)).distinct()
-                  .orderBy(col(dim)).collect().toSeq
-                  .map(r => StrV(String.valueOf(r.get(0))))))
+              if (elementwise) Map.empty else dimLabels(c, dim, cbJson)
             def run(bind: Map[String, PValue]): Column =
-              runCallback(cbJson, bind ++ callbackContext) match {
-                case ColV(out) => out
-                case NumV(v) => lit(v)
-                case v => throw new IllegalArgumentException(
-                  s"apply_dimension callback returned $v")
-              }
+              asColumn(runCallback(cbJson, bind ++ callbackContext),
+                "apply_dimension callback returned")
             val process: Column => Column =
               if (elementwise)
                 arr => graft.functions.ArrayFns.arrayApply(arr,
@@ -909,14 +961,12 @@ object ProcessGraph {
                 arr => run(Map("x" -> ColV(arr), "data" -> ColV(arr),
                   "_array" -> BoolV(true)) ++ labelCtx)
             CubeV(ApplyOps.applyDimensionTarget(c, dim, process, target,
-              lengthPreserving =
-                args.get("length_preserving").contains(BoolV(true)) ||
-                  elementwise || isLengthPreservingCallback(cbJson)))
+              lengthPreserving = optBool("length_preserving", false) ||
+                elementwise || isLengthPreservingCallback(cbJson)))
           }
           }
         case "apply_kernel" =>
-          val kern = args("kernel").asInstanceOf[ArrV].v.map(
-            _.asInstanceOf[ArrV].v.map(_.asInstanceOf[NumV].v))
+          val kern = arr("kernel").map(arrOf("kernel", _).map(numOf("kernel", _)))
           CubeV(KernelOps.applyKernel(cube("data"), kern,
             optNum("factor").getOrElse(1.0)))
         case "reduce_dimension" =>
@@ -929,41 +979,27 @@ object ProcessGraph {
             // label-ordered value ARRAY along the reduced dimension (the
             // published EVI example indexes it with array_element); the
             // `_array` context flips the statistical reducer arms to
-            // their array folds. Label-based element access needs the
-            // dimension's label list — collected ONLY when the callback
-            // mentions labels (metadata-scale: one distinct over the dim)
+            // their array folds; label-based element access reads the
+            // dimension's label list (`dimLabels`)
             val cbJson = str("reducer")
             val c = cube("data")
-            val labelCtx: Map[String, PValue] =
-              if (!cbJson.contains("\"label\"")) Map.empty
-              else Map("_labels" -> ArrV(
-                c.df.select(col(dim)).distinct()
-                  .orderBy(col(dim)).collect().toSeq // native order = the
-                  // ordered-array sort order
-                  .map(r => StrV(String.valueOf(r.get(0))))))
-            CubeV(ReduceOps.reduceDimensionArray(c, dim, arr =>
-              runCallback(cbJson, Map("data" -> ColV(arr),
-                "_array" -> BoolV(true)) ++ labelCtx ++ callbackContext) match {
-                case ColV(out) => out
-                case LabeledV(out) => out // labeled array result: the map
-                case NumV(v) => lit(v)
-                case v => throw new IllegalArgumentException(
-                  s"reducer returned $v")
-              }))
+            val labelCtx = dimLabels(c, dim, cbJson)
+            CubeV(ReduceOps.reduceDimensionArray(c, dim, a =>
+              asColumn(runCallback(cbJson, Map("data" -> ColV(a),
+                "_array" -> BoolV(true)) ++ labelCtx ++ callbackContext),
+                "reducer returned", labeled = true)))
           }
         case "reduce_spatial" =>
           CubeV(ReduceOps.reduceSpatial(cube("data"), reducerCallback("reducer")))
         case "aggregate_temporal" =>
-          val iv = args("intervals").asInstanceOf[ArrV].v.map(_.asInstanceOf[ArrV].v)
+          val iv = arr("intervals").map(arrOf("intervals", _).map(strOf("intervals", _)))
           val labels = strs("labels")
           require(iv.size == labels.size, "intervals/labels length mismatch")
           val intervals = iv.zip(labels).map { case (se, lab) =>
-            AggregateOps.Interval(se(0).asInstanceOf[StrV].v,
-              se(1).asInstanceOf[StrV].v, lab)
+            AggregateOps.Interval(se(0), se(1), lab)
           }
           CubeV(AggregateOps.aggregateTemporal(cube("data"), intervals,
-            reducerCallback("reducer"),
-            opt("dimension").map(_.asInstanceOf[StrV].v)))
+            reducerCallback("reducer"), optStr("dimension")))
         case "aggregate_temporal_period" =>
           CubeV(AggregateOps.aggregateTemporalPeriod(cube("data"),
             str("period"), reducerCallback("reducer")))
@@ -979,14 +1015,12 @@ object ProcessGraph {
             }
           }
           CubeV(AggregateOps.climatologicalNormal(cube("data"),
-            str("frequency"),
-            opt("dimension").map(_.asInstanceOf[StrV].v), cp))
+            str("frequency"), optStr("dimension"), cp))
         case "anomaly" =>
           // openEO proposal: data minus its climatological normal; the
           // normals cube broadcasts onto the fact scan
           CubeV(AggregateOps.anomaly(cube("data"), cube("normals"),
-            str("frequency"),
-            opt("dimension").map(_.asInstanceOf[StrV].v)))
+            str("frequency"), optStr("dimension")))
         case "apply_neighborhood" =>
           // size/overlap arrive as raw JSON: the openeo list-of-
           // {dimension,value} form or a plain {dim: value} object
@@ -1022,24 +1056,21 @@ object ProcessGraph {
         case "resample_spatial" =>
           // `projection` warps first (cubes/resample.py:39-113); a zero or
           // absent resolution means warp-only, no regridding
-          val warped = opt("projection") match {
-            case Some(StrV(p)) => ResampleOps.warpCube(cube("data"), p)
-            case _ => cube("data")
-          }
+          val warped = optStr("projection")
+            .fold(cube("data"))(ResampleOps.warpCube(cube("data"), _))
           val res = optNum("resolution").getOrElse(0.0)
           if (res == 0.0) CubeV(warped)
           else resampleByMethod(warped, res)
-        case "run_udf" if args.get("chunked").contains(BoolV(true)) =>
-          CubeV(UdfOps.runUdfChunked(cube("data"), str("udf"),
-            opt("runtime").map(_.asInstanceOf[StrV].v).getOrElse("python3")))
         case "run_udf" =>
-          CubeV(UdfOps.runUdf(cube("data"), str("udf"),
-            opt("runtime").map(_.asInstanceOf[StrV].v).getOrElse("python3")))
+          val runtime = optStr("runtime").getOrElse("python3")
+          CubeV(if (optBool("chunked", false))
+            UdfOps.runUdfChunked(cube("data"), str("udf"), runtime)
+          else UdfOps.runUdf(cube("data"), str("udf"), runtime))
         case "mask_polygon" =>
           CubeV(SpatialOps.maskPolygon(cube("data"),
             rings(str("mask")).head._2,
             if (opt("replacement").isDefined) column("replacement") else lit(null),
-            inside = !args.get("inside").contains(BoolV(false))))
+            inside = optBool("inside", true)))
         case "filter_spatial" =>
           CubeV(SpatialOps.filterSpatial(cube("data"),
             rings(str("geometries")).head._2))
@@ -1066,10 +1097,8 @@ object ProcessGraph {
           // wins), cube shape preserved. The id dimension defaults to the
           // cube's first dim.
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
-          val sep = opt("separator").map(_.asInstanceOf[StrV].v).getOrElse("\\. ")
+          val idDim = idDimOf(c)
+          val sep = optStr("separator").getOrElse("\\. ")
           val deduped = graft.pipeline.Dedup.lineDedup(
             c.df, idDim, col(c.meta.valueCol), sep)
             .select(col(idDim), col("kept_text").as(c.meta.valueCol))
@@ -1114,9 +1143,7 @@ object ProcessGraph {
           // first doc per identical text survives: one md5 groupBy for the
           // survivor id set, then a semi join (AQE broadcasts it when small)
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val surv = c.df
             .groupBy(md5(col(c.meta.valueCol).cast("binary")).as("_k"))
             .agg(min(col(idDim)).as(idDim)).select(col(idDim))
@@ -1125,9 +1152,7 @@ object ProcessGraph {
           // MinHash-LSH near-dup survivor selection through the
           // exact-dup pre-collapse path (Dedup.survivorsCollapsed)
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val th = optNum("threshold").getOrElse(0.5)
           CubeV(c.withDf(df => graft.pipeline.Dedup.survivorsCollapsed(
             df, idDim, col(c.meta.valueCol), threshold = th)))
@@ -1138,9 +1163,7 @@ object ProcessGraph {
           // FILTERS (text cube in, text cube out); without it the value
           // becomes the xent score.
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val v = c.meta.valueCol
           val isTarget = opt("target")
             .map(_ => scalarCallback("target")(col(v)).cast("boolean"))
@@ -1161,9 +1184,7 @@ object ProcessGraph {
           // DSIR importance weight per doc becomes the cube value; `target`
           // callback as in lm_score
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val v = c.meta.valueCol
           val isTarget = opt("target")
             .map(_ => scalarCallback("target")(col(v)).cast("boolean"))
@@ -1178,9 +1199,7 @@ object ProcessGraph {
           // deterministic hash split: `fractions` = {"train":0.8,...} (raw
           // JSON), keep the named slice — shuffle-free, the 100-TB path
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val fracs = JsonMethods.parse(str("fractions")) match {
             case JObject(fs) => fs.collect {
               case (k, JDouble(d)) => k -> d
@@ -1190,18 +1209,14 @@ object ProcessGraph {
             case _ => throw new IllegalArgumentException(
               "split.fractions: need a {name: fraction} object")
           }
-          val salt = opt("salt").map(_.asInstanceOf[StrV].v)
-            .getOrElse("graft-split")
+          val salt = optStr("salt").getOrElse("graft-split")
           CubeV(c.withDf(_.filter(graft.pipeline.Sampling
             .splitColumn(col(idDim), salt, fracs) === str("keep"))))
         case "sample" =>
           // proportional-in-expectation hash sample, shuffle-free
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
-          val salt = opt("salt").map(_.asInstanceOf[StrV].v)
-            .getOrElse("graft-sample")
+          val idDim = idDimOf(c)
+          val salt = optStr("salt").getOrElse("graft-sample")
           CubeV(c.withDf(df => graft.pipeline.Sampling.sampleByHash(
             df, idDim, num("fraction"), salt)))
         case "pack_sequences" =>
@@ -1209,9 +1224,7 @@ object ProcessGraph {
           // (id, n_tok, bin, offset_in_bin) with offset_in_bin as value —
           // the exact shape the pack_sequences driver query emits
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val budget = num("budget").toInt
           val nBuckets = optNum("buckets").map(_.toInt).getOrElse(256)
           val packed = graft.pipeline.Sampling.packSequences(c.df, idDim,
@@ -1227,9 +1240,7 @@ object ProcessGraph {
           // equi-join banding, no all-pairs), then the standard
           // component-minimum survivor anti-join
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val maxHam = optNum("max_hamming").map(_.toInt).getOrElse(3)
           CubeV(c.withDf { df =>
             val pairs = graft.pipeline.Dedup.simhashNearDups(
@@ -1241,9 +1252,7 @@ object ProcessGraph {
           // candidate pairs above `threshold` (Dedup.ngramJaccardNearDups),
           // then the component-minimum survivor anti-join
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val n = optNum("n").map(_.toInt).getOrElse(3)
           val th = optNum("threshold").getOrElse(0.5)
           CubeV(c.withDf { df =>
@@ -1260,9 +1269,7 @@ object ProcessGraph {
           // two-mode convention.
           val c = cube("data")
           val tr = cube("train")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val n = optNum("n").map(_.toInt).getOrElse(3)
           val v = c.meta.valueCol
           val scored = graft.pipeline.Dedup.ngramContainment(
@@ -1289,9 +1296,7 @@ object ProcessGraph {
           // (Dedup.incrementalNew: the corpus never shuffles)
           val c = cube("data")
           val corp = cube("corpus")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val keyOf: Column => Column = opt("key")
             .map(_ => scalarCallback("key"))
             .getOrElse(graft.pipeline.TextAnalysis.contentHash(_))
@@ -1305,9 +1310,7 @@ object ProcessGraph {
           // component-minimum survivor anti-join — the embedding twin of
           // minhash_dedup_survivors
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val th = optNum("threshold").getOrElse(0.95)
           val cents = optNum("centroids").map(_.toInt).getOrElse(16)
           CubeV(c.withDf(df => graft.pipeline.Similarity.semDedupSurvivors(
@@ -1318,18 +1321,8 @@ object ProcessGraph {
           // becomes the (id) → score_units top-k table, exact integer
           // micro-unit scores, TakeOrdered top-k
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
-          val terms = args.get("query") match {
-            case Some(ArrV(xs)) => xs.map {
-              case StrV(t) => t
-              case v => throw new IllegalArgumentException(
-                s"bm25.query: not a string ($v)")
-            }
-            case other => throw new IllegalArgumentException(
-              s"bm25.query: required string array (got $other)")
-          }
+          val idDim = idDimOf(c)
+          val terms = arr("query").map(strOf("query", _))
           val k = optNum("k").map(_.toInt).getOrElse(10)
           val top = graft.pipeline.Retrieval.bm25TopK(
             c.df.select(col(idDim), col(c.meta.valueCol).as("_text")),
@@ -1356,9 +1349,7 @@ object ProcessGraph {
           // cosine as the value
           val qc = cube("queries")
           val cc = cube("corpus")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(qc.meta.dimNames.head)
-          qc.requireDim(idDim)
+          val idDim = idDimOf(qc)
           val k = optNum("k").map(_.toInt).getOrElse(10)
           val cents = optNum("centroids").map(_.toInt).getOrElse(16)
           val corpusDf = cc.df.select(
@@ -1381,9 +1372,7 @@ object ProcessGraph {
           // (query_id, neighbor_id, rk) -> cosine table as ann_topk
           val qc = cube("queries")
           val cc = cube("corpus")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(qc.meta.dimNames.head)
-          qc.requireDim(idDim)
+          val idDim = idDimOf(qc)
           val k = optNum("k").map(_.toInt).getOrElse(10)
           val dims = num("dims").toInt
           val m = optNum("m").map(_.toInt).getOrElse(16)
@@ -1417,9 +1406,7 @@ object ProcessGraph {
           // the cube becomes the (id_l, id_r) → jaccard pair table
           val lc = cube("data")
           val rc = cube("right")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(lc.meta.dimNames.head)
-          lc.requireDim(idDim)
+          val idDim = idDimOf(lc)
           val th = optNum("threshold").getOrElse(0.5)
           val n = optNum("n").map(_.toInt).getOrElse(3)
           val joined = graft.pipeline.Dedup.jaccardJoin(
@@ -1435,9 +1422,7 @@ object ProcessGraph {
           // chunk_id companion and the value becomes the chunk text —
           // the context-window prep step of the training pipeline
           val c = cube("data")
-          val idDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse(c.meta.dimNames.head)
-          c.requireDim(idDim)
+          val idDim = idDimOf(c)
           val window = num("window").toInt
           val stride = optNum("stride").map(_.toInt).getOrElse(window)
           val chunked = graft.pipeline.Chunking.chunkDocs(
@@ -1473,11 +1458,7 @@ object ProcessGraph {
           val c = cube("data")
           val k = optNum("k").map(_.toInt).getOrElse(3)
           val idDim = str("id_dimension")
-          val groupDim = opt("group").map {
-            case StrV(s) => s
-            case v => throw new IllegalArgumentException(
-              s"top_k.group: not a string ($v)")
-          }
+          val groupDim = optStr("group")
           val dimNames = c.meta.dims.map(_.name).toSet
           (groupDim.toSeq :+ idDim).foreach { d =>
             require(dimNames.contains(d),
@@ -1509,15 +1490,8 @@ object ProcessGraph {
           val c = cube("data")
           val capacity = optNum("capacity").map(_.toInt).getOrElse(16384)
           val scale = optNum("scale").getOrElse(10.0)
-          val probes = opt("permille").map {
-            case ArrV(xs) => xs.map {
-              case NumV(x) => x.toInt
-              case v => throw new IllegalArgumentException(
-                s"quantiles_sketch.permille: not a number ($v)")
-            }
-            case v => throw new IllegalArgumentException(
-              s"quantiles_sketch.permille: not an array ($v)")
-          }.getOrElse(graft.functions.QuantileSketchAgg.DefaultPms)
+          val probes = opt("permille").map(_ => nums("permille").map(_.toInt))
+            .getOrElse(graft.functions.QuantileSketchAgg.DefaultPms)
           val qp = c.df.filter(col(c.meta.valueCol).isNotNull)
             .agg(graft.functions.QuantileSketchAgg.column(
               round(col(c.meta.valueCol) * scale).cast("long"), lit(1L),
@@ -1572,20 +1546,12 @@ object ProcessGraph {
           // dimensions into one, labels joined by label_separator
           CubeV(CubeDimOps.flattenDimensions(cube("data"), strs("dimensions"),
             str("target_dimension"),
-            opt("label_separator").map {
-              case StrV(s) => s
-              case v => throw new IllegalArgumentException(
-                s"flatten_dimensions.label_separator: not a string ($v)")
-            }.getOrElse("~")))
+            optStr("label_separator").getOrElse("~")))
         case "unflatten_dimension" =>
           // openEO spec proposal: split a dimension's labels back out
           CubeV(CubeDimOps.unflattenDimension(cube("data"), str("dimension"),
             strs("target_dimensions"),
-            opt("label_separator").map {
-              case StrV(s) => s
-              case v => throw new IllegalArgumentException(
-                s"unflatten_dimension.label_separator: not a string ($v)")
-            }.getOrElse("~")))
+            optStr("label_separator").getOrElse("~")))
         case "aggregate_spatial_window" =>
           // openEO spec proposal: reduce over non-overlapping pixel
           // windows; size = [x, y], boundary pad|trim
@@ -1596,11 +1562,7 @@ object ProcessGraph {
           }
           CubeV(SpatialOps.aggregateSpatialWindow(cube("data"),
             reducerCallback("reducer"), size._1, size._2,
-            opt("boundary").map {
-              case StrV(s) => s
-              case v => throw new IllegalArgumentException(
-                s"aggregate_spatial_window.boundary: not a string ($v)")
-            }.getOrElse("pad")))
+            optStr("boundary").getOrElse("pad")))
         case "save_result" =>
           // The terminal node every canonical openeo graph ends with.
           // Backend-defined in the reference (absent from its process
@@ -1609,25 +1571,22 @@ object ProcessGraph {
           // action), without one it is a pass-through so callers can sink
           // the returned cube themselves.
           val c = cube("data")
-          val fmt = opt("format").map(_.asInstanceOf[StrV].v).getOrElse("Parquet")
+          val fmt = optStr("format").getOrElse("Parquet")
           require(Set("parquet", "csv", "json", "gtiff", "geotiff", "zarr",
             "zarr3")(fmt.toLowerCase),
             s"FormatUnsuitable: $fmt (parquet, csv, json, gtiff, zarr, zarr3)")
-          val pathOpt = opt("options").flatMap {
-            case StrV(j) => JsonMethods.parse(j) \ "path" match {
+          val pathOpt = optStr("options").flatMap(j =>
+            JsonMethods.parse(j) \ "path" match {
               case JString(p) => Some(p)
               case _ => None
-            }
-            case _ => None
-          }
+            })
           pathOpt.foreach(p =>
             graft.sources.CubeIO.saveResult(c, p, format = fmt))
           CubeV(c)
         case "inspect" =>
           CubeV(graft.sources.CubeIO.inspect(cube("data"),
-            opt("message").map(_.asInstanceOf[StrV].v).getOrElse(""),
-            opt("code").map(_.asInstanceOf[StrV].v).getOrElse("User"),
-            opt("level").map(_.asInstanceOf[StrV].v).getOrElse("info")))
+            optStr("message").getOrElse(""), optStr("code").getOrElse("User"),
+            optStr("level").getOrElse("info")))
         case "trim_cube" =>
           CubeV(CubeDimOps.trimCube(cube("data"), strs("dimensions")))
         case "merge_cubes" =>
@@ -1635,16 +1594,11 @@ object ProcessGraph {
           // it into a binary Column builder. When absent, pass None so MergeOps
           // raises OverlapResolverMissing on overlap (reference: merge.py:165-168).
           val resolver: Option[(Column, Column) => Column] =
-            opt("overlap_resolver").map { _ =>
-              val cbJson = str("overlap_resolver")
+            optStr("overlap_resolver").map { cbJson =>
               (a: Column, b: Column) =>
-                runCallback(cbJson, Map("x" -> ColV(a), "y" -> ColV(b),
-                    "cube1" -> ColV(a), "cube2" -> ColV(b))
-                    ++ callbackContext) match {
-                  case ColV(out) => out
-                  case NumV(v) => lit(v)
-                  case v => throw new IllegalArgumentException(s"resolver returned $v")
-                }
+                asColumn(runCallback(cbJson, Map("x" -> ColV(a), "y" -> ColV(b),
+                  "cube1" -> ColV(a), "cube2" -> ColV(b)) ++ callbackContext),
+                  "resolver returned")
             }
           CubeV(MergeOps.mergeCubes(cube("cube1"), cube("cube2"), resolver))
         case "mask" =>
@@ -1663,9 +1617,8 @@ object ProcessGraph {
             opt("source").map(_ => strs("source")).getOrElse(Nil)))
         case "ndvi" =>
           CubeV(IndicesOps.ndvi(cube("data"),
-            opt("nir").map(_.asInstanceOf[StrV].v).getOrElse("nir"),
-            opt("red").map(_.asInstanceOf[StrV].v).getOrElse("red"),
-            opt("target_band").map(_.asInstanceOf[StrV].v)))
+            optStr("nir").getOrElse("nir"), optStr("red").getOrElse("red"),
+            optStr("target_band")))
 
         // ---- curve fitting / ML (reference: ml/curve_fitting.py:15-162,
         // ml/random_forest.py:22-161) ----
@@ -1678,8 +1631,7 @@ object ProcessGraph {
           // is the openEO shape: the fitted dimension is replaced by a
           // `param` dimension with labels a/b(/c).
           val c = cube("data"); val dim = str("dimension")
-          val model = opt("model").map(_.asInstanceOf[StrV].v)
-            .getOrElse("linear")
+          val model = optStr("model").getOrElse("linear")
           val others = c.meta.dimNames.filterNot(_ == dim)
           val params = model match {
             case "linear" => (CurveOps.fitLinear(c, dim), Seq("a", "b"))
@@ -1696,10 +1648,8 @@ object ProcessGraph {
           CubeV(DataCube.fromTable(melted, others :+ "param", "value"))
         case "predict_curve" =>
           val pc = cube("parameters"); val dimName = str("dimension")
-          val labels = args("labels").asInstanceOf[ArrV].v
-            .map(_.asInstanceOf[NumV].v)
-          val model = opt("model").map(_.asInstanceOf[StrV].v)
-            .getOrElse("linear")
+          val labels = nums("labels")
+          val model = optStr("model").getOrElse("linear")
           val series = pc.meta.dimNames.filterNot(_ == "param")
           val v = pc.meta.valueCol
           def wide(names: Seq[String]) =
@@ -1728,9 +1678,7 @@ object ProcessGraph {
           // exports — the reference ships only the regressor) reads target
           // labels as class indices 0..k−1; the two differ only in the fit.
           val pred = cube("predictors"); val tgt = cube("target")
-          val bandDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse("bands")
-          pred.requireDim(bandDim)
+          val bandDim = idDimOf(pred, Some("bands"))
           val numTrees = optNum("num_trees").map(_.toInt).getOrElse(100)
           val maxDepth = optNum("max_depth").map(_.toInt).getOrElse(8)
           val seed = optNum("seed").map(_.toLong).getOrElse(42L)
@@ -1772,9 +1720,7 @@ object ProcessGraph {
                 s"resolve to a loaded ML model ($v)") // exceptions.py:45
           }
           val d = cube("data")
-          val bandDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse("bands")
-          d.requireDim(bandDim)
+          val bandDim = idDimOf(d, Some("bands"))
           val series = d.meta.dimNames.filterNot(_ == bandDim)
           val wide = d.df.groupBy(series.map(col): _*)
             .pivot(bandDim, feats).agg(first(col(d.meta.valueCol)))
@@ -1785,9 +1731,7 @@ object ProcessGraph {
         // ---- cube-to-cube resample (reference: cubes/resample.py) ----
         case "resample_cube_spatial" =>
           val d = cube("data"); val t = cube("target")
-          val method = opt("method").map(_.asInstanceOf[StrV].v)
-            .getOrElse("near")
-          method match {
+          optStr("method").getOrElse("near") match {
             case "near" =>
               // target axis labels: metadata-scale collects (axis lengths)
               val sd = t.meta.spatialDims
@@ -1805,7 +1749,7 @@ object ProcessGraph {
           }
         case "resample_cube_temporal" =>
           val d = cube("data"); val t = cube("target")
-          val dim = opt("dimension").map(_.asInstanceOf[StrV].v)
+          val dim = optStr("dimension")
           val tdim = dim.getOrElse(t.temporalDim)
           // target time labels: metadata-scale collect (axis length)
           val targets = t.df.select(col(tdim).cast("timestamp")).distinct()
@@ -1821,22 +1765,10 @@ object ProcessGraph {
         // callback (`data` arrives as a ColV series array) they are the
         // ArrayFns folds — dispatch on the argument, not the context, so
         // they work in every array-callback site.
-        case "cumsum" => args("data") match {
-          case ColV(a) => ColV(graft.functions.ArrayFns.arrayCumsum(a))
-          case _ => CubeV(WindowOps.cumsum(cube("data"), str("dimension")))
-        }
-        case "cummin" => args("data") match {
-          case ColV(a) => ColV(graft.functions.ArrayFns.arrayCummin(a))
-          case _ => CubeV(WindowOps.cummin(cube("data"), str("dimension")))
-        }
-        case "cummax" => args("data") match {
-          case ColV(a) => ColV(graft.functions.ArrayFns.arrayCummax(a))
-          case _ => CubeV(WindowOps.cummax(cube("data"), str("dimension")))
-        }
-        case "cumproduct" => args("data") match {
-          case ColV(a) => ColV(graft.functions.ArrayFns.arrayCumproduct(a))
-          case _ => CubeV(WindowOps.cumprodExact(cube("data"), str("dimension")))
-        }
+        case "cumsum" => cumulative(ArrayFns.arrayCumsum, WindowOps.cumsum)
+        case "cummin" => cumulative(ArrayFns.arrayCummin, WindowOps.cummin)
+        case "cummax" => cumulative(ArrayFns.arrayCummax, WindowOps.cummax)
+        case "cumproduct" => cumulative(ArrayFns.arrayCumproduct, WindowOps.cumprodExact)
         case "array_interpolate_linear" => args("data") match {
           case ColV(a) =>
             ColV(graft.functions.ArrayFns.arrayInterpolateLinear(a))
@@ -1867,8 +1799,7 @@ object ProcessGraph {
           // band to its [minuend, subtrahend] input bands (the reference
           // hard-codes the MNDWI/NDVI/... set; the math is identical)
           val c = cube("data")
-          val bandDim = opt("dimension").map(_.asInstanceOf[StrV].v)
-            .getOrElse("band")
+          val bandDim = optStr("dimension").getOrElse("band")
           val pairsJson = JsonMethods.parse(str("pairs"))
           val pairs = pairsJson match {
             case JObject(fields) => fields.map {
@@ -1918,7 +1849,7 @@ object ProcessGraph {
           // (md5-derived, deterministic); points pass through
           TableV(VectorOps.vectorToRandomPoints(table("data"), "geometry",
             num("geometry_count").toInt,
-            seed = opt("seed").map(_ => str("seed")).getOrElse("rp")))
+            seed = optStr("seed").getOrElse("rp")))
         case "vector_reproject" =>
           TableV(VectorOps.reprojectVector(table("data"), "geometry",
             str("source"), str("projection")))
@@ -1951,9 +1882,9 @@ object ProcessGraph {
         case "load_vector_cube" =>
           TableV(VectorOps.loadVectorCube(
             org.apache.spark.sql.SparkSession.active,
-            url = opt("URL").orElse(opt("url")).map(_.asInstanceOf[StrV].v),
-            filename = opt("filename").map(_.asInstanceOf[StrV].v),
-            geometries = opt("geometries").map(_.asInstanceOf[StrV].v),
+            url = optStr("URL").orElse(optStr("url")),
+            filename = optStr("filename"),
+            geometries = optStr("geometries"),
             properties = opt("properties").map(_ => strs("properties"))
               .getOrElse(Nil)))
 
@@ -1961,9 +1892,7 @@ object ProcessGraph {
         case "load_stac" =>
           val assets = graft.sources.StacLoader.loadCatalogItems(str("url"))
           val timeRange = opt("temporal_extent").map { _ =>
-            val ext = args("temporal_extent").asInstanceOf[ArrV].v
-            val (s, e) = (nullableStr(ext(0), "temporal_extent"),
-              nullableStr(ext(1), "temporal_extent"))
+            val (s, e) = interval("temporal_extent")
             require(s.nonEmpty || e.nonEmpty,
               "TemporalExtentEmpty: both temporal bounds are null")
             // "" = open bound in filterAssets' lexicographic interval
@@ -2112,32 +2041,23 @@ object ProcessGraph {
         case "eq" =>
           ColV(Scalar.eq(column("x"), column("y"),
             delta = optNum("delta"),
-            caseSensitive =
-              !args.get("case_sensitive").contains(BoolV(false))))
+            caseSensitive = optBool("case_sensitive", true)))
         case "between" =>
           ColV(Scalar.between(column("x"), column("min"), column("max"),
-            excludeMax = args.get("exclude_max").contains(BoolV(true))))
+            excludeMax = optBool("exclude_max", false)))
         // text sub-language (reference: text.py)
         case "text_begins" =>
           ColV(Scalar.textBegins(column("data"), str("pattern"),
-            !args.get("case_sensitive").contains(BoolV(false))))
+            optBool("case_sensitive", true)))
         case "text_ends" =>
           ColV(Scalar.textEnds(column("data"), str("pattern"),
-            !args.get("case_sensitive").contains(BoolV(false))))
+            optBool("case_sensitive", true)))
         case "text_contains" =>
           ColV(Scalar.textContains(column("data"), str("pattern"),
-            !args.get("case_sensitive").contains(BoolV(false))))
+            optBool("case_sensitive", true)))
         case "text_concat" =>
-          val items = args("data").asInstanceOf[ArrV].v.map {
-            case ColV(c) => c
-            case NumV(v) => lit(v)
-            case StrV(s) => lit(s)
-            case BoolV(b) => lit(b)
-            case NullV => lit(null)
-            case v => throw new IllegalArgumentException(s"text_concat item $v")
-          }
-          ColV(Scalar.textConcat(items,
-            opt("separator").map(_.asInstanceOf[StrV].v).getOrElse("")))
+          ColV(Scalar.textConcat(arr("data").map(element("data", _)),
+            optStr("separator").getOrElse("")))
         // crawl/text-pipeline sub-language (beyond the reference: the
         // LLM-data operators graded first-class — scalar forms usable in
         // any apply/apply_dimension callback over a text-valued cube)
@@ -2172,7 +2092,7 @@ object ProcessGraph {
           ColV(Scalar.dateBetween(column("x"), column("min"), column("max")))
         case "date_difference" =>
           ColV(Scalar.dateDifference(column("date1"), column("date2"),
-            opt("unit").map(_.asInstanceOf[StrV].v).getOrElse("second")))
+            optStr("unit").getOrElse("second")))
         case "date_shift" =>
           ColV(Scalar.dateShift(column("date"), num("value").toInt, str("unit")))
         // array sub-language over ArrayType columns (reference: arrays.py)
@@ -2191,7 +2111,7 @@ object ProcessGraph {
             // ArrayElementNotAvailable unless return_nodata; index access
             // goes positionally through the entry values (arrays.py:85-121)
             case LabeledV(m) =>
-              val rn = args.get("return_nodata").contains(BoolV(true))
+              val rn = optBool("return_nodata", false)
               args.get("label") match {
                 case Some(StrV(lab)) => ColV(
                   graft.functions.ArrayFns.labeledElement(m, lit(lab), rn))
@@ -2236,19 +2156,14 @@ object ProcessGraph {
           ColV(graft.functions.ArrayFns.arrayContains(column("data"), column("value")))
         case "array_apply" =>
           ColV(graft.functions.ArrayFns.arrayApply(column("data"),
-            x => runCallback(str("process"),
-              Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext) match {
-              case ColV(out) => out
-              case NumV(v) => lit(v)
-              case v => throw new IllegalArgumentException(s"array_apply cb $v")
-            }))
+            x => asColumn(runCallback(str("process"),
+              Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext),
+              "array_apply cb")))
         case "array_filter" =>
           ColV(graft.functions.ArrayFns.arrayFilter(column("data"),
-            x => (runCallback(str("condition"),
-              Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext) match {
-              case ColV(out) => out
-              case v => throw new IllegalArgumentException(s"array_filter cb $v")
-            }).cast("boolean")))
+            x => asColumn(runCallback(str("condition"),
+              Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext),
+              "array_filter cb", lits = false).cast("boolean")))
         case "array_create" =>
           ColV(graft.functions.ArrayFns.arrayCreate(column("data"),
             optNum("repeat").map(_.toInt).getOrElse(1)))
@@ -2265,15 +2180,15 @@ object ProcessGraph {
         case "array_find" =>
           ColV(graft.functions.ArrayFns.arrayFind(column("data"),
             column("value"),
-            reverse = args.get("reverse").contains(BoolV(true))))
+            reverse = optBool("reverse", false)))
         case "array_labels" =>
           ColV(graft.functions.ArrayFns.arrayLabels(column("data")))
         case "sort" =>
           ColV(graft.functions.ArrayFns.arraySort(column("data"),
-            ascending = !args.get("asc").contains(BoolV(false))))
+            ascending = optBool("asc", true)))
         case "order" =>
           ColV(graft.functions.ArrayFns.orderIndices(column("data"),
-            ascending = !args.get("asc").contains(BoolV(false))))
+            ascending = optBool("asc", true)))
         case "rearrange" =>
           ColV(graft.functions.ArrayFns.rearrange(column("data"),
             column("order")))
@@ -2283,15 +2198,15 @@ object ProcessGraph {
         // they index the array (reference: arrays.py:461-495 for both)
         case "first" => ctx.get("_order") match {
           case Some(ColV(ord)) => ColV(Reducers.firstByOrder(column("data"), ord,
-            ignoreNodata = !args.get("ignore_nodata").contains(BoolV(false))))
-          case _ => ColV(graft.functions.ArrayFns.arrayFirst(column("data"),
-            ignoreNodata = !args.get("ignore_nodata").contains(BoolV(false))))
+            ignoreNodata = optBool("ignore_nodata", true)))
+          case _ => ColV(ArrayFns.arrayFirst(column("data"),
+            ignoreNodata = optBool("ignore_nodata", true)))
         }
         case "last" => ctx.get("_order") match {
           case Some(ColV(ord)) => ColV(Reducers.lastByOrder(column("data"), ord,
-            ignoreNodata = !args.get("ignore_nodata").contains(BoolV(false))))
-          case _ => ColV(graft.functions.ArrayFns.arrayLast(column("data"),
-            ignoreNodata = !args.get("ignore_nodata").contains(BoolV(false))))
+            ignoreNodata = optBool("ignore_nodata", true)))
+          case _ => ColV(ArrayFns.arrayLast(column("data"),
+            ignoreNodata = optBool("ignore_nodata", true)))
         }
         case "neq" => ColV(Scalar.neq(column("x"), column("y")))
         case "and" => ColV(Scalar.and(column("x"), column("y")))
@@ -2307,44 +2222,22 @@ object ProcessGraph {
         // array, e.g. the published EVI example's sum over
         // [1, nir, 6*red, -7.5*blue]) they fold the array scalar-wise;
         // otherwise they are the partial-agg aggregates.
-        case "mean" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayMean(column("data"))
-          else Reducers.meanR(column("data")))
-        case "sum" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arraySum(column("data"))
-          else Reducers.sumR(column("data")))
-        case "min" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayMin(column("data"))
-          else Reducers.minR(column("data")))
-        case "max" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayMax(column("data"))
-          else Reducers.maxR(column("data")))
-        case "median" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayMedian(column("data"))
-          else Reducers.medianR(column("data")))
-        case "sd" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arraySd(column("data"))
-          else Reducers.sdR(column("data")))
-        case "variance" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayVariance(column("data"))
-          else Reducers.varianceR(column("data")))
-        case "count" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayCountValid(column("data"))
-          else Reducers.countValid(column("data")))
-        case "product" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayProduct(column("data"))
-          else Reducers.productR(column("data")))
-        case "extrema" =>
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayExtrema(column("data"))
-          else Reducers.extremaR(column("data")))
+        case "mean" => reducer(ArrayFns.arrayMean, Reducers.meanR(_))
+        case "sum" => reducer(ArrayFns.arraySum, Reducers.sumR(_))
+        case "min" => reducer(ArrayFns.arrayMin, Reducers.minR(_))
+        case "max" => reducer(ArrayFns.arrayMax, Reducers.maxR(_))
+        case "median" => reducer(ArrayFns.arrayMedian, Reducers.medianR(_))
+        case "sd" => reducer(ArrayFns.arraySd, Reducers.sdR(_))
+        case "variance" => reducer(ArrayFns.arrayVariance, Reducers.varianceR(_))
+        case "count" => reducer(ArrayFns.arrayCountValid, Reducers.countValid)
+        case "product" => reducer(ArrayFns.arrayProduct, Reducers.productR)
+        case "extrema" => reducer(ArrayFns.arrayExtrema, Reducers.extremaR(_))
         case "any" =>
-          val ig = !args.get("ignore_nodata").contains(BoolV(false))
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayAnyTrue(column("data"), ig)
-          else Reducers.anyR(column("data"), ig))
+          val ig = optBool("ignore_nodata", true)
+          reducer(ArrayFns.arrayAnyTrue(_, ig), Reducers.anyR(_, ig))
         case "all" =>
-          val ig = !args.get("ignore_nodata").contains(BoolV(false))
-          ColV(if (ctx.contains("_array")) ArrayFns.arrayAllTrue(column("data"), ig)
-          else Reducers.allR(column("data"), ig))
+          val ig = optBool("ignore_nodata", true)
+          reducer(ArrayFns.arrayAllTrue(_, ig), Reducers.allR(_, ig))
         case "quantiles" =>
           // probabilities XOR q, with q (or a bare int) expanding to the
           // q-1 equidistant cut points (reference: math.py:341-365 —

@@ -81,21 +81,26 @@ object TiffReader {
     * construction; plain TIFFs may place it at the end, still one seek).
     */
   def readMeta(path: String, level: Int = 0): TiffMeta = {
-    val all = readMetaAll(path)
-    require(level >= 0 && level < all.size,
-      s"TiffCorrupt: overview level $level of ${all.size}")
-    all(level)
+    // the walk stops at `level`; a chain that ends first (or a negative
+    // level) is walked whole, so the error counts every IFD
+    val chain = ifdChain(path, if (level < 0) Int.MaxValue else level)
+    require(level >= 0 && level < chain.size,
+      s"TiffCorrupt: overview level $level of ${chain.size}")
+    chain(level)
   }
 
   /** The full IFD chain — a COG carries its overview pyramid as chained
     * IFDs (level 0 = full resolution, then progressively reduced copies).
     * Each is parsed with the same targeted range reads.
     */
-  def readMetaAll(path: String): Seq[TiffMeta] = {
+  def readMetaAll(path: String): Seq[TiffMeta] = ifdChain(path, Int.MaxValue)
+
+  /** IFDs 0..`last` of the chain, fewer when the chain ends first. */
+  private def ifdChain(path: String, last: Int): Seq[TiffMeta] = {
     val raf = new java.io.RandomAccessFile(path, "r")
     try {
       var out = List(readMeta(raf, None))
-      while (out.head.nextIfd != 0)
+      while (out.size <= last && out.head.nextIfd != 0)
         out = readMeta(raf, Some(out.head)) :: out
       out.reverse
     } finally raf.close()

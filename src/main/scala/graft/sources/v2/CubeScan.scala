@@ -8,6 +8,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 
 /** Pushed x/y/t/bands predicates as inclusive, conservative bounds. */
 private[v2] final case class Extent(x: (Double, Double), y: (Double, Double),
@@ -96,38 +97,36 @@ private[v2] class CubeScan(assets: Seq[CubeSource.Asset],
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** Planned once per Scan: the optimizer probes estimateStatistics and
-    * execution calls planInputPartitions on the same instance — without
-    * the cache each probe re-reads store metadata and re-walks the whole
-    * chunk directory (seconds of driver I/O on a 10⁵-chunk archive).
+  /** Planned once per Scan, failure included: the optimizer probes
+    * estimateStatistics and execution calls planInputPartitions on the
+    * same instance — without the cache each probe re-reads store metadata
+    * and re-walks the whole chunk directory (seconds of driver I/O on a
+    * 10⁵-chunk archive). A store that fails to plan is not planned again:
+    * planInputPartitions rethrows the one failure.
     */
-  private lazy val reads: Array[CubeRead] = assets.flatMap { a =>
+  private lazy val reads: Try[Array[CubeRead]] = Try(assets.flatMap { a =>
     a.format match {
       case CubeSource.Zarr => ZarrChunks.plan(a, extent)
       case CubeSource.Tiff => TiffSegments.plan(a, extent)
     }
-  }.toArray
+  }.toArray)
 
   private lazy val partitions: Array[InputPartition] =
-    CubeScanUtil.pack(session, reads).map(rs =>
+    CubeScanUtil.pack(session, reads.get).map(rs =>
       PackedPartition(rs, required.fieldNames): InputPartition)
 
   /** Post-pruning row estimate from the planned cell count — what lets
     * Catalyst BROADCAST a small-extent cube side of a join instead of
     * shuffling the big side (the join-planning payoff of pushdown).
     */
-  override def estimateStatistics(): Statistics = {
-    val rows =
-      try reads.map(_.cells).sum
-      catch { case scala.util.control.NonFatal(_) => -1L }
-    CubeScanUtil.statsOf(rows, required.size)
-  }
+  override def estimateStatistics(): Statistics =
+    CubeScanUtil.statsOf(reads.fold(_ => -1L, _.map(_.cells).sum), required.size)
 
   /** `reads=` is the planned chunk/segment count — what the pruning specs
     * assert, since packing decouples it from the partition count.
     */
   override def description(): String = {
-    val n = scala.util.Try(reads.length).fold(_ => "?", _.toString)
+    val n = reads.fold(_ => "?", _.length.toString)
     s"CubeScan assets=${assets.size} reads=$n " +
       CubeScanUtil.describeExtent(extent)
   }

@@ -377,6 +377,22 @@ class ApplyDimensionGraphSpec extends AnyFunSuite {
     assert(rows == Set(("B1", 2.0), ("B2", 20.0)))
   }
 
+  test("a malformed or non-positive fold-label cap is an error naming the key") {
+    val cb =
+      """{"m": {"process_id": "mean",
+        |       "arguments": {"data": {"from_parameter": "data"}},
+        |       "result": true}}""".stripMargin
+    for (bad <- Seq("lots", "0")) {
+      spark.conf.set("graft.applyDimension.foldMaxLabels", bad)
+      try {
+        val e = intercept[IllegalArgumentException](applyDim(cb).df.count())
+        assert(e.getMessage.contains(
+          s"graft.applyDimension.foldMaxLabels must be an integer >= 1, got '$bad'"),
+          e.getMessage)
+      } finally spark.conf.unset("graft.applyDimension.foldMaxLabels")
+    }
+  }
+
   test("element-wise callbacks are exempt from the fold-label guard") {
     val cb =
       """{"m": {"process_id": "multiply",

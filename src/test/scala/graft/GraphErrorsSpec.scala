@@ -470,5 +470,63 @@ class GraphErrorsSpec extends AnyFunSuite {
         |                    "num_trees": true}, "result": true}""".stripMargin))
     assert(f.contains("fit_regr_random_forest.num_trees: not a number (BoolV(true))"), f)
   }
-}
 
+  test("a wrong-typed string is an error, not a cast failure or its text") {
+    val e = errorOf(g(
+      """"f": {"process_id": "filter_temporal",
+        |      "arguments": {"data": {"from_node": "l"}, "dimension": 5,
+        |                    "extent": ["2024-01-01", null]}, "result": true}""".stripMargin))
+    assert(e.contains("filter_temporal.dimension: not a string (NumV(5.0))"), e)
+    val b = errorOf(g(
+      """"f": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"}, "bands": ["B1", 2]},
+        |      "result": true}""".stripMargin))
+    assert(b.contains("filter_bands.bands: not a string (NumV(2.0))"), b)
+  }
+
+  test("a wrong-typed array argument is an error, not a cast failure") {
+    val e = errorOf(g(
+      """"f": {"process_id": "filter_bbox",
+        |      "arguments": {"data": {"from_node": "l"}, "extent": "x"},
+        |      "result": true}""".stripMargin), data = xyCube)
+    assert(e.contains("filter_bbox.extent: not an array (StrV(x))"), e)
+    val m = errorOf(g(
+      """"f": {"process_id": "filter_bbox",
+        |      "arguments": {"data": {"from_node": "l"}}, "result": true}""".stripMargin),
+      data = xyCube)
+    assert(m.contains("ProcessParameterRequired: filter_bbox.extent"), m)
+  }
+
+  test("a wrong-typed boolean is an error, not its default") {
+    // "false" as a string must not read as the default `true`
+    val e = errorOf(g(
+      """"a": {"process_id": "apply",
+        |      "arguments": {"data": {"from_node": "l"},
+        |        "process": {"process_graph": {
+        |          "t": {"process_id": "text_begins",
+        |                "arguments": {"data": {"from_parameter": "x"},
+        |                              "pattern": "B", "case_sensitive": "false"},
+        |                "result": true}}}},
+        |      "result": true}""".stripMargin))
+    assert(e.contains("text_begins.case_sensitive: not a boolean (StrV(false))"), e)
+  }
+
+  test("a non-string node reference is an error, not a cast failure") {
+    val e = errorOf(g(
+      """"a": {"process_id": "apply",
+        |      "arguments": {"data": {"from_node": 5},
+        |        "process": {"process_graph": {
+        |          "n": {"process_id": "absolute",
+        |                "arguments": {"x": {"from_parameter": "x"}},
+        |                "result": true}}}},
+        |      "result": true}""".stripMargin))
+    assert(e.contains("from_node: not a string (5)"), e)
+  }
+
+  test("the process-graph front end decodes its arguments without casts") {
+    val src = ScalaSources.scalaSources("src/main/scala/graft/plans")
+      .collectFirst { case (p, s) if p.endsWith("/ProcessGraph.scala") => s }.get
+    assert("asInstanceOf\\[".r.findAllIn(src).size == 0,
+      "ProcessGraph.scala decodes by cast instead of a typed accessor")
+  }
+}
