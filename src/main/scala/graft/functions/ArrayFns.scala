@@ -293,9 +293,9 @@ object ArrayFns {
   // accumulator-array concat makes them O(n²) PER SERIES (measured: 88 s
   // at a 20k-label dim on the sf0.1 bench). The graph compiler therefore
   // only reaches them for callbacks that are NOT chains of window-class
-  // and element-wise nodes (ProcessGraph.chainSegments compiles those to
+  // and element-wise nodes (ProcessGraph.chainPlan compiles those to
   // O(n) window operators and projections), and a label-cardinality gate
-  // refuses the fold above graft.applyDimension.foldMaxLabels; here n is
+  // refuses the fold above 8,192 labels; here n is
   // a genuinely small dimension cardinality (bands, months), never a
   // 10^5-label axis.
 

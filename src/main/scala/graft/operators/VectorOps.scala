@@ -3,6 +3,8 @@ package graft.operators
 import graft.geo.Geo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.JValue
+import org.json4s.jackson.JsonMethods
 
 /** VectorCube operators
   * (reference: openeo_processes_dask cubes/geometries.py — load_geojson,
@@ -25,11 +27,14 @@ object VectorOps {
     * on the inline document — the reference does the same via geopandas.
     */
   def loadGeoJson(spark: SparkSession, geojson: String,
+      properties: Seq[String]): DataFrame =
+    loadGeoJson(spark, JsonMethods.parse(geojson), properties)
+
+  /** [[loadGeoJson]] over an already parsed GeoJSON document. */
+  def loadGeoJson(spark: SparkSession, root: JValue,
       properties: Seq[String]): DataFrame = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
-    val root = JsonMethods.parse(geojson)
     val features = (root \ "features").extract[List[JValue]]
     val rows = features.zipWithIndex.map { case (f, i) =>
       val geomType = (f \ "geometry" \ "type").extract[String]

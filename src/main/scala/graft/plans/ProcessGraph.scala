@@ -56,20 +56,26 @@ object ProcessGraph {
   final case class StrV(v: String) extends PValue
   final case class BoolV(v: Boolean) extends PValue
   final case class ArrV(v: Seq[PValue]) extends PValue
+  /** A JSON object argument that is not a node or parameter reference: a
+    * callback (`{"process_graph": ...}`), a GeoJSON geometry, an extent
+    * or an options map, kept as the parsed JSON the graph was read into.
+    */
+  final case class ObjV(v: JObject) extends PValue
   case object NullV extends PValue
 
   private final case class Node(id: String, processId: String,
       args: Map[String, JValue], result: Boolean)
 
   /** Implementation signature for USER-REGISTERED processes: evaluated
-    * arguments plus a callback runner (`(callbackJson, params) => PValue`)
-    * so custom processes can accept child process graphs. Return `CubeV`
-    * for cube-level processes or `ColV` for scalar processes — scalar
-    * registrations become usable inside apply/reduce callbacks exactly
-    * like built-ins.
+    * arguments plus a callback runner (`(processGraph, params) => PValue`)
+    * so custom processes can accept child process graphs. A callback
+    * argument arrives parsed, as `ObjV(o)`; the runner takes its
+    * `o \ "process_graph"`. Return `CubeV` for cube-level processes or
+    * `ColV` for scalar processes — scalar registrations become usable
+    * inside apply/reduce callbacks exactly like built-ins.
     */
   type CustomProcess =
-    (Map[String, PValue], (String, Map[String, PValue]) => PValue) => PValue
+    (Map[String, PValue], (JValue, Map[String, PValue]) => PValue) => PValue
 
   private val customProcesses =
     scala.collection.concurrent.TrieMap.empty[String, CustomProcess]
@@ -130,6 +136,11 @@ object ProcessGraph {
     case _ => throw new IllegalArgumentException("process graph must be an object")
   }
 
+  /** The most labels an apply_dimension callback may fold over as an
+    * O(n²)-per-series array (see the guard in the apply_dimension arm).
+    */
+  private val FoldMaxLabels = 8192
+
   /** Statistical reducers with a partial-aggregation fast path. */
   private val PlainAggregates = Set("mean", "sum", "min", "max", "median",
     "sd", "variance", "count", "product", "extrema", "any", "all",
@@ -142,33 +153,23 @@ object ProcessGraph {
     * which is the general openEO semantics at the cost of a
     * collect_list per group.
     */
-  private[plans] def isPlainAggregateReducer(cbJson: String): Boolean =
-    try {
-      (JsonMethods.parse(cbJson) \ "process_graph") match {
-        case JObject(fields) => fields.nonEmpty && fields.forall {
-          case (_, body) => (body \ "process_id") match {
-            case JString(p) => PlainAggregates(p)
-            case _ => false
-          }
-        }
-        case _ => false
-      }
-    } catch { case _: Throwable => false }
+  private[plans] def isPlainAggregateReducer(cb: JValue): Boolean = {
+    val ns = nodes(cb)
+    ns.nonEmpty && ns.values.forall(n => PlainAggregates(n.processId))
+  }
 
-  /** Every process_id mentioned anywhere in a callback graph, including
-    * nested sub-callbacks (array_apply / count conditions / ...).
+  /** (process_id, arguments) of every node anywhere in a callback graph,
+    * including nested sub-callbacks (array_apply / count conditions / ...).
     */
-  private def processIds(j: JValue): Set[String] = j match {
-    case JObject(fields) => fields.iterator.flatMap { case (k, v) =>
-      val self: Set[String] =
-        if (k == "process_id") v match {
-          case JString(s) => Set(s)
-          case _ => Set.empty
-        } else Set.empty
-      self ++ processIds(v)
-    }.toSet
-    case JArray(xs) => xs.iterator.flatMap(processIds).toSet
-    case _ => Set.empty
+  private def processNodes(j: JValue): List[(String, JValue)] = j match {
+    case JObject(fields) =>
+      val self = (j \ "process_id") match {
+        case JString(p) => List(p -> (j \ "arguments"))
+        case _ => Nil
+      }
+      self ++ fields.flatMap { case (_, v) => processNodes(v) }
+    case JArray(xs) => xs.flatMap(processNodes)
+    case _ => Nil
   }
 
   /** Process ids whose `data` argument means "the whole series array"
@@ -185,12 +186,11 @@ object ProcessGraph {
   /** True when the callback graph touches no array-aware process —
     * a pure element-wise scalar chain.
     */
-  private[plans] def isElementwiseCallback(cbJson: String): Boolean =
-    try {
-      val ids = processIds(JsonMethods.parse(cbJson))
-      ids.nonEmpty &&
-        ids.forall(id => !ArrayAwareIds(id) && !id.startsWith("array_"))
-    } catch { case _: Throwable => false }
+  private[plans] def isElementwiseCallback(cb: JValue): Boolean = {
+    val ids = processNodes(cb).map(_._1)
+    ids.nonEmpty &&
+      ids.forall(id => !ArrayAwareIds(id) && !id.startsWith("array_"))
+  }
 
   /** Process ids with O(n) cube-level WINDOW twins along a dimension. An
     * apply_dimension callback that is a LINEAR chain of only these
@@ -208,13 +208,13 @@ object ProcessGraph {
   /** A compiled apply_dimension chain segment: either a window-class
     * process with an O(n) cube-level twin, or a maximal run of
     * element-wise scalar nodes compiled to ONE zero-shuffle projection
-    * (re-rendered as a synthetic callback graph over `data`, with
-    * references to side-branch nodes rewired to `_sb_<id>` parameters).
+    * (a synthetic callback graph over `data`, with references to
+    * side-branch nodes rewired to `_sb_<id>` parameters).
     */
   private[plans] sealed trait ChainSeg
   private[plans] final case class WinSeg(pid: String, asc: Boolean)
     extends ChainSeg
-  private[plans] final case class ScalSeg(cbJson: String) extends ChainSeg
+  private[plans] final case class ScalSeg(graph: JObject) extends ChainSeg
 
   /** Head-anchored side branches of a compiled chain: `aggs` are
     * aggregate nodes over the raw series (`mean(data)`, `sd(data)`, …)
@@ -226,7 +226,7 @@ object ProcessGraph {
     * `_sb_<id>` parameters.
     */
   private[plans] final case class SidePlan(
-      aggs: Seq[(String, String)], combos: Seq[(String, String)])
+      aggs: Seq[(String, String)], combos: Seq[(String, JObject)])
 
   private[plans] final case class ChainPlan(
       segs: Seq[ChainSeg], side: SidePlan)
@@ -273,220 +273,170 @@ object ProcessGraph {
     * window path: scalar steps become projections between (or around)
     * the window operators, sharing one series shuffle.
     */
-  private[plans] def chainPlan(cbJson: String): Option[ChainPlan] =
-    try {
-      (JsonMethods.parse(cbJson) \ "process_graph") match {
-        case JObject(fs) if fs.nonEmpty =>
-          val ns = fs.toMap
+  private[plans] def chainPlan(cb: JValue): Option[ChainPlan] = {
+    val ns = nodes(cb)
 
-          // any series/node reference inside a JSON subtree — used to
-          // reject nodes whose NON-chain arguments are not plain
-          // literals (conservative: those callbacks take the safe path)
-          def hasRef(j: JValue): Boolean = j match {
-            case JObject(fields) => fields.exists {
-              case ("from_node", _) => true
-              case ("from_parameter", JString(p)) => p == "data" || p == "x"
-              case (_, v) => hasRef(v)
-            }
-            case JArray(xs) => xs.exists(hasRef)
-            case _ => false
-          }
-
-          def argFieldsOf(body: JValue): List[(String, JValue)] =
-            (body \ "arguments") match {
-              case JObject(af) => af
-              case _ => Nil
-            }
-          def directNodeRef(v: JValue): Option[String] = v match {
-            case JObject(vf) => vf.toMap.get("from_node") match {
-              case Some(JString(id)) => Some(id)
-              case _ => None
-            }
-            case _ => None
-          }
-          def isHeadParam(v: JValue): Boolean = v match {
-            case JObject(vf) => vf.toMap.get("from_parameter") match {
-              case Some(JString(p)) => p == "data" || p == "x"
-              case _ => false
-            }
-            case _ => false
-          }
-
-          // static classification: a node is a per-series CONSTANT when
-          // it is an aggregate of the raw series (head param) with
-          // default null handling, or a scalar combination of literals
-          // and other static nodes. Memoised; cycles classify false.
-          val staticMemo = scala.collection.mutable.Map.empty[String, Boolean]
-          val staticVisiting = scala.collection.mutable.Set.empty[String]
-          def isStatic(id: String): Boolean = staticMemo.getOrElseUpdate(id, {
-            if (!staticVisiting.add(id)) false
-            else try ns.get(id).exists { body =>
-              (body \ "process_id") match {
-                case JString(pid) if WindowAggIds(pid) =>
-                  val af = argFieldsOf(body)
-                  af.exists { case (k, v) => k == "data" && isHeadParam(v) } &&
-                    af.forall {
-                      case ("data", _) => true
-                      case ("ignore_nodata", JBool(true)) => true
-                      case _ => false // any other arg bails to the fold
-                    }
-                case JString(pid) if !ArrayAwareIds(pid) &&
-                    !pid.startsWith("array_") && !WindowChainIds(pid) =>
-                  argFieldsOf(body).forall { case (_, v) =>
-                    directNodeRef(v) match {
-                      case Some(rid) => isStatic(rid)
-                      case None => !hasRef(v)
-                    }
-                  }
-                case _ => false
-              }
-            } finally staticVisiting.remove(id)
-          })
-
-          val resOpt = ns.collectFirst {
-            case (id, b) if (b \ "result") == JBool(true) => id
-          }
-          var ok = resOpt.isDefined
-          var cur = resOpt.getOrElse("")
-          // (id, body, pid, chain-arg name, static refs), first-to-last
-          var chain =
-            List.empty[(String, JValue, String, String, Set[String])]
-          var done = false
-          val visited = scala.collection.mutable.Set.empty[String]
-          while (ok && !done) {
-            if (!visited.add(cur)) ok = false
-            else ns.get(cur) match {
-              case Some(body) => (body \ "process_id") match {
-                case JString(pid) =>
-                  val isWin = WindowChainIds(pid)
-                  val isScalar = !isWin && !ArrayAwareIds(pid) &&
-                    !pid.startsWith("array_")
-                  val argFields = argFieldsOf(body)
-                  // classify arguments: the ONE argument carrying the
-                  // series (a direct node ref to a non-static node, or
-                  // the head param), direct refs to static side-branch
-                  // nodes, and literals
-                  val chainArgs = argFields.filter { case (_, v) =>
-                    isHeadParam(v) ||
-                      directNodeRef(v).exists(rid => !isStatic(rid))
-                  }
-                  val staticRefs = argFields.flatMap { case (_, v) =>
-                    directNodeRef(v).filter(isStatic)
-                  }.toSet
-                  val otherRefs = argFields.exists { case (k, v) =>
-                    !chainArgs.exists(_._1 == k) &&
-                      directNodeRef(v).isEmpty && hasRef(v)
-                  }
-                  if (!(isWin || isScalar) || chainArgs.size != 1 ||
-                      otherRefs ||
-                      (isWin && (chainArgs.head._1 != "data" ||
-                        staticRefs.nonEmpty)))
-                    ok = false
-                  else {
-                    val (argName, argVal) = chainArgs.head
-                    chain = (cur, body, pid, argName, staticRefs) :: chain
-                    directNodeRef(argVal) match {
-                      case Some(prev) => cur = prev
-                      case None => done = true // head param
-                    }
-                  }
-                case _ => ok = false
-              }
-              case None => ok = false
-            }
-          }
-          if (!(ok && done)) None
-          else {
-            // side-branch closure: every static node referenced from the
-            // chain, plus their static dependencies, in dependency order
-            val sideOrder =
-              scala.collection.mutable.LinkedHashMap.empty[String, JValue]
-            def addSide(id: String): Unit =
-              if (!sideOrder.contains(id)) ns.get(id).foreach { body =>
-                argFieldsOf(body).foreach { case (_, v) =>
-                  directNodeRef(v).foreach(addSide)
-                }
-                sideOrder.put(id, body)
-              }
-            chain.foreach { case (_, _, _, _, refs) => refs.foreach(addSide) }
-            val chainIds = chain.map(_._1).toSet
-            val covered = chainIds ++ sideOrder.keySet
-            val worthIt =
-              chain.exists { case (_, _, pid, _, _) => WindowChainIds(pid) } ||
-                sideOrder.nonEmpty
-            if (covered.size != ns.size || covered != ns.keySet ||
-                chainIds.exists(sideOrder.contains) || !worthIt) None
-            else {
-              // rewire a node body's static references to _sb_ params
-              def rewire(body: JValue, chainArg: Option[String],
-                  isResult: Boolean): JValue = {
-                val newArgs = argFieldsOf(body).map { case (k, v) =>
-                  if (chainArg.contains(k))
-                    k -> (JObject(List(
-                      "from_parameter" -> JString("data"))): JValue)
-                  else directNodeRef(v).filter(isStatic) match {
-                    case Some(rid) => k -> (JObject(List(
-                      "from_parameter" -> JString(s"_sb_$rid"))): JValue)
-                    case None => k -> v
-                  }
-                }
-                JObject(List(
-                  "process_id" -> (body \ "process_id"),
-                  "arguments" -> (JObject(newArgs): JValue),
-                  "result" -> (JBool(isResult): JValue)))
-              }
-              def wrap(nodes: Seq[(String, JValue)]): String =
-                JsonMethods.compact(JsonMethods.render(JObject(List(
-                  "process_graph" -> (JObject(nodes.toList): JValue)))))
-
-              val aggs = sideOrder.toSeq.flatMap { case (id, body) =>
-                (body \ "process_id") match {
-                  case JString(p) if WindowAggIds(p) => Some(id -> p)
-                  case _ => None
-                }
-              }
-              val aggIds = aggs.map(_._1).toSet
-              val combos = sideOrder.toSeq.collect {
-                case (id, body) if !aggIds(id) =>
-                  id -> wrap(Seq(id -> rewire(body, None, isResult = true)))
-              }
-
-              val segs = scala.collection.mutable.ListBuffer.empty[ChainSeg]
-              var run = List.empty[(String, JValue, String)]
-              def flushRun(): Unit = if (run.nonEmpty) {
-                val nodesJson = run.zipWithIndex.map {
-                  case ((id, body, chainArg), i) =>
-                    // the first node of a run takes its series input
-                    // from outside the run (the previous window step or
-                    // the callback head) — rewire it to the `data`
-                    // parameter; internal from_node references stay
-                    id -> rewire(body,
-                      chainArg = if (i == 0) Some(chainArg) else None,
-                      isResult = i == run.size - 1)
-                }
-                segs += ScalSeg(wrap(nodesJson))
-                run = Nil
-              }
-              chain.foreach { case (id, body, pid, chainArg, _) =>
-                if (WindowChainIds(pid)) {
-                  flushRun()
-                  // a non-boolean `asc` bails to the fold path, whose
-                  // sort arm rejects it by name
-                  val asc = (body \ "arguments" \ "asc") match {
-                    case JBool(b) => b
-                    case JNothing | JNull => true
-                    case v => throw new IllegalArgumentException(s"asc: $v")
-                  }
-                  segs += WinSeg(pid, asc)
-                } else run = run :+ ((id, body, chainArg))
-              }
-              flushRun()
-              Some(ChainPlan(segs.toList, SidePlan(aggs, combos)))
-            }
-          }
-        case _ => None
+    // any series/node reference inside a JSON subtree — used to reject
+    // nodes whose NON-chain arguments are not plain literals
+    // (conservative: those callbacks take the safe path)
+    def hasRef(j: JValue): Boolean = j match {
+      case JObject(fields) => fields.exists {
+        case ("from_node", _) => true
+        case ("from_parameter", JString(p)) => p == "data" || p == "x"
+        case (_, v) => hasRef(v)
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      case JArray(xs) => xs.exists(hasRef)
+      case _ => false
+    }
+
+    def refOf(v: JValue, key: String): Option[String] = v match {
+      case JObject(vf) => vf.collectFirst { case (`key`, JString(s)) => s }
+      case _ => None
+    }
+    def directNodeRef(v: JValue): Option[String] = refOf(v, "from_node")
+    def isHeadParam(v: JValue): Boolean =
+      refOf(v, "from_parameter").exists(p => p == "data" || p == "x")
+
+    // static classification: a node is a per-series CONSTANT when it is
+    // an aggregate of the raw series (head param) with default null
+    // handling, or a scalar combination of literals and other static
+    // nodes. Memoised; cycles classify false.
+    val staticMemo = scala.collection.mutable.Map.empty[String, Boolean]
+    val staticVisiting = scala.collection.mutable.Set.empty[String]
+    def isStatic(id: String): Boolean = staticMemo.getOrElseUpdate(id, {
+      if (!staticVisiting.add(id)) false
+      else try ns.get(id).exists { n =>
+        n.processId match {
+          case pid if WindowAggIds(pid) =>
+            n.args.get("data").exists(isHeadParam) && n.args.forall {
+              case ("data", _) => true
+              case ("ignore_nodata", JBool(true)) => true
+              case _ => false // any other arg bails to the fold
+            }
+          case pid if !ArrayAwareIds(pid) &&
+              !pid.startsWith("array_") && !WindowChainIds(pid) =>
+            n.args.forall { case (_, v) =>
+              directNodeRef(v) match {
+                case Some(rid) => isStatic(rid)
+                case None => !hasRef(v)
+              }
+            }
+          case _ => false
+        }
+      } finally staticVisiting.remove(id)
+    })
+
+    val resOpt = ns.values.find(_.result)
+    var ok = resOpt.isDefined
+    var cur = resOpt.fold("")(_.id)
+    // (node, chain-arg name, static refs), first-to-last
+    var chain = List.empty[(Node, String, Set[String])]
+    var done = false
+    val visited = scala.collection.mutable.Set.empty[String]
+    while (ok && !done) {
+      if (!visited.add(cur)) ok = false
+      else ns.get(cur) match {
+        case Some(n) =>
+          val pid = n.processId
+          val isWin = WindowChainIds(pid)
+          val isScalar = !isWin && !ArrayAwareIds(pid) &&
+            !pid.startsWith("array_")
+          // classify arguments: the ONE argument carrying the series (a
+          // direct node ref to a non-static node, or the head param),
+          // direct refs to static side-branch nodes, and literals
+          val chainArgs = n.args.filter { case (_, v) =>
+            isHeadParam(v) || directNodeRef(v).exists(rid => !isStatic(rid))
+          }
+          val staticRefs = n.args.values.flatMap(v =>
+            directNodeRef(v).filter(isStatic)).toSet
+          val otherRefs = n.args.exists { case (k, v) =>
+            !chainArgs.contains(k) && directNodeRef(v).isEmpty && hasRef(v)
+          }
+          // a non-boolean `asc` bails to the fold path, whose sort arm
+          // rejects it by name
+          val badAsc = n.args.get("asc").exists {
+            case JBool(_) | JNull => false
+            case _ => true
+          }
+          if (!(isWin || isScalar) || chainArgs.size != 1 || otherRefs ||
+              (isWin && (!chainArgs.contains("data") ||
+                staticRefs.nonEmpty || badAsc)))
+            ok = false
+          else {
+            val (argName, argVal) = chainArgs.head
+            chain = (n, argName, staticRefs) :: chain
+            directNodeRef(argVal) match {
+              case Some(prev) => cur = prev
+              case None => done = true // head param
+            }
+          }
+        case None => ok = false
+      }
+    }
+    if (!(ok && done)) return None
+
+    // side-branch closure: every static node referenced from the chain,
+    // plus their static dependencies, in dependency order
+    val sideOrder = scala.collection.mutable.LinkedHashMap.empty[String, Node]
+    def addSide(id: String): Unit =
+      if (!sideOrder.contains(id)) ns.get(id).foreach { n =>
+        n.args.values.foreach(v => directNodeRef(v).foreach(addSide))
+        sideOrder.put(id, n)
+      }
+    chain.foreach { case (_, _, refs) => refs.foreach(addSide) }
+    val chainIds = chain.map(_._1.id).toSet
+    val covered = chainIds ++ sideOrder.keySet
+    val worthIt =
+      chain.exists { case (n, _, _) => WindowChainIds(n.processId) } ||
+        sideOrder.nonEmpty
+    if (covered != ns.keySet || chainIds.exists(sideOrder.contains) ||
+        !worthIt) return None
+
+    // a node with its static references rewired to _sb_ params
+    def rewire(n: Node, chainArg: Option[String],
+        isResult: Boolean): (String, JValue) = {
+      def param(name: String): JValue = JObject("from_parameter" -> JString(name))
+      val newArgs = n.args.toList.map { case (k, v) =>
+        if (chainArg.contains(k)) k -> param("data")
+        else k -> directNodeRef(v).filter(isStatic).fold(v)(rid => param(s"_sb_$rid"))
+      }
+      n.id -> JObject("process_id" -> JString(n.processId),
+        "arguments" -> JObject(newArgs), "result" -> JBool(isResult))
+    }
+
+    val aggs = sideOrder.toSeq.collect {
+      case (id, n) if WindowAggIds(n.processId) => id -> n.processId
+    }
+    val aggIds = aggs.map(_._1).toSet
+    val combos = sideOrder.toSeq.collect {
+      case (id, n) if !aggIds(id) =>
+        id -> JObject(List(rewire(n, None, isResult = true)))
+    }
+
+    val segs = scala.collection.mutable.ListBuffer.empty[ChainSeg]
+    var run = List.empty[(Node, String)]
+    def flushRun(): Unit = if (run.nonEmpty) {
+      // the first node of a run takes its series input from outside the
+      // run (the previous window step or the callback head) — rewire it
+      // to the `data` parameter; internal from_node references stay
+      segs += ScalSeg(JObject(run.zipWithIndex.map { case ((n, chainArg), i) =>
+        rewire(n, chainArg = if (i == 0) Some(chainArg) else None,
+          isResult = i == run.size - 1)
+      }))
+      run = Nil
+    }
+    chain.foreach { case (n, chainArg, _) =>
+      if (WindowChainIds(n.processId)) {
+        flushRun()
+        segs += WinSeg(n.processId, n.args.get("asc") match {
+          case Some(JBool(b)) => b
+          case _ => true
+        })
+      } else run = run :+ ((n, chainArg))
+    }
+    flushRun()
+    Some(ChainPlan(segs.toList, SidePlan(aggs, combos)))
+  }
 
   /** Callback RESULT nodes statically known to keep series length — with
     * target == source dimension these preserve the dimension's labels
@@ -497,19 +447,22 @@ object ProcessGraph {
     "sort", "array_apply", "array_interpolate_linear",
     "cumsum", "cummax", "cummin", "cumproduct")
 
-  private[plans] def isLengthPreservingCallback(cbJson: String): Boolean =
-    try {
-      (JsonMethods.parse(cbJson) \ "process_graph") match {
-        case JObject(fields) => fields.exists { case (_, body) =>
-          (body \ "result") == JBool(true) &&
-            ((body \ "process_id") match {
-              case JString(p) => LengthPreservingIds(p)
-              case _ => false
-            })
-        }
-        case _ => false
-      }
-    } catch { case _: Throwable => false }
+  private[plans] def isLengthPreservingCallback(cb: JValue): Boolean =
+    nodes(cb).values.exists(n => n.result && LengthPreservingIds(n.processId))
+
+  /** A JSON value with no references in it, as a PValue. */
+  private def literal(j: JValue): PValue = j match {
+    case o: JObject => ObjV(o)
+    case JString(s) => StrV(s)
+    case JInt(i) => NumV(i.toDouble)
+    case JDouble(d) => NumV(d)
+    case JDecimal(d) => NumV(d.toDouble)
+    case JLong(l) => NumV(l.toDouble)
+    case JBool(b) => BoolV(b)
+    case JArray(xs) => ArrV(xs.map(literal))
+    case JNull | JNothing => NullV
+    case JSet(xs) => ArrV(xs.toSeq.map(literal)) // json4s-internal, never parsed from wire JSON
+  }
 
   private def evalGraph(pg: JValue, params: Map[String, PValue],
       collections: String => DataCube): PValue = {
@@ -537,29 +490,19 @@ object ProcessGraph {
           case (Some(id), _) => evalNode(id)
           case (_, Some(p)) => params.getOrElse(p,
             throw new IllegalArgumentException(s"ProcessParameterMissing: $p"))
-          case _ =>
-            // callback graphs stay unevaluated here (applyProcess re-walks
-            // them); GeoJSON geometries and options maps likewise pass
-            // through as raw JSON text for the receiving process to parse
-            StrV(JsonMethods.compact(JsonMethods.render(v)))
+          // callback graphs stay unevaluated here (applyProcess re-walks
+          // them); GeoJSON geometries and options maps likewise stay JSON
+          case _ => literal(v)
         }
-      case JString(s) => StrV(s)
-      case JInt(i) => NumV(i.toDouble)
-      case JDouble(d) => NumV(d)
-      case JDecimal(d) => NumV(d.toDouble)
-      case JLong(l) => NumV(l.toDouble)
-      case JBool(b) => BoolV(b)
       case JArray(xs) => ArrV(xs.map(evalArg))
-      case JNull | JNothing => NullV
-      case JSet(xs) => ArrV(xs.toSeq.map(evalArg)) // json4s-internal, never parsed from wire JSON
+      case _ => literal(v)
     }
 
     def applyProcess(pid: String, args: Map[String, PValue],
         outerParams: Map[String, PValue],
         colls: String => DataCube): PValue = {
-      Registry.apply(pid, args, (cbJson, cbParams) =>
-        evalGraph(JsonMethods.parse(cbJson) \ "process_graph",
-          cbParams, colls), colls, outerParams)
+      Registry.apply(pid, args, (cb, cbParams) =>
+        evalGraph(cb, cbParams, colls), colls, outerParams)
     }
 
     evalNode(resultNode.id)
@@ -571,7 +514,7 @@ object ProcessGraph {
     */
   private object Registry {
 
-    type Callback = (String, Map[String, PValue]) => PValue
+    type Callback = (JValue, Map[String, PValue]) => PValue
 
     /** `ctx` carries the parameter map of the graph evaluation this process
       * runs INSIDE — ambient context a node's own arguments can't express.
@@ -650,6 +593,28 @@ object ProcessGraph {
           case BoolV(b) => b
           case v => notA(name, "a boolean", v)
         }
+      /** an object, or a string holding one as JSON text (the form every
+        * object argument took while graphs passed them on as text)
+        */
+      def objOf(name: String, v: PValue): JObject = (v match {
+        case ObjV(o) => Some(o)
+        case StrV(s) => JsonMethods.parseOpt(s).collect { case o: JObject => o }
+        case _ => None
+      }).getOrElse(notA(name, "an object", v))
+      def obj(name: String): JObject = objOf(name, arg(name))
+      /** a callback argument's parsed `process_graph` */
+      def callback(name: String): JObject = (arg(name) match {
+        case ObjV(o) => o.obj.collectFirst { case ("process_graph", g: JObject) => g }
+        case _ => None
+      }).getOrElse(notA(name, "a process graph", arg(name)))
+      /** a CRS: a string such as `EPSG:3857`, or an integral EPSG code n
+        * as `EPSG:n`
+        */
+      def crs(name: String): String = arg(name) match {
+        case StrV(s) => s
+        case NumV(n) if n.isWhole => s"EPSG:${n.toLong}"
+        case v => notA(name, "a CRS", v)
+      }
 
       /** a [start, end] pair of nullable strings — openEO allows `null` for
         * an open temporal bound (reference: cubes/load.py:140-149)
@@ -681,18 +646,9 @@ object ProcessGraph {
         */
       def spatialExtent: Option[(Double, Double, Double, Double)] =
         opt("spatial_extent").map { _ =>
-          val e = JsonMethods.parse(str("spatial_extent"))
-          def d(f: String): Option[Double] = (e \ f) match {
-            case JDouble(x) => Some(x)
-            case JInt(x) => Some(x.toDouble)
-            case JDecimal(x) => Some(x.toDouble)
-            case _ => None
-          }
-          (d("west"), d("south"), d("east"), d("north")) match {
-            case (Some(w), Some(so), Some(ea), Some(no)) => (w, so, ea, no)
-            case _ => throw new IllegalArgumentException(
-              s"$pid.spatial_extent: need west/east/south/north")
-          }
+          val e = obj("spatial_extent")
+          def d(f: String) = numOf(s"spatial_extent.$f", literal(e \ f))
+          (d("west"), d("south"), d("east"), d("north"))
         }
 
       /** The openEO `context` argument, forwarded into callback graphs as
@@ -714,24 +670,24 @@ object ProcessGraph {
         case v => throw new IllegalArgumentException(s"$what $v")
       }
 
-      /** run a callback sub-graph (stored as JSON text) as a scalar
-        * Column→Column process (reference: `apply`'s `process` argument)
+      /** run a callback sub-graph as a scalar Column→Column process
+        * (reference: `apply`'s `process` argument)
         */
       def scalarCallback(name: String): Column => Column = {
-        val cbJson = str(name)
-        c => asColumn(runCallback(cbJson,
+        val cb = callback(name)
+        c => asColumn(runCallback(cb,
           Map("x" -> ColV(c), "data" -> ColV(c)) ++ callbackContext),
           "callback returned", labeled = true)
       }
 
-      /** Polygon outer rings from GeoJSON text (Polygon / Feature /
-        * FeatureCollection), with zone ids from feature `properties.id`
-        * (else the feature index) — the graph-side twin of the reference's
-        * geopandas parsing.
+      /** Polygon outer rings of the GeoJSON object argument `name`
+        * (Polygon / Feature / FeatureCollection), with zone ids from feature
+        * `properties.id` (else the feature index) — the graph-side twin of
+        * the reference's geopandas parsing.
         */
-      def rings(json: String): Seq[(String, graft.geo.Geo.Ring)] = {
+      def rings(name: String): Seq[(String, graft.geo.Geo.Ring)] = {
         implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-        val root = JsonMethods.parse(json)
+        val root = obj(name)
         def polyRing(geom: JValue): Option[graft.geo.Geo.Ring] =
           (geom \ "type") match {
             case JString("Polygon") =>
@@ -756,7 +712,7 @@ object ProcessGraph {
           case _ => Nil
         }
         if (out.isEmpty) throw new IllegalArgumentException(
-          s"GeometryInvalid: no polygon in $json")
+          s"GeometryInvalid: no polygon in $pid.$name")
         out
       }
 
@@ -771,20 +727,20 @@ object ProcessGraph {
         * so ordered reducers (first/last) can aggregate by dimension order
         */
       def reducerCallback(name: String, order: Option[Column] = None): Column => Column = {
-        val cbJson = str(name)
+        val cb = callback(name)
         val ctx = order.map(o => "_order" -> ColV(o)).toMap ++ callbackContext
-        c => asColumn(runCallback(cbJson, Map("data" -> ColV(c)) ++ ctx),
+        c => asColumn(runCallback(cb, Map("data" -> ColV(c)) ++ ctx),
           "reducer returned", lits = false)
       }
 
       /** the `_labels` context of an ordered-array callback over `dim`:
         * the dimension's labels in native (= ordered-array) order,
         * collected by one metadata-scale distinct only when the callback
-        * mentions labels
+        * has an `array_element` node with a `label` argument
         */
-      def dimLabels(c: DataCube, dim: String,
-          cbJson: String): Map[String, PValue] =
-        if (!cbJson.contains("\"label\"")) Map.empty
+      def dimLabels(c: DataCube, dim: String, cb: JValue): Map[String, PValue] =
+        if (!processNodes(cb).exists { case (p, a) =>
+          p == "array_element" && (a \ "label") != JNothing }) Map.empty
         else Map("_labels" -> ArrV(
           c.df.select(col(dim)).distinct()
             .orderBy(col(dim)).collect().toSeq
@@ -862,14 +818,14 @@ object ProcessGraph {
           //    labels (the reference's runtime length check, decided
           //    statically here); everything else relabels 0..n-1.
           val dim = str("dimension")
-          val cbJson = str("process")
+          val cb = callback("process")
           val c = cube("data")
           val target = optStr("target_dimension")
-          val elementwise = isElementwiseCallback(cbJson)
+          val elementwise = isElementwiseCallback(cb)
           if (elementwise && target.forall(_ == dim)) {
             c.requireDim(dim)
             CubeV(ApplyOps.apply(c, scalarCallback("process")))
-          } else chainPlan(cbJson) match {
+          } else chainPlan(cb) match {
             case Some(ChainPlan(segs, side)) =>
               // linear chain of window-class processes, possibly with
               // interleaved element-wise scalar nodes: compile to O(n)
@@ -897,8 +853,8 @@ object ProcessGraph {
               def sbBinds: Map[String, PValue] =
                 sbCols.map { case (id, sc) =>
                   s"_sb_$id" -> (ColV(sc): PValue) }.toMap
-              side.combos.foreach { case (id, comboJson) =>
-                sbCols(id) = asColumn(runCallback(comboJson,
+              side.combos.foreach { case (id, combo) =>
+                sbCols(id) = asColumn(runCallback(combo,
                   sbBinds ++ callbackContext),
                   "apply_dimension side branch returned")
               }
@@ -913,9 +869,9 @@ object ProcessGraph {
                       WindowOps.interpolateLinearByPosition(cur, dim)
                     case _ => WindowOps.sortAlong(cur, dim, ascending = asc)
                   }
-                case ScalSeg(segJson) =>
+                case ScalSeg(seg) =>
                   cur = ApplyOps.apply(cur, v =>
-                    asColumn(runCallback(segJson, Map("x" -> ColV(v),
+                    asColumn(runCallback(seg, Map("x" -> ColV(v),
                       "data" -> ColV(v)) ++ sbBinds ++ callbackContext),
                       "apply_dimension callback returned"))
               }
@@ -931,27 +887,22 @@ object ProcessGraph {
             // loudly above a label-cardinality cap instead of silently
             // running a quadratic fold over a huge dimension. The
             // element-wise form compiles to a linear `transform`, so it
-            // is exempt; the cap is a session conf escape hatch.
+            // is exempt.
             if (!elementwise) {
-              val key = "graft.applyDimension.foldMaxLabels"
-              val raw = c.df.sparkSession.conf.get(key, "8192")
-              val maxFold = raw.trim.toLongOption.filter(_ >= 1).getOrElse(
-                throw new IllegalArgumentException(
-                  s"$key must be an integer >= 1, got '$raw'"))
               val nLabels = c.meta.dims.find(_.name == dim)
                 .flatMap(_.labels).map(_.size.toLong)
                 .getOrElse(c.df.select(col(dim)).distinct().count())
-              if (nLabels > maxFold) throw new IllegalArgumentException(
+              if (nLabels > FoldMaxLabels) throw new IllegalArgumentException(
                 s"apply_dimension: callback is not window-compilable and " +
-                  s"dimension '$dim' has $nLabels labels (> $maxFold); the " +
-                  "array-fold path is O(n²) per series. Rewrite the " +
+                  s"dimension '$dim' has $nLabels labels (> $FoldMaxLabels); " +
+                  "the array-fold path is O(n²) per series. Rewrite the " +
                   "callback as a chain of element-wise and window-class " +
-                  s"processes, or raise spark.conf $key to override")
+                  "processes")
             }
             val labelCtx: Map[String, PValue] =
-              if (elementwise) Map.empty else dimLabels(c, dim, cbJson)
+              if (elementwise) Map.empty else dimLabels(c, dim, cb)
             def run(bind: Map[String, PValue]): Column =
-              asColumn(runCallback(cbJson, bind ++ callbackContext),
+              asColumn(runCallback(cb, bind ++ callbackContext),
                 "apply_dimension callback returned")
             val process: Column => Column =
               if (elementwise)
@@ -962,7 +913,7 @@ object ProcessGraph {
                   "_array" -> BoolV(true)) ++ labelCtx)
             CubeV(ApplyOps.applyDimensionTarget(c, dim, process, target,
               lengthPreserving = optBool("length_preserving", false) ||
-                elementwise || isLengthPreservingCallback(cbJson)))
+                elementwise || isLengthPreservingCallback(cb)))
           }
           }
         case "apply_kernel" =>
@@ -971,7 +922,8 @@ object ProcessGraph {
             optNum("factor").getOrElse(1.0)))
         case "reduce_dimension" =>
           val dim = str("dimension")
-          if (isPlainAggregateReducer(str("reducer")))
+          val cb = callback("reducer")
+          if (isPlainAggregateReducer(cb))
             CubeV(ReduceOps.reduceDimension(cube("data"), dim,
               reducerCallback("reducer", order = Some(col(dim)))))
           else {
@@ -981,11 +933,10 @@ object ProcessGraph {
             // `_array` context flips the statistical reducer arms to
             // their array folds; label-based element access reads the
             // dimension's label list (`dimLabels`)
-            val cbJson = str("reducer")
             val c = cube("data")
-            val labelCtx = dimLabels(c, dim, cbJson)
+            val labelCtx = dimLabels(c, dim, cb)
             CubeV(ReduceOps.reduceDimensionArray(c, dim, a =>
-              asColumn(runCallback(cbJson, Map("data" -> ColV(a),
+              asColumn(runCallback(cb, Map("data" -> ColV(a),
                 "_array" -> BoolV(true)) ++ labelCtx ++ callbackContext),
                 "reducer returned", labeled = true)))
           }
@@ -1022,30 +973,21 @@ object ProcessGraph {
           CubeV(AggregateOps.anomaly(cube("data"), cube("normals"),
             str("frequency"), optStr("dimension")))
         case "apply_neighborhood" =>
-          // size/overlap arrive as raw JSON: the openeo list-of-
-          // {dimension,value} form or a plain {dim: value} object
-          def entry(j: JValue): Option[(String, Int)] =
-            ((j \ "dimension"), (j \ "value")) match {
-              case (JString(d), JInt(v)) => Some(d -> v.toInt)
-              case (JString(d), JDouble(v)) => Some(d -> v.toInt)
-              case _ => None
+          // size/overlap: the openeo list-of-{dimension, value} form or a
+          // plain {dim: value} object; a null value leaves its dimension out
+          def dimMap(name: String): Map[String, Int] = {
+            def entry(d: String, v: JValue) = literal(v) match {
+              case NullV => None
+              case v => Some(d -> numOf(name, v).toInt)
             }
-          def dimMap(name: String): Map[String, Int] = opt(name) match {
-            // list form reaches us as ArrV of raw-JSON objects; object form
-            // as one raw-JSON string
-            case Some(ArrV(xs)) => xs.flatMap {
-              case StrV(j) => entry(JsonMethods.parse(j))
-              case _ => None
-            }.toMap
-            case Some(StrV(j)) => JsonMethods.parse(j) match {
-              case JArray(xs) => xs.flatMap(entry).toMap
-              case JObject(fs) => fs.collect {
-                case (k, JInt(v)) => k -> v.toInt
-                case (k, JDouble(v)) => k -> v.toInt
+            opt(name).fold(Map.empty[String, Int]) {
+              case ArrV(xs) => xs.flatMap { x =>
+                val e = objOf(name, x)
+                entry(strOf(name, literal(e \ "dimension")), e \ "value")
               }.toMap
-              case _ => Map.empty
+              case ObjV(o) => o.obj.flatMap { case (d, v) => entry(d, v) }.toMap
+              case v => notA(name, "a list of {dimension, value} or an object", v)
             }
-            case _ => Map.empty
           }
           val size = dimMap("size")
           val overlap = dimMap("overlap")
@@ -1056,8 +998,8 @@ object ProcessGraph {
         case "resample_spatial" =>
           // `projection` warps first (cubes/resample.py:39-113); a zero or
           // absent resolution means warp-only, no regridding
-          val warped = optStr("projection")
-            .fold(cube("data"))(ResampleOps.warpCube(cube("data"), _))
+          val warped = opt("projection")
+            .fold(cube("data"))(_ => ResampleOps.warpCube(cube("data"), crs("projection")))
           val res = optNum("resolution").getOrElse(0.0)
           if (res == 0.0) CubeV(warped)
           else resampleByMethod(warped, res)
@@ -1068,22 +1010,22 @@ object ProcessGraph {
           else UdfOps.runUdf(cube("data"), str("udf"), runtime))
         case "mask_polygon" =>
           CubeV(SpatialOps.maskPolygon(cube("data"),
-            rings(str("mask")).head._2,
+            rings("mask").head._2,
             if (opt("replacement").isDefined) column("replacement") else lit(null),
             inside = optBool("inside", true)))
         case "filter_spatial" =>
           CubeV(SpatialOps.filterSpatial(cube("data"),
-            rings(str("geometries")).head._2))
+            rings("geometries").head._2))
         case "filter_vector" =>
           // openEO proposal: keep vector-cube geometries intersecting the
           // filter polygon (three-case Column test, VectorOps.filterVector)
           TableV(VectorOps.filterVector(table("data"), "geometry",
-            rings(str("geometries")).head._2))
+            rings("geometries").head._2))
         case "apply_polygon" =>
           CubeV(SpatialOps.applyPolygon(cube("data"),
-            rings(str("polygons")).head._2, scalarCallback("process")))
+            rings("polygons").head._2, scalarCallback("process")))
         case "aggregate_spatial" =>
-          val zones = rings(str("geometries"))
+          val zones = rings("geometries")
           val c = cube("data")
           val out = SpatialOps.aggregateSpatial(c, zones, reducerCallback("reducer"))
           val spatial = c.meta.spatialDims.toSet
@@ -1196,18 +1138,12 @@ object ProcessGraph {
             .withColumn(v, col("_w"))
             .select((c.meta.dimNames.map(col) :+ col(v)): _*)))
         case "split" =>
-          // deterministic hash split: `fractions` = {"train":0.8,...} (raw
-          // JSON), keep the named slice — shuffle-free, the 100-TB path
+          // deterministic hash split: `fractions` = {"train":0.8,...}, keep
+          // the named slice — shuffle-free, the 100-TB path
           val c = cube("data")
           val idDim = idDimOf(c)
-          val fracs = JsonMethods.parse(str("fractions")) match {
-            case JObject(fs) => fs.collect {
-              case (k, JDouble(d)) => k -> d
-              case (k, JInt(i)) => k -> i.toDouble
-              case (k, JDecimal(d)) => k -> d.toDouble
-            }
-            case _ => throw new IllegalArgumentException(
-              "split.fractions: need a {name: fraction} object")
+          val fracs = obj("fractions").obj.map { case (k, v) =>
+            k -> numOf(s"fractions.$k", literal(v))
           }
           val salt = optStr("salt").getOrElse("graft-split")
           CubeV(c.withDf(_.filter(graft.pipeline.Sampling
@@ -1575,10 +1511,10 @@ object ProcessGraph {
           require(Set("parquet", "csv", "json", "gtiff", "geotiff", "zarr",
             "zarr3")(fmt.toLowerCase),
             s"FormatUnsuitable: $fmt (parquet, csv, json, gtiff, zarr, zarr3)")
-          val pathOpt = optStr("options").flatMap(j =>
-            JsonMethods.parse(j) \ "path" match {
-              case JString(p) => Some(p)
-              case _ => None
+          val pathOpt = opt("options").flatMap(_ =>
+            literal(obj("options") \ "path") match {
+              case NullV => None
+              case v => Some(strOf("options.path", v))
             })
           pathOpt.foreach(p =>
             graft.sources.CubeIO.saveResult(c, p, format = fmt))
@@ -1594,9 +1530,10 @@ object ProcessGraph {
           // it into a binary Column builder. When absent, pass None so MergeOps
           // raises OverlapResolverMissing on overlap (reference: merge.py:165-168).
           val resolver: Option[(Column, Column) => Column] =
-            optStr("overlap_resolver").map { cbJson =>
+            opt("overlap_resolver").map { _ =>
+              val cb = callback("overlap_resolver")
               (a: Column, b: Column) =>
-                asColumn(runCallback(cbJson, Map("x" -> ColV(a), "y" -> ColV(b),
+                asColumn(runCallback(cb, Map("x" -> ColV(a), "y" -> ColV(b),
                   "cube1" -> ColV(a), "cube2" -> ColV(b)) ++ callbackContext),
                   "resolver returned")
             }
@@ -1800,14 +1737,10 @@ object ProcessGraph {
           // hard-codes the MNDWI/NDVI/... set; the math is identical)
           val c = cube("data")
           val bandDim = optStr("dimension").getOrElse("band")
-          val pairsJson = JsonMethods.parse(str("pairs"))
-          val pairs = pairsJson match {
-            case JObject(fields) => fields.map {
-              case (name, JArray(Seq(JString(a), JString(b)))) => name -> (a, b)
-              case (name, v) => throw new IllegalArgumentException(
-                s"ddmc.pairs.$name: expected [bandA, bandB], got $v")
-            }
-            case v => throw new IllegalArgumentException(s"ddmc.pairs: $v")
+          val pairs = obj("pairs").obj.map {
+            case (name, JArray(Seq(JString(a), JString(b)))) => name -> (a, b)
+            case (name, v) => throw new IllegalArgumentException(
+              s"ddmc.pairs.$name: expected [bandA, bandB], got $v")
           }
           CubeV(CompositeOps.bandDifferenceComposite(c, bandDim, pairs))
         case "rqadeforestation" =>
@@ -1852,10 +1785,10 @@ object ProcessGraph {
             seed = optStr("seed").getOrElse("rp")))
         case "vector_reproject" =>
           TableV(VectorOps.reprojectVector(table("data"), "geometry",
-            str("source"), str("projection")))
+            crs("source"), crs("projection")))
         case "load_geojson" =>
           TableV(VectorOps.loadGeoJson(
-            org.apache.spark.sql.SparkSession.active, str("data"),
+            org.apache.spark.sql.SparkSession.active, obj("data"),
             opt("properties").map(_ => strs("properties")).getOrElse(Nil)))
         case "load_result" =>
           // openEO core process: reload a previous save_result parquet
@@ -1880,13 +1813,18 @@ object ProcessGraph {
           }
           TableV(dfs.reduce(_ unionByName _))
         case "load_vector_cube" =>
-          TableV(VectorOps.loadVectorCube(
-            org.apache.spark.sql.SparkSession.active,
-            url = optStr("URL").orElse(optStr("url")),
-            filename = optStr("filename"),
-            geometries = optStr("geometries"),
-            properties = opt("properties").map(_ => strs("properties"))
-              .getOrElse(Nil)))
+          // an inline `geometries` document arrives parsed; a URL or file
+          // loads through VectorOps.loadVectorCube
+          val spark = org.apache.spark.sql.SparkSession.active
+          val url = optStr("URL").orElse(optStr("url"))
+          val filename = optStr("filename")
+          val props = opt("properties").map(_ => strs("properties")).getOrElse(Nil)
+          TableV(opt("geometries").fold(
+            VectorOps.loadVectorCube(spark, url, filename, None, props)) { _ =>
+            require(url.isEmpty && filename.isEmpty,
+              "load_vector_cube: provide exactly one of URL, filename, geometries")
+            VectorOps.loadGeoJson(spark, obj("geometries"), props)
+          })
 
         // ---- load_stac (reference: cubes/load.py:94-322) ----
         case "load_stac" =>
@@ -1913,25 +1851,17 @@ object ProcessGraph {
             case other => JsonMethods.compact(JsonMethods.render(other))
           }
           def callbackCond(k: String, pg: JValue): (String, String) = {
-            val nodesJ = pg match {
-              case JObject(fs) => fs
-              case v => throw new IllegalArgumentException(
-                s"load_stac.properties.$k: bad callback $v")
-            }
-            val body = nodesJ.collectFirst {
-              case (_, b) if (b \ "result") == JBool(true) => b
-            }.getOrElse(nodesJ.head._2)
-            val pid = (body \ "process_id") match {
-              case JString(s) => s
-              case v => throw new IllegalArgumentException(
-                s"load_stac.properties.$k: no process_id ($v)")
-            }
+            val ns = nodes(pg).values
+            val n = ns.find(_.result).orElse(ns.headOption).getOrElse(
+              throw new IllegalArgumentException(
+                s"load_stac.properties.$k: empty callback"))
+            val pid = n.processId
             require(Set("eq", "neq", "lt", "lte", "gt", "gte")(pid),
               s"ProcessUnsupported: load_stac.properties.$k callback $pid " +
                 "(eq/neq/lt/lte/gt/gte only)")
             def isParam(j: JValue) = (j \ "from_parameter") != JNothing
-            val x = body \ "arguments" \ "x"
-            val y = body \ "arguments" \ "y"
+            val x = n.args.getOrElse("x", JNothing)
+            val y = n.args.getOrElse("y", JNothing)
             if (isParam(x)) (pid, litText(y))
             else if (isParam(y)) {
               // the property value sits on y: flip the comparison
@@ -1945,26 +1875,22 @@ object ProcessGraph {
           }
           val props: Map[String, Seq[(String, String)]] =
             opt("properties").map { _ =>
-              JsonMethods.parse(str("properties")) match {
-                case JObject(fields) => fields.map { case (k, v) =>
-                  k -> (v match {
-                    case JArray(conds) => conds.map {
-                      case JArray(Seq(JString(op), JString(value))) => (op, value)
-                      case JArray(Seq(JString(op), other)) =>
-                        (op, litText(other))
-                      case c => throw new IllegalArgumentException(
-                        s"load_stac.properties.$k: bad condition $c")
-                    }
-                    case obj: JObject if (obj \ "process_graph") != JNothing =>
-                      Seq(callbackCond(k, obj \ "process_graph"))
+              obj("properties").obj.map { case (k, v) =>
+                k -> (v match {
+                  case JArray(conds) => conds.map {
+                    case JArray(Seq(JString(op), JString(value))) => (op, value)
+                    case JArray(Seq(JString(op), other)) =>
+                      (op, litText(other))
                     case c => throw new IllegalArgumentException(
-                      s"load_stac.properties.$k: expected [[op, value]] or " +
-                        s"a comparison callback, got $c")
-                  })
-                }.toMap
-                case v => throw new IllegalArgumentException(
-                  s"load_stac.properties: $v")
-              }
+                      s"load_stac.properties.$k: bad condition $c")
+                  }
+                  case cb: JObject if (cb \ "process_graph") != JNothing =>
+                    Seq(callbackCond(k, cb \ "process_graph"))
+                  case c => throw new IllegalArgumentException(
+                    s"load_stac.properties.$k: expected [[op, value]] or " +
+                      s"a comparison callback, got $c")
+                })
+              }.toMap
             }.getOrElse(Map.empty)
           // spatial_extent prunes twice: item-level (assets whose bbox
           // misses the extent never plan any pixel work) and store-level
@@ -2156,12 +2082,12 @@ object ProcessGraph {
           ColV(graft.functions.ArrayFns.arrayContains(column("data"), column("value")))
         case "array_apply" =>
           ColV(graft.functions.ArrayFns.arrayApply(column("data"),
-            x => asColumn(runCallback(str("process"),
+            x => asColumn(runCallback(callback("process"),
               Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext),
               "array_apply cb")))
         case "array_filter" =>
           ColV(graft.functions.ArrayFns.arrayFilter(column("data"),
-            x => asColumn(runCallback(str("condition"),
+            x => asColumn(runCallback(callback("condition"),
               Map("x" -> ColV(x), "data" -> ColV(x)) ++ callbackContext),
               "array_filter cb", lits = false).cast("boolean")))
         case "array_create" =>

@@ -34,7 +34,13 @@ class ApplyDimensionGraphSpec extends AnyFunSuite {
     DataCube.fromTable(df, Seq("t", "band"), "value")
   }
 
-  private def applyDim(cb: String, extraArgs: String = ""): DataCube = {
+  /** one band over 8,193 `t` labels: one more than the fold path's cap */
+  private def wideCube: DataCube = DataCube.fromTable(
+    (0 to 8192).map(i => (i.toLong, "B1", i.toDouble)).toDF("t", "band", "value"),
+    Seq("t", "band"), "value")
+
+  private def applyDim(cb: String, extraArgs: String = "",
+      data: DataCube = cube): DataCube = {
     val graph =
       s"""{"process_graph": {
          |  "l": {"process_id": "load_collection", "arguments": {"id": "c"}},
@@ -44,7 +50,7 @@ class ApplyDimensionGraphSpec extends AnyFunSuite {
          |                      "process": {"process_graph": $cb}},
          |        "result": true}
          |}}""".stripMargin
-    ProcessGraph.execute(spark, graph, _ => cube)
+    ProcessGraph.execute(spark, graph, _ => data)
   }
 
   /** (band, dim label) -> value, NULL-valued cells excluded (so presence
@@ -361,36 +367,18 @@ class ApplyDimensionGraphSpec extends AnyFunSuite {
 
   test("fold path keeps the cardinality guard (scalar-result reducer)") {
     // mean(data) as the result is array-aware with no chain: fold path;
-    // the guard refuses it above graft.applyDimension.foldMaxLabels
+    // the guard refuses it above 8,192 labels
     val cb =
       """{"m": {"process_id": "mean",
         |       "arguments": {"data": {"from_parameter": "data"}},
         |       "result": true}}""".stripMargin
-    spark.conf.set("graft.applyDimension.foldMaxLabels", "2")
-    try {
-      val e = intercept[IllegalArgumentException](applyDim(cb).df.count())
-      assert(e.getMessage.contains("foldMaxLabels"))
-    } finally spark.conf.unset("graft.applyDimension.foldMaxLabels")
-    // below the (default) cap the fold path still runs
+    val e = intercept[IllegalArgumentException](
+      applyDim(cb, data = wideCube).df.count())
+    assert(e.getMessage.contains("has 8193 labels (> 8192)"), e.getMessage)
+    // below the cap the fold path still runs
     val rows = applyDim(cb).df.collect().map(r =>
       (r.getAs[String]("band"), r.getAs[Double]("value"))).toSet
     assert(rows == Set(("B1", 2.0), ("B2", 20.0)))
-  }
-
-  test("a malformed or non-positive fold-label cap is an error naming the key") {
-    val cb =
-      """{"m": {"process_id": "mean",
-        |       "arguments": {"data": {"from_parameter": "data"}},
-        |       "result": true}}""".stripMargin
-    for (bad <- Seq("lots", "0")) {
-      spark.conf.set("graft.applyDimension.foldMaxLabels", bad)
-      try {
-        val e = intercept[IllegalArgumentException](applyDim(cb).df.count())
-        assert(e.getMessage.contains(
-          s"graft.applyDimension.foldMaxLabels must be an integer >= 1, got '$bad'"),
-          e.getMessage)
-      } finally spark.conf.unset("graft.applyDimension.foldMaxLabels")
-    }
   }
 
   test("element-wise callbacks are exempt from the fold-label guard") {
@@ -398,11 +386,8 @@ class ApplyDimensionGraphSpec extends AnyFunSuite {
       """{"m": {"process_id": "multiply",
         |       "arguments": {"x": {"from_parameter": "x"}, "y": 2},
         |       "result": true}}""".stripMargin
-    spark.conf.set("graft.applyDimension.foldMaxLabels", "1")
-    try {
-      val g = applyDim(cb)
-      assert(byBand(g) == byBand(ApplyOps.apply(cube, _ * 2)))
-    } finally spark.conf.unset("graft.applyDimension.foldMaxLabels")
+    val g = applyDim(cb, data = wideCube)
+    assert(byBand(g) == byBand(ApplyOps.apply(wideCube, _ * 2)))
   }
 
   /** SHUFFLE exchanges only (broadcast exchanges move a bounded small

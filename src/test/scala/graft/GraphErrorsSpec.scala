@@ -523,10 +523,76 @@ class GraphErrorsSpec extends AnyFunSuite {
     assert(e.contains("from_node: not a string (5)"), e)
   }
 
-  test("the process-graph front end decodes its arguments without casts") {
-    val src = ScalaSources.scalaSources("src/main/scala/graft/plans")
+  test("an object argument given as a string is an error, not a JSON parse failure") {
+    val e = errorOf(
+      """{"process_graph": {
+        |  "l": {"process_id": "load_collection",
+        |        "arguments": {"id": "c", "spatial_extent": "x"}, "result": true}
+        |}}""".stripMargin)
+    assert(e.contains("load_collection.spatial_extent: not an object (StrV(x))"), e)
+  }
+
+  test("a callback given as a string is an error naming the argument") {
+    val e = errorOf(g(
+      """"r": {"process_id": "reduce_dimension",
+        |      "arguments": {"data": {"from_node": "l"}, "dimension": "t",
+        |                    "reducer": "mean"}, "result": true}""".stripMargin))
+    assert(e.contains("reduce_dimension.reducer: not a process graph (StrV(mean))"), e)
+  }
+
+  test("apply_neighborhood: a non-number size is an error, a null one is left out") {
+    def graph(value: String): String = g(
+      s""""n": {"process_id": "apply_neighborhood",
+         |      "arguments": {"data": {"from_node": "l"},
+         |        "size": [{"dimension": "x", "value": $value},
+         |                 {"dimension": "y", "value": $value}],
+         |        "process": {"process_graph": {
+         |          "s": {"process_id": "sum",
+         |                "arguments": {"data": {"from_parameter": "data"}},
+         |                "result": true}}}},
+         |      "result": true}""".stripMargin)
+    val e = errorOf(graph("\"3\""), data = xyCube)
+    assert(e.contains("apply_neighborhood.size: not a number (StrV(3))"), e)
+    // null values leave both dimensions at 1: every cell is its own window
+    val out = ProcessGraph.execute(spark, graph("null"), _ => xyCube)
+    assert(out.df.collect().map(_.getAs[Double]("value")).toSet == Set(1.0))
+  }
+
+  test("resample_spatial takes an integer EPSG code as its projection") {
+    val df = Seq((12.5, 45.25, 7.0), (13.0, 45.5, 8.0)).toDF("x", "y", "value")
+    val lonLat = DataCube.fromTable(df, Seq("x", "y"), "value",
+      Map("x" -> DimType.Spatial, "y" -> DimType.Spatial), crs = Some("EPSG:4326"))
+    def graph(projection: String): String = g(
+      s""""w": {"process_id": "resample_spatial",
+         |      "arguments": {"data": {"from_node": "l"}, "projection": $projection},
+         |      "result": true}""".stripMargin)
+    def rows(projection: String): Set[Seq[Any]] =
+      ProcessGraph.execute(spark, graph(projection), _ => lonLat)
+        .df.collect().map(_.toSeq).toSet
+    val byCode = rows("3857")
+    assert(byCode == rows("\"EPSG:3857\"") && byCode.size == 2, byCode)
+    val e = errorOf(graph("3857.5"), data = lonLat)
+    assert(e.contains("resample_spatial.projection: not a CRS (NumV(3857.5))"), e)
+  }
+
+  private def processGraphSource: String =
+    ScalaSources.scalaSources("src/main/scala/graft/plans")
       .collectFirst { case (p, s) if p.endsWith("/ProcessGraph.scala") => s }.get
-    assert("asInstanceOf\\[".r.findAllIn(src).size == 0,
+
+  test("the process-graph front end decodes its arguments without casts") {
+    assert("asInstanceOf\\[".r.findAllIn(processGraphSource).size == 0,
       "ProcessGraph.scala decodes by cast instead of a typed accessor")
+  }
+
+  test("the process-graph front end parses each graph once and swallows no error") {
+    // one parse of the graph document; one decode of an object argument
+    // given as JSON text; callbacks and objects inside the graph stay parsed
+    val src = processGraphSource
+    assert("JsonMethods\\.parse\\(".r.findAllIn(src).size == 1,
+      "ProcessGraph.scala parses JSON text beyond the graph document itself")
+    assert("JsonMethods\\.parse".r.findAllIn(src).size == 2,
+      "ProcessGraph.scala decodes JSON text in more than the two known places")
+    assert(!src.contains("case _: Throwable"),
+      "ProcessGraph.scala swallows errors in a classifier")
   }
 }
