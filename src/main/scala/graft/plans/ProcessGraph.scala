@@ -24,6 +24,8 @@ import org.json4s.jackson.JsonMethods
   * "arguments": {...}, "result": true}}}` with `{"from_node": id}` and
   * `{"from_parameter": name}` references and nested
   * `{"process_graph": ...}` callbacks — the standard OpenEO wire format.
+  * Like the reference's parser, the document is parsed into a [[Graph]]
+  * IR and checked as a whole before any node runs.
   */
 object ProcessGraph {
 
@@ -56,26 +58,68 @@ object ProcessGraph {
   final case class StrV(v: String) extends PValue
   final case class BoolV(v: Boolean) extends PValue
   final case class ArrV(v: Seq[PValue]) extends PValue
-  /** A JSON object argument that is not a node or parameter reference: a
-    * callback (`{"process_graph": ...}`), a GeoJSON geometry, an extent
-    * or an options map, kept as the parsed JSON the graph was read into.
+  /** A JSON object argument that is not a node or parameter reference nor
+    * a callback: a GeoJSON geometry, an extent or an options map, kept as
+    * the parsed JSON the graph was read into.
     */
   final case class ObjV(v: JObject) extends PValue
+  /** A callback argument, parsed and checked with its enclosing graph. */
+  final case class CallbackV(graph: Graph) extends PValue
   case object NullV extends PValue
 
-  private final case class Node(id: String, processId: String,
-      args: Map[String, JValue], result: Boolean)
+  /** A node argument, decoded once when the graph is parsed. */
+  sealed trait Arg
+  final case class NodeRef(id: String) extends Arg
+  final case class ParamRef(name: String) extends Arg
+  final case class Callback(graph: Graph) extends Arg
+  final case class Lit(v: PValue) extends Arg
+  final case class ArrArg(xs: Seq[Arg]) extends Arg
+
+  final case class Node(id: String, processId: String, args: Map[String, Arg])
+
+  /** A parsed process graph: its nodes by id and its one result node.
+    * The facts the callback sites dispatch on are computed at most once.
+    */
+  final case class Graph(nodes: Map[String, Node], result: Node) {
+    /** the nodes of this graph and of its callbacks, nested ones included */
+    private lazy val allNodes: Seq[Node] = nodes.values.toSeq.flatMap(n =>
+      n +: n.args.values.toSeq.flatMap(leaves)
+        .collect { case Callback(g) => g }.flatMap(_.allNodes))
+    /** every node is a plain statistical aggregate — the shape
+      * [[graft.operators.ReduceOps.reduceDimension]]'s map-side-combine
+      * path handles. Anything else (band math over `array_element`,
+      * scalar composition) gets the ordered-array reduce, which is the
+      * general openEO semantics at the cost of a collect_list per group.
+      */
+    private[plans] lazy val plainAggregate: Boolean =
+      nodes.values.forall(n => PlainAggregates(n.processId))
+    /** no array-aware process anywhere — a pure element-wise scalar chain */
+    private[plans] lazy val elementwise: Boolean =
+      !allNodes.exists(n => arrayAware(n.processId))
+    private[plans] lazy val lengthPreserving: Boolean =
+      LengthPreservingIds(result.processId)
+    /** an `array_element` reads by `label`, so needs the dimension labels */
+    private[plans] lazy val readsLabels: Boolean = allNodes.exists(n =>
+      n.processId == "array_element" && n.args.contains("label"))
+    private[plans] lazy val chainPlan: Option[ChainPlan] = planChain(this)
+  }
+
+  /** an argument's references, callbacks and literals, arrays flattened */
+  private def leaves(a: Arg): Seq[Arg] = a match {
+    case ArrArg(xs) => xs.flatMap(leaves)
+    case x => Seq(x)
+  }
 
   /** Implementation signature for USER-REGISTERED processes: evaluated
-    * arguments plus a callback runner (`(processGraph, params) => PValue`)
-    * so custom processes can accept child process graphs. A callback
-    * argument arrives parsed, as `ObjV(o)`; the runner takes its
-    * `o \ "process_graph"`. Return `CubeV` for cube-level processes or
-    * `ColV` for scalar processes — scalar registrations become usable
-    * inside apply/reduce callbacks exactly like built-ins.
+    * arguments plus a callback runner (`(graph, params) => PValue`) so
+    * custom processes can accept child process graphs. A callback
+    * argument arrives parsed and checked, as `CallbackV(g)`; the runner
+    * takes its `g`. Return `CubeV` for cube-level processes or `ColV` for
+    * scalar processes — scalar registrations become usable inside
+    * apply/reduce callbacks exactly like built-ins.
     */
   type CustomProcess =
-    (Map[String, PValue], (JValue, Map[String, PValue]) => PValue) => PValue
+    (Map[String, PValue], (Graph, Map[String, PValue]) => PValue) => PValue
 
   private val customProcesses =
     scala.collection.concurrent.TrieMap.empty[String, CustomProcess]
@@ -113,27 +157,80 @@ object ProcessGraph {
   def executeValue(spark: SparkSession, json: String,
       collections: String => DataCube): PValue = {
     val root = JsonMethods.parse(json)
-    val pg = root \ "process_graph" match {
-      case JNothing => root
-      case x => x
-    }
-    evalGraph(pg, Map.empty, collections)
+    val graph = parse((root \ "process_graph").toOption.getOrElse(root))
+    check(graph)
+    evalGraph(graph, Map.empty, collections)
   }
 
-  private def nodes(pg: JValue): Map[String, Node] = pg match {
-    case JObject(fields) => fields.map { case (id, body) =>
-      val pid = (body \ "process_id") match {
-        case JString(s) => s
-        case _ => throw new IllegalArgumentException(s"node $id: no process_id")
+  private def invalid(what: String) =
+    new IllegalArgumentException(s"ProcessGraphInvalid: $what")
+
+  /** A `process_graph` object, callbacks included, as a [[Graph]]. */
+  private def parse(pg: JValue): Graph = pg match {
+    case JObject(fields) =>
+      val byId = fields.map { case (id, body) =>
+        val pid = (body \ "process_id") match {
+          case JString(s) => s
+          case _ => throw new IllegalArgumentException(s"node $id: no process_id")
+        }
+        val args = (body \ "arguments") match {
+          case JObject(a) => a.map { case (k, v) => k -> parseArg(v) }.toMap
+          case _ => Map.empty[String, Arg]
+        }
+        id -> Node(id, pid, args)
+      }.toMap
+      fields.collect { case (id, body) if (body \ "result") == JBool(true) => id } match {
+        case Seq(r) => Graph(byId, byId(r))
+        case rs => throw invalid("need exactly one result node, found " +
+          (if (rs.isEmpty) "none" else rs.mkString(", ")))
       }
-      val args = (body \ "arguments") match {
-        case JObject(a) => a.toMap
-        case _ => Map.empty[String, JValue]
-      }
-      val res = (body \ "result") == JBool(true)
-      id -> Node(id, pid, args, res)
-    }.toMap
     case _ => throw new IllegalArgumentException("process graph must be an object")
+  }
+
+  private def parseArg(j: JValue): Arg = j match {
+    case JObject(fields) =>
+      def ref(key: String): Option[String] = fields.collectFirst {
+        case (`key`, JString(s)) => s
+        case (`key`, v) => throw new IllegalArgumentException(
+          s"$key: not a string (${JsonMethods.compact(JsonMethods.render(v))})")
+      }
+      (ref("from_node"), ref("from_parameter"), j \ "process_graph") match {
+        case (Some(id), _, _) => NodeRef(id)
+        case (_, Some(p), _) => ParamRef(p)
+        case (_, _, g: JObject) => Callback(parse(g))
+        // GeoJSON geometries, extents and options maps stay JSON
+        case _ => Lit(literal(j))
+      }
+    case JArray(xs) => ArrArg(xs.map(parseArg))
+    case _ => Lit(literal(j))
+  }
+
+  /** Reject a graph that cannot run before any node does: a dangling
+    * `from_node`, a cycle, an unknown process id, or a root-graph
+    * parameter (callback parameters are bound, and checked, when the
+    * callback runs).
+    */
+  private def check(g: Graph, isRoot: Boolean = true): Unit = {
+    val done = scala.collection.mutable.Set.empty[String]
+    // depth-first along references; `path` holds the ids being visited
+    def visit(id: String, path: List[String]): Unit = if (!done(id)) {
+      if (path.contains(id)) throw invalid("cycle " +
+        (path.reverse.dropWhile(_ != id) :+ id).mkString(" -> "))
+      val n = g.nodes(id)
+      if (!BuiltinIds(n.processId) && !customProcesses.contains(n.processId))
+        throw new IllegalArgumentException(s"ProcessUnsupported: ${n.processId}")
+      n.args.values.flatMap(leaves).foreach {
+        case NodeRef(r) if !g.nodes.contains(r) =>
+          throw invalid(s"node $id: from_node $r is not in its graph")
+        case NodeRef(r) => visit(r, id :: path)
+        case ParamRef(p) if isRoot => throw new IllegalArgumentException(
+          s"ProcessParameterMissing: $p (the root graph has no parameters)")
+        case Callback(cb) => check(cb, isRoot = false)
+        case _ =>
+      }
+      done += id
+    }
+    g.nodes.keys.foreach(visit(_, Nil))
   }
 
   /** The most labels an apply_dimension callback may fold over as an
@@ -146,32 +243,6 @@ object ProcessGraph {
     "sd", "variance", "count", "product", "extrema", "any", "all",
     "first", "last", "quantiles")
 
-  /** True when every node of a reducer callback is a plain statistical
-    * aggregate — the shape [[graft.operators.ReduceOps.reduceDimension]]'s
-    * map-side-combine path handles. Anything else (band math over
-    * `array_element`, scalar composition) gets the ordered-array reduce,
-    * which is the general openEO semantics at the cost of a
-    * collect_list per group.
-    */
-  private[plans] def isPlainAggregateReducer(cb: JValue): Boolean = {
-    val ns = nodes(cb)
-    ns.nonEmpty && ns.values.forall(n => PlainAggregates(n.processId))
-  }
-
-  /** (process_id, arguments) of every node anywhere in a callback graph,
-    * including nested sub-callbacks (array_apply / count conditions / ...).
-    */
-  private def processNodes(j: JValue): List[(String, JValue)] = j match {
-    case JObject(fields) =>
-      val self = (j \ "process_id") match {
-        case JString(p) => List(p -> (j \ "arguments"))
-        case _ => Nil
-      }
-      self ++ fields.flatMap { case (_, v) => processNodes(v) }
-    case JArray(xs) => xs.flatMap(processNodes)
-    case _ => Nil
-  }
-
   /** Process ids whose `data` argument means "the whole series array"
     * inside an apply_dimension / reduce_dimension callback — anything NOT
     * in this family (and not an `array_*` process) is an element-wise
@@ -183,14 +254,8 @@ object ProcessGraph {
     "sort", "order", "rearrange", "cumsum", "cummax", "cummin",
     "cumproduct", "array_interpolate_linear")
 
-  /** True when the callback graph touches no array-aware process —
-    * a pure element-wise scalar chain.
-    */
-  private[plans] def isElementwiseCallback(cb: JValue): Boolean = {
-    val ids = processNodes(cb).map(_._1)
-    ids.nonEmpty &&
-      ids.forall(id => !ArrayAwareIds(id) && !id.startsWith("array_"))
-  }
+  private def arrayAware(pid: String): Boolean =
+    ArrayAwareIds(pid) || pid.startsWith("array_")
 
   /** Process ids with O(n) cube-level WINDOW twins along a dimension. An
     * apply_dimension callback that is a LINEAR chain of only these
@@ -214,22 +279,20 @@ object ProcessGraph {
   private[plans] sealed trait ChainSeg
   private[plans] final case class WinSeg(pid: String, asc: Boolean)
     extends ChainSeg
-  private[plans] final case class ScalSeg(graph: JObject) extends ChainSeg
+  private[plans] final case class ScalSeg(graph: Graph) extends ChainSeg
 
-  /** Head-anchored side branches of a compiled chain: `aggs` are
-    * aggregate nodes over the raw series (`mean(data)`, `sd(data)`, …)
-    * that compile to window aggregates partitioned by the series dims —
-    * the SAME partitioning the chain's window ops use, so they add no
-    * shuffle; `combos` are scalar combinations of those per-series
-    * constants (`subtract(max(data), min(data))`), in dependency order,
-    * each a synthetic single-node callback whose static references are
+  /** A compiled chain: its segments first-to-last, and its head-anchored
+    * side branches. `aggs` are aggregate nodes over the raw series
+    * (`mean(data)`, `sd(data)`, …) that compile to window aggregates
+    * partitioned by the series dims — the SAME partitioning the chain's
+    * window ops use, so they add no shuffle; `combos` are scalar
+    * combinations of those per-series constants
+    * (`subtract(max(data), min(data))`), in dependency order, each a
+    * synthetic single-node callback whose static references are
     * `_sb_<id>` parameters.
     */
-  private[plans] final case class SidePlan(
-      aggs: Seq[(String, String)], combos: Seq[(String, JObject)])
-
-  private[plans] final case class ChainPlan(
-      segs: Seq[ChainSeg], side: SidePlan)
+  private[plans] final case class ChainPlan(segs: Seq[ChainSeg],
+      aggs: Seq[(String, String)], combos: Seq[(String, Graph)])
 
   /** Aggregate process ids with window twins usable as head-anchored
     * side branches (openEO's numpy broadcast of a per-series statistic
@@ -273,144 +336,114 @@ object ProcessGraph {
     * window path: scalar steps become projections between (or around)
     * the window operators, sharing one series shuffle.
     */
-  private[plans] def chainPlan(cb: JValue): Option[ChainPlan] = {
-    val ns = nodes(cb)
+  private def planChain(g: Graph): Option[ChainPlan] = {
+    val ns = g.nodes
 
-    // any series/node reference inside a JSON subtree — used to reject
+    // any series/node reference inside an argument — used to reject
     // nodes whose NON-chain arguments are not plain literals
     // (conservative: those callbacks take the safe path)
-    def hasRef(j: JValue): Boolean = j match {
-      case JObject(fields) => fields.exists {
-        case ("from_node", _) => true
-        case ("from_parameter", JString(p)) => p == "data" || p == "x"
-        case (_, v) => hasRef(v)
-      }
-      case JArray(xs) => xs.exists(hasRef)
-      case _ => false
+    def hasRef(a: Arg): Boolean = a match {
+      case NodeRef(_) => true
+      case ParamRef(p) => p == "data" || p == "x"
+      case ArrArg(xs) => xs.exists(hasRef)
+      case Callback(cb) => cb.nodes.values.exists(_.args.values.exists(hasRef))
+      case Lit(_) => false
     }
-
-    def refOf(v: JValue, key: String): Option[String] = v match {
-      case JObject(vf) => vf.collectFirst { case (`key`, JString(s)) => s }
+    def nodeRef(a: Arg): Option[String] = a match {
+      case NodeRef(id) => Some(id)
       case _ => None
     }
-    def directNodeRef(v: JValue): Option[String] = refOf(v, "from_node")
-    def isHeadParam(v: JValue): Boolean =
-      refOf(v, "from_parameter").exists(p => p == "data" || p == "x")
+    def isHead(a: Arg): Boolean = a == ParamRef("data") || a == ParamRef("x")
 
     // static classification: a node is a per-series CONSTANT when it is
     // an aggregate of the raw series (head param) with default null
     // handling, or a scalar combination of literals and other static
-    // nodes. Memoised; cycles classify false.
+    // nodes. Memoised.
     val staticMemo = scala.collection.mutable.Map.empty[String, Boolean]
-    val staticVisiting = scala.collection.mutable.Set.empty[String]
     def isStatic(id: String): Boolean = staticMemo.getOrElseUpdate(id, {
-      if (!staticVisiting.add(id)) false
-      else try ns.get(id).exists { n =>
-        n.processId match {
-          case pid if WindowAggIds(pid) =>
-            n.args.get("data").exists(isHeadParam) && n.args.forall {
-              case ("data", _) => true
-              case ("ignore_nodata", JBool(true)) => true
-              case _ => false // any other arg bails to the fold
-            }
-          case pid if !ArrayAwareIds(pid) &&
-              !pid.startsWith("array_") && !WindowChainIds(pid) =>
-            n.args.forall { case (_, v) =>
-              directNodeRef(v) match {
-                case Some(rid) => isStatic(rid)
-                case None => !hasRef(v)
-              }
-            }
-          case _ => false
-        }
-      } finally staticVisiting.remove(id)
+      val n = ns(id)
+      n.processId match {
+        case pid if WindowAggIds(pid) =>
+          n.args.get("data").exists(isHead) && n.args.forall {
+            case ("data", _) => true
+            case ("ignore_nodata", Lit(BoolV(true))) => true
+            case _ => false // any other arg bails to the fold
+          }
+        case pid if !arrayAware(pid) && !WindowChainIds(pid) =>
+          n.args.values.forall(v => nodeRef(v).fold(!hasRef(v))(isStatic))
+        case _ => false
+      }
     })
 
-    val resOpt = ns.values.find(_.result)
-    var ok = resOpt.isDefined
-    var cur = resOpt.fold("")(_.id)
-    // (node, chain-arg name, static refs), first-to-last
-    var chain = List.empty[(Node, String, Set[String])]
-    var done = false
-    val visited = scala.collection.mutable.Set.empty[String]
-    while (ok && !done) {
-      if (!visited.add(cur)) ok = false
-      else ns.get(cur) match {
-        case Some(n) =>
-          val pid = n.processId
-          val isWin = WindowChainIds(pid)
-          val isScalar = !isWin && !ArrayAwareIds(pid) &&
-            !pid.startsWith("array_")
-          // classify arguments: the ONE argument carrying the series (a
-          // direct node ref to a non-static node, or the head param),
-          // direct refs to static side-branch nodes, and literals
-          val chainArgs = n.args.filter { case (_, v) =>
-            isHeadParam(v) || directNodeRef(v).exists(rid => !isStatic(rid))
-          }
-          val staticRefs = n.args.values.flatMap(v =>
-            directNodeRef(v).filter(isStatic)).toSet
-          val otherRefs = n.args.exists { case (k, v) =>
-            !chainArgs.contains(k) && directNodeRef(v).isEmpty && hasRef(v)
-          }
-          // a non-boolean `asc` bails to the fold path, whose sort arm
-          // rejects it by name
-          val badAsc = n.args.get("asc").exists {
-            case JBool(_) | JNull => false
-            case _ => true
-          }
-          if (!(isWin || isScalar) || chainArgs.size != 1 || otherRefs ||
-              (isWin && (!chainArgs.contains("data") ||
-                staticRefs.nonEmpty || badAsc)))
-            ok = false
-          else {
-            val (argName, argVal) = chainArgs.head
-            chain = (n, argName, staticRefs) :: chain
-            directNodeRef(argVal) match {
-              case Some(prev) => cur = prev
-              case None => done = true // head param
-            }
-          }
-        case None => ok = false
+    // (node, chain-arg name, static refs) from `id` back to the head
+    // parameter, first-to-last; Nil when the flow is no such chain
+    @scala.annotation.tailrec
+    def walk(id: String, acc: List[(Node, String, Set[String])])
+        : List[(Node, String, Set[String])] = {
+      val n = ns(id)
+      val isWin = WindowChainIds(n.processId)
+      // classify arguments: the ONE argument carrying the series (a
+      // direct node ref to a non-static node, or the head param),
+      // direct refs to static side-branch nodes, and literals
+      val chainArgs = n.args.filter { case (_, v) =>
+        isHead(v) || nodeRef(v).exists(rid => !isStatic(rid))
+      }
+      val staticRefs = n.args.values.flatMap(nodeRef).filter(isStatic).toSet
+      val otherRefs = n.args.exists { case (k, v) =>
+        !chainArgs.contains(k) && nodeRef(v).isEmpty && hasRef(v)
+      }
+      // a non-boolean `asc` bails to the fold path, whose sort arm
+      // rejects it by name
+      val badAsc = n.args.get("asc").exists {
+        case Lit(BoolV(_) | NullV) => false
+        case _ => true
+      }
+      if ((!isWin && arrayAware(n.processId)) || chainArgs.size != 1 ||
+          otherRefs || (isWin && (!chainArgs.contains("data") ||
+            staticRefs.nonEmpty || badAsc))) Nil
+      else {
+        val (argName, argVal) = chainArgs.head
+        val chain = (n, argName, staticRefs) :: acc
+        nodeRef(argVal) match {
+          case Some(prev) => walk(prev, chain)
+          case None => chain // head param
+        }
       }
     }
-    if (!(ok && done)) return None
+    val chain = walk(g.result.id, Nil)
 
     // side-branch closure: every static node referenced from the chain,
     // plus their static dependencies, in dependency order
     val sideOrder = scala.collection.mutable.LinkedHashMap.empty[String, Node]
-    def addSide(id: String): Unit =
-      if (!sideOrder.contains(id)) ns.get(id).foreach { n =>
-        n.args.values.foreach(v => directNodeRef(v).foreach(addSide))
-        sideOrder.put(id, n)
-      }
+    def addSide(id: String): Unit = if (!sideOrder.contains(id)) {
+      ns(id).args.values.flatMap(nodeRef).foreach(addSide)
+      sideOrder.put(id, ns(id))
+    }
     chain.foreach { case (_, _, refs) => refs.foreach(addSide) }
     val chainIds = chain.map(_._1.id).toSet
-    val covered = chainIds ++ sideOrder.keySet
     val worthIt =
       chain.exists { case (n, _, _) => WindowChainIds(n.processId) } ||
         sideOrder.nonEmpty
-    if (covered != ns.keySet || chainIds.exists(sideOrder.contains) ||
-        !worthIt) return None
+    if (chainIds ++ sideOrder.keySet != ns.keySet ||
+        chainIds.exists(sideOrder.contains) || !worthIt) return None
 
-    // a node with its static references rewired to _sb_ params
-    def rewire(n: Node, chainArg: Option[String],
-        isResult: Boolean): (String, JValue) = {
-      def param(name: String): JValue = JObject("from_parameter" -> JString(name))
-      val newArgs = n.args.toList.map { case (k, v) =>
-        if (chainArg.contains(k)) k -> param("data")
-        else k -> directNodeRef(v).filter(isStatic).fold(v)(rid => param(s"_sb_$rid"))
-      }
-      n.id -> JObject("process_id" -> JString(n.processId),
-        "arguments" -> JObject(newArgs), "result" -> JBool(isResult))
-    }
+    // a node with its chain argument rewired to the `data` parameter and
+    // its static references to `_sb_<id>` parameters
+    def rewire(n: Node, chainArg: Option[String]): Node =
+      n.copy(args = n.args.map {
+        case (k, _) if chainArg.contains(k) => k -> ParamRef("data")
+        case (k, NodeRef(rid)) if isStatic(rid) => k -> ParamRef(s"_sb_$rid")
+        case kv => kv
+      })
+    def graphOf(run: Seq[Node]): Graph =
+      Graph(run.map(n => n.id -> n).toMap, run.last)
 
     val aggs = sideOrder.toSeq.collect {
       case (id, n) if WindowAggIds(n.processId) => id -> n.processId
     }
     val aggIds = aggs.map(_._1).toSet
     val combos = sideOrder.toSeq.collect {
-      case (id, n) if !aggIds(id) =>
-        id -> JObject(List(rewire(n, None, isResult = true)))
+      case (id, n) if !aggIds(id) => id -> graphOf(Seq(rewire(n, None)))
     }
 
     val segs = scala.collection.mutable.ListBuffer.empty[ChainSeg]
@@ -419,23 +452,20 @@ object ProcessGraph {
       // the first node of a run takes its series input from outside the
       // run (the previous window step or the callback head) — rewire it
       // to the `data` parameter; internal from_node references stay
-      segs += ScalSeg(JObject(run.zipWithIndex.map { case ((n, chainArg), i) =>
-        rewire(n, chainArg = if (i == 0) Some(chainArg) else None,
-          isResult = i == run.size - 1)
+      segs += ScalSeg(graphOf(run.zipWithIndex.map { case ((n, chainArg), i) =>
+        rewire(n, if (i == 0) Some(chainArg) else None)
       }))
       run = Nil
     }
     chain.foreach { case (n, chainArg, _) =>
       if (WindowChainIds(n.processId)) {
         flushRun()
-        segs += WinSeg(n.processId, n.args.get("asc") match {
-          case Some(JBool(b)) => b
-          case _ => true
-        })
+        segs += WinSeg(n.processId,
+          !n.args.get("asc").contains(Lit(BoolV(false))))
       } else run = run :+ ((n, chainArg))
     }
     flushRun()
-    Some(ChainPlan(segs.toList, SidePlan(aggs, combos)))
+    Some(ChainPlan(segs.toList, aggs, combos))
   }
 
   /** Callback RESULT nodes statically known to keep series length — with
@@ -446,9 +476,6 @@ object ProcessGraph {
   private val LengthPreservingIds: Set[String] = Set(
     "sort", "array_apply", "array_interpolate_linear",
     "cumsum", "cummax", "cummin", "cumproduct")
-
-  private[plans] def isLengthPreservingCallback(cb: JValue): Boolean =
-    nodes(cb).values.exists(n => n.result && LengthPreservingIds(n.processId))
 
   /** A JSON value with no references in it, as a PValue. */
   private def literal(j: JValue): PValue = j match {
@@ -464,49 +491,76 @@ object ProcessGraph {
     case JSet(xs) => ArrV(xs.toSeq.map(literal)) // json4s-internal, never parsed from wire JSON
   }
 
-  private def evalGraph(pg: JValue, params: Map[String, PValue],
+  private def evalGraph(g: Graph, params: Map[String, PValue],
       collections: String => DataCube): PValue = {
-    val ns = nodes(pg)
-    val resultNode = ns.values.find(_.result).getOrElse(
-      throw new IllegalArgumentException("no result node"))
     val memo = scala.collection.mutable.Map.empty[String, PValue]
 
     def evalNode(id: String): PValue = memo.getOrElseUpdate(id, {
-      val n = ns.getOrElse(id,
-        throw new IllegalArgumentException(s"unknown node $id"))
-      applyProcess(n.processId,
-        n.args.map { case (k, v) => k -> evalArg(v) }, params, collections)
+      val n = g.nodes(id)
+      val args = n.args.map { case (k, v) => k -> evalArg(v) }
+      // user registrations shadow built-ins (latest registration wins)
+      customProcesses.get(n.processId).fold(
+        Registry(n.processId, args, collections, params))(
+        _(args, evalGraph(_, _, collections)))
     })
 
-    def evalArg(v: JValue): PValue = v match {
-      case JObject(fields) =>
-        val m = fields.toMap
-        def ref(key: String): Option[String] = m.get(key).map {
-          case JString(s) => s
-          case v => throw new IllegalArgumentException(
-            s"$key: not a string (${JsonMethods.compact(JsonMethods.render(v))})")
-        }
-        (ref("from_node"), ref("from_parameter")) match {
-          case (Some(id), _) => evalNode(id)
-          case (_, Some(p)) => params.getOrElse(p,
-            throw new IllegalArgumentException(s"ProcessParameterMissing: $p"))
-          // callback graphs stay unevaluated here (applyProcess re-walks
-          // them); GeoJSON geometries and options maps likewise stay JSON
-          case _ => literal(v)
-        }
-      case JArray(xs) => ArrV(xs.map(evalArg))
-      case _ => literal(v)
+    def evalArg(a: Arg): PValue = a match {
+      case NodeRef(id) => evalNode(id)
+      case ParamRef(p) => params.getOrElse(p,
+        throw new IllegalArgumentException(s"ProcessParameterMissing: $p"))
+      case Callback(cb) => CallbackV(cb)
+      case Lit(v) => v
+      case ArrArg(xs) => ArrV(xs.map(evalArg))
     }
 
-    def applyProcess(pid: String, args: Map[String, PValue],
-        outerParams: Map[String, PValue],
-        colls: String => DataCube): PValue = {
-      Registry.apply(pid, args, (cb, cbParams) =>
-        evalGraph(cb, cbParams, colls), colls, outerParams)
-    }
-
-    evalNode(resultNode.id)
+    evalNode(g.result.id)
   }
+
+  /** The built-in process ids: one per registry arm below, in arm order
+    * (`RegistryCompletenessSpec` keeps the two equal). `check` accepts these
+    * and the registered custom processes.
+    */
+  private[graft] val BuiltinIds: Set[String] = Set(
+    "load_collection", "filter_temporal", "filter_bands", "filter_bbox",
+    "filter_labels", "apply", "apply_dimension", "apply_kernel",
+    "reduce_dimension", "reduce_spatial", "aggregate_temporal",
+    "aggregate_temporal_period", "climatological_normal", "anomaly",
+    "apply_neighborhood", "resample_spatial", "run_udf", "mask_polygon",
+    "filter_spatial", "filter_vector", "apply_polygon", "aggregate_spatial",
+    "line_dedup", "quality_filter", "pii_redact", "normalize_text",
+    "exact_dedup", "minhash_dedup_survivors", "lm_score", "dsir_weights",
+    "split", "sample", "pack_sequences", "simhash_dedup_survivors",
+    "ngram_jaccard_dedup", "decontaminate", "incremental_dedup", "semdedup",
+    "bm25", "page_rank", "ann_topk", "pq_topk", "fuzzy_join", "chunk_docs",
+    "heavy_hitters", "top_k", "quantiles_sketch", "distinct_count",
+    "set_overlap", "drop_dimension", "rename_dimension", "flatten_dimensions",
+    "unflatten_dimension", "aggregate_spatial_window", "save_result",
+    "inspect", "trim_cube", "merge_cubes", "mask", "add_dimension",
+    "rename_labels", "ndvi", "fit_curve", "predict_curve",
+    "fit_regr_random_forest", "fit_class_random_forest", "save_ml_model",
+    "load_ml_model", "predict_random_forest", "resample_cube_spatial",
+    "resample_cube_temporal", "cumsum", "cummin", "cummax", "cumproduct",
+    "array_interpolate_linear", "array_create_labeled", "array_find_label",
+    "dimension_labels", "create_data_cube", "ddmc", "rqadeforestation",
+    "vector_buffer", "vector_to_regular_points", "vector_to_random_points",
+    "vector_reproject", "load_geojson", "load_result", "load_uploaded_files",
+    "load_vector_cube", "load_stac", "add", "subtract", "multiply", "divide",
+    "power", "sqrt", "ln", "exp", "absolute", "floor", "clip",
+    "linear_scale_range", "e", "pi", "nan", "constant", "mod", "arctan2",
+    "log", "normalized_difference", "ceil", "int", "round", "sgn", "sin",
+    "cos", "tan", "arcsin", "arccos", "arctan", "sinh", "cosh", "tanh",
+    "arsinh", "arcosh", "artanh", "is_nodata", "is_valid", "is_nan",
+    "is_infinite", "gt", "lt", "gte", "lte", "eq", "between", "text_begins",
+    "text_ends", "text_contains", "text_concat", "html_extract",
+    "canonicalize_url", "registered_domain", "url_host", "lang_id",
+    "token_count", "subword_count", "quality_score", "fingerprint",
+    "content_hash", "redact_pii", "date_between", "date_difference",
+    "date_shift", "array_element", "array_concat", "array_append",
+    "array_contains", "array_apply", "array_filter", "array_create",
+    "array_modify", "array_find", "array_labels", "sort", "order",
+    "rearrange", "first", "last", "neq", "and", "or", "xor", "not", "if",
+    "mean", "sum", "min", "max", "median", "sd", "variance", "count",
+    "product", "extrema", "any", "all", "quantiles")
 
   /** The process registry: process_id → implementation over PValues.
     * Mirrors the reference's auto-registered ProcessRegistry
@@ -514,23 +568,16 @@ object ProcessGraph {
     */
   private object Registry {
 
-    type Callback = (JValue, Map[String, PValue]) => PValue
-
     /** `ctx` carries the parameter map of the graph evaluation this process
       * runs INSIDE — ambient context a node's own arguments can't express.
       * Today it holds one key: `_order`, the reduced dimension's column,
       * injected by ordered-reduce callers so position-dependent reducers
       * (first/last) aggregate by dimension order instead of erroring.
       */
-    def apply(pid: String, args: Map[String, PValue], runCallback: Callback,
-        collections: String => DataCube,
-        ctx: Map[String, PValue] = Map.empty): PValue = {
-
-      // user registrations shadow built-ins (latest registration wins)
-      customProcesses.get(pid) match {
-        case Some(impl) => return impl(args, runCallback)
-        case None =>
-      }
+    def apply(pid: String, args: Map[String, PValue],
+        collections: String => DataCube, ctx: Map[String, PValue]): PValue = {
+      def runCallback(cb: Graph, params: Map[String, PValue]): PValue =
+        evalGraph(cb, params, collections)
 
       // Typed argument accessors: a wrong-typed value throws
       // `pid.name: not a <type> (v)`. The `opt*` forms apply their default
@@ -593,20 +640,15 @@ object ProcessGraph {
           case BoolV(b) => b
           case v => notA(name, "a boolean", v)
         }
-      /** an object, or a string holding one as JSON text (the form every
-        * object argument took while graphs passed them on as text)
-        */
-      def objOf(name: String, v: PValue): JObject = (v match {
-        case ObjV(o) => Some(o)
-        case StrV(s) => JsonMethods.parseOpt(s).collect { case o: JObject => o }
-        case _ => None
-      }).getOrElse(notA(name, "an object", v))
+      def objOf(name: String, v: PValue): JObject = v match {
+        case ObjV(o) => o
+        case v => notA(name, "an object", v)
+      }
       def obj(name: String): JObject = objOf(name, arg(name))
-      /** a callback argument's parsed `process_graph` */
-      def callback(name: String): JObject = (arg(name) match {
-        case ObjV(o) => o.obj.collectFirst { case ("process_graph", g: JObject) => g }
-        case _ => None
-      }).getOrElse(notA(name, "a process graph", arg(name)))
+      def callback(name: String): Graph = arg(name) match {
+        case CallbackV(g) => g
+        case v => notA(name, "a process graph", v)
+      }
       /** a CRS: a string such as `EPSG:3857`, or an integral EPSG code n
         * as `EPSG:n`
         */
@@ -641,15 +683,17 @@ object ProcessGraph {
         d
       }
 
-      /** the load processes' `spatial_extent` object as (west, south,
-        * east, north), if given
+      /** an openEO bounding-box object argument as (west, south, east,
+        * north)
         */
+      def bbox(name: String): (Double, Double, Double, Double) = {
+        val e = obj(name)
+        def d(f: String) = numOf(s"$name.$f", literal(e \ f))
+        (d("west"), d("south"), d("east"), d("north"))
+      }
+      /** the load processes' `spatial_extent`, if given */
       def spatialExtent: Option[(Double, Double, Double, Double)] =
-        opt("spatial_extent").map { _ =>
-          val e = obj("spatial_extent")
-          def d(f: String) = numOf(s"spatial_extent.$f", literal(e \ f))
-          (d("west"), d("south"), d("east"), d("north"))
-        }
+        opt("spatial_extent").map(_ => bbox("spatial_extent"))
 
       /** The openEO `context` argument, forwarded into callback graphs as
         * the `context` parameter ({"from_parameter": "context"} — the
@@ -738,9 +782,8 @@ object ProcessGraph {
         * collected by one metadata-scale distinct only when the callback
         * has an `array_element` node with a `label` argument
         */
-      def dimLabels(c: DataCube, dim: String, cb: JValue): Map[String, PValue] =
-        if (!processNodes(cb).exists { case (p, a) =>
-          p == "array_element" && (a \ "label") != JNothing }) Map.empty
+      def dimLabels(c: DataCube, dim: String, cb: Graph): Map[String, PValue] =
+        if (!cb.readsLabels) Map.empty
         else Map("_labels" -> ArrV(
           c.df.select(col(dim)).distinct()
             .orderBy(col(dim)).collect().toSeq
@@ -754,12 +797,12 @@ object ProcessGraph {
         ColV(if (ctx.contains("_array")) arrayForm(column("data"))
         else aggForm(column("data")))
 
-      /** a cumulative process: the array fold over a series array (inside
-        * an ordered-array callback `data` is a column), else the window
-        * along the cube's `dimension`
+      /** a cumulative or interpolating process: the array fold over a
+        * series array (inside an ordered-array callback `data` is a
+        * column), else the window along the cube's `dimension`
         */
       def cumulative(arrayForm: Column => Column,
-          cubeForm: (DataCube, String) => DataCube): PValue = args("data") match {
+          cubeForm: (DataCube, String) => DataCube): PValue = arg("data") match {
         case ColV(a) => ColV(arrayForm(a))
         case _ => CubeV(cubeForm(cube("data"), str("dimension")))
       }
@@ -794,8 +837,12 @@ object ProcessGraph {
               "requires the parameter `bands` to be set")
           CubeV(FilterOps.filterBands(cube("data"), strs("bands")))
         case "filter_bbox" =>
-          val e = nums("extent")
-          CubeV(FilterOps.filterBbox(cube("data"), e(0), e(1), e(2), e(3)))
+          // openEO's bounding-box object, or [west, east, south, north]
+          val (w, s, e, n) = arg("extent") match {
+            case ObjV(_) => bbox("extent")
+            case _ => val a = nums("extent"); (a(0), a(2), a(1), a(3))
+          }
+          CubeV(FilterOps.filterBbox(cube("data"), w, e, s, n))
         case "filter_labels" =>
           CubeV(FilterOps.filterLabels(cube("data"), str("dimension"),
             l => scalarCallback("condition")(l).cast("boolean")))
@@ -821,12 +868,11 @@ object ProcessGraph {
           val cb = callback("process")
           val c = cube("data")
           val target = optStr("target_dimension")
-          val elementwise = isElementwiseCallback(cb)
-          if (elementwise && target.forall(_ == dim)) {
+          if (cb.elementwise && target.forall(_ == dim)) {
             c.requireDim(dim)
             CubeV(ApplyOps.apply(c, scalarCallback("process")))
-          } else chainPlan(cb) match {
-            case Some(ChainPlan(segs, side)) =>
+          } else cb.chainPlan match {
+            case Some(ChainPlan(segs, aggs, combos)) =>
               // linear chain of window-class processes, possibly with
               // interleaved element-wise scalar nodes: compile to O(n)
               // window operators sharing one series shuffle, with each
@@ -840,11 +886,11 @@ object ProcessGraph {
               var cur = c
               val sbCols = scala.collection.mutable.LinkedHashMap
                 .empty[String, Column]
-              if (side.aggs.nonEmpty) {
+              if (aggs.nonEmpty) {
                 val others = c.dimColsExcept(dim)
                 val w = org.apache.spark.sql.expressions.Window
                   .partitionBy(others: _*)
-                side.aggs.foreach { case (id, aggPid) =>
+                aggs.foreach { case (id, aggPid) =>
                   cur = cur.withDf(_.withColumn(s"_sb_$id",
                     headAggCol(aggPid, cur.value, w)))
                   sbCols(id) = col(s"_sb_$id")
@@ -853,7 +899,7 @@ object ProcessGraph {
               def sbBinds: Map[String, PValue] =
                 sbCols.map { case (id, sc) =>
                   s"_sb_$id" -> (ColV(sc): PValue) }.toMap
-              side.combos.foreach { case (id, combo) =>
+              combos.foreach { case (id, combo) =>
                 sbCols(id) = asColumn(runCallback(combo,
                   sbBinds ++ callbackContext),
                   "apply_dimension side branch returned")
@@ -875,9 +921,9 @@ object ProcessGraph {
                       "data" -> ColV(v)) ++ sbBinds ++ callbackContext),
                       "apply_dimension callback returned"))
               }
-              if (side.aggs.nonEmpty)
+              if (aggs.nonEmpty)
                 cur = cur.withDf(
-                  _.drop(side.aggs.map(a => s"_sb_${a._1}"): _*))
+                  _.drop(aggs.map(a => s"_sb_${a._1}"): _*))
               CubeV(ApplyOps.retargetPreserved(cur, dim, target))
             case None =>
           {
@@ -888,7 +934,7 @@ object ProcessGraph {
             // running a quadratic fold over a huge dimension. The
             // element-wise form compiles to a linear `transform`, so it
             // is exempt.
-            if (!elementwise) {
+            if (!cb.elementwise) {
               val nLabels = c.meta.dims.find(_.name == dim)
                 .flatMap(_.labels).map(_.size.toLong)
                 .getOrElse(c.df.select(col(dim)).distinct().count())
@@ -899,13 +945,12 @@ object ProcessGraph {
                   "callback as a chain of element-wise and window-class " +
                   "processes")
             }
-            val labelCtx: Map[String, PValue] =
-              if (elementwise) Map.empty else dimLabels(c, dim, cb)
+            val labelCtx = dimLabels(c, dim, cb) // empty when elementwise
             def run(bind: Map[String, PValue]): Column =
               asColumn(runCallback(cb, bind ++ callbackContext),
                 "apply_dimension callback returned")
             val process: Column => Column =
-              if (elementwise)
+              if (cb.elementwise)
                 arr => graft.functions.ArrayFns.arrayApply(arr,
                   x => run(Map("x" -> ColV(x), "data" -> ColV(x))))
               else
@@ -913,7 +958,7 @@ object ProcessGraph {
                   "_array" -> BoolV(true)) ++ labelCtx)
             CubeV(ApplyOps.applyDimensionTarget(c, dim, process, target,
               lengthPreserving = optBool("length_preserving", false) ||
-                elementwise || isLengthPreservingCallback(cb)))
+                cb.elementwise || cb.lengthPreserving))
           }
           }
         case "apply_kernel" =>
@@ -923,7 +968,7 @@ object ProcessGraph {
         case "reduce_dimension" =>
           val dim = str("dimension")
           val cb = callback("reducer")
-          if (isPlainAggregateReducer(cb))
+          if (cb.plainAggregate)
             CubeV(ReduceOps.reduceDimension(cube("data"), dim,
               reducerCallback("reducer", order = Some(col(dim)))))
           else {
@@ -957,13 +1002,11 @@ object ProcessGraph {
         case "climatological_normal" =>
           // openEO proposal (beyond the reference): year-collapsing mean
           // per climatology key; optional climatology_period = [from, to)
-          val cp = opt("climatology_period").map { _ =>
-            args("climatology_period") match {
-              case ArrV(Seq(StrV(from), StrV(to))) => (from, to)
-              case v => throw new IllegalArgumentException(
-                s"climatological_normal.climatology_period: " +
-                  s"need [from, to] strings (got $v)")
-            }
+          val cp = opt("climatology_period").map {
+            case ArrV(Seq(StrV(from), StrV(to))) => (from, to)
+            case v => throw new IllegalArgumentException(
+              s"climatological_normal.climatology_period: " +
+                s"need [from, to] strings (got $v)")
           }
           CubeV(AggregateOps.climatologicalNormal(cube("data"),
             str("frequency"), optStr("dimension"), cp))
@@ -1637,7 +1680,7 @@ object ProcessGraph {
           // openEO ML proposal (beyond the reference's exports): persist a
           // fitted model + feature-order sidecar; pass-through like
           // save_result so a graph can save AND keep predicting
-          val mv = args("model") match {
+          val mv = arg("model") match {
             case m: ModelV => m
             case v => throw new IllegalArgumentException(
               s"ModelNotFound: save_ml_model's `model` is not a model ($v)")
@@ -1650,7 +1693,7 @@ object ProcessGraph {
           val (m, f) = MLOps.loadModel(str("id"))
           ModelV(m, f)
         case "predict_random_forest" =>
-          val (model, feats) = args("model") match {
+          val (model, feats) = arg("model") match {
             case ModelV(m, f) => (m, f)
             case v => throw new IllegalArgumentException(
               "ModelNotFound: predict_random_forest's `model` does not " +
@@ -1706,13 +1749,8 @@ object ProcessGraph {
         case "cummin" => cumulative(ArrayFns.arrayCummin, WindowOps.cummin)
         case "cummax" => cumulative(ArrayFns.arrayCummax, WindowOps.cummax)
         case "cumproduct" => cumulative(ArrayFns.arrayCumproduct, WindowOps.cumprodExact)
-        case "array_interpolate_linear" => args("data") match {
-          case ColV(a) =>
-            ColV(graft.functions.ArrayFns.arrayInterpolateLinear(a))
-          case _ =>
-            // dim-aware form (the array form is this along `dimension`)
-            CubeV(WindowOps.interpolateLinear(cube("data"), str("dimension")))
-        }
+        case "array_interpolate_linear" =>
+          cumulative(ArrayFns.arrayInterpolateLinear, WindowOps.interpolateLinear(_, _))
 
         // ---- labeled-array scalar processes ----
         case "array_create_labeled" =>
@@ -1842,50 +1880,49 @@ object ProcessGraph {
           // over {"from_parameter": "value"} ...}}}), which is what real
           // exported graphs carry (reference forwards it as the STAC query
           // extension, cubes/load.py:153-154)
-          def litText(j: JValue): String = j match {
-            case JString(s) => s
-            case JInt(i) => i.toString
-            case JDouble(d) => d.toString
-            case JDecimal(d) => d.toString
-            case JBool(b) => b.toString
-            case other => JsonMethods.compact(JsonMethods.render(other))
+          // a comparison operand as the text StacLoader compares
+          def litText(k: String, v: PValue): String = v match {
+            case StrV(s) => s
+            case NumV(d) => d.toString
+            case BoolV(b) => b.toString
+            case v => notA(s"properties.$k", "a string, number or boolean", v)
           }
-          def callbackCond(k: String, pg: JValue): (String, String) = {
-            val ns = nodes(pg).values
-            val n = ns.find(_.result).orElse(ns.headOption).getOrElse(
-              throw new IllegalArgumentException(
-                s"load_stac.properties.$k: empty callback"))
+          def callbackCond(k: String, g: Graph): (String, String) = {
+            val n = g.result
             val pid = n.processId
             require(Set("eq", "neq", "lt", "lte", "gt", "gte")(pid),
               s"ProcessUnsupported: load_stac.properties.$k callback $pid " +
                 "(eq/neq/lt/lte/gt/gte only)")
-            def isParam(j: JValue) = (j \ "from_parameter") != JNothing
-            val x = n.args.getOrElse("x", JNothing)
-            val y = n.args.getOrElse("y", JNothing)
-            if (isParam(x)) (pid, litText(y))
-            else if (isParam(y)) {
-              // the property value sits on y: flip the comparison
-              val flipped = pid match {
-                case "lt" => "gt"; case "gt" => "lt"
-                case "lte" => "gte"; case "gte" => "lte"; case o => o
-              }
-              (flipped, litText(x))
-            } else throw new IllegalArgumentException(
-              s"load_stac.properties.$k: neither side is from_parameter")
+            def operand(side: String): String = n.args.get(side) match {
+              case Some(Lit(v)) => litText(k, v)
+              case v => throw new IllegalArgumentException(
+                s"load_stac.properties.$k: $side is not a literal ($v)")
+            }
+            (n.args.get("x"), n.args.get("y")) match {
+              case (Some(ParamRef(_)), _) => (pid, operand("y"))
+              case (_, Some(ParamRef(_))) =>
+                // the property value sits on y: flip the comparison
+                val flipped = pid match {
+                  case "lt" => "gt"; case "gt" => "lt"
+                  case "lte" => "gte"; case "gte" => "lte"; case o => o
+                }
+                (flipped, operand("x"))
+              case _ => throw new IllegalArgumentException(
+                s"load_stac.properties.$k: neither side is from_parameter")
+            }
           }
           val props: Map[String, Seq[(String, String)]] =
             opt("properties").map { _ =>
               obj("properties").obj.map { case (k, v) =>
                 k -> (v match {
                   case JArray(conds) => conds.map {
-                    case JArray(Seq(JString(op), JString(value))) => (op, value)
-                    case JArray(Seq(JString(op), other)) =>
-                      (op, litText(other))
+                    case JArray(Seq(JString(op), value)) =>
+                      (op, litText(k, literal(value)))
                     case c => throw new IllegalArgumentException(
                       s"load_stac.properties.$k: bad condition $c")
                   }
                   case cb: JObject if (cb \ "process_graph") != JNothing =>
-                    Seq(callbackCond(k, cb \ "process_graph"))
+                    Seq(callbackCond(k, parse(cb \ "process_graph")))
                   case c => throw new IllegalArgumentException(
                     s"load_stac.properties.$k: expected [[op, value]] or " +
                       s"a comparison callback, got $c")
@@ -2031,7 +2068,7 @@ object ProcessGraph {
               "ArrayElementParameterConflict: the process `array_element` " +
                 "only allows that either the `index` or the `label` " +
                 "parameter is set") // reference arrays.py:79-83
-          args("data") match {
+          arg("data") match {
             // LABELED array (a labels→values map): label access is a
             // guarded map lookup — a missing label raises the reference's
             // ArrayElementNotAvailable unless return_nodata; index access
@@ -2069,7 +2106,7 @@ object ProcessGraph {
               }
               ColV(graft.functions.ArrayFns.arrayElement(column("data"), idx))
           }
-        case "array_concat" => (args("array1"), args("array2")) match {
+        case "array_concat" => (arg("array1"), arg("array2")) match {
           // both labeled: shared labels are the reference's
           // ArrayLabelConflict (arrays.py:189-199)
           case (LabeledV(a), LabeledV(b)) =>
@@ -2096,7 +2133,7 @@ object ProcessGraph {
         case "array_modify" =>
           val mLen =
             optNum("length").map(_.toInt).getOrElse(1)
-          (args("data"), args.get("values")) match {
+          (arg("data"), args.get("values")) match {
             case (LabeledV(d), Some(LabeledV(v))) =>
               LabeledV(graft.functions.ArrayFns.labeledModify(
                 d, v, num("index").toInt, mLen))

@@ -575,6 +575,131 @@ class GraphErrorsSpec extends AnyFunSuite {
     assert(e.contains("resample_spatial.projection: not a CRS (NumV(3857.5))"), e)
   }
 
+  test("a missing required argument is ProcessParameterRequired, not a failed lookup") {
+    val cs = errorOf(g(
+      """"cs": {"process_id": "cumsum", "arguments": {"dimension": "t"},
+        |       "result": true}""".stripMargin))
+    assert(cs.contains("ProcessParameterRequired: cumsum.data"), cs)
+    val ac = errorOf(g(
+      """"a": {"process_id": "apply",
+        |      "arguments": {"data": {"from_node": "l"},
+        |        "process": {"process_graph": {
+        |          "c": {"process_id": "array_concat",
+        |                "arguments": {"array1": [1, 2]}, "result": true}}}},
+        |      "result": true}""".stripMargin))
+    assert(ac.contains("ProcessParameterRequired: array_concat.array2"), ac)
+  }
+
+  test("filter_bbox takes openEO's bounding-box object and the [w, e, s, n] array alike") {
+    def rows(extent: String): Set[Seq[Any]] =
+      ProcessGraph.execute(spark, g(
+        s""""b": {"process_id": "filter_bbox",
+           |      "arguments": {"data": {"from_node": "l"}, "extent": $extent},
+           |      "result": true}""".stripMargin), _ => xyCube)
+        .df.collect().map(_.toSeq).toSet
+    val byObject = rows("""{"west": 1, "east": 2, "south": 0, "north": 1}""")
+    assert(byObject == rows("[1, 2, 0, 1]"), byObject)
+    assert(byObject.nonEmpty && byObject.size < 16, byObject)
+  }
+
+  // ---- structural errors: the whole graph is checked before any node runs ----
+
+  /** the message of a graph rejected before any node ran (no collection
+    * was loaded)
+    */
+  private def checkErrorOf(graph: String): String = {
+    val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalArgumentException](ProcessGraph.executeValue(
+      spark, graph, _ => { loads.incrementAndGet(); cube })).getMessage
+    assert(loads.get == 0, s"a node ran before the graph was rejected: $e")
+    e
+  }
+
+  test("a from_node cycle is an error naming its nodes, not a stack overflow") {
+    val e = checkErrorOf(g(
+      """"a": {"process_id": "absolute", "arguments": {"x": {"from_node": "b"}}},
+        |  "b": {"process_id": "absolute", "arguments": {"x": {"from_node": "a"}},
+        |        "result": true}""".stripMargin))
+    assert(e.matches("ProcessGraphInvalid: cycle (a -> b -> a|b -> a -> b)"), e)
+  }
+
+  test("a graph or callback without exactly one result node is an error") {
+    val two = checkErrorOf(g(
+      """"f": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"}, "bands": ["B1"]},
+        |      "result": true},
+        |  "h": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"}, "bands": ["B2"]},
+        |      "result": true}""".stripMargin))
+    assert(two.contains("ProcessGraphInvalid: need exactly one result node") &&
+      two.contains("f") && two.contains("h"), two)
+    val none = checkErrorOf(g(
+      """"a": {"process_id": "apply",
+        |      "arguments": {"data": {"from_node": "l"},
+        |        "process": {"process_graph": {
+        |          "n": {"process_id": "absolute",
+        |                "arguments": {"x": {"from_parameter": "x"}}}}}},
+        |      "result": true}""".stripMargin))
+    assert(none.contains("ProcessGraphInvalid: need exactly one result node, found none"), none)
+  }
+
+  test("a dangling from_node is an error even in a node that is never evaluated") {
+    val e = checkErrorOf(g(
+      """"x": {"process_id": "absolute", "arguments": {"x": {"from_node": "nowhere"}}},
+        |  "f": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"}, "bands": ["B1"]},
+        |      "result": true}""".stripMargin))
+    assert(e.contains("ProcessGraphInvalid: node x: from_node nowhere"), e)
+  }
+
+  test("a from_parameter in the root graph fails before any node runs") {
+    val e = checkErrorOf(g(
+      """"f": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"},
+        |                    "bands": {"from_parameter": "bands"}},
+        |      "result": true}""".stripMargin))
+    assert(e.contains("ProcessParameterMissing: bands"), e)
+  }
+
+  test("an unknown process behind a label-reading reduce fails with zero Spark jobs") {
+    def graph(rest: String): String = g(
+      s""""r": {"process_id": "reduce_dimension",
+         |      "arguments": {"data": {"from_node": "l"}, "dimension": "band",
+         |        "reducer": {"process_graph": {
+         |          "el": {"process_id": "array_element",
+         |                 "arguments": {"data": {"from_parameter": "data"},
+         |                               "label": "B2"}, "result": true}}}}$rest""".stripMargin)
+    val unknown = graph("""},
+      |  "u": {"process_id": "definitely_not_a_process",
+      |        "arguments": {"data": {"from_node": "r"}}, "result": true}""".stripMargin)
+    // count only this thread's jobs: the listener bus may still deliver
+    // other suites' events
+    val group = s"graph-errors-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "zero-job check")
+    try {
+      val e = errorOf(unknown)
+      Thread.sleep(500) // listener bus is async
+      assert(e.contains("ProcessUnsupported: definitely_not_a_process"), e)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran before the error")
+      // sanity: the same reduce as the result collects its labels
+      ProcessGraph.execute(spark, graph(""", "result": true}"""), _ => cube)
+      Thread.sleep(500)
+      assert(jobs.get > 0)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   private def processGraphSource: String =
     ScalaSources.scalaSources("src/main/scala/graft/plans")
       .collectFirst { case (p, s) if p.endsWith("/ProcessGraph.scala") => s }.get
@@ -585,14 +710,25 @@ class GraphErrorsSpec extends AnyFunSuite {
   }
 
   test("the process-graph front end parses each graph once and swallows no error") {
-    // one parse of the graph document; one decode of an object argument
-    // given as JSON text; callbacks and objects inside the graph stay parsed
+    // one parse of the graph document; callbacks and objects inside the
+    // graph stay parsed
     val src = processGraphSource
     assert("JsonMethods\\.parse\\(".r.findAllIn(src).size == 1,
       "ProcessGraph.scala parses JSON text beyond the graph document itself")
-    assert("JsonMethods\\.parse".r.findAllIn(src).size == 2,
-      "ProcessGraph.scala decodes JSON text in more than the two known places")
+    assert("JsonMethods\\.parse".r.findAllIn(src).size == 1,
+      "ProcessGraph.scala decodes JSON text beyond the graph document itself")
     assert(!src.contains("case _: Throwable"),
       "ProcessGraph.scala swallows errors in a classifier")
+  }
+
+  test("the process-graph front end evaluates the parsed graph, not raw JSON") {
+    // no free `nodes(` / `processNodes(` walker over a JSON graph (a parsed
+    // graph's `g.nodes(id)` is a map lookup), and no cycle guard: `check`
+    // rejects cycles before evaluation
+    val src = processGraphSource
+    assert("""(?<![\w.])(processN|n)odes\(""".r.findFirstIn(src).isEmpty,
+      "ProcessGraph.scala walks a raw JSON graph")
+    assert(!src.contains("staticVisiting"),
+      "ProcessGraph.scala keeps a cycle guard in the chain planner")
   }
 }

@@ -710,7 +710,7 @@ class GraphTailSpec extends AnyFunSuite {
          |  "s": {"process_id": "save_result",
          |        "arguments": {"data": {"from_node": "l"},
          |                      "format": "parquet",
-         |                      "options": "{\\"path\\": \\"$path\\"}"},
+         |                      "options": {"path": "$path"}},
          |        "result": true}
          |}}""".stripMargin
     runCube(saveG, Map("c" -> cube))

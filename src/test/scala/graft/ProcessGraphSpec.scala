@@ -466,7 +466,7 @@ class ProcessGraphSpec extends AnyFunSuite {
          |                      "dimension": "doc_id", "separator": "\\\\. "}},
          |  "s": {"process_id": "save_result",
          |        "arguments": {"data": {"from_node": "d"}, "format": "parquet",
-         |                      "options": "{\\"path\\": \\"$sink\\"}"},
+         |                      "options": {"path": "$sink"}},
          |        "result": true}
          |}}""".stripMargin
     ProcessGraph.execute(spark, graph, _ => crawlCube)

@@ -22,8 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Both checks parse the registry's `case "<name>"` arms straight out of
   * the source (registry arms sit at one exact indentation level; inner
-  * dispatch matches sit deeper), so there is no second hand-maintained
-  * list to drift.
+  * dispatch matches sit deeper), and a third holds the engine's one
+  * hand-kept id list, `ProcessGraph.BuiltinIds`, equal to those arms.
   */
 class RegistryCompletenessSpec extends AnyFunSuite {
 
@@ -31,10 +31,14 @@ class RegistryCompletenessSpec extends AnyFunSuite {
     java.nio.file.Paths.get("src/main/scala/graft/plans/ProcessGraph.scala")),
     "UTF-8")
 
-  /** Registry arms: `case "x"` at exactly the registry match's indent. */
+  /** Registry arms: `case "x"` or `case "x" | "y"` at exactly the
+    * registry match's indent.
+    */
   private val registry: Set[String] =
-    """(?m)^        case "([a-z0-9_]+)"""".r
-      .findAllMatchIn(registrySource).map(_.group(1)).toSet
+    """(?m)^        case ("[a-z0-9_]+"(?:\s*\|\s*"[a-z0-9_]+")*)""".r
+      .findAllMatchIn(registrySource)
+      .flatMap(m => "\"([a-z0-9_]+)\"".r.findAllMatchIn(m.group(1)))
+      .map(_.group(1)).toSet
 
   /** Reference export surface (union of `__all__`s, re-derived from the
     * read-only reference checkout; VERDICT r11 re-confirmed 135 names).
@@ -88,6 +92,15 @@ class RegistryCompletenessSpec extends AnyFunSuite {
       .map(n => aliases.getOrElse(n, n)).filterNot(registry.contains)
     assert(missing.isEmpty,
       s"reference processes absent from the graph registry: $missing")
+  }
+
+  test("the built-in id set the graph check accepts is exactly the registry's arms") {
+    val builtins = graft.plans.ProcessGraph.BuiltinIds
+    assert(registry.contains("fit_class_random_forest"),
+      "registry parse misses `|` alternatives")
+    assert(builtins == registry,
+      s"BuiltinIds without an arm: ${(builtins -- registry).toSeq.sorted}; " +
+        s"arms missing from BuiltinIds: ${(registry -- builtins).toSeq.sorted}")
   }
 
   /** Registry nodes with no graph-level exercise yet. Keep this list
