@@ -18,13 +18,12 @@ import org.apache.spark.sql.functions._
   * assets at 100 TB spread over every executor core, while a small raster
   * runs as a few tasks instead of one per chunk.
   *
-  * Pixel decode is REAL for reachable zarr v2 stores ([[ZarrReader]],
-  * rank 2 and 3) and baseline GeoTIFF/COG files ([[TiffReader]]: strips,
-  * tiles, overview pyramids, none/deflate, single- and multi-band chunky
-  * interleave). Unreachable hrefs and unsupported codecs (JPEG/LZW,
-  * BigTIFF) fall back to a deterministic fake grid so the plumbing
-  * (asset table → cell fan-out → long-form cube with dim inference)
-  * always runs end-to-end.
+  * Pixel decode is REAL for reachable zarr stores ([[ZarrReader]], rank
+  * 2 and 3) and GeoTIFF/COG files ([[TiffReader]]); a reachable asset
+  * whose header does not parse fails the load. Only an UNREACHABLE href
+  * falls back to a deterministic fake grid, so the plumbing (asset table
+  * → cell fan-out → long-form cube with dim inference) runs end-to-end
+  * over a catalog of remote assets.
   */
 object StacLoader {
 
@@ -217,13 +216,25 @@ object StacLoader {
     if (new java.io.File(path).isFile) Some(path) else None
   }
 
+  /** The asset mounted for the cube scan (its header parsed, or the
+    * parse error thrown) when its href is reachable; `None` = faked.
+    */
+  private def mount(a: StacAsset): Option[v2.CubeSource.Asset] =
+    zarrDirOf(a).map(d => v2.CubeSource.zarr(d, a.west, a.south, a.east,
+      a.north, a.band, a.datetime, a.timeLabels))
+      .orElse(tiffPathOf(a).map(p => v2.CubeSource.tiff(p, a.west, a.south,
+        a.east, a.north, a.band, a.datetime)))
+
   /** Pixel load. Zarr assets whose href resolves to a reachable store
     * decode for REAL through [[ZarrReader]], and reachable GeoTIFF/COG
     * files through [[TiffReader]] (strips/tiles, none/LZW/JPEG/deflate/
     * PackBits, chunky and planar band layouts, classic and BigTIFF) —
     * one scan whose chunk and strip reads pack into core-sized
-    * partitions, row/col mapped onto the item bbox. Unreachable hrefs
-    * (object-store URIs in this offline environment) fall back to a
+    * partitions, row/col mapped onto the item bbox. Each reachable asset
+    * is mounted once, here: its header is parsed and carried into every
+    * later plan, and a header that does not parse (a corrupt TIFF, a zarr
+    * store of rank other than 2 or 3) fails the load. Only an UNREACHABLE
+    * href (an object-store URI with no local copy) falls back to a
     * deterministic fake grid; the plumbing (asset table → cell fan-out →
     * long-form cube) is identical either way.
     *
@@ -245,11 +256,7 @@ object StacLoader {
     // that select NO items/assets are a named error, not an empty cube
     if (assets.isEmpty) throw new IllegalArgumentException(
       "NoDataAvailable: there is no data available for the given extents")
-    val (zarrReal, rest) = assets.partition(a =>
-      zarrDirOf(a).exists(d => Set(2, 3)(ZarrReader.readMeta(d).shape.size)))
-    val (tiffReal, faked) = rest.partition(a =>
-      tiffPathOf(a).exists(p =>
-        scala.util.Try(TiffReader.readMeta(p)).isSuccess))
+    val (real, faked) = assets.partitionMap(a => mount(a).toLeft(a))
     // reachable assets mount as ONE DataSourceV2 scan
     // ([[graft.sources.v2.CubeSource]]): a cube-coordinate table
     // (x, y, t, bands, value) whose scan translates pushed x/y/t/bands
@@ -262,12 +269,6 @@ object StacLoader {
     // (cubes/load.py:245-310). Zarr axis semantics live in the source:
     // rank 3 is a time axis when the item's cube:dimensions temporal
     // labels match axis 0, else the common Sentinel (band, row, col).
-    val real = zarrReal.map(a => v2.CubeSource.asset(v2.CubeSource.Zarr,
-      zarrDirOf(a).get, a.west, a.south, a.east, a.north, a.band,
-      a.datetime, a.timeLabels)) ++
-      tiffReal.map(a => v2.CubeSource.asset(v2.CubeSource.Tiff,
-        tiffPathOf(a).get, a.west, a.south, a.east, a.north, a.band,
-        a.datetime))
     val realParts =
       if (real.isEmpty) Nil else Seq(v2.CubeSource.frame(spark, real))
     val fakeParts =

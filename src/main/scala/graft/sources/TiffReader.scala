@@ -99,14 +99,14 @@ object TiffReader {
   private def ifdChain(path: String, last: Int): Seq[TiffMeta] = {
     val raf = new java.io.RandomAccessFile(path, "r")
     try {
-      var out = List(readMeta(raf, None))
+      var out = List(readIfd(raf, None))
       while (out.size <= last && out.head.nextIfd != 0)
-        out = readMeta(raf, Some(out.head)) :: out
+        out = readIfd(raf, Some(out.head)) :: out
       out.reverse
     } finally raf.close()
   }
 
-  private def readMeta(raf: java.io.RandomAccessFile,
+  private def readIfd(raf: java.io.RandomAccessFile,
       after: Option[TiffMeta]): TiffMeta = {
     def readAt(off: Long, len: Int): Array[Byte] = {
       val b = new Array[Byte](len)
@@ -229,6 +229,8 @@ object TiffReader {
       }
     require(offsets.nonEmpty && offsets.size == counts.size,
       "TiffCorrupt: strip/tile tables")
+    require(!planar || offsets.size % samplesPerPixel == 0,
+      "TiffCorrupt: planar segment table not divisible by band count")
     val across = if (tiled) (width + tw - 1) / tw else 1
     val segs = offsets.zip(counts).zipWithIndex.map { case ((o, c), i) =>
       Segment(i, o, c)
@@ -755,10 +757,10 @@ object TiffReader {
 
   /** Load a single-sample raster as a long-form DataFrame: bigint
     * `dimNames` (row, col) and a double `value`, one row per pixel. A
-    * projection over the file's one-asset cube scan
-    * ([[graft.sources.v2.CubeSource.unitGrid]]: x = col, y = row), so its
-    * strip/tile reads are packed into core-sized partitions and each task
-    * seeks only its own bytes. `level` selects an overview IFD of a COG
+    * projection over the file's one-asset cube scan, mounted on its index
+    * grid ([[graft.sources.v2.CubeSource.unitTiff]]: x = col, y = row), so
+    * its strip/tile reads are packed into core-sized partitions and each
+    * task seeks only its own bytes. `level` selects an overview IFD of a COG
     * pyramid (0 = full resolution) — reading a reduced copy touches only
     * ITS segments, the cloud-optimized cheap-zoom path.
     * `rowRange`/`colRange` (inclusive) become y/x filters, which the scan
@@ -768,11 +770,12 @@ object TiffReader {
       dimNames: Seq[String] = Seq("row", "col"), level: Int = 0,
       rowRange: Option[(Long, Long)] = None,
       colRange: Option[(Long, Long)] = None): DataFrame = {
-    require(readMeta(path, level).samplesPerPixel == 1,
+    val asset = v2.CubeSource.unitTiff(path, level)
+    require(asset.meta.samplesPerPixel == 1,
       "TiffUnsupported: multi-band raster — load it as a cube " +
         "(load_stac names each sample <band>_<i>)")
     Seq(rowRange.map("y" -> _), colRange.map("x" -> _)).flatten
-      .foldLeft(v2.CubeSource.unitGrid(spark, path, level)) {
+      .foldLeft(v2.CubeSource.frame(spark, Seq(asset))) {
         case (df, (c, (lo, hi))) => df.where(col(c).between(lo, hi))
       }
       .select(col("y").cast("bigint").as(dimNames.head),

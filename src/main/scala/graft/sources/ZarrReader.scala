@@ -593,10 +593,11 @@ object ZarrReader {
 
   /** Load a rank-2 or rank-3 zarr array as a long-form DataFrame: one row
     * per in-bounds element, bigint index columns `dimNames` and a double
-    * `value`. A projection over the store's one-asset cube scan
-    * ([[graft.sources.v2.CubeSource.unitGrid]]: x = col, y = row, rank-3
-    * axis 0 = the `band_<i>` suffix), so the chunk reads are packed into
-    * core-sized partitions and every task decodes its own chunk files.
+    * `value`. A projection over the store's one-asset cube scan, mounted
+    * on its index grid ([[graft.sources.v2.CubeSource.unitZarr]]: x = col,
+    * y = row, rank-3 axis 0 = the `band_<i>` suffix), so the chunk reads
+    * are packed into core-sized partitions and every task decodes its own
+    * chunk files.
     *
     * `slices` (optional, per-dim inclusive global-index ranges) become
     * x/y/bands filters, which the scan pushes down to [[planChunks]]
@@ -608,7 +609,8 @@ object ZarrReader {
       dimNames: Seq[String],
       slices: Seq[Option[(Long, Long)]] = Nil): DataFrame = {
     import v2.CubeSource.UnitBand
-    val meta = readMeta(dir)
+    val asset = v2.CubeSource.unitZarr(dir)
+    val meta = asset.meta
     val rank = meta.shape.size
     require(dimNames.size == rank, s"need $rank dim names, got ${dimNames.size}")
     // a store without fill_value must hold every planned chunk: fail at
@@ -626,7 +628,7 @@ object ZarrReader {
       case "bands" => substring_index(col("bands"), "_", -1)
       case c => col(c)
     }
-    cut.foldLeft(v2.CubeSource.unitGrid(spark, dir))(_.where(_))
+    cut.foldLeft(v2.CubeSource.frame(spark, Seq(asset)))(_.where(_))
       .select(index.zip(dimNames).map { case (c, n) => c.cast("bigint").as(n) }
         :+ col("value"): _*)
   }

@@ -78,8 +78,8 @@ private[v2] class CubeExtentScanBuilder(assets: Seq[CubeSource.Asset])
     Extent((xLo, xHi), (yLo, yHi), (tLo, tHi), bandSel))
 }
 
-/** One scan over every asset of a load. Planning asks each asset's
-  * format for its chunk or strip/tile reads under the pushed extent
+/** One scan over every asset of a load. Planning asks each mounted asset
+  * for its chunk or strip/tile reads under the pushed extent
   * ([[ZarrChunks.plan]], [[TiffSegments.plan]]), then packs the reads
   * into partitions by Spark's file-scan rule ([[CubeScanUtil.pack]]): a
   * 40-read raster runs as about one task per core instead of 40, while a
@@ -99,17 +99,14 @@ private[v2] class CubeScan(assets: Seq[CubeSource.Asset],
 
   /** Planned once per Scan, failure included: the optimizer probes
     * estimateStatistics and execution calls planInputPartitions on the
-    * same instance — without the cache each probe re-reads store metadata
-    * and re-walks the whole chunk directory (seconds of driver I/O on a
-    * 10⁵-chunk archive). A store that fails to plan is not planned again:
+    * same instance — without the cache each probe re-walks the whole
+    * chunk directory (seconds of driver I/O on a 10⁵-chunk archive). The
+    * headers are not read here at all: each asset carries the one parsed
+    * at mount. A store that fails to plan is not planned again:
     * planInputPartitions rethrows the one failure.
     */
-  private lazy val reads: Try[Array[CubeRead]] = Try(assets.flatMap { a =>
-    a.format match {
-      case CubeSource.Zarr => ZarrChunks.plan(a, extent)
-      case CubeSource.Tiff => TiffSegments.plan(a, extent)
-    }
-  }.toArray)
+  private lazy val reads: Try[Array[CubeRead]] =
+    Try(assets.flatMap(_.plan(extent)).toArray)
 
   private lazy val partitions: Array[InputPartition] =
     CubeScanUtil.pack(session, reads.get).map(rs =>

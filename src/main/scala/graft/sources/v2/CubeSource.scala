@@ -2,8 +2,7 @@ package graft.sources.v2
 
 import graft.sources.{TiffReader, ZarrReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.PlanBridge
@@ -42,21 +41,13 @@ import java.util
   * sample. Column pruning is supported — a `value`-only aggregate never
   * materialises coordinates.
   *
-  * The engine builds the relation directly ([[CubeSource.frame]]);
-  * `spark.read.format("graft.sources.v2.CubeSource")` mounts ONE asset
-  * from string options (`path`, `west`, `south`, `east`, `north`, `band`,
-  * `datetime`, optional comma-separated `timeLabels`); a directory path is
-  * a zarr store, a file path a TIFF.
+  * Each asset is MOUNTED once, on the driver, when the load builds it
+  * ([[CubeSource.zarr]], [[CubeSource.tiff]]): its zarr header or TIFF
+  * IFD is parsed then and rides on the asset, so planning a query (and
+  * every later query over the same cube) reads the header from the
+  * asset, never from the store again. The engine builds the relation
+  * directly over the mounted assets ([[CubeSource.frame]]).
   */
-class CubeSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CubeSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new CubeTable(Seq(CubeSource.assetFrom(properties)))
-  override def supportsExternalMetadata(): Boolean = false
-}
-
 object CubeSource {
   val Schema: StructType = StructType(Seq(
     StructField("x", DoubleType, nullable = false),
@@ -65,26 +56,51 @@ object CubeSource {
     StructField("bands", StringType, nullable = false),
     StructField("value", DoubleType, nullable = false)))
 
-  sealed trait Format extends Serializable
-  case object Zarr extends Format
-  case object Tiff extends Format
-
-  /** Immutable asset description carried into every planned read: format,
-    * store/file path, geo transform corners, band name, the constant
-    * datetime, (zarr only, optionally) per-slice time labels, and (TIFF
-    * only) the overview level of a COG pyramid (0 = full resolution).
+  /** One mounted asset, carried into every planned read: store/file path,
+    * geo transform corners, band name, the constant datetime and the
+    * parsed header, whose type is the asset's format.
     */
-  final case class Asset(format: Format, path: String, west: Double,
-      south: Double, east: Double, north: Double, band: String,
-      datetimeMicros: Long, labelMicros: Array[Long], level: Int = 0)
-      extends Serializable
+  sealed trait Asset extends Serializable {
+    def path: String
 
-  /** An asset from STAC item fields (ISO datetimes). */
-  def asset(format: Format, path: String, west: Double, south: Double,
-      east: Double, north: Double, band: String, datetime: String,
-      timeLabels: Seq[String] = Nil): Asset =
-    Asset(format, path, west, south, east, north, band,
-      parseMicros(datetime), timeLabels.map(parseMicros).toArray)
+    /** The chunk or strip/tile reads under a pushed extent. */
+    private[v2] def plan(e: Extent): Seq[CubeRead]
+  }
+
+  /** A zarr store (rank 2 or 3) and, optionally, per-slice time labels. */
+  final case class ZarrAsset(path: String, west: Double, south: Double,
+      east: Double, north: Double, band: String, datetimeMicros: Long,
+      meta: ZarrReader.ZarrMeta, labelMicros: Array[Long]) extends Asset {
+    private[v2] def plan(e: Extent): Seq[CubeRead] = ZarrChunks.plan(this, e)
+  }
+
+  /** A TIFF; `meta` is the IFD of the overview level it is read at. */
+  final case class TiffAsset(path: String, west: Double, south: Double,
+      east: Double, north: Double, band: String, datetimeMicros: Long,
+      meta: TiffReader.TiffMeta) extends Asset {
+    private[v2] def plan(e: Extent): Seq[CubeRead] = TiffSegments.plan(this, e)
+  }
+
+  /** Mount a zarr store from STAC item fields (ISO datetimes). */
+  def zarr(path: String, west: Double, south: Double, east: Double,
+      north: Double, band: String, datetime: String,
+      timeLabels: Seq[String] = Nil): ZarrAsset =
+    ZarrAsset(path, west, south, east, north, band, parseMicros(datetime),
+      zarrMeta(path), timeLabels.map(parseMicros).toArray)
+
+  /** Mount a TIFF (full resolution) from STAC item fields. */
+  def tiff(path: String, west: Double, south: Double, east: Double,
+      north: Double, band: String, datetime: String): TiffAsset =
+    TiffAsset(path, west, south, east, north, band, parseMicros(datetime),
+      TiffReader.readMeta(path))
+
+  private def zarrMeta(path: String): ZarrReader.ZarrMeta = {
+    val meta = ZarrReader.readMeta(path)
+    val rank = meta.shape.size
+    require(rank == 2 || rank == 3,
+      s"CubeSource: rank-$rank zarr stores unsupported (2 or 3)")
+    meta
+  }
 
   /** One scan over `assets` as a DataFrame: the relation is built directly,
     * so the asset list never round-trips through string options.
@@ -93,49 +109,29 @@ object CubeSource {
     PlanBridge.frame(spark, DataSourceV2Relation.create(
       new CubeTable(assets), None, None))
 
-  /** Band name of a [[unitGrid]] mount: rank-3 zarr axis 0 and TIFF
-    * samples read as `band_<i>`.
+  /** Band name of a unit-grid mount: rank-3 zarr axis 0 and TIFF samples
+    * read as `band_<i>`.
     */
   private[graft] val UnitBand = "band"
 
-  /** One asset mounted on its own index grid — west = south = 0,
+  /** A zarr store mounted on its own index grid — west = south = 0,
     * east = width, north = height — so `x` is the column and `y` the row
-    * index exactly. A directory is a zarr store (rank 2 or 3), a file a
-    * TIFF read at overview `level`. The index readers
+    * index exactly. The index readers
     * ([[graft.sources.ZarrReader.loadArray]],
-    * [[graft.sources.TiffReader.loadArray]]) are projections over it, so
-    * their slices push down like any extent filter.
+    * [[graft.sources.TiffReader.loadArray]]) are projections over such a
+    * mount ([[frame]]), so their slices push down like any extent filter.
     */
-  private[graft] def unitGrid(spark: SparkSession, path: String,
-      level: Int = 0): DataFrame = {
-    val zarr = new java.io.File(path).isDirectory
-    val (h, w) =
-      if (zarr) {
-        val shape = ZarrReader.readMeta(path).shape
-        require(shape.size == 2 || shape.size == 3,
-          s"CubeSource: rank-${shape.size} zarr stores unsupported (2 or 3)")
-        (shape(shape.size - 2), shape.last)
-      } else {
-        val m = TiffReader.readMeta(path, level)
-        (m.height, m.width)
-      }
-    frame(spark, Seq(Asset(if (zarr) Zarr else Tiff, path, 0.0, 0.0, w, h,
-      UnitBand, 0L, Array.empty, level)))
+  private[graft] def unitZarr(path: String): ZarrAsset = {
+    val meta = zarrMeta(path)
+    val rank = meta.shape.size
+    ZarrAsset(path, 0.0, 0.0, meta.shape(rank - 1), meta.shape(rank - 2),
+      UnitBand, 0L, meta, Array.empty)
   }
 
-  private[v2] def assetFrom(props: util.Map[String, String]): Asset = {
-    val ci = new CaseInsensitiveStringMap(props) // option case is caller's
-    def req(k: String): String = {
-      val v = ci.get(k)
-      require(v != null && v.nonEmpty, s"CubeSource: missing option $k")
-      v
-    }
-    val path = req("path")
-    val labels = Option(ci.get("timelabels")).filter(_.nonEmpty)
-      .map(_.split(",").toSeq).getOrElse(Nil)
-    asset(if (new java.io.File(path).isDirectory) Zarr else Tiff, path,
-      req("west").toDouble, req("south").toDouble, req("east").toDouble,
-      req("north").toDouble, req("band"), req("datetime"), labels)
+  /** A TIFF's overview `level` mounted on its own index grid. */
+  private[graft] def unitTiff(path: String, level: Int = 0): TiffAsset = {
+    val meta = TiffReader.readMeta(path, level)
+    TiffAsset(path, 0.0, 0.0, meta.width, meta.height, UnitBand, 0L, meta)
   }
 
   /** ISO datetime → epoch micros (UTC). Accepts instants with offset,

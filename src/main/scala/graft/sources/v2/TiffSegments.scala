@@ -16,15 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (single-band) and prunes whole segments on PLANAR rasters, whose
   * band-major segment table makes per-band selection a segment subset;
   * chunky interleave keeps all segments (samples interleave within one
-  * strip) and relies on the residual. The asset's `level` picks the
-  * overview IFD of a COG pyramid (0 = full resolution).
+  * strip) and relies on the residual. The asset's header is the IFD of
+  * the overview level it was mounted at (0 = full resolution).
   */
 private[v2] object TiffSegments {
 
-  def plan(a: CubeSource.Asset, e: Extent): Seq[CubeRead] = {
-    val meta = TiffReader.readMeta(a.path, a.level)
-    require(!meta.planar || meta.segments.size % meta.samplesPerPixel == 0,
-      "TiffCorrupt: planar segment table not divisible by band count")
+  def plan(a: CubeSource.TiffAsset, e: Extent): Seq[CubeRead] = {
+    val meta = a.meta
     if (a.datetimeMicros < e.t._1 || a.datetimeMicros > e.t._2)
       return Nil // constant t outside the pushed window
     val multi = meta.samplesPerPixel > 1
@@ -50,18 +48,18 @@ private[v2] object TiffSegments {
     val lo = Array(rr.map(_._1).getOrElse(0L), cr.map(_._1).getOrElse(0L))
     val hi = Array(rr.map(_._2).getOrElse(meta.height - 1L),
       cr.map(_._2).getOrElse(meta.width - 1L))
-    segs.map(s => TiffSegmentRead(a, meta, s, lo, hi))
+    segs.map(s => TiffSegmentRead(a, s, lo, hi))
   }
 }
 
 /** One strip/tile of one file: everything the executor-side reader needs. */
-private[v2] final case class TiffSegmentRead(asset: CubeSource.Asset,
-    meta: TiffReader.TiffMeta, seg: TiffReader.Segment,
-    sliceLo: Array[Long], sliceHi: Array[Long]) extends CubeRead {
+private[v2] final case class TiffSegmentRead(asset: CubeSource.TiffAsset,
+    seg: TiffReader.Segment, sliceLo: Array[Long], sliceHi: Array[Long])
+    extends CubeRead {
 
   // the segment's in-slice pixel footprint × samples per pixel
   override def cells: Long = {
-    val m = meta
+    val m = asset.meta
     val within =
       if (m.planar) seg.index % (m.segments.size / m.samplesPerPixel)
       else seg.index
@@ -85,7 +83,7 @@ private[v2] final case class TiffSegmentRead(asset: CubeSource.Asset,
   */
 private[v2] class TiffSegmentReader(p: TiffSegmentRead, columns: Array[String])
     extends PartitionReader[InternalRow] {
-  private val m = p.meta
+  private val m = p.asset.meta
   private val vals: Array[Double] = {
     val raf = new java.io.RandomAccessFile(p.asset.path, "r")
     try {

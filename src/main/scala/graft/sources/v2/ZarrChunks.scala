@@ -15,15 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[v2] object ZarrChunks {
 
-  def plan(a: CubeSource.Asset, e: Extent): Seq[CubeRead] = {
-    val meta = ZarrReader.readMeta(a.path)
+  def plan(a: CubeSource.ZarrAsset, e: Extent): Seq[CubeRead] = {
+    val meta = a.meta
     val rank = meta.shape.size
-    require(rank == 2 || rank == 3,
-      s"CubeSource: rank-$rank zarr stores unsupported (2 or 3)")
     val timeAxis = rank == 3 && a.labelMicros.length == meta.shape(0)
-    val (nr, nc) =
-      if (rank == 2) (meta.shape(0).toLong, meta.shape(1).toLong)
-      else (meta.shape(1).toLong, meta.shape(2).toLong)
+    val (nr, nc) = (meta.shape(rank - 2).toLong, meta.shape(rank - 1).toLong)
     val rr = CubeScanUtil.axisRange(e.y._1, e.y._2, a.south, a.north - a.south, nr)
     val cr = CubeScanUtil.axisRange(e.x._1, e.x._2, a.west, a.east - a.west, nc)
     // constant-coordinate predicates can empty the scan outright
@@ -55,23 +51,22 @@ private[v2] object ZarrChunks {
     val lo = Array.tabulate(rank)(d => slices(d).map(_._1).getOrElse(0L))
     val hi = Array.tabulate(rank)(d =>
       slices(d).map(_._2).getOrElse(meta.shape(d) - 1L))
-    selKeys.map(k => ZarrChunkRead(a, meta, k.toArray,
+    selKeys.map(k => ZarrChunkRead(a, k.toArray,
       present.contains(k), timeAxis, lo, hi))
   }
 }
 
 /** One chunk of one store: everything the executor-side reader needs. */
-private[v2] final case class ZarrChunkRead(asset: CubeSource.Asset,
-    meta: ZarrReader.ZarrMeta, key: Array[Int], isPresent: Boolean,
-    timeAxis: Boolean, sliceLo: Array[Long], sliceHi: Array[Long])
-    extends CubeRead {
+private[v2] final case class ZarrChunkRead(asset: CubeSource.ZarrAsset,
+    key: Array[Int], isPresent: Boolean, timeAxis: Boolean,
+    sliceLo: Array[Long], sliceHi: Array[Long]) extends CubeRead {
 
   // in-slice cells of this chunk (edge clip approximated by slice)
-  override def cells: Long = meta.shape.indices.map { d =>
-    val c = meta.chunks(d).toLong
+  override def cells: Long = asset.meta.shape.indices.map { d =>
+    val c = asset.meta.chunks(d).toLong
     val lo = math.max(key(d) * c, sliceLo(d))
     val hi = math.min(key(d) * c + c - 1,
-      math.min(meta.shape(d) - 1L, sliceHi(d)))
+      math.min(asset.meta.shape(d) - 1L, sliceHi(d)))
     math.max(0L, hi - lo + 1)
   }.product
 
@@ -86,7 +81,7 @@ private[v2] final case class ZarrChunkRead(asset: CubeSource.Asset,
   */
 private[v2] class ZarrChunkReader(p: ZarrChunkRead, columns: Array[String])
     extends PartitionReader[InternalRow] {
-  private val m = p.meta
+  private val m = p.asset.meta
   private val rank = m.shape.size
   private val vals: Array[Double] =
     if (!p.isPresent) Array.fill(m.chunks.product)(m.fillValue.get)
@@ -107,9 +102,7 @@ private[v2] class ZarrChunkReader(p: ZarrChunkRead, columns: Array[String])
     while (d >= 0) { s(d) = s(d + 1) * chunkShape(d + 1); d -= 1 }
     s
   }
-  private val (nr, nc) =
-    if (rank == 2) (m.shape(0).toLong, m.shape(1).toLong)
-    else (m.shape(1).toLong, m.shape(2).toLong)
+  private val (nr, nc) = (m.shape(rank - 2).toLong, m.shape(rank - 1).toLong)
   private val stepX = (p.asset.east - p.asset.west) / nc
   private val stepY = (p.asset.north - p.asset.south) / nr
   private val coords = new Array[Long](rank)

@@ -578,9 +578,17 @@ object StreamingOps {
   }
 
   /** Per-user session accumulator for [[sessionizeStream]]: the open
-    * session's last event time + length, and the closed sessions' lengths.
+    * session's last event time + length, and the closed sessions' count
+    * and longest length — constant size however many sessions close.
     */
-  final case class SessState(lastTs: Long, curLen: Long, closed: List[Long])
+  final case class SessState(lastTs: Long, curLen: Long, nClosed: Long,
+      longestClosed: Long) {
+    /** The user's (n_sessions, longest) snapshot, open session included. */
+    def snapshot(user: Long): Iterator[SessOut] =
+      if (curLen == 0 && nClosed == 0) Iterator.empty
+      else Iterator.single(SessOut(user, nClosed + (if (curLen > 0) 1 else 0),
+        math.max(longestClosed, curLen)))
+  }
   final case class SessOut(user_id: Long, n_sessions: Long, longest: Long)
 
   /** Stateful streaming sessionization — the live counterpart of the batch
@@ -623,19 +631,17 @@ object StreamingOps {
             // be extended by on-time data. Close it, emit the terminal
             // snapshot, and drop the state record.
             val st = state.get
-            val all = if (st.curLen > 0) st.curLen :: st.closed else st.closed
             state.remove()
-            if (all.isEmpty) Iterator.empty
-            else Iterator.single(SessOut(user, all.size.toLong, all.max))
+            st.snapshot(user)
           } else {
             val sorted = it.map(_._2).toArray.sorted
-            var st = state.getOption.getOrElse(SessState(Long.MinValue, 0L, Nil))
+            var st = state.getOption.getOrElse(SessState(Long.MinValue, 0L, 0L, 0L))
             sorted.foreach { t =>
               st =
-                if (st.curLen == 0) SessState(t, 1, st.closed)
-                else if (t - st.lastTs > gapMicros)
-                  SessState(t, 1, st.curLen :: st.closed)
-                else SessState(math.max(st.lastTs, t), st.curLen + 1, st.closed)
+                if (st.curLen == 0) st.copy(lastTs = t, curLen = 1)
+                else if (t - st.lastTs > gapMicros) SessState(t, 1,
+                  st.nClosed + 1, math.max(st.longestClosed, st.curLen))
+                else st.copy(lastTs = math.max(st.lastTs, t), curLen = st.curLen + 1)
             }
             state.update(st)
             // Session expires when the watermark passes the gap; the timeout
@@ -643,9 +649,7 @@ object StreamingOps {
             // it (can happen when admitted-late data trails the watermark).
             state.setTimeoutTimestamp(
               math.max(st.lastTs / 1000L + gapMs, state.getCurrentWatermarkMs() + 1L))
-            val all = if (st.curLen > 0) st.curLen :: st.closed else st.closed
-            if (all.isEmpty) Iterator.empty
-            else Iterator.single(SessOut(user, all.size.toLong, all.max))
+            st.snapshot(user)
           }
       }
   }

@@ -16,8 +16,10 @@ class SeriesOpsSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  def series(vals: Seq[java.lang.Double]): DataCube = {
-    val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, "B1", v) }
+  def series(vals: Seq[java.lang.Double],
+      session: SparkSession = spark): DataCube = {
+    val df = session.createDataFrame(
+      vals.zipWithIndex.map { case (v, i) => (i.toLong, "B1", v) })
       .toDF("i", "band", "value")
     DataCube.fromTable(df, Seq("i", "band"), "value",
       Map("i" -> DimType.Other, "band" -> DimType.Bands))
@@ -129,7 +131,10 @@ class SeriesOpsSpec extends AnyFunSuite {
     // exactly one ACTION fires during the fit call (the probe — which is
     // what materialises the cache), and the returned plan reads the
     // InMemoryRelation, not the raw table. (Job counts are no proxy —
-    // AQE splits one action into a job per query stage.)
+    // AQE splits one action into a job per query stage.) The series lives
+    // on a private session whose listener hears only its own queries, so
+    // a late action of an earlier suite on the shared session never counts.
+    val session = spark.newSession()
     val actions = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -139,9 +144,9 @@ class SeriesOpsSpec extends AnyFunSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = actions.incrementAndGet()
     }
-    spark.listenerManager.register(l)
+    session.listenerManager.register(l)
     try {
-      val c = series(Seq(1.0, 3.0, 5.0, 7.0))
+      val c = series(Seq(1.0, 3.0, 5.0, 7.0), session)
       val out = CurveOps.fitLinear(c, "i", exactIntMoments = true)
       // listener delivery is async — poll to a deadline
       val deadline = System.nanoTime() + 10_000_000_000L
@@ -157,7 +162,7 @@ class SeriesOpsSpec extends AnyFunSuite {
         "common-path result must read the persisted aggregate")
       val r = out.collect()(0)
       assert(math.abs(r.getDouble(r.fieldIndex("b")) - 2.0) < 1e-12)
-    } finally spark.listenerManager.unregister(l)
+    } finally session.listenerManager.unregister(l)
   }
 
   test("fitBasis2 exact moments: big-magnitude values take the decimal path") {

@@ -792,13 +792,15 @@ class StacLoaderSpec extends AnyFunSuite {
   /** A multi-sample TIFF read through the cube scan on its index grid:
     * (row, col, sample) → value.
     */
-  private def bandRows(path: String): Map[(Long, Long, Int), Double] =
-    sources.v2.CubeSource.unitGrid(spark, path).collect().map { r =>
+  private def bandRows(path: String): Map[(Long, Long, Int), Double] = {
+    import sources.v2.CubeSource
+    CubeSource.frame(spark, Seq(CubeSource.unitTiff(path))).collect().map { r =>
       val band = r.getString(r.fieldIndex("bands"))
       (r.getDouble(r.fieldIndex("y")).toLong, r.getDouble(r.fieldIndex("x")).toLong,
         band.substring(band.lastIndexOf('_') + 1).toInt) ->
         r.getDouble(r.fieldIndex("value"))
     }.toMap
+  }
 
   test("TiffReader decodes planar (band-separate) multi-band rasters") {
     import java.nio.{ByteBuffer, ByteOrder}
@@ -1051,6 +1053,59 @@ class StacLoaderSpec extends AnyFunSuite {
     assert(math.abs(hit.getDouble(0) - (10.0 + 2.0 / 6)) < 1e-12)
     assert(math.abs(hit.getDouble(1) - 46.25) < 1e-12)
     assert(hit.getString(3) == "B04")
+  }
+
+  /** One zarr asset over the usual item bbox. */
+  private def zarrItem(dir: String): Seq[StacLoader.StacAsset] =
+    StacLoader.parseItem(
+      s"""{"type":"Feature","stac_version":"1.0.0","id":"item-z",
+         |"bbox":[10.0,46.0,11.0,47.0],
+         |"properties":{"datetime":"2023-06-10T10:00:00Z"},
+         |"assets":{
+         |  "store":{"href":"file://$dir","type":"application/vnd+zarr"}
+         |}}""".stripMargin)
+
+  test("a reachable TIFF that does not parse fails the load, not the fake grid") {
+    val f = java.nio.file.Files.createTempFile("graft_garbage", ".tif")
+    java.nio.file.Files.write(f, Array.tabulate[Byte](256)(i => (i * 7).toByte))
+    val tItem =
+      s"""{"type":"Feature","stac_version":"1.0.0","id":"item-bad",
+         |"bbox":[10.0,46.0,11.0,47.0],
+         |"properties":{"datetime":"2023-06-10T10:00:00Z"},
+         |"assets":{
+         |  "red":{"href":"file://${f.toAbsolutePath}",
+         |         "type":"image/tiff; application=geotiff"}
+         |}}""".stripMargin
+    val e = intercept[IllegalArgumentException] {
+      StacLoader.loadCube(spark, StacLoader.parseItem(tItem))
+    }
+    assert(e.getMessage.contains("TiffCorrupt"), e.getMessage)
+  }
+
+  test("a reachable rank-4 zarr store fails the load, not the fake grid") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zarr4").toFile
+    java.nio.file.Files.writeString(new java.io.File(dir, ".zarray").toPath,
+      """{"zarr_format":2,"shape":[2,2,2,2],"chunks":[1,2,2,2],"dtype":"<f8",
+        |"compressor":null,"fill_value":0.0,"filters":null,"order":"C"}"""
+        .stripMargin)
+    val e = intercept[IllegalArgumentException] {
+      StacLoader.loadCube(spark, zarrItem(dir.getAbsolutePath))
+    }
+    assert(e.getMessage.contains(
+      "CubeSource: rank-4 zarr stores unsupported (2 or 3)"), e.getMessage)
+  }
+
+  test("a mounted zarr plans later queries from the header parsed at load") {
+    import org.apache.spark.sql.functions.col
+    val dir = writeZarrFixture()
+    val cube = StacLoader.loadCube(spark, zarrItem(dir))
+    // each call is a new query, so a new scan plans its chunk reads
+    def west() = cube.df.filter(col("x") <= 10.4).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getDouble(4)).toMap
+    val before = west()
+    assert(before.size == 4 * 3)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, ".zarray"))
+    assert(west() == before)
   }
 
   test("loadCube produces a 4-D long-form cube with inferred dim types") {

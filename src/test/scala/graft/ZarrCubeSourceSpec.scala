@@ -2,6 +2,7 @@ package graft
 
 import graft.CubeScans.plannedReads
 import graft.sources.{StacLoader, ZarrReader}
+import graft.sources.v2.CubeSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -61,14 +62,8 @@ class ZarrCubeSourceSpec extends AnyFunSuite {
 
   private def read(path: String, band: String = "B04",
       labels: Seq[String] = Nil): DataFrame =
-    spark.read.format("graft.sources.v2.CubeSource")
-      .option("path", path)
-      .option("west", "10.0").option("south", "46.0")
-      .option("east", "11.0").option("north", "47.0")
-      .option("band", band)
-      .option("datetime", "2023-06-10T10:00:00Z")
-      .option("timeLabels", labels.mkString(","))
-      .load()
+    CubeSource.frame(spark, Seq(CubeSource.zarr(path, 10.0, 46.0, 11.0,
+      47.0, band, "2023-06-10T10:00:00Z", labels)))
 
   test("full rank-2 read: cube coordinates and values; one read per chunk") {
     val df = read(writeRank2())
