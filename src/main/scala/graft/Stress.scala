@@ -4,6 +4,7 @@ import graft.pipeline.{Dedup, Importance, LanguageModel, Repetition, Similarity,
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Dedup-family scale stress: replicate the sf0.1 documents table N× under
   * shifted ids (an adversarially dup-heavy corpus — every doc is a member
@@ -31,10 +32,10 @@ import org.apache.spark.sql.functions._
   * Results are recorded in SCALE.md's measured-scale-up table.
   */
 object Stress {
-  /** Shuffle bytes written by the stages `f` runs. Sleeps before attaching
-    * the listener (straggler stages of earlier jobs drain first) and after
-    * `f` (the listener bus delivers the timed stages); the listener is
-    * always detached.
+  /** Shuffle bytes written by the stages `f` runs. Drains the listener bus
+    * before attaching the listener (straggler stages of earlier jobs are
+    * delivered first) and after `f` (the timed stages are delivered); the
+    * listener is always detached.
     */
   private def shuffleWritten(spark: SparkSession)(f: => Unit): Long = {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)
@@ -42,9 +43,9 @@ object Stress {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         bytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    Thread.sleep(1500)
+    PlanBridge.drainListeners(spark)
     spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(1500); bytes.get() }
+    try { f; PlanBridge.drainListeners(spark); bytes.get() }
     finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -240,17 +241,18 @@ object Stress {
       force(corpus.select(col("doc_id"), Repetition.stats(col("text")).as("s")))
     } }
     // caches OFF for the corpus-sized intermediates (the r4 stress
-    // protocol): at scale the gram/trigram/window tables exceed executor
-    // storage and recomputing the scan is the cheaper, predictable path —
-    // the cached diamond is a small-corpus optimization
+    // protocol): at scale the window table exceeds executor storage and
+    // recomputing the scan is the cheaper, predictable path — the cached
+    // diamond is a small-corpus optimization (DSIR and the LM score cache
+    // nothing)
     family("score") {
       time("dsir_weights") {
         force(Importance.dsirWeights(corpus, "doc_id", col("text"),
-          col("lang") === "en", cacheGrams = false))
+          col("lang") === "en"))
       }
       time("lm_score") {
         force(LanguageModel.charTrigramScore(corpus, "doc_id", col("text"),
-          col("lang") === "en", cacheTrigrams = false))
+          col("lang") === "en"))
       }
       time("substring_dup") {
         force(Dedup.substringDupStats(corpus, "doc_id", col("text"),

@@ -19,8 +19,10 @@ object Caching {
 
   /** Eagerly materialize `out` (so every pass over `cached` hits the cache),
     * then unpersist `cached`. The returned frame reads the checkpointed
-    * blocks; its lineage is truncated, so callers needing the full lazy plan
-    * (e.g. for plan audits) should disable the operator's cache flag.
+    * blocks; its lineage is truncated, so plan audits read the plan the
+    * materializing job ran
+    * ([[org.apache.spark.sql.graftbridge.PlanBridge.executedPlans]]), where
+    * `cached` shows as an `InMemoryRelation` subtree.
     *
     * Fault tolerance: when the context has a RELIABLE checkpoint directory
     * configured (`sc.setCheckpointDir`, pointing at HDFS/object storage on
@@ -28,9 +30,7 @@ object Caching {
     * result survives executor loss and decommissioning. Without one (the
     * local[] default), it falls back to `localCheckpoint`, whose
     * executor-local blocks are NOT recomputable after executor loss; on a
-    * cluster, either set a checkpoint dir or pass the operator's
-    * `cache* = false` flag (the lazy plan recomputes from source and is
-    * always safe).
+    * cluster, set a checkpoint dir.
     */
   def scoped(out: DataFrame, cached: DataFrame): DataFrame =
     // unpersist in finally: if the eager job throws (bad input, executor

@@ -140,15 +140,13 @@ object Dedup {
     *     shuffled; counts come precomputed from the index.
     *
     * A shard doc present in the corpus under the SAME id is not its own
-    * near-dup (self-pairs are dropped). `materialize = true` (default)
-    * eagerly checkpoints the result and releases the shard-side caches —
-    * the [[graft.core.Caching]] scope discipline; pass `false` for the
-    * fully lazy plan (plan audits; caches then live with the session).
+    * near-dup (self-pairs are dropped). The result is eagerly
+    * checkpointed and the shard-side caches released — the
+    * [[graft.core.Caching]] scope discipline.
     */
   def incrementalNearNew(newDocs: DataFrame, index: MinhashIndex,
       text: Column, threshold: Double = 0.5,
-      expectedShardBands: Long = 1L << 20, fpp: Double = 0.01,
-      materialize: Boolean = true): DataFrame = {
+      expectedShardBands: Long = 1L << 20, fpp: Double = 0.01): DataFrame = {
     require(threshold > 0,
       s"incrementalNearNew: threshold must be positive ($threshold) — " +
         "zero would ask for the all-pairs cross product LSH exists to avoid")
@@ -192,13 +190,11 @@ object Dedup {
         (col("n_new") + col("n_c") - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_new"), col("id_corpus"), col("jaccard"))
-    if (!materialize) out
-    else
-      try graft.core.Caching.eager(out)
-      finally {
-        sSh.unpersist(blocking = false)
-        sBands.unpersist(blocking = false)
-      }
+    try graft.core.Caching.eager(out)
+    finally {
+      sSh.unpersist(blocking = false)
+      sBands.unpersist(blocking = false)
+    }
   }
 
   /** CCNet-style LINE-level dedup (Wenzek et al. 2020, public): split each
@@ -412,21 +408,17 @@ object Dedup {
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → candidate
     * pairs → exact-Jaccard verify → threshold.
     *
-    * `cacheShingles` persists the shingle table, which feeds BOTH the
-    * signature branch and the verification branch, so the diamond DAG
-    * tokenizes the corpus once. The cache entry outlives this call (Spark
-    * caches by logical plan); long-running sessions should either pass
-    * `false` (recompute — at cluster scale a checkpoint is the usual
-    * third option) or drop it with `spark.catalog.clearCache()` once the
-    * result is materialised.
+    * The shingle table is persisted: it feeds BOTH the signature branch
+    * and the verification branch, so the diamond DAG tokenizes the corpus
+    * once. The result stays lazy, so the cache entry outlives this call
+    * (Spark caches by logical plan) until the caller clears it — with
+    * `spark.catalog.clearCache()` once the result is materialised.
     */
   def minhashNearDups(df: DataFrame, idCol: String, text: Column,
       shingleLen: Int = 3, k: Int = 32, rowsPerBand: Int = 4,
-      threshold: Double = 0.5, cacheShingles: Boolean = true): DataFrame = {
-    val shBase = shingles(df, idCol, text, shingleLen)
-    val sh = if (cacheShingles)
-      shBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else shBase
+      threshold: Double = 0.5): DataFrame = {
+    val sh = shingles(df, idCol, text, shingleLen)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wide = minhashSignaturesWide(sh, idCol, k)
     val bands = lshBandKeysWide(wide, idCol, k, rowsPerBand)
     val pairs = lshCandidatePairs(bands, idCol)
@@ -801,6 +793,13 @@ object Dedup {
     * path's prefix cutoff are rejected — a tiny threshold makes any exact
     * algorithm near-quadratic; use [[ngramContainment]]-style asymmetric
     * screens there instead.
+    *
+    * `cachePrefix` (default on) persists the slim prefix index for its two
+    * consumers and returns the checkpointed result. Off, the prefix build
+    * recomputes per consumer and the result stays lazy: [[graft.Stress]]'s
+    * recorded scale protocol runs it off, because at 5M docs the cached
+    * index does not fit the stress box's disk (SCALE.md, "R-S fuzzy join
+    * at 5M docs").
     */
   def jaccardJoin(left: DataFrame, right: DataFrame, idCol: String,
       text: Column, shingleLen: Int = 3, threshold: Double = 0.5,
@@ -853,8 +852,7 @@ object Dedup {
           .as("shingle"))
     // two consumers (L and R arms) — scope a cache over the slim index so
     // the df join + per-doc sort run once ([[lineDedup]] diamond
-    // discipline); `cachePrefix = false` keeps the pure lazy plan for
-    // plan audits / cache-hostile deployments
+    // discipline)
     val prefix =
       if (cachePrefix) prefixPlan
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1001,6 +999,13 @@ object Dedup {
     * the cost of detection granularity — the paper's suffix-array
     * formulation is exact-to-the-byte but needs a global sort; stride
     * windows are the shuffle-friendly approximation.
+    *
+    * `cacheWindows` (default on) persists the window table for its two
+    * consumers and returns the checkpointed stats. Off, the windows
+    * recompute per consumer and the result stays lazy: [[graft.Stress]]'s
+    * recorded scale protocol runs it off, because a corpus-sized window
+    * table outgrows executor storage and recomputing the scan is the
+    * cheaper, predictable path there (SCALE.md, corpus-sized caches off).
     */
   def substringDupStats(df: DataFrame, idCol: String, text: Column,
       k: Int = 40, stride: Int = 10,

@@ -113,18 +113,15 @@ object Importance {
     * distribution is the whole pool, per the paper's raw/target setup.
     */
   def dsirWeights(df: DataFrame, idCol: String, text: Column,
-      isTarget: Column, buckets: Int = 512, scale: Long = 1000000L,
-      cacheGrams: Boolean = true): DataFrame = {
+      isTarget: Column, buckets: Int = 512, scale: Long = 1000000L): DataFrame = {
     // the bucket census is ≤ `buckets` rows BY CONSTRUCTION — collect it,
     // fold the totals driver-side, and inline the per-bucket weights as a
     // LITERAL map: the scoring pass is then ONE codegen'd scan over the
     // corpus (the DsirUnits expression) with no second gram explode, no
-    // groupBy, no join — and therefore nothing for `cacheGrams` to cache
-    // (the parameter is retained for source compatibility; the census and
-    // the scoring scan each read the corpus once either way). Mirrors the
-    // Spark double arithmetic exactly, so scores are bit-identical to the
+    // groupBy, no join — and therefore nothing to cache (the census and
+    // the scoring scan each read the corpus once). Mirrors the Spark
+    // double arithmetic exactly, so scores are bit-identical to the
     // historical explode → map-lookup → groupBy → join form.
-    val _ = cacheGrams
     val units =
       dsirUnits(text, censusWeights(df, text, isTarget, buckets, scale), buckets)
     df.select(col(idCol), units.as("score_units"))

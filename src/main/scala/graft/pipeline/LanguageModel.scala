@@ -42,10 +42,9 @@ object LanguageModel {
     * one trigram — an empty model has no distribution to score against
     * (every trigram scores the smoothed-unseen constant).
     *
-    * `cacheTrigrams` is retained for source compatibility but is a no-op:
-    * since the model derives from its own target-only pass, the corpus
-    * trigram rows have exactly one consumer in either path — there is no
-    * diamond left to cache.
+    * Nothing is cached: the model derives from its own target-only pass,
+    * so the corpus trigram rows have exactly one consumer — there is no
+    * diamond to cache.
     *
     * Models up to `literalGate` distinct trigrams inline as a plan literal
     * (foldable, oracle-friendly); larger ones ship as a Spark BROADCAST
@@ -119,7 +118,6 @@ object LanguageModel {
 
   def charTrigramScore(df: DataFrame, idCol: String, text: Column,
       isTarget: Column, scale: Long = 1000000L,
-      cacheTrigrams: Boolean = true,
       modelGate: Long = 1L << 20,
       literalGate: Int = 100000): DataFrame = {
     // Materialize the normalized string as a NAMED column before the HOF:

@@ -46,21 +46,17 @@ object LinkGraph {
     * for every node that appears as a src or dst — rank_units in 1e-12
     * units of probability mass.
     *
-    * `materialize = true` (default) eagerly checkpoints the result and
-    * releases the node/edge caches before returning (the
-    * [[graft.core.Caching]] scope discipline — nothing leaks into the
-    * caller's session); pass `false` to get the full lazy plan for plan
-    * audits (the caches then live until the session drops them).
+    * The result is eagerly checkpointed and the node/edge caches are
+    * released before returning (the [[graft.core.Caching]] scope
+    * discipline — nothing leaks into the caller's session).
     *
     * Deep iteration: the rank plan unrolls per iteration, so Catalyst
-    * analysis cost grows with `iters`; on the materialized path a LAZY
-    * lineage truncation ([[graft.core.Caching.deferred]]) every
-    * `checkpointEvery` iterations caps plan depth at O(checkpointEvery)
-    * without adding driver actions — the single final action computes
-    * through the chained checkpoint placeholders, so k=50 costs the same
-    * analysis as k=10 five times, not a 50-deep plan. The audit path
-    * (`materialize = false`) stays fully lazy by design: plan audits need
-    * the un-truncated tree, and run at small k. Retention note: on the
+    * analysis cost grows with `iters`; a LAZY lineage truncation
+    * ([[graft.core.Caching.deferred]]) every `checkpointEvery` iterations
+    * caps plan depth at O(checkpointEvery) without adding driver actions
+    * — the single final action computes through the chained checkpoint
+    * placeholders, so k=50 costs the same analysis as k=10 five times,
+    * not a 50-deep plan. Retention note: on the
     * local-checkpoint path the superseded per-boundary rank tables'
     * blocks are reference-tracked, not explicitly released (see
     * [[graft.core.Caching.deferred]]) — bounded at O(iters/checkpointEvery
@@ -68,10 +64,9 @@ object LinkGraph {
     * matters in a long-lived driver.
     */
   def pageRank(edges: DataFrame, iters: Int,
-               materialize: Boolean = true,
                checkpointEvery: Int = 10,
                tolUnits: Option[Long] = None): DataFrame =
-    pageRankRun(edges, iters, materialize, checkpointEvery, tolUnits)._1
+    pageRankRun(edges, iters, checkpointEvery, tolUnits)._1
 
   /** [[pageRank]] plus the number of iterations actually executed —
     * observable evidence for the convergence contract (specs assert the
@@ -79,8 +74,8 @@ object LinkGraph {
     * run).
     *
     * Convergence (`tolUnits`): at each truncation boundary the rank
-    * table is EAGERLY materialized (the same point the lazy path would
-    * truncate at), ONE further iteration is computed and materialized,
+    * table is EAGERLY materialized (the same point the tolerance-free run
+    * truncates at), ONE further iteration is computed and materialized,
     * and the L1 delta in integer units BETWEEN THOSE CONSECUTIVE
     * iterations is tested — an O(nodes) equi-join of two checkpointed
     * tables. The consecutive-iteration delta is the sound test: a
@@ -95,21 +90,16 @@ object LinkGraph {
     * Positive tolerances trade that exactness for earlier cutoff (the
     * usual production choice). The confirmation iteration is never
     * wasted — it becomes the continuation state (and counts in the
-    * returned iteration tally). Requires `materialize` (the check needs
-    * actions; the audit path stays single-plan lazy) and
-    * `checkpointEvery < iters` (otherwise no boundary is ever reached
-    * and the requested cutoff would be silently inert).
+    * returned iteration tally). Requires `checkpointEvery < iters`
+    * (otherwise no boundary is ever reached and the requested cutoff
+    * would be silently inert).
     */
   def pageRankRun(edges: DataFrame, iters: Int,
-               materialize: Boolean = true,
                checkpointEvery: Int = 10,
                tolUnits: Option[Long] = None): (DataFrame, Int) = {
     require(checkpointEvery > 0,
       s"pageRank: checkpointEvery must be positive ($checkpointEvery)")
     require(iters >= 0, s"pageRank: negative iterations ($iters)")
-    require(tolUnits.isEmpty || materialize,
-      "pageRank: tolUnits needs materialize = true (convergence testing " +
-        "runs actions; the lazy audit path cannot)")
     require(tolUnits.forall(_ >= 0),
       s"pageRank: negative tolerance (${tolUnits.get})")
     require(tolUnits.isEmpty || checkpointEvery < iters,
@@ -119,7 +109,7 @@ object LinkGraph {
     val cols = edges.columns.toSet
     require(cols.contains("src") && cols.contains("dst"),
       s"pageRank: edge frame needs (src, dst), got ${edges.columns.mkString(",")}")
-    // The materialized run plans with AQE OFF (optimization guide §1.2,
+    // The loop plans with AQE OFF (optimization guide §1.2,
     // cut driver-paced jobs). Every exchange this dataflow runs is
     // NODE-table-sized by construction: the rank/inflow/node frames are
     // O(nodes), and the edge-sized work rides the persisted cache and
@@ -135,15 +125,11 @@ object LinkGraph {
     // rebound to the clone by logical plan, and the result is rebound to
     // the caller's session the same way below. The caller's conf is never
     // written, so a thread sharing its session keeps planning with AQE.
-    // The audit path (materialize = false) runs no actions and stays on
-    // the caller's session.
     val caller = edges.sparkSession
-    val input =
-      if (!materialize) edges
-      else PlanBridge.frame(
-        graft.core.SparkTuning.scopedSession(caller,
-          "spark.sql.adaptive.enabled" -> "false"),
-        edges.queryExecution.analyzed)
+    val input = PlanBridge.frame(
+      graft.core.SparkTuning.scopedSession(caller,
+        "spark.sql.adaptive.enabled" -> "false"),
+      edges.queryExecution.analyzed)
     // project away extra payload columns so they can't collide with the
     // internal helper names (_n/_deg/_c/_in/node/rank_units)
     val e = input.select(col("src"), col("dst"))
@@ -186,7 +172,7 @@ object LinkGraph {
       ranks = step(ranks)
       ranksMaterialized = false
       i += 1
-      if (materialize && i % checkpointEvery == 0 && i < iters) {
+      if (i % checkpointEvery == 0 && i < iters) {
         if (tolUnits.isDefined) {
           // Convergence boundary as ONE compute action (optimization
           // guide §1.2: fewer driver-paced jobs): iteration i and the
@@ -222,14 +208,11 @@ object LinkGraph {
         }
       }
     }
-    if (!materialize) (ranks, i)
-    else {
-      val out =
-        if (ranksMaterialized) ranks else graft.core.Caching.eager(ranks)
-      releases.foreach(_.apply())
-      nodes.unpersist(blocking = false)
-      ej.unpersist(blocking = false)
-      (PlanBridge.frame(caller, out.queryExecution.analyzed), i)
-    }
+    val out =
+      if (ranksMaterialized) ranks else graft.core.Caching.eager(ranks)
+    releases.foreach(_.apply())
+    nodes.unpersist(blocking = false)
+    ej.unpersist(blocking = false)
+    (PlanBridge.frame(caller, out.queryExecution.analyzed), i)
   }
 }

@@ -44,7 +44,7 @@ object Retrieval {
     * (count + Σdl; they must cover docs with NO query term, which is
     * exactly why the projection, not the postings, is the shared base).
     *
-    * Under `cache` the narrow projection persists LAZILY (row width is a
+    * The narrow projection persists LAZILY (row width is a
     * long + the few matched terms; spills at any scale): the first
     * consumer populates the blocks, every other pass reuses them, and the
     * caller scope-releases via the returned handle once its result is
@@ -54,23 +54,17 @@ object Retrieval {
     * checkpointed the postings (a blocking job inside the query) — 2×
     * slower; r18 is this shape — tokenize once, broadcast-only joins, no
     * eager job beyond the caller's single scoped materialization.
-    * `cache = false` keeps the plan fully lazy (the scan recomputes per
-    * consumer): the shape plan audits inspect, and the safe choice for
-    * explain-only callers.
     *
     * @return (postings agg (id, term, tf, dl), one-row stats
     *         (n_docs, total_tok), the persisted base to scope-release)
     */
   private def tokenizedPostings(docs: DataFrame, id: Column,
-      textCol: String, qArr: Column, cache: Boolean)
-      : (DataFrame, DataFrame, Option[DataFrame]) = {
+      textCol: String, qArr: Column): (DataFrame, DataFrame, DataFrame) = {
     val toks = TextAnalysis.tokens(col(textCol))
-    val proj = docs.select(id,
+    val base = docs.select(id,
       TextAnalysis.tokenCount(col(textCol)).as("dl"),
       filter(toks, t => array_contains(qArr, t)).as("_terms"))
-    val base = if (cache)
-      proj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else proj
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // postings: O(docs-containing-q-terms) rows; read twice downstream
     // (df_ and the scoring join), cheap to re-derive from the cached base
     val tf = base
@@ -81,7 +75,7 @@ object Retrieval {
     // shuffling exactly one row — broadcast by the caller
     val stats = base.agg(
       count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tok"))
-    (tf, stats, if (cache) Some(base) else None)
+    (tf, stats, base)
   }
 
   /** The exact integer micro-unit BM25 term score over a frame carrying
@@ -108,8 +102,7 @@ object Retrieval {
     */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int,
                idCol: String = "doc_id", textCol: String = "text",
-               k1: Double = 1.2, b: Double = 0.75,
-               cachePostings: Boolean = true): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK: empty query")
     require(queryTerms.map(_.trim.toLowerCase).distinct.size == queryTerms.size,
       "bm25TopK: query terms must be distinct after normalization")
@@ -124,8 +117,7 @@ object Retrieval {
     // the HOF filter runs inside the scan projection, before explode, so
     // non-query tokens die in the scan stage — see [[tokenizedPostings]]
     // for the full single-scan shape and its history
-    val (tf, stats, cached) =
-      tokenizedPostings(docs, id, textCol, qArr, cachePostings)
+    val (tf, stats, cached) = tokenizedPostings(docs, id, textCol, qArr)
     val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val out = tf
       .join(broadcast(df_), "term")
@@ -134,7 +126,7 @@ object Retrieval {
       .groupBy(id).agg(sum(col("_u")).as("score_units"))
       .orderBy(col("score_units").desc, id.asc)
       .limit(k)
-    cached.fold(out)(c => graft.core.Caching.scoped(out, c))
+    graft.core.Caching.scoped(out, cached)
   }
 
   /** BATCH retrieval: top-k BM25 hits for EVERY query in a query table —
@@ -161,8 +153,7 @@ object Retrieval {
       queryIdCol: String = "query_id", queryTermCol: String = "term",
       idCol: String = "doc_id", textCol: String = "text",
       k1: Double = 1.2, b: Double = 0.75,
-      maxTerms: Int = 1 << 20,
-      cachePostings: Boolean = true): DataFrame = {
+      maxTerms: Int = 1 << 20): DataFrame = {
     val internal = Set("term", "tf", "df", "dl", "n_docs", "total_tok",
       "score_units", "_u")
     require(!internal.contains(idCol) && !internal.contains(queryIdCol),
@@ -199,8 +190,8 @@ object Retrieval {
     // dl rides the postings projection in BOTH arms (`first(dl)` in the
     // map-side-combinable tf agg reconstructs it per doc), so no
     // corpus-keyed (id, dl) join exists anywhere in the plan — same
-    // single-tokenization shape as [[bm25TopK]] (see its cachePostings
-    // note for the r16→r18 history). Small arm: the narrow
+    // single-tokenization shape as [[bm25TopK]] (see [[tokenizedPostings]]
+    // for the r16→r18 history). Small arm: the narrow
     // (id, dl, matched-terms) projection is the shared, lazily-persisted
     // base for postings AND stats — ONE tokenize pass total. Large arm:
     // the matched set can't ride the scan as a literal, so the token
@@ -210,23 +201,20 @@ object Retrieval {
     // read twice by df_ and the scoring join.
     val (tf, stats, cached) =
       if (terms.size <= literalGate) {
-        tokenizedPostings(docs, id, textCol, array(terms.map(lit): _*),
-          cachePostings)
+        tokenizedPostings(docs, id, textCol, array(terms.map(lit): _*))
       } else {
         val termFrame = qt.select(col("term")).distinct()
-        val tfPlan = docs
+        val tfB = docs
           .select(id, TextAnalysis.tokenCount(col(textCol)).as("dl"),
             explode(toks).as("term"))
           .join(broadcast(termFrame), Seq("term"), "left_semi")
           .groupBy(id, col("term"))
           .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-        val tfB = if (cachePostings)
-          tfPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else tfPlan
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val statsB = docs.agg(
           count(lit(1)).as("n_docs"),
           sum(TextAnalysis.tokenCount(col(textCol))).as("total_tok"))
-        (tfB, statsB, if (cachePostings) Some(tfB) else None)
+        (tfB, statsB, tfB)
       }
     val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
 
@@ -248,6 +236,6 @@ object Retrieval {
       .select(col(queryIdCol), (col("pos") + 1).cast("long").as("rank"),
         col("e.id").as(idCol),
         col("e.v").cast("long").as("score_units"))
-    cached.fold(out)(c => graft.core.Caching.scoped(out, c))
+    graft.core.Caching.scoped(out, cached)
   }
 }

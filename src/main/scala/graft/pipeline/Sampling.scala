@@ -100,7 +100,7 @@ object Sampling {
     * mirrors it that way) at any partition count.
     */
   def packSequences(df: DataFrame, idCol: String, tok: Column, budget: Int,
-      nBuckets: Int = 256, cacheBase: Boolean = true): DataFrame = {
+      nBuckets: Int = 256): DataFrame = {
     require(budget > 0 && nBuckets > 0)
     // The packer consumes its (id, n_tok) projection THREE times — the
     // max-id probe, the bucket-sums collect, and the final windowed plan
@@ -114,13 +114,9 @@ object Sampling {
     // probe populates the cache, the collect and the final plan read it,
     // and Caching.scoped hands back an eagerly-materialized result that
     // releases the cache without leaking it into the caller's session.
-    // `cacheBase = false` restores the fully lazy chain.
-    val base0 = df.select(col(idCol).cast("long").as("_id"),
+    val base = df.select(col(idCol).cast("long").as("_id"),
       tok.cast("long").as("n_tok"))
-    val base =
-      if (cacheBase)
-        base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val maxRow = base.agg(max(col("_id"))).first()
     // an empty corpus (every doc gated away upstream) must pack to an
     // empty frame, not crash the max-id probe with a null-row error —
@@ -128,7 +124,7 @@ object Sampling {
     if (maxRow.isNullAt(0)) {
       val empty = base.select(col("_id").as(idCol), col("n_tok"),
         lit(0L).as("bin"), lit(0L).as("offset_in_bin"))
-      return if (cacheBase) graft.core.Caching.scoped(empty, base) else empty
+      return graft.core.Caching.scoped(empty, base)
     }
     val maxId = maxRow.getLong(0)
     val span = maxId / nBuckets + 1
@@ -148,7 +144,7 @@ object Sampling {
     val out = withB.join(broadcast(offDf), "_b")
       .select(col("_id").as(idCol), col("n_tok"), bin.as("bin"),
         (start - bin * budget).as("offset_in_bin"))
-    if (cacheBase) graft.core.Caching.scoped(out, base) else out
+    graft.core.Caching.scoped(out, base)
   }
 
   /** EXACT per-stratum quota: ⌈frac·n⌉ rows of every stratum, chosen by
@@ -371,42 +367,31 @@ object Sampling {
     * (1000−keepPm)·n/1000 is integral), PLUS every row TYING the
     * threshold value (a threshold gate, not an exact quota).
     *
-    * Two cost regimes, because the gate reads the corpus twice (once for
-    * the sketch, once for the filter):
-    *  - `cacheScored = false` (the lazy shape): right when `scoreQ` is a
-    *    STORED column — two cheap scans, zero corpus shuffles, nothing
-    *    materialized. This is the 100-TB production shape (scores are
-    *    written once by the scoring stage).
-    *  - `cacheScored = true` (default): right when `scoreQ` is an
-    *    EXPENSIVE inline expression (tokenizing regexps) — the scored
-    *    projection persists once (spill-safe MEMORY_AND_DISK), both
-    *    passes read it, and the [[graft.core.Caching.scoped]] discipline
-    *    eagerly materializes the gated output and releases the cache so
-    *    nothing leaks into the caller's session. Measured at 100× gate
-    *    data: the uncached form re-paid the score expression and lost to
-    *    the window quota (113 s vs 44 s); the cached form pays it once.
+    * The gate reads the corpus twice (once for the sketch, once for the
+    * filter), and `scoreQ` may be an EXPENSIVE inline expression
+    * (tokenizing regexps): the scored projection persists once
+    * (spill-safe MEMORY_AND_DISK), both passes read it, and the
+    * [[graft.core.Caching.scoped]] discipline eagerly materializes the
+    * gated output and releases the cache so nothing leaks into the
+    * caller's session. Measured at 100× gate data: an uncached form
+    * re-paid the score expression and lost to the window quota (113 s vs
+    * 44 s); the cached form pays it once.
     */
   def scoreThresholdGate(df: DataFrame, scoreQ: Column,
-      strataCols: Seq[String], keepPm: Int, capacity: Int = 2048,
-      cacheScored: Boolean = true): DataFrame = {
+      strataCols: Seq[String], keepPm: Int, capacity: Int = 2048): DataFrame = {
     require(keepPm >= 1 && keepPm <= 1000,
       s"scoreThresholdGate: keepPm must be in [1, 1000], got $keepPm")
-    def gate(base: DataFrame, score: Column): DataFrame = {
-      val thr = base
-        .groupBy(strataCols.map(col): _*)
-        .agg(graft.functions.QuantileSketchAgg.column(
-          score, lit(1L), capacity, Seq(1000 - keepPm)).as("_qp"))
-        .select(strataCols.map(col) :+
-          element_at(col("_qp"), 1).getField("v").as("_thr"): _*)
-      base.join(broadcast(thr), strataCols).filter(score >= col("_thr"))
-        .drop("_thr")
-    }
-    if (!cacheScored) gate(df, scoreQ)
-    else {
-      val scored = df.withColumn("_sq", scoreQ)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.Caching.scoped(gate(scored, col("_sq")).drop("_sq"), scored)
-    }
+    val scored = df.withColumn("_sq", scoreQ)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val thr = scored
+      .groupBy(strataCols.map(col): _*)
+      .agg(graft.functions.QuantileSketchAgg.column(
+        col("_sq"), lit(1L), capacity, Seq(1000 - keepPm)).as("_qp"))
+      .select(strataCols.map(col) :+
+        element_at(col("_qp"), 1).getField("v").as("_thr"): _*)
+    val out = scored.join(broadcast(thr), strataCols)
+      .filter(col("_sq") >= col("_thr")).drop("_thr", "_sq")
+    graft.core.Caching.scoped(out, scored)
   }
 
   /** EXACT-k WEIGHTED sample without replacement (Efraimidis-Spirakis

@@ -233,7 +233,8 @@ object StacLoader {
     * partitions, row/col mapped onto the item bbox. Each reachable asset
     * is mounted once, here: its header is parsed and carried into every
     * later plan, and a header that does not parse (a corrupt TIFF, a zarr
-    * store of rank other than 2 or 3) fails the load. Only an UNREACHABLE
+    * store of rank other than 2 or 3) or temporal labels that do not label
+    * a zarr store's axis-0 slices one each fail the load. Only an UNREACHABLE
     * href (an object-store URI with no local copy) falls back to a
     * deterministic fake grid; the plumbing (asset table → cell fan-out →
     * long-form cube) is identical either way.
@@ -267,8 +268,9 @@ object StacLoader {
     // (filter_bbox / filter_temporal post load_stac) prunes reads the
     // same way, the engine's twin of the reference's dask lazy slicing
     // (cubes/load.py:245-310). Zarr axis semantics live in the source:
-    // rank 3 is a time axis when the item's cube:dimensions temporal
-    // labels match axis 0, else the common Sentinel (band, row, col).
+    // rank 3 is a time axis when the item declares cube:dimensions
+    // temporal labels (one per axis-0 slice, or the mount fails), else
+    // the common Sentinel (band, row, col).
     val realParts =
       if (real.isEmpty) Nil else Seq(v2.CubeSource.frame(spark, real))
     val fakeParts =

@@ -81,12 +81,21 @@ object CubeSource {
     private[v2] def plan(e: Extent): Seq[CubeRead] = TiffSegments.plan(this, e)
   }
 
-  /** Mount a zarr store from STAC item fields (ISO datetimes). */
+  /** Mount a zarr store from STAC item fields (ISO datetimes). Temporal
+    * labels, when the item declares them, label axis 0 of a rank-3 store
+    * one slice each; any other count fails the mount.
+    */
   def zarr(path: String, west: Double, south: Double, east: Double,
       north: Double, band: String, datetime: String,
-      timeLabels: Seq[String] = Nil): ZarrAsset =
+      timeLabels: Seq[String] = Nil): ZarrAsset = {
+    val meta = zarrMeta(path)
+    val slices = if (meta.shape.size == 3) meta.shape(0) else 0
+    require(timeLabels.isEmpty || timeLabels.size == slices,
+      s"CubeSource: ${timeLabels.size} temporal labels for a zarr axis 0 " +
+        s"of $slices slices")
     ZarrAsset(path, west, south, east, north, band, parseMicros(datetime),
-      zarrMeta(path), timeLabels.map(parseMicros).toArray)
+      meta, timeLabels.map(parseMicros).toArray)
+  }
 
   /** Mount a TIFF (full resolution) from STAC item fields. */
   def tiff(path: String, west: Double, south: Double, east: Double,

@@ -8,17 +8,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Zarr read planner of [[CubeScan]]: the pushed extent → the chunk reads
   * of one store ([[ZarrReader.planChunks]] over the translated index
   * ranges). Axis semantics: rank 2 = (row=y, col=x); rank 3 with time
-  * labels matching axis 0 = (time, row, col), each slice carrying its
-  * label as `t`; any other rank 3 = (band, row, col) with `bands` =
-  * `<band>_<i>`. A constant datetime or band name outside the pushed
-  * extent empties the asset without touching its chunks.
+  * labels = (time, row, col), each slice carrying its label as `t` (the
+  * mount checked one label per axis-0 slice); any other rank 3 = (band,
+  * row, col) with `bands` = `<band>_<i>`. A constant datetime or band
+  * name outside the pushed extent empties the asset without touching its
+  * chunks.
   */
 private[v2] object ZarrChunks {
 
   def plan(a: CubeSource.ZarrAsset, e: Extent): Seq[CubeRead] = {
     val meta = a.meta
     val rank = meta.shape.size
-    val timeAxis = rank == 3 && a.labelMicros.length == meta.shape(0)
+    val timeAxis = a.labelMicros.nonEmpty
     val (nr, nc) = (meta.shape(rank - 2).toLong, meta.shape(rank - 1).toLong)
     val rr = CubeScanUtil.axisRange(e.y._1, e.y._2, a.south, a.north - a.south, nr)
     val cr = CubeScanUtil.axisRange(e.x._1, e.x._2, a.west, a.east - a.west, nc)

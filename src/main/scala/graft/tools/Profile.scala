@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import scala.collection.mutable
 
@@ -73,7 +74,7 @@ object Profile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       if (record) {
-        Thread.sleep(300) // let the listener bus drain before reading
+        PlanBridge.drainListeners(spark) // deliver every job before reading
         spark.sparkContext.removeSparkListener(listener)
       }
       println(f"== $tag $name total $wall%.3f s")

@@ -5,6 +5,7 @@ import graft.functions.{Reducers, Scalar}
 import graft.operators._
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics tests on tiny synthetic cubes, mirroring the reference's unit
@@ -85,10 +86,10 @@ class CubeCoreSpec extends AnyFunSuite {
       // eager anti-join jobs during case dispatch. With metadata labels the
       // dispatch is driver-side only: building the plan runs NOTHING.
       val merged = MergeOps.mergeCubes(c1, c2, None)
-      Thread.sleep(500) // listener bus is async
+      PlanBridge.drainListeners(spark) // listener bus is async
       assert(jobs.get() == 0, "mergeCubes planning must not launch Spark jobs")
       assert(merged.df.count() == 4) // the stacked cube, now actually run
-      Thread.sleep(500)
+      PlanBridge.drainListeners(spark)
       assert(jobs.get() > 0) // sanity: the listener does see real jobs
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -105,7 +106,7 @@ class CubeCoreSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       val merged = MergeOps.mergeCubes(c1, c2, None)
-      Thread.sleep(500)
+      PlanBridge.drainListeners(spark)
       // ONE combined action; AQE materialises its shuffle stages as up to 3
       // jobs. The old dispatch ran 2 anti-join actions PER dim (4 actions /
       // ~8+ jobs on this 2-dim cube).

@@ -12,8 +12,12 @@ class ExplainDumpSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](ExplainDump.parseConf(bad))
   }
 
-  test("lazy plan forms never shadow a registry query") {
-    assert(ExplainDump.lazyForms.keySet.intersect(SparkEntry.queries.keySet)
-      .isEmpty)
+  test("the dump shows the plans a checkpointing query ran") {
+    // substring_dup returns a checkpoint, whose own plan is only the
+    // checkpoint scan; its materializing job hash-partitions the window
+    // keys, and the dump must show that exchange
+    val out = ExplainDump.dump(TestSession.spark, "/root/testdata/sf0.001",
+      "substring_dup")
+    assert("Exchange hashpartitioning\\(wkey".r.findFirstIn(out).isDefined, out)
   }
 }

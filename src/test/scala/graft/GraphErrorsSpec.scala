@@ -4,6 +4,7 @@ import graft.core._
 import graft.plans.ProcessGraph
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The openEO TYPED ERROR contract, asserted through the GRAPH entry
@@ -687,12 +688,12 @@ class GraphErrorsSpec extends AnyFunSuite {
     spark.sparkContext.setJobGroup(group, "zero-job check")
     try {
       val e = errorOf(unknown)
-      Thread.sleep(500) // listener bus is async
+      PlanBridge.drainListeners(spark) // listener bus is async
       assert(e.contains("ProcessUnsupported: definitely_not_a_process"), e)
       assert(jobs.get == 0, s"${jobs.get} Spark jobs ran before the error")
       // sanity: the same reduce as the result collects its labels
       ProcessGraph.execute(spark, graph(""", "result": true}"""), _ => cube)
-      Thread.sleep(500)
+      PlanBridge.drainListeners(spark)
       assert(jobs.get > 0)
     } finally {
       spark.sparkContext.clearJobGroup()

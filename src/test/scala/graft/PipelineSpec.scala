@@ -78,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
     // keep only the cross pairs — the equivalence the driver row's
     // oracle gates at corpus scale
     val allPairs: Set[(Long, Long)] = Dedup.minhashNearDups(
-        shard.union(corpus), "doc_id", col("text"), cacheShingles = false)
+        shard.union(corpus), "doc_id", col("text"))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val want = allPairs
       .filter { case (a, b) => (a >= 10L) != (b >= 10L) }
@@ -1193,8 +1193,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val full = asMap(Dedup.connectedComponents(
       Dedup.minhashNearDups(base, "doc_id", col("text"),
-        shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3,
-        cacheShingles = false))
+        shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3))
       .select(col("node").as("doc_id"), col("cluster")))
     val collapsed = asMap(Dedup.nearDupClustersCollapsed(base, "doc_id",
       col("text"), shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3,
@@ -1228,8 +1227,7 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val full = asMap(Dedup.connectedComponents(
       Dedup.minhashNearDups(base, "doc_id", col("text"),
-        shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3,
-        cacheShingles = false))
+        shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3))
       .select(col("node").as("doc_id"), col("cluster")))
     val collapsed = asMap(Dedup.nearDupClustersCollapsed(base, "doc_id",
       col("text"), shingleLen = 2, k = 16, rowsPerBand = 2, threshold = 0.3,

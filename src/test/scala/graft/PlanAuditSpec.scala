@@ -22,8 +22,10 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def shuffles(df: DataFrame): Int =
-    "Exchange (?:hash|range)partitioning".r.findAllIn(plan(df)).length
+  private def shuffles(df: DataFrame): Int = shufflesIn(plan(df))
+
+  private def shufflesIn(p: String): Int =
+    "Exchange (?:hash|range)partitioning".r.findAllIn(p).length
 
   test("filter_temporal predicates reach the parquet scan as PushedFilters") {
     val c = Tables.eventsCube(spark, dir)
@@ -173,10 +175,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val idx = pipeline.Dedup.minhashIndex(
       docs.filter(col("doc_id") % 10 =!= 0), "doc_id", col("text"))
-    val near = pipeline.Dedup.incrementalNearNew(
-      docs.filter(col("doc_id") % 10 === 0), idx, col("text"),
-      materialize = false)
-    val p = plan(near)
+    val p = RanPlans(pipeline.Dedup.incrementalNearNew(
+      docs.filter(col("doc_id") % 10 === 0), idx, col("text")))
     // the shard's bloom filters the CORPUS index's band rows before the
     // candidate join — at 100 TB the standing band table contributes
     // only bloom-admitted rows (true bucket collisions + ~fpp noise) to
@@ -193,13 +193,12 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("fuzzy join: set arrays never shuffle — exchanges carry census + prefix only") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val fj = pipeline.Dedup.jaccardJoin(
+    val p = RanPlans(pipeline.Dedup.jaccardJoin(
       docs.filter(col("doc_id") % 10 === 0),
-      docs.filter(col("doc_id") % 10 =!= 0), "doc_id", col("text"),
-      3, 0.5, cachePrefix = false) // lazy plan for the audit
-    val p = plan(fj)
+      docs.filter(col("doc_id") % 10 =!= 0), "doc_id", col("text"), 3, 0.5))
     // no Exchange's partitioning or output carries a _set array: the
-    // verification arrays are built at the scan on the join's probe side
+    // verification arrays are built at the scan on the join's probe side;
+    // the cached prefix index's own exchanges show in its InMemoryRelation
     val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
     assert(exchanges.nonEmpty)
     assert(!exchanges.exists(_.contains("_set")), exchanges.mkString("\n"))
@@ -266,25 +265,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan(crawl).contains("CartesianProduct") &&
       !plan(crawl).contains("BroadcastNestedLoopJoin"), plan(crawl))
     assert(!plan(crawl).contains("Exchange SinglePartition"), plan(crawl))
-    // The scope-cached operators (dsirWeights / substringDupStats /
-    // charTrigramScore) checkpoint their result, which truncates the lineage
-    // the audit needs — inspect the cache-disabled form, which is the SAME
-    // plan minus the InMemoryRelation nodes.
+    // substringDupStats checkpoints its result, which truncates the
+    // lineage: audit the plan its materializing job ran, the cached window
+    // table as an InMemoryRelation subtree
     val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val sub = RanPlans(
+      pipeline.Dedup.substringDupStats(docs, "doc_id", col("text")))
     val audited = Seq(
-      "dsir_weights" -> pipeline.Importance.dsirWeights(docs, "doc_id",
-        col("text"), col("lang") === "en", cacheGrams = false),
-      "substring_dup" -> pipeline.Dedup.substringDupStats(docs, "doc_id",
-        col("text"), cacheWindows = false),
-      "lm_score" -> pipeline.LanguageModel.charTrigramScore(docs, "doc_id",
-        col("text"), col("lang") === "en", cacheTrigrams = false))
-    for ((q, df) <- audited)
-      assert(!plan(df).contains("CartesianProduct"), s"$q: ${plan(df)}")
+      "dsir_weights" -> plan(pipeline.Importance.dsirWeights(docs, "doc_id",
+        col("text"), col("lang") === "en")),
+      "substring_dup" -> sub,
+      "lm_score" -> plan(pipeline.LanguageModel.charTrigramScore(docs,
+        "doc_id", col("text"), col("lang") === "en")))
+    for ((q, p) <- audited)
+      assert(!p.contains("CartesianProduct"), s"$q: $p")
     // substring-dup's window table is corpus-sized: IT must never collapse
     // to a single partition
-    val sub = pipeline.Dedup.substringDupStats(docs, "doc_id", col("text"),
-      cacheWindows = false)
-    assert(!plan(sub).contains("Exchange SinglePartition"), plan(sub))
+    assert(!sub.contains("Exchange SinglePartition"), sub)
   }
 
   test("line dedup shuffles fixed-width keys only — line text never moves") {
@@ -483,19 +480,16 @@ class PlanAuditSpec extends AnyFunSuite {
     // the scale path must never sort a stratum: ONE hash exchange (the
     // per-source sketch agg, O(capacity) records), thresholds broadcast
     // back onto the scan — no Window, no shuffled join. Audited on the
-    // LAZY stored-score shape (cacheScored = false); the driver row's
-    // default caches the scored projection, whose audited plan would be
-    // the checkpoint scan
+    // plan the gate's checkpoint job ran: the persisted scored projection
+    // shows as an InMemoryRelation subtree (a scan, no exchange of its own)
     val scored = Tables.documents(spark, dir).select(col("doc_id"),
       col("source"), (col("doc_id") % 997).as("q_milli"))
-    val df = graft.pipeline.Sampling.scoreThresholdGate(
-      scored, col("q_milli"), Seq("source"), keepPm = 250,
-      cacheScored = false)
-    val p = plan(df)
+    val p = RanPlans(graft.pipeline.Sampling.scoreThresholdGate(
+      scored, col("q_milli"), Seq("source"), keepPm = 250))
     assert(!p.contains("Window"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
     assert(p.contains("BroadcastHashJoin"), p)
-    assert(shuffles(df) == 1, p)
+    assert(shufflesIn(p) == 1, p)
   }
 
   test("bm25: dl rides the postings agg — no corpus-keyed join anywhere") {
@@ -504,24 +498,21 @@ class PlanAuditSpec extends AnyFunSuite {
     // exchange is the postings agg itself: every join in the plan must be
     // broadcast (df_ and stats are q-row / 1-row frames), and the r16
     // corpus-keyed (id, dl) shuffle join must never reappear. Audited on
-    // the LAZY shape (cachePostings = false): the driver rows' default
-    // persists the postings and scope-checkpoints the k-row result, whose
-    // audited plan would be the checkpoint scan — a corpus-keyed exchange
-    // upstream of the postings agg would be invisible there (the r17
-    // ADVICE finding).
+    // the plans the operators' jobs ran: the k-row result is a checkpoint,
+    // and the persisted postings base shows as an InMemoryRelation subtree
+    // of the checkpoint job's plan, so a corpus-keyed exchange upstream of
+    // the postings agg is visible there (the r17 ADVICE finding).
     val sess = spark
     import sess.implicits._
     val docs = Tables.read(spark, dir, "documents")
     val probe = Seq((1L, "vector"), (1L, "merge"), (2L, "scan"),
       (2L, "window")).toDF("query_id", "term")
-    val lazyShapes = Seq(
-      "bm25_topk" -> pipeline.Retrieval.bm25TopK(docs,
-        Seq("vector", "merge", "scan", "window"), k = 20,
-        cachePostings = false),
-      "bm25_batch_topk" -> pipeline.Retrieval.bm25BatchTopK(docs, probe,
-        k = 10, cachePostings = false))
-    for ((q, df) <- lazyShapes) {
-      val p = plan(df)
+    val shapes = Seq(
+      "bm25_topk" -> RanPlans(pipeline.Retrieval.bm25TopK(docs,
+        Seq("vector", "merge", "scan", "window"), k = 20)),
+      "bm25_batch_topk" -> RanPlans(
+        pipeline.Retrieval.bm25BatchTopK(docs, probe, k = 10)))
+    for ((q, p) <- shapes) {
       assert(!p.contains("SortMergeJoin"), s"$q:\n$p")
       assert(!p.contains("ShuffledHashJoin"), s"$q:\n$p")
       assert(p.contains("BroadcastHashJoin"), s"$q:\n$p")

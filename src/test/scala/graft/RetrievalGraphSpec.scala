@@ -104,13 +104,9 @@ class RetrievalGraphSpec extends AnyFunSuite {
 
   test("bm25 plan: TakeOrdered top-k, broadcast stats, no cartesian") {
     val docs = corpus.toDF("doc_id", "text")
-    // cachePostings = false: the default scope-checkpoints the k-row
-    // result, whose executed plan is just the checkpoint scan — plan
-    // audits inspect the lazy shape
-    val plan = Retrieval.bm25TopK(docs, Seq("query", "join"), k = 3,
-        cachePostings = false)
-      .queryExecution.executedPlan
-    val s = plan.toString
+    // the k-row result is a checkpoint, whose own plan is just the
+    // checkpoint scan — audit the plans the operator's jobs ran
+    val s = RanPlans(Retrieval.bm25TopK(docs, Seq("query", "join"), k = 3))
     assert(s.contains("TakeOrderedAndProject"),
       s"top-k must be TakeOrdered, not a global sort:\n$s")
     assert(!s.contains("CartesianProduct"), s"cartesian leaked:\n$s")
@@ -177,12 +173,15 @@ class RetrievalGraphSpec extends AnyFunSuite {
   }
 
   test("pagerank plan: equi-joins only, no cartesian against edges") {
-    // materialize = false: the audit needs the full lazy plan, not the
-    // checkpointed scan the default returns
-    val plan = LinkGraph.pageRank(graph.toDF("src", "dst"), 2,
-        materialize = false)
-      .queryExecution.executedPlan
-    val s = plan.toString
+    // the result is a checkpoint: audit the plans the loop ran on its
+    // private session clone. The caller's session plans with AQE on; the
+    // clone plans with it off, so no plan that ran has an adaptive
+    // wrapper or a query stage
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "true")
+    val s = RanPlans(LinkGraph.pageRank(
+      caller.createDataFrame(graph).toDF("src", "dst"), 2))
+    assert(!s.contains("AdaptiveSparkPlan") && !s.contains("QueryStage"), s)
     assert(!s.contains("CartesianProduct"), s"cartesian leaked:\n$s")
     // the only nested-loop joins are the broadcast one-row count frames
     val bnl = "BroadcastNestedLoopJoin".r.findAllIn(s).size
@@ -227,10 +226,6 @@ class RetrievalGraphSpec extends AnyFunSuite {
     assert(early.as[(String, Long)].collect().toMap ==
       full.as[(String, Long)].collect().toMap)
     val e = graph.toDF("src", "dst")
-    // convergence testing needs actions: the lazy audit path refuses
-    intercept[IllegalArgumentException] {
-      LinkGraph.pageRank(e, 10, materialize = false, tolUnits = Some(0L))
-    }
     intercept[IllegalArgumentException] {
       LinkGraph.pageRank(e, 10, tolUnits = Some(-1L))
     }

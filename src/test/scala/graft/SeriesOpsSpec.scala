@@ -5,6 +5,7 @@ import graft.functions.ArrayFns
 import graft.operators._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Along-dimension operator semantics on tiny series
@@ -148,11 +149,8 @@ class SeriesOpsSpec extends AnyFunSuite {
     try {
       val c = series(Seq(1.0, 3.0, 5.0, 7.0), session)
       val out = CurveOps.fitLinear(c, "i", exactIntMoments = true)
-      // listener delivery is async — poll to a deadline
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (actions.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      Thread.sleep(300) // catch a straggling SECOND action if one fired
+      // listener delivery is async — deliver every action the fit fired
+      PlanBridge.drainListeners(session)
       assert(actions.get() == 1,
         s"expected exactly 1 probe action during fit, saw ${actions.get()}")
       val cached = out.queryExecution.optimizedPlan.collect {

@@ -1313,6 +1313,37 @@ class StacLoaderSpec extends AnyFunSuite {
         col("y").between(46.0, 46.4)).count())
   }
 
+  test("temporal labels that do not count a zarr store's slices fail the mount") {
+    // 3 labels over a 4-slice store: the labels cannot be its time axis,
+    // and reading axis 0 as bands at the item datetime would silently
+    // empty a load that selected the item by those labels
+    val dir = java.nio.file.Files.createTempDirectory("graft_zarr_l").toFile
+    java.nio.file.Files.writeString(new java.io.File(dir, ".zarray").toPath,
+      """{"zarr_format":2,"shape":[4,2,3],"chunks":[4,2,3],"dtype":"<f8",
+        |"compressor":null,"fill_value":0.0,"filters":null,"order":"C"}"""
+        .stripMargin)
+    java.nio.file.Files.write(new java.io.File(dir, "0.0.0").toPath,
+      new Array[Byte](4 * 2 * 3 * 8))
+    val labels = (1 to 3).map(d => s"2023-07-0${d}T00:00:00Z")
+    val item =
+      s"""{"type":"Feature","stac_version":"1.0.0","id":"item-l",
+         |"bbox":[10.0,46.0,11.0,47.0],
+         |"properties":{"datetime":"2023-06-01T00:00:00Z",
+         |  "cube:dimensions":{"time":{"type":"temporal",
+         |    "values":[${labels.map("\"" + _ + "\"").mkString(",")}]}}},
+         |"assets":{
+         |  "store":{"href":"file://$dir","type":"application/vnd+zarr"}
+         |}}""".stripMargin
+    val window = Some(("2023-07-01", "2023-07-03"))
+    val sel = StacLoader.filterAssets(StacLoader.parseItem(item),
+      timeRange = window)
+    assert(sel.size == 1) // selected by its labels
+    val e = intercept[IllegalArgumentException](
+      StacLoader.loadCube(spark, sel, timeRange = window))
+    assert(e.getMessage.contains(
+      "CubeSource: 3 temporal labels for a zarr axis 0 of 4 slices"), e)
+  }
+
   // ---- HTTP API search over the injectable transport (recorded
   // fixtures — no network; pins the SEARCH-PARAMETER PUSHDOWN of
   // cubes/load.py:111-161 on the actual HTTP code path) ----
