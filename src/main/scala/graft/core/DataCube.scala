@@ -14,15 +14,8 @@ object DimType {
   case object Other extends DimType
 }
 
-/** One named dimension of a cube. `labels` is optionally materialised for
-  * operators that must preserve empty labels (aggregate_temporal's gap bins,
-  * trim_cube) or that want to compare label sets WITHOUT running a Spark job
-  * (merge_cubes' case dispatch); otherwise labels are implicit = distinct
-  * column values. Stored canonically as strings (a dim column has one type,
-  * so string equality is value equality within it).
-  */
-final case class CubeDim(name: String, dimType: DimType,
-    labels: Option[Set[String]] = None)
+/** One named dimension of a cube. */
+final case class CubeDim(name: String, dimType: DimType)
 
 /** Cube-level metadata: the dimension list (ordered), an optional CRS string
   * (e.g. "EPSG:4326"), and the name of the value column.
@@ -63,15 +56,34 @@ final case class CubeMetadata(
   * comes from ordinary Spark partitioning instead of dask chunk gymnastics
   * (cf. the reference's documented OOM limits,
   * docs/scalability/aggregate-large-spatial-extents.md:9-26).
+  *
+  * `labels` holds the dimension labels that are known without a Spark job:
+  * per dimension, the column's distinct values in the column's native order
+  * (numeric dims sort numerically), each as its `cast("string")` text. A
+  * dimension without an entry has implicit labels, read by [[labelsOf]];
+  * any known list also tells whether the cube has rows (empty: none).
+  * Only an operator that knows its output labels exactly sets them
+  * (filter_bands, add_dimension, ndvi with a target band, merge_cubes'
+  * stack; drop_dimension and ndvi keep those of the dims they leave
+  * alone). Every cube built from a new frame starts without, so labels
+  * never outlive the rows they describe.
   */
-final case class DataCube(df: DataFrame, meta: CubeMetadata) {
+final case class DataCube(df: DataFrame, meta: CubeMetadata,
+    labels: Map[String, Seq[String]] = Map.empty) {
   def value: Column = col(meta.valueCol)
   /** All dimension columns except `dim` — the groupBy set when reducing over
     * `dim` (reference reduce semantics: cubes/reduce.py:13-46).
     */
   def dimColsExcept(dim: String): Seq[Column] =
     meta.dimNames.filterNot(_ == dim).map(col)
-  def withDf(f: DataFrame => DataFrame): DataCube = copy(df = f(df))
+  def withDf(f: DataFrame => DataFrame): DataCube = DataCube(f(df), meta)
+
+  /** The labels of `dim` in native order as text: the known ones, else one
+    * Spark job over the (column-pruned) dimension column.
+    */
+  def labelsOf(dim: String): Seq[String] = labels.getOrElse(dim,
+    df.select(col(dim)).distinct().orderBy(col(dim))
+      .select(col(dim).cast("string")).collect().map(_.getString(0)).toSeq)
 
   def temporalDim: String = meta.temporalDims match {
     case Seq(d) => d
@@ -90,18 +102,6 @@ final case class DataCube(df: DataFrame, meta: CubeMetadata) {
     if (!meta.has(dim))
       throw new IllegalArgumentException(
         s"DimensionNotAvailable: '$dim' not in ${meta.dimNames.mkString(",")}")
-
-  /** Materialise the label sets of `dims` into the metadata with ONE Spark
-    * job (a union of per-dim distinct scans), so later plan-time decisions —
-    * merge_cubes' case dispatch, target-dimension checks — read metadata
-    * instead of launching jobs. Call it once after load/resample when a
-    * pipeline merges repeatedly; all cube operators keep working without it.
-    */
-  def materializeLabels(dims: Seq[String] = meta.dimNames): DataCube = {
-    val sets = DataCube.labelSets(df, dims)
-    copy(meta = meta.copy(dims = meta.dims.map(d =>
-      if (sets.contains(d.name)) d.copy(labels = Some(sets(d.name))) else d)))
-  }
 }
 
 object DataCube {
@@ -138,17 +138,5 @@ object DataCube {
     val cubeDims = dims.map(d => CubeDim(d, dimTypes.getOrElse(d, inferDimType(d))))
     val projected = df.select((dims :+ valueCol).map(col): _*)
     DataCube(projected, CubeMetadata(cubeDims, crs, valueCol))
-  }
-
-  /** Distinct labels of several dim columns in ONE job: union the per-dim
-    * tagged distinct scans (each metadata-sized) and collect once.
-    */
-  def labelSets(df: DataFrame, dims: Seq[String]): Map[String, Set[String]] = {
-    if (dims.isEmpty) return Map.empty
-    val tagged = dims.map(d =>
-      df.select(lit(d).as("_dim"), col(d).cast("string").as("_label")).distinct())
-    tagged.reduce(_ unionAll _).collect()
-      .groupBy(_.getString(0))
-      .map { case (d, rows) => d -> rows.map(r => String.valueOf(r.get(1))).toSet }
   }
 }

@@ -82,9 +82,9 @@ object ApplyOps {
     *    raise);
     *  - target is new: source dim renamed to `target`, labels 0..n−1.
     *
-    * The label-cardinality check is one distinct-count over a single
-    * (column-pruned) dim column — dimension metadata, not a data scan of the
-    * fact payload.
+    * The label-cardinality check reads the target's labels
+    * ([[DataCube.labelsOf]]): no job when they are known, else one over the
+    * (column-pruned) dim column, not the fact payload.
     */
   def applyDimensionTarget(cube: DataCube, dimension: String,
       process: Column => Column, targetDimension: Option[String] = None,
@@ -95,12 +95,7 @@ object ApplyOps {
       if (lengthPreserving) applyDimensionArray(cube, dimension, process)
       else applyDimensionRelabel(cube, dimension, process, dimension)
     } else if (cube.meta.has(target)) {
-      // Metadata-first: materialised labels answer the cardinality check
-      // with no Spark job; only unlabelled metadata falls back to the
-      // (column-pruned) distinct-count.
-      val nLabels = cube.meta.dims.find(_.name == target).flatMap(_.labels)
-        .map(_.size.toLong)
-        .getOrElse(cube.df.select(col(target)).distinct().count())
+      val nLabels = cube.labelsOf(target).size
       if (nLabels > 1) throw new IllegalArgumentException(
         s"Cannot rename dimension $dimension to $target: $target already exists " +
           s"and contains $nLabels labels")
@@ -123,9 +118,7 @@ object ApplyOps {
     if (target == dimension) cube
     else {
       val base = if (cube.meta.has(target)) {
-        val nLabels = cube.meta.dims.find(_.name == target).flatMap(_.labels)
-          .map(_.size.toLong)
-          .getOrElse(cube.df.select(col(target)).distinct().count())
+        val nLabels = cube.labelsOf(target).size
         if (nLabels > 1) throw new IllegalArgumentException(
           s"Cannot rename dimension $dimension to $target: $target already " +
             s"exists and contains $nLabels labels")
@@ -207,7 +200,7 @@ object ApplyOps {
       .join(arrays, if (others.nonEmpty) others else Seq("_g"))
       .withColumn(cube.meta.valueCol, element_at(col("_out"), col("_rn")))
       .drop("_out", "_rn", "_g")
-    cube.copy(df = joined.select(
-      (others.map(col) :+ col(dimension) :+ col(cube.meta.valueCol)): _*))
+    DataCube(joined.select(
+      (others.map(col) :+ col(dimension) :+ col(cube.meta.valueCol)): _*), cube.meta)
   }
 }

@@ -11,26 +11,27 @@ object CubeDimOps {
   /** Add a size-1 labeled dimension; error if it exists
     * (reference: cubes/general.py:72-100).
     */
-  def addDimension(cube: DataCube, name: String, label: Any,
+  def addDimension(cube: DataCube, name: String, label: String,
       dimType: DimType = DimType.Other): DataCube = {
     require(!cube.meta.has(name), s"DimensionLabelCountMismatch: '$name' exists")
+    // every row holds `label`, so the dim's labels are known when a known
+    // label list tells whether there are rows
+    val added = cube.labels.values.headOption.map(ls =>
+      name -> (if (ls.isEmpty) Nil else Seq(label)))
     DataCube(
       cube.df.withColumn(name, lit(label)),
-      cube.meta.copy(dims = cube.meta.dims :+ CubeDim(name, dimType)))
+      cube.meta.copy(dims = cube.meta.dims :+ CubeDim(name, dimType)),
+      cube.labels ++ added)
   }
 
-  /** Drop a dimension; the reference requires size 1
-    * (reference: cubes/general.py:26-35). Validation is optional because it
-    * forces a distinct-count action.
+  /** Drop a dimension that holds at most one label
+    * (reference: cubes/general.py:26-35).
     */
-  def dropDimension(cube: DataCube, name: String,
-      validate: Boolean = false): DataCube = {
+  def dropDimension(cube: DataCube, name: String): DataCube = {
     cube.requireDim(name)
-    if (validate) {
-      val n = cube.df.select(col(name)).distinct().count()
-      require(n <= 1, s"DimensionLabelCountMismatch: '$name' has $n labels")
-    }
-    DataCube(cube.df.drop(name), cube.meta.without(name))
+    val n = cube.labelsOf(name).size
+    require(n <= 1, s"DimensionLabelCountMismatch: '$name' has $n labels")
+    DataCube(cube.df.drop(name), cube.meta.without(name), cube.labels - name)
   }
 
   /** Rename a dimension, keeping its type (reference: cubes/general.py:103-147). */
@@ -67,8 +68,6 @@ object CubeDimOps {
     *    on a dimension not enumerated from 0.
     *
     * Empty `source` means positional relabeling over the sorted label list.
-    * The label set is collected once — dimension labels are metadata-sized
-    * by the cube model (a pruned single-column distinct, not a fact scan).
     */
   def renameLabelsChecked(cube: DataCube, dimension: String,
       target: Seq[String], source: Seq[String] = Nil): DataCube = {
@@ -76,15 +75,11 @@ object CubeDimOps {
     if (source.nonEmpty && source.size != target.size)
       throw new IllegalArgumentException(
         "LabelMismatch - The number of labels in `source` and `target` don't match.")
-    // order via the NATIVE column type before casting to string:
-    // numeric/enumerated dims must sort numerically (0,1,2,…,10), not
-    // lexically ("0","1","10","2"), or positional and enumerated-prefix
+    // labels in NATIVE order: numeric/enumerated dims sort numerically
+    // (0,1,2,…,10), not lexically, or positional and enumerated-prefix
     // renames map the wrong labels (reference general.py:171-204 keeps
-    // coord order; dimensionLabels orders the typed column the same way)
-    val labels = cube.df.select(col(dimension).as("_l"))
-      .distinct().orderBy(col("_l"))
-      .select(col("_l").cast("string"))
-      .collect().map(_.getString(0)).toSeq
+    // coord order)
+    val labels = cube.labelsOf(dimension)
     if (labels.exists(target.contains))
       throw new IllegalArgumentException(
         "LabelExists - A label with the specified name exists.")

@@ -61,22 +61,11 @@ object FilterOps {
     if (cube.meta.bandDims.isEmpty) throw new IllegalArgumentException(
       "DimensionMissing: a band dimension is missing") // _filter.py:139-140
     val dim = cube.bandDim
-    // narrow MATERIALISED label metadata too — a stale label set makes
-    // metadata-first consumers (merge_cubes' case dispatch) misclassify
-    // the filtered cube as identical to its parent
-    // Label-order convention: materialised labels are an unordered SET
-    // (CubeDim.labels) used only for size/membership/set-compare —
-    // never for label→index resolution, which always goes through the
-    // native column ordering (dimensionLabels orderBy). The reference's
-    // filter_bands (sel(bands)) reorders coords to the requested order;
-    // here that ordering lives in the column, not the metadata, so the
-    // set intersect below loses nothing.
-    val keep = bands.toSet
-    val narrowed = cube.meta.copy(dims = cube.meta.dims.map(d =>
-      if (d.name == dim) d.copy(labels = d.labels.map(_.intersect(keep)))
-      else d))
-    val filtered = DataCube(
-      cube.df.filter(col(dim).isin(bands: _*)), narrowed)
+    // the rows left hold the known band labels that were asked for, in
+    // their order; the other dims may lose labels, so theirs are unknown
+    val kept = cube.labels.get(dim).map(ls => dim -> ls.filter(bands.contains))
+    val filtered =
+      DataCube(cube.df.filter(col(dim).isin(bands: _*)), cube.meta, kept.toMap)
     if (!validate) filtered
     else {
       val spark = cube.df.sparkSession
@@ -103,11 +92,6 @@ object FilterOps {
   def filterLabels(cube: DataCube, dimension: String,
       condition: Column => Column): DataCube = {
     cube.requireDim(dimension)
-    // the kept label set is only known at runtime: DROP materialised
-    // labels (they revert to implicit distinct values) rather than leave
-    // a stale superset for metadata-first consumers
-    val cleared = cube.meta.copy(dims = cube.meta.dims.map(d =>
-      if (d.name == dimension) d.copy(labels = None) else d))
-    DataCube(cube.df.filter(condition(col(dimension))), cleared)
+    cube.withDf(_.filter(condition(col(dimension))))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core._
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Band-math indices (reference: openeo_processes_dask/process_implementations/
   * cubes/indices.py:15-59 — ndvi).
@@ -18,10 +19,9 @@ object IndicesOps {
     * Error contract (reference indices.py:15-57): DimensionAmbiguous when
     * no single bands dimension exists; NirBandAmbiguous / RedBandAmbiguous
     * when the named band is absent; BandExists when `targetBand` already
-    * is a band. Band-presence checks run at METADATA scale only — against
-    * materialised dimension labels when the cube carries them (the
-    * reference checks xarray coords, which always exist there); label-less
-    * cubes skip them rather than paying a per-call distinct scan.
+    * is a band. Band-presence checks run only against the cube's known band
+    * labels (the reference checks xarray coords, which always exist
+    * there); label-less cubes skip them rather than paying a job per call.
     */
   def ndvi(cube: DataCube, nir: String = "nir", red: String = "red",
       targetBand: Option[String] = None): DataCube = {
@@ -31,7 +31,7 @@ object IndicesOps {
         "DimensionAmbiguous: dimension of type `bands` is not available " +
           "or is ambiguous")
     }
-    val bandLabels = cube.meta.dims.find(_.name == bd).flatMap(_.labels)
+    val bandLabels = cube.labels.get(bd)
     bandLabels.foreach { ls =>
       if (!ls.contains(nir)) throw new IllegalArgumentException(
         "NirBandAmbiguous: the NIR band can't be resolved, please specify " +
@@ -52,13 +52,18 @@ object IndicesOps {
     val out = cube.df.groupBy(others.map(col): _*)
       .agg(((nirV - redV) / (nirV + redV)).as(cube.meta.valueCol))
     targetBand match {
-      case None => DataCube(out, cube.meta.without(bd))
+      case None => DataCube(out, cube.meta.without(bd), cube.labels - bd)
       case Some(tb) =>
         val ndRows = out.withColumn(bd, lit(tb))
           .select(cube.df.columns.map(col).toIndexedSeq: _*)
-        val meta = cube.meta.copy(dims = cube.meta.dims.map(d =>
-          if (d.name == bd) d.copy(labels = d.labels.map(_ + tb)) else d))
-        DataCube(cube.df.unionByName(ndRows), meta)
+        // every series gains a `tb` row (and a band-only cube always has
+        // its one global series), so the known bands gain `tb` when there
+        // are series, placed in the string column's (UTF-8 binary) order
+        val bytes = Ordering.fromLessThan[String]((a, b) =>
+          UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+        val withTb = bandLabels.filter(_.nonEmpty || others.isEmpty)
+          .map(ls => bd -> (ls :+ tb).sorted(bytes))
+        DataCube(cube.df.unionByName(ndRows), cube.meta, cube.labels ++ withTb)
     }
   }
 }

@@ -68,7 +68,7 @@ object KernelOps {
     val out = contrib.join(grid, others :+ xd :+ yd, "left_semi")
       .groupBy((others :+ xd :+ yd).map(col): _*)
       .agg((sum(col("_c")) * factor).as(v))
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 
   /** apply_kernel with explicit border semantics on a dense integer grid
@@ -142,7 +142,7 @@ object KernelOps {
     val out = joined
       .groupBy((others :+ xd :+ yd).map(col): _*)
       .agg((sum(col("_w") * col("_nv")) * factor).as(v))
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 
   /** apply_kernel as a TILE-PARTITIONED STENCIL — the dense-raster scale
@@ -323,6 +323,6 @@ object KernelOps {
         col("_o").getField("_1").as(xd) :+
         col("_o").getField("_2").as(yd) :+
         col("_o").getField("_3").as(v)): _*)
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 }

@@ -78,21 +78,18 @@ object MergeOps {
     }
   }
 
-  /** Per-dim label-set equality. Metadata-first: when both cubes carry
-    * materialised labels for a dim ([[DataCube.materializeLabels]]), the
-    * comparison is a pure driver-side set equality — ZERO Spark jobs. Only
-    * dims with no materialised labels on either side fall back to a single
-    * combined job (a union of tagged distinct scans, one action) — never the
-    * old 2-anti-join-actions-per-dim pattern, which at 100 TB meant 2×|dims|
-    * full column scans blocking the driver mid-planning.
+  /** Per-dim label-set equality. Dims whose labels both cubes know
+    * compare with ZERO Spark jobs. The other dims fall back to a single
+    * combined job (a union of tagged distinct scans, one action) — never
+    * the old 2-anti-join-actions-per-dim pattern, which at 100 TB meant
+    * 2×|dims| full column scans blocking planning.
     */
   private def labelSetsIdentical(cube1: DataCube, cube2: DataCube,
       dims: Seq[String]): Boolean = {
-    val m1 = cube1.meta.dims.map(d => d.name -> d.labels).toMap
-    val m2 = cube2.meta.dims.map(d => d.name -> d.labels).toMap
     val (known, unknown) = dims.partition(d =>
-      m1.get(d).exists(_.isDefined) && m2.get(d).exists(_.isDefined))
-    if (!known.forall(d => m1(d).get == m2(d).get)) return false
+      cube1.labels.contains(d) && cube2.labels.contains(d))
+    if (!known.forall(d => cube1.labels(d).toSet == cube2.labels(d).toSet))
+      return false
     if (unknown.isEmpty) return true
     def tagged(df: DataFrame, side: Int) = unknown.map(d =>
       df.select(lit(d).as("_dim"), col(d).cast("string").as("_label"))
@@ -105,16 +102,22 @@ object MergeOps {
   }
 
   /** Stack two identically-shaped cubes along a new "cubes" dimension with
-    * labels cube1/cube2 (reference: merge.py NEW_DIM_NAME concat).
+    * labels cube1/cube2 (reference: merge.py NEW_DIM_NAME concat). Labels
+    * both cubes know alike hold for the stack. The cubes' label sets are
+    * identical, so both have rows or neither has: a known label list of
+    * cube1 tells which, and so the `cubes` labels.
     */
   private def stackCubes(cube1: DataCube, cube2: DataCube): DataCube = {
     val v = cube1.meta.valueCol
     val d1 = cube1.df.withColumn("cubes", lit("cube1"))
     val d2 = cube2.df.withColumnRenamed(cube2.meta.valueCol, v)
       .withColumn("cubes", lit("cube2"))
+    val known = cube1.labels.filter { case (d, ls) => cube2.labels.get(d).contains(ls) }
+    val cubes = cube1.labels.values.headOption.map(ls =>
+      "cubes" -> (if (ls.isEmpty) Nil else Seq("cube1", "cube2")))
     DataCube(d1.unionByName(d2),
-      cube1.meta.copy(dims = cube1.meta.dims :+
-        CubeDim("cubes", DimType.Other, labels = Some(Set("cube1", "cube2")))))
+      cube1.meta.copy(dims = cube1.meta.dims :+ CubeDim("cubes", DimType.Other)),
+      known ++ cubes)
   }
 
   /** Align cube2's float coordinates to cube1's where they differ by at

@@ -121,7 +121,7 @@ object ResampleOps {
       others.map(col) :+
       (col("_w0") + col("_w1") + col("_w2") + col("_w3"))
         .as(cube.meta.valueCol)): _*)
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 
   /** resample_spatial's `projection` argument — the raster warp
@@ -306,7 +306,7 @@ object ResampleOps {
       (coalesce(col("_w0"), lit(0.0)) + coalesce(col("_w1"), lit(0.0)) +
         coalesce(col("_w2"), lit(0.0)) + coalesce(col("_w3"), lit(0.0)))
         .as(v)): _*)
-    data.copy(df = out)
+    DataCube(out, data.meta)
   }
 
   /** resample_spatial, method="mode" (reference: resample.py:23-36): the most
@@ -423,6 +423,6 @@ object ResampleOps {
         lit(0.0), (acc, x) => acc + x))
     val out = folded.select((col("_tx").as(xd) +: col("_ty").as(yd) +:
       others.map(col) :+ (col("_swv") / col("_sw")).as(cube.meta.valueCol)): _*)
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 }

@@ -176,7 +176,7 @@ object SpatialOps {
       .groupBy((col(s"_near_$xd").as(xd) +: col(s"_near_$yd").as(yd) +:
         others.map(col)): _*)
       .agg(reducer(data.value).as(data.meta.valueCol))
-    data.copy(df = out)
+    DataCube(out, data.meta)
   }
 
   /** openEO `aggregate_spatial_window` (openeo-processes spec proposal;
@@ -225,6 +225,6 @@ object SpatialOps {
       .groupBy((col(s"_lbl_$xd").as(xd) +: col(s"_lbl_$yd").as(yd) +:
         others.map(col)): _*)
       .agg(reducer(cube.value).as(cube.meta.valueCol))
-    cube.copy(df = out)
+    DataCube(out, cube.meta)
   }
 }

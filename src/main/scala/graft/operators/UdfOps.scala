@@ -52,7 +52,7 @@ object UdfOps {
       .pipe(Seq("python3", "-c", harness))
     import spark.implicits._
     val parsed = spark.read.schema(schema).json(spark.createDataset(piped))
-    cube.copy(df = parsed)
+    DataCube(parsed, cube.meta)
   }
 
   /** CHUNK-level run_udf — the reference UDF contract's other flavour
@@ -92,6 +92,6 @@ object UdfOps {
       .pipe(Seq("python3", "-c", harness))
     import spark.implicits._
     val parsed = spark.read.schema(schema).json(spark.createDataset(piped))
-    cube.copy(df = parsed)
+    DataCube(parsed, cube.meta)
   }
 }

@@ -76,8 +76,8 @@ object WindowOps {
     val values = cube.df.select((others.map(col) :+ v :+
       (row_number().over(valW) - 1).as("_slot")): _*)
     val joined = positions.join(values, others :+ "_slot").drop("_slot")
-    cube.copy(df = joined.select((others.map(col) :+ col(dim) :+ v) ++
-      extras.map(col): _*))
+    DataCube(joined.select((others.map(col) :+ col(dim) :+ v) ++
+      extras.map(col): _*), cube.meta)
   }
 
   /** first/last non-null value along a dim, one row per series

@@ -777,17 +777,14 @@ object ProcessGraph {
           "reducer returned", lits = false)
       }
 
-      /** the `_labels` context of an ordered-array callback over `dim`:
-        * the dimension's labels in native (= ordered-array) order,
-        * collected by one metadata-scale distinct only when the callback
-        * has an `array_element` node with a `label` argument
+      /** the `_labels` context of an ordered-array callback: the
+        * dimension's labels in native (= ordered-array) order, read only
+        * when the callback has an `array_element` node with a `label`
+        * argument
         */
-      def dimLabels(c: DataCube, dim: String, cb: Graph): Map[String, PValue] =
+      def labelContext(cb: Graph, labels: => Seq[String]): Map[String, PValue] =
         if (!cb.readsLabels) Map.empty
-        else Map("_labels" -> ArrV(
-          c.df.select(col(dim)).distinct()
-            .orderBy(col(dim)).collect().toSeq
-            .map(r => StrV(String.valueOf(r.get(0))))))
+        else Map("_labels" -> ArrV(labels.map(StrV)))
 
       /** a statistical reducer: the array fold inside an `_array` reduce,
         * else the partial-aggregation aggregate
@@ -859,9 +856,9 @@ object ProcessGraph {
           //  - anything composing array-aware processes: the callback runs
           //    with `_array` context — statistical reducers flip to array
           //    folds, cumulative/interpolate to their array forms, and
-          //    label-based array_element gets the dim's label list (one
-          //    metadata-scale distinct, only when the callback says
-          //    "label"). Length-preserving result nodes keep the dim's
+          //    label-based array_element gets the dim's label list
+          //    (`labelsOf`, only when the callback says "label").
+          //    Length-preserving result nodes keep the dim's
           //    labels (the reference's runtime length check, decided
           //    statically here); everything else relabels 0..n-1.
           val dim = str("dimension")
@@ -933,11 +930,10 @@ object ProcessGraph {
             // loudly above a label-cardinality cap instead of silently
             // running a quadratic fold over a huge dimension. The
             // element-wise form compiles to a linear `transform`, so it
-            // is exempt.
+            // is exempt. The cap and the `_labels` context share one read.
+            lazy val labels = c.labelsOf(dim)
             if (!cb.elementwise) {
-              val nLabels = c.meta.dims.find(_.name == dim)
-                .flatMap(_.labels).map(_.size.toLong)
-                .getOrElse(c.df.select(col(dim)).distinct().count())
+              val nLabels = labels.size
               if (nLabels > FoldMaxLabels) throw new IllegalArgumentException(
                 s"apply_dimension: callback is not window-compilable and " +
                   s"dimension '$dim' has $nLabels labels (> $FoldMaxLabels); " +
@@ -945,7 +941,7 @@ object ProcessGraph {
                   "callback as a chain of element-wise and window-class " +
                   "processes")
             }
-            val labelCtx = dimLabels(c, dim, cb) // empty when elementwise
+            val labelCtx = labelContext(cb, labels) // empty when elementwise
             def run(bind: Map[String, PValue]): Column =
               asColumn(runCallback(cb, bind ++ callbackContext),
                 "apply_dimension callback returned")
@@ -977,9 +973,9 @@ object ProcessGraph {
             // published EVI example indexes it with array_element); the
             // `_array` context flips the statistical reducer arms to
             // their array folds; label-based element access reads the
-            // dimension's label list (`dimLabels`)
+            // dimension's label list (`labelContext`)
             val c = cube("data")
-            val labelCtx = dimLabels(c, dim, cb)
+            val labelCtx = labelContext(cb, c.labelsOf(dim))
             CubeV(ReduceOps.reduceDimensionArray(c, dim, a =>
               asColumn(runCallback(cb, Map("data" -> ColV(a),
                 "_array" -> BoolV(true)) ++ labelCtx ++ callbackContext),
@@ -1589,9 +1585,9 @@ object ProcessGraph {
         case "rename_labels" =>
           // CHECKED form: the reference's full typed-error contract
           // (LabelMismatch / LabelExists / LabelNotAvailable /
-          // LabelsNotEnumerated) validated against the dimension's label
-          // set — one pruned metadata-scale distinct, like the reference's
-          // coords lookup (cubes/general.py:150-222)
+          // LabelsNotEnumerated) validated against the dimension's labels
+          // (`labelsOf`), like the reference's coords lookup
+          // (cubes/general.py:150-222)
           CubeV(CubeDimOps.renameLabelsChecked(cube("data"), str("dimension"),
             strs("target"),
             opt("source").map(_ => strs("source")).getOrElse(Nil)))
@@ -1663,8 +1659,7 @@ object ProcessGraph {
           val maxDepth = optNum("max_depth").map(_.toInt).getOrElse(8)
           val seed = optNum("seed").map(_.toLong).getOrElse(42L)
           val series = pred.meta.dimNames.filterNot(_ == bandDim)
-          val feats = pred.df.select(col(bandDim).cast("string"))
-            .distinct().collect().map(_.getString(0)).sorted.toSeq
+          val feats = pred.labelsOf(bandDim).sorted
           val wide = pred.df.groupBy(series.map(col): _*)
             .pivot(bandDim, feats).agg(first(col(pred.meta.valueCol)))
           val joined = wide.join(

@@ -5,7 +5,6 @@ import graft.functions.{Reducers, Scalar}
 import graft.operators._
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics tests on tiny synthetic cubes, mirroring the reference's unit
@@ -71,48 +70,30 @@ class CubeCoreSpec extends AnyFunSuite {
   }
 
   test("mergeCubes with materialised labels launches zero jobs at plan time") {
-    val c1 = cube(Seq((1.0, "B1", 10.0), (2.0, "B1", 20.0))).materializeLabels()
-    val c2 = cube(Seq((1.0, "B1", 1.0), (2.0, "B1", 2.0))).materializeLabels()
-    assert(c1.meta.dims.forall(_.labels.isDefined))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // Identical labels + no resolver = the stack path, which used to fire
-      // eager anti-join jobs during case dispatch. With metadata labels the
-      // dispatch is driver-side only: building the plan runs NOTHING.
-      val merged = MergeOps.mergeCubes(c1, c2, None)
-      PlanBridge.drainListeners(spark) // listener bus is async
-      assert(jobs.get() == 0, "mergeCubes planning must not launch Spark jobs")
-      assert(merged.df.count() == 4) // the stacked cube, now actually run
-      PlanBridge.drainListeners(spark)
-      assert(jobs.get() > 0) // sanity: the listener does see real jobs
-    } finally spark.sparkContext.removeSparkListener(listener)
+    def labelled(c: DataCube) =
+      c.copy(labels = Map("x" -> Seq("1.0", "2.0"), "band" -> Seq("B1")))
+    val c1 = labelled(cube(Seq((1.0, "B1", 10.0), (2.0, "B1", 20.0))))
+    val c2 = labelled(cube(Seq((1.0, "B1", 1.0), (2.0, "B1", 2.0))))
+    // Identical labels + no resolver = the stack path, which used to fire
+    // eager anti-join jobs during case dispatch. With known labels the
+    // dispatch reads them: building the plan runs NOTHING.
+    val (merged, planJobs) = JobCount(MergeOps.mergeCubes(c1, c2, None))
+    assert(planJobs == 0, "mergeCubes planning must not launch Spark jobs")
+    assert(merged.labels("cubes") == Seq("cube1", "cube2"))
+    val (n, runJobs) = JobCount(merged.df.count()) // the stacked cube, now run
+    assert(n == 4)
+    assert(runJobs > 0) // sanity: the count does see real jobs
   }
 
   test("label-set dispatch falls back to ONE combined job when labels absent") {
     val c1 = cube(Seq((1.0, "B1", 10.0), (2.0, "B1", 20.0)))
     val c2 = cube(Seq((1.0, "B1", 1.0), (2.0, "B1", 2.0)))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val merged = MergeOps.mergeCubes(c1, c2, None)
-      PlanBridge.drainListeners(spark)
-      // ONE combined action; AQE materialises its shuffle stages as up to 3
-      // jobs. The old dispatch ran 2 anti-join actions PER dim (4 actions /
-      // ~8+ jobs on this 2-dim cube).
-      assert(jobs.get() <= 3, s"expected one combined dispatch action, got ${jobs.get()} jobs")
-      assert(merged.df.count() == 4)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (merged, jobs) = JobCount(MergeOps.mergeCubes(c1, c2, None))
+    // ONE combined action; AQE materialises its shuffle stages as up to 3
+    // jobs. The old dispatch ran 2 anti-join actions PER dim (4 actions /
+    // ~8+ jobs on this 2-dim cube).
+    assert(jobs <= 3, s"expected one combined dispatch action, got $jobs jobs")
+    assert(merged.df.count() == 4)
   }
 
   test("mask replaces truthy cells and broadcasts over missing dims") {
@@ -302,14 +283,12 @@ class CubeCoreSpec extends AnyFunSuite {
     val df = Seq((1.0, "B1", 1.0), (1.0, "B2", 2.0), (1.0, "B3", 3.0))
       .toDF("x", "band", "value")
     val c = DataCube(df, CubeMetadata(Seq(
-      CubeDim("x", DimType.Spatial),
-      CubeDim("band", DimType.Bands,
-        labels = Some(Set("B1", "B2", "B3")))), None, "value"))
+      CubeDim("x", DimType.Spatial), CubeDim("band", DimType.Bands)),
+      None, "value"), Map("x" -> Seq("1.0"), "band" -> Seq("B1", "B2", "B3")))
     val f = FilterOps.filterBands(c, Seq("B3", "B1"))
-    assert(f.meta.dims.find(_.name == "band").flatMap(_.labels)
-      .contains(Set("B3", "B1")))
-    // label→index resolution goes through the native column ordering,
-    // never the metadata set (the documented label-order convention)
+    // native (column) order, not the requested order; the other dims'
+    // labels are no longer known
+    assert(f.labels == Map("band" -> Seq("B1", "B3")))
     assert(f.df.select("band").distinct().collect()
       .map(_.getString(0)).toSet == Set("B1", "B3"))
   }

@@ -6,7 +6,7 @@ import graft.operators._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean}
 
 /** Property tests for cube-operator laws (SURVEY §5: null-propagation laws
   * and engine≡in-memory agreement on the long-form cube), mirroring the
@@ -64,6 +64,46 @@ object CubeLawsCheck extends Properties("CubeLaws") {
       val m12 = collect(MergeOps.mergeCubes(c1, c2, Some(_ + _)))
       val m21 = collect(MergeOps.mergeCubes(c2, c1, Some(_ + _)))
       m12 == m21
+    }
+
+  /** one step of a random operator chain, named for the failure report;
+    * `k` keeps added dimension and band names unique along the chain
+    */
+  type Step = (String, DataCube => DataCube)
+  def step(name: String)(f: DataCube => DataCube): Step = (name, f)
+
+  val genStep: Gen[Step] = for {
+    k <- Gen.choose(0, 999)
+    bands <- Gen.someOf("B0", "B1", "B9")
+    cut <- Gen.choose(0L, 6L)
+    picked <- Gen.oneOf(
+      step(s"filter_bands(${bands.mkString(",")})")(
+        FilterOps.filterBands(_, bands.toSeq)),
+      step(s"add_dimension(d$k)")(CubeDimOps.addDimension(_, s"d$k", s"L$k")),
+      step(s"ndvi(target N$k)")(IndicesOps.ndvi(_, "B0", "B1", Some(s"N$k"))),
+      step("merge_cubes stack")(c =>
+        if (c.meta.has("cubes")) c else MergeOps.mergeCubes(c, c, None)),
+      step("rename_labels(B0 -> R0)")(
+        CubeDimOps.renameLabels(_, "band", Map("B0" -> "R0"))),
+      step(s"filter_labels(i >= $cut)")(FilterOps.filterLabels(_, "i", _ >= cut)),
+      step("apply(+1)")(ApplyOps.apply(_, _ + 1)))
+  } yield picked
+  val genChain: Gen[List[Step]] = Gen.choose(1, 4).flatMap(Gen.listOfN(_, genStep))
+
+  property("known labels equal the column's distinct values in native order") =
+    forAllNoShrink(genCells, genChain) { (cells, chain) =>
+      // exact labels to start from: i sorts numerically, band lexically
+      val start = toCube(cells).copy(labels = Map(
+        "i" -> cells.map(_._1).distinct.sorted.map(_.toString),
+        "band" -> cells.map(_._2).distinct.sorted))
+      // a step whose precondition fails (a band ndvi needs, say) is skipped
+      val out = chain.foldLeft(start) { case (c, (_, f)) =>
+        try f(c) catch { case _: IllegalArgumentException => c }
+      }
+      val bare = DataCube(out.df, out.meta)
+      val stale = out.labels.filter { case (d, ls) => bare.labelsOf(d) != ls }
+      (stale.isEmpty && out.labels.keySet.subsetOf(out.meta.dimNames.toSet)) :|
+        s"stale labels $stale after ${chain.map(_._1).mkString(" → ")}"
     }
 
   property("sortAlong preserves the per-series multiset") =

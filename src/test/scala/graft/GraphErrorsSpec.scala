@@ -4,7 +4,6 @@ import graft.core._
 import graft.plans.ProcessGraph
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The openEO TYPED ERROR contract, asserted through the GRAPH entry
@@ -21,7 +20,7 @@ class GraphErrorsSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  /** (t, band) cube with MATERIALISED band labels B1/B2 — label-dependent
+  /** (t, band) cube with KNOWN band labels B1/B2 — label-dependent
     * contracts (ndvi band resolution, rename_labels) check against these
     * at metadata scale, like the reference checks xarray coords.
     */
@@ -32,8 +31,7 @@ class GraphErrorsSpec extends AnyFunSuite {
       .toDF("t", "band", "value").withColumn("t", to_timestamp(col("t")))
     val c = DataCube.fromTable(df, Seq("t", "band"), "value",
       Map("t" -> DimType.Temporal, "band" -> DimType.Bands))
-    DataCube(c.df, c.meta.copy(dims = c.meta.dims.map(d =>
-      if (d.name == "band") d.copy(labels = Some(Set("B1", "B2"))) else d)))
+    c.copy(labels = Map("band" -> Seq("B1", "B2")))
   }
 
   /** spatial (x, y) cube for the kernel case */
@@ -207,6 +205,14 @@ class GraphErrorsSpec extends AnyFunSuite {
         |      "arguments": {"data": {"from_node": "l"}, "name": "band",
         |                    "label": "x"}, "result": true}""".stripMargin))
     assert(e.contains("DimensionLabelCountMismatch"), e)
+  }
+
+  test("DimensionLabelCountMismatch: drop_dimension of a 2-label dimension") {
+    val e = errorOf(g(
+      """"d": {"process_id": "drop_dimension",
+        |      "arguments": {"data": {"from_node": "l"}, "name": "band"},
+        |      "result": true}""".stripMargin))
+    assert(e.contains("DimensionLabelCountMismatch: 'band' has 2 labels"), e)
   }
 
   test("ArrayElementParameterMissing: array_element without index or label") {
@@ -673,32 +679,18 @@ class GraphErrorsSpec extends AnyFunSuite {
     val unknown = graph("""},
       |  "u": {"process_id": "definitely_not_a_process",
       |        "arguments": {"data": {"from_node": "r"}}, "result": true}""".stripMargin)
-    // count only this thread's jobs: the listener bus may still deliver
-    // other suites' events
-    val group = s"graph-errors-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "zero-job check")
-    try {
-      val e = errorOf(unknown)
-      PlanBridge.drainListeners(spark) // listener bus is async
-      assert(e.contains("ProcessUnsupported: definitely_not_a_process"), e)
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran before the error")
-      // sanity: the same reduce as the result collects its labels
-      ProcessGraph.execute(spark, graph(""", "result": true}"""), _ => cube)
-      PlanBridge.drainListeners(spark)
-      assert(jobs.get > 0)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    val (e, jobs) = JobCount(errorOf(unknown))
+    assert(e.contains("ProcessUnsupported: definitely_not_a_process"), e)
+    assert(jobs == 0, s"$jobs Spark jobs ran before the error")
+    // the same reduce as the result reads the known band labels: no job
+    // at graph time; without them it collects the labels, to equal rows
+    val result = graph(""", "result": true}""")
+    val (known, knownJobs) = JobCount(ProcessGraph.execute(spark, result, _ => cube))
+    assert(knownJobs == 0, s"$knownJobs Spark jobs ran at graph time")
+    val (bare, bareJobs) = JobCount(
+      ProcessGraph.execute(spark, result, _ => cube.copy(labels = Map.empty)))
+    assert(bareJobs > 0)
+    assert(known.df.collect().toSet == bare.df.collect().toSet)
   }
 
   private def processGraphSource: String =
