@@ -78,6 +78,24 @@ final case class DataCube(df: DataFrame, meta: CubeMetadata,
     meta.dimNames.filterNot(_ == dim).map(col)
   def withDf(f: DataFrame => DataFrame): DataCube = DataCube(f(df), meta)
 
+  /** The values along `dim` as one row per series (openEO's array callback
+    * input, reference: cubes/reduce.py:13-35, cubes/apply.py:42-128): the
+    * other dims, then `_keys` (the series' own labels, typed, ascending)
+    * and `_vals` (the values in that order), from one `groupBy`. A series
+    * holds only the labels present in its rows. Both arrays are built by
+    * `transform`, not a field extraction, so projection collapse cannot
+    * inline them into a callback's lambdas and re-derive them per element.
+    */
+  def series(dim: String): DataFrame = {
+    requireDim(dim)
+    val others = meta.dimNames.filterNot(_ == dim).map(col)
+    df.groupBy(others: _*)
+      .agg(sort_array(collect_list(struct(col(dim).as("_k"), value.as("_v"))))
+        .as("_s"))
+      .select((others :+ transform(col("_s"), _.getField("_k")).as("_keys") :+
+        transform(col("_s"), _.getField("_v")).as("_vals")): _*)
+  }
+
   /** The labels of `dim` in native order as text: the known ones, else one
     * Spark job over the (column-pruned) dimension column.
     */

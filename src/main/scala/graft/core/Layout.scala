@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   *    side — the shuffle is paid once when the lake is laid down, not on
   *    every query. This is the Spark-native analogue of the reference's
   *    chunk-aligned dask layouts.
-  *  - **Salted aggregation** is the documented escape hatch for a hot
-  *    natural key: a two-stage aggregate whose first stage spreads each
-  *    key over `salt` sub-keys (map-side partials keep it combinable), so
-  *    no single task owns a whole hot key.
   */
 object Layout {
 
@@ -30,39 +26,6 @@ object Layout {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** One aggregate of a salted two-stage plan: the partial runs per
-    * (key, salt), the final re-combines partials per key. Only algebraic
-    * aggregates decompose this way — which is exactly the library's
-    * exact-integer-domain policy.
-    */
-  final case class SaltedAgg(alias: String, partial: Column,
-      combine: Column => Column)
-
-  object SaltedAgg {
-    def sumOf(c: Column, alias: String): SaltedAgg =
-      SaltedAgg(alias, sum(c), sum)
-    def countAll(alias: String): SaltedAgg =
-      SaltedAgg(alias, count(lit(1)), sum)
-  }
-
-  /** Two-stage salted groupBy: rows of one key spread across `salt`
-    * sub-keys (any row-level spread works — correctness never depends on
-    * WHICH sub-key a row lands on, only the skew relief does), partials
-    * aggregate per (keys, salt), the final stage combines per key. Result
-    * equals the plain `groupBy(keys)` for every algebraic aggregate.
-    */
-  def saltedAgg(df: DataFrame, keys: Seq[String], salt: Int,
-      aggs: Seq[SaltedAgg]): DataFrame = {
-    require(salt > 0 && aggs.nonEmpty, "need salt > 0 and at least one agg")
-    val partials = aggs.map(a => a.partial.as(s"_p_${a.alias}"))
-    val finals = aggs.map(a => a.combine(col(s"_p_${a.alias}")).as(a.alias))
-    df.withColumn("_salt", pmod(monotonically_increasing_id(), lit(salt.toLong)))
-      .groupBy((keys.map(col) :+ col("_salt")): _*)
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(keys.map(col): _*)
-      .agg(finals.head, finals.tail: _*)
   }
 
   /** Morton (Z-order) code of two coordinates quantized to `bits` levels

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * apply_dimension / reduce_dimension callbacks
   * (reference: openeo_processes_dask/process_implementations/arrays.py).
   *
-  * Everything here is higher-order-function Column algebra (codegen'd,
-  * executor-side); nothing materialises on the driver — unlike the
+  * Everything here is higher-order-function Column algebra (executor-side,
+  * no UDFs); nothing materialises on the driver — unlike the
   * reference, whose sort/modify paths force `.compute()` above 50M elements
   * (reference: arrays.py:166-175,439-453,508-513).
   *
@@ -177,11 +177,11 @@ object ArrayFns {
   // openEO's general reducer semantics hand the callback the labeled value
   // ARRAY along the reduced dimension (the published EVI example indexes it
   // with array_element); when a reduce callback composes beyond one plain
-  // aggregate, [[graft.operators.ReduceOps.reduceDimensionArray]] builds
-  // that array per group and these scalar folds evaluate the callback.
+  // aggregate, [[graft.core.DataCube.series]] builds that array per series
+  // and these scalar folds evaluate the callback.
   // Null handling mirrors the aggregate twins (ignore_nodata = true):
   // nulls are skipped, an all-null/empty array yields null. All are Spark
-  // higher-order builtins — codegen'd, no UDFs.
+  // builtins and higher-order functions (interpreted, but no UDFs).
 
   private def nonNull(arr: Column): Column = filter(arr, _.isNotNull)
 

@@ -34,43 +34,8 @@ object ApplyOps {
     cube.withDf(_.withColumn(cube.meta.valueCol, process(cube.value, w)))
   }
 
-  /** apply_dimension with an *array-class* callback: collects each series to
-    * an array (ordered by the dim), applies an ArrayType→ArrayType Column
-    * function (higher-order functions — still codegen'd), and explodes back.
-    * Used for callbacks with cross-element data flow that windows can't
-    * express (reference's np.apply_along_axis path).
-    */
-  def applyDimensionArray(cube: DataCube, dimension: String,
-      process: Column => Column): DataCube =
-    applyDimensionArrayWith(cube, dimension, Nil,
-      (arr, _) => process(arr))
-
-  /** Like [[applyDimensionArray]] but with hoisted per-series helper values.
-    *
-    * Spark's higher-order functions are interpreted (no codegen), and an
-    * outer-array capture inside the lambda is re-evaluated per ELEMENT —
-    * `transform(arr, x -> x - element_at(arr, 1))` is O(n²) per series
-    * (measured 113 s vs <1 s on a 100k-row bench). `pre` expressions are
-    * evaluated once per series into columns the lambda then references.
-    */
-  /** Like [[applyDimensionArray]] but with hoisted per-series helper values.
-    *
-    * Implementation notes (both learned from 100×-slowdown measurements):
-    *  - Spark's higher-order functions are interpreted (no codegen) and an
-    *    outer capture like `transform(arr, x -> x - element_at(arr, 1))`
-    *    re-derives the captured expression per ELEMENT once projection
-    *    collapse inlines it — O(n²) per series. `pre` expressions are
-    *    computed once per series into real columns the lambda references.
-    *  - The result is NOT exploded back. `InferFiltersFromGenerate` copies
-    *    the whole lambda pipeline into a `size(...) > 0` filter in front of
-    *    any Generate (and predicate pushdown re-inlines it through any
-    *    barrier), hitting the same O(n²). Instead the per-series output
-    *    array joins back to the original rows and each row picks its
-    *    element by rank — the window and the join share the same hash
-    *    partitioning on the series dims, so this adds no extra shuffle.
-    */
-  /** apply_dimension with the full target_dimension relabel rules
-    * (reference: cubes/apply.py:96-120):
+  /** apply_dimension with an *array-class* callback and the full
+    * target_dimension relabel rules (reference: cubes/apply.py:96-120):
     *
     *  - `target == dimension` (or None): labels preserved when the callback
     *    keeps series length (`lengthPreserving = true` — the engine's static
@@ -81,27 +46,15 @@ object ApplyOps {
     *  - target exists with more labels: error (mirrors the reference's
     *    raise);
     *  - target is new: source dim renamed to `target`, labels 0..n−1.
-    *
-    * The label-cardinality check reads the target's labels
-    * ([[DataCube.labelsOf]]): no job when they are known, else one over the
-    * (column-pruned) dim column, not the fact payload.
     */
   def applyDimensionTarget(cube: DataCube, dimension: String,
       process: Column => Column, targetDimension: Option[String] = None,
       lengthPreserving: Boolean = false): DataCube = {
     cube.requireDim(dimension)
     val target = targetDimension.getOrElse(dimension)
-    if (target == dimension) {
-      if (lengthPreserving) applyDimensionArray(cube, dimension, process)
-      else applyDimensionRelabel(cube, dimension, process, dimension)
-    } else if (cube.meta.has(target)) {
-      val nLabels = cube.labelsOf(target).size
-      if (nLabels > 1) throw new IllegalArgumentException(
-        s"Cannot rename dimension $dimension to $target: $target already exists " +
-          s"and contains $nLabels labels")
-      val squeezed = DataCube(cube.df.drop(target), cube.meta.without(target))
-      applyDimensionRelabel(squeezed, dimension, process, target)
-    } else applyDimensionRelabel(cube, dimension, process, target)
+    applyDimensionArrayWith(squeezeTarget(cube, dimension, target), dimension,
+      Nil, (arr, _) => process(arr),
+      relabelTo = if (target == dimension && lengthPreserving) None else Some(target))
   }
 
   /** The target_dimension rules applied AROUND an already-transformed,
@@ -117,90 +70,82 @@ object ApplyOps {
     val target = targetDimension.getOrElse(dimension)
     if (target == dimension) cube
     else {
-      val base = if (cube.meta.has(target)) {
-        val nLabels = cube.labelsOf(target).size
-        if (nLabels > 1) throw new IllegalArgumentException(
-          s"Cannot rename dimension $dimension to $target: $target already " +
-            s"exists and contains $nLabels labels")
-        DataCube(cube.df.drop(target), cube.meta.without(target))
-      } else cube
+      val base = squeezeTarget(cube, dimension, target)
       val others = base.meta.dimNames.filterNot(_ == dimension)
       val w = Window.partitionBy(others.map(col): _*).orderBy(col(dimension))
       val out = base.df
         .withColumn("_pos", (row_number().over(w) - 1).cast("long"))
         .select((others.map(col) :+ col("_pos").as(target) :+
           col(base.meta.valueCol)): _*)
-      val newMeta = CubeMetadata(
-        base.meta.dims.filterNot(_.name == dimension) :+
-          CubeDim(target, DimType.Other),
-        base.meta.crs, base.meta.valueCol)
-      DataCube(out, newMeta)
+      DataCube(out, relabeled(base.meta, dimension, target))
     }
   }
 
-  /** Array-callback apply_dimension whose output dim `outDim` is labeled by
-    * positions 0..n−1 — the shape-changing path (posexplode of the
-    * per-series output array).
+  /** An existing `target` other than `dimension` must have exactly one
+    * label, and is squeezed away; the label count reads
+    * [[DataCube.labelsOf]] (no job when known, else one over the
+    * column-pruned dim column).
     */
-  private def applyDimensionRelabel(cube: DataCube, dimension: String,
-      process: Column => Column, outDim: String): DataCube = {
-    val others = cube.meta.dimNames.filterNot(_ == dimension)
-    val grouped =
-      if (others.nonEmpty) cube.df.groupBy(others.map(col): _*)
-      else cube.df.groupBy(lit(1).as("_g"))
-    val raw = grouped
-      .agg(sort_array(collect_list(struct(col(dimension).as("_k"),
-        cube.value.as("_v")))).as("_series"))
-      .withColumn("_vals", expr("transform(_series, s -> s._v)"))
-      .withColumn("_out", process(col("_vals")))
-    // a SCALAR-valued callback (e.g. `mean` as the whole process) reduces
-    // the series to one value: the reference relabels the dim to [0]
-    // (result_len = 1, cubes/apply.py:92-103) — wrap it so the posexplode
-    // below emits exactly that. Analysis-only dtype check, no job.
-    val arrays = raw.schema("_out").dataType match {
-      case _: org.apache.spark.sql.types.ArrayType => raw
-      case _ => raw.withColumn("_out", array(col("_out")))
+  private def squeezeTarget(cube: DataCube, dimension: String,
+      target: String): DataCube =
+    if (target == dimension || !cube.meta.has(target)) cube
+    else {
+      val nLabels = cube.labelsOf(target).size
+      if (nLabels > 1) throw new IllegalArgumentException(
+        s"Cannot rename dimension $dimension to $target: $target already " +
+          s"exists and contains $nLabels labels")
+      DataCube(cube.df.drop(target), cube.meta.without(target))
     }
-    val exploded = arrays
-      .select((others.map(col) :+
-        posexplode(col("_out")).as(Seq("_pos", cube.meta.valueCol))): _*)
-      .withColumn(outDim, col("_pos").cast("long"))
-    val newMeta = CubeMetadata(
-      cube.meta.dims.filterNot(_.name == dimension) :+ CubeDim(outDim, DimType.Other),
-      cube.meta.crs, cube.meta.valueCol)
-    DataCube(exploded.select(
-      (others.map(col) :+ col(outDim) :+ col(cube.meta.valueCol)): _*), newMeta)
-  }
 
+  /** `dimension` replaced by a positional `outDim` at the end */
+  private def relabeled(meta: CubeMetadata, dimension: String,
+      outDim: String): CubeMetadata =
+    meta.copy(dims = meta.dims.filterNot(_.name == dimension) :+
+      CubeDim(outDim, DimType.Other))
+
+  /** The array-callback core: the callback maps each series' value array
+    * ([[DataCube.series]]) to an output array, and the output becomes
+    * cells again by one explode, with no window and no join back.
+    *
+    *  - `relabelTo = None` (a length-preserving callback): the i-th output
+    *    takes the series' i-th original label (`arrays_zip(_keys, _out)`),
+    *    so the cube keeps its dims and label types;
+    *  - `relabelTo = Some(outDim)`: `dimension` becomes `outDim`, labeled by
+    *    positions 0..n−1 (`posexplode`). A scalar-valued callback (`mean`
+    *    as the whole process) yields the one label 0, as the reference's
+    *    result_len = 1 (cubes/apply.py:92-103).
+    *
+    * `pre` helpers are evaluated once per series into columns the callback
+    * receives: Spark's higher-order functions are interpreted, and an
+    * outer capture such as `transform(arr, x -> x - element_at(arr, 1))`
+    * would re-derive the capture per element — O(n²) per series.
+    */
   def applyDimensionArrayWith(cube: DataCube, dimension: String,
       pre: Seq[Column => Column],
-      process: (Column, Seq[Column]) => Column): DataCube = {
-    cube.requireDim(dimension)
-    val others = cube.meta.dimNames.filterNot(_ == dimension)
+      process: (Column, Seq[Column]) => Column,
+      relabelTo: Option[String] = None): DataCube = {
+    val others = cube.meta.dimNames.filterNot(_ == dimension).map(col)
     val preNames = pre.indices.map(i => s"_pre$i")
-    val grouped =
-      if (others.nonEmpty) cube.df.groupBy(others.map(col): _*)
-      else cube.df.groupBy(lit(1).as("_g"))
-    val withPre = grouped
-      .agg(
-        sort_array(collect_list(struct(col(dimension).as("_k"),
-          cube.value.as("_v")))).as("_series"))
-      .withColumn("_vals", expr("transform(_series, s -> s._v)"))
-    val arrays = pre.zip(preNames)
-      .foldLeft(withPre) { case (df, (p, n)) => df.withColumn(n, p(col("_vals"))) }
+    val out = pre.zip(preNames)
+      .foldLeft(cube.series(dimension)) { case (df, (p, n)) =>
+        df.withColumn(n, p(col("_vals"))) }
       .withColumn("_out", process(col("_vals"), preNames.map(col)))
-      .select(((if (others.nonEmpty) others else Seq("_g")).map(col) :+ col("_out")): _*)
-
-    val w = Window.partitionBy(
-        (if (others.nonEmpty) others.map(col) else Seq(lit(1))): _*)
-      .orderBy(col(dimension))
-    val positioned = cube.df.withColumn("_rn", row_number().over(w))
-      .withColumn("_g", lit(1))
-    val joined = positioned
-      .join(arrays, if (others.nonEmpty) others else Seq("_g"))
-      .withColumn(cube.meta.valueCol, element_at(col("_out"), col("_rn")))
-      .drop("_out", "_rn", "_g")
-    DataCube(joined.select(
-      (others.map(col) :+ col(dimension) :+ col(cube.meta.valueCol)): _*), cube.meta)
+    val v = cube.meta.valueCol
+    relabelTo match {
+      case None =>
+        val cells = out.select(others :+
+          explode(arrays_zip(col("_keys"), col("_out"))).as("_z"): _*)
+        DataCube(cells.select(others :+ col("_z._keys").as(dimension) :+
+          col("_z._out").as(v): _*), cube.meta)
+      case Some(outDim) =>
+        val arrays = out.schema("_out").dataType match {
+          case _: org.apache.spark.sql.types.ArrayType => col("_out")
+          case _ => array(col("_out"))
+        }
+        val cells = out.select(others :+
+          posexplode(arrays).as(Seq("_pos", v)): _*)
+        DataCube(cells.select(others :+ col("_pos").cast("long").as(outDim) :+
+          col(v): _*), relabeled(cube.meta, dimension, outDim))
+    }
   }
 }

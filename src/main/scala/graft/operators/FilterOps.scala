@@ -51,38 +51,25 @@ object FilterOps {
   }
 
   /** Band-label selection; errors if any requested band is absent
-    * (reference: cubes/_filter.py:133-149). Validation stays IN the plan: a
-    * one-row anti-join aggregate counts requested-but-absent bands and a
-    * raise_error guard fires at execution time — no driver-side collect, the
-    * check runs distributed with the query.
+    * (reference: cubes/_filter.py:133-149). The check runs on the driver
+    * against the cube's known band labels, with no job, as `ndvi`'s does;
+    * a cube without known band labels is not checked.
     */
-  def filterBands(cube: DataCube, bands: Seq[String],
-      validate: Boolean = false): DataCube = {
+  def filterBands(cube: DataCube, bands: Seq[String]): DataCube = {
     if (cube.meta.bandDims.isEmpty) throw new IllegalArgumentException(
       "DimensionMissing: a band dimension is missing") // _filter.py:139-140
     val dim = cube.bandDim
+    val known = cube.labels.get(dim)
+    known.foreach { ls =>
+      val absent = bands.filterNot(ls.contains)
+      if (absent.nonEmpty) throw new IllegalArgumentException(
+        s"BandFilterParameterMissing: requested bands ${absent.mkString(", ")} " +
+          "are not among the cube's bands")
+    }
     // the rows left hold the known band labels that were asked for, in
     // their order; the other dims may lose labels, so theirs are unknown
-    val kept = cube.labels.get(dim).map(ls => dim -> ls.filter(bands.contains))
-    val filtered =
-      DataCube(cube.df.filter(col(dim).isin(bands: _*)), cube.meta, kept.toMap)
-    if (!validate) filtered
-    else {
-      val spark = cube.df.sparkSession
-      import spark.implicits._
-      val requested = bands.toDF("_req")
-      val missingCnt = requested
-        .join(cube.df.select(col(dim)).distinct(),
-          col("_req") === col(dim), "left_anti")
-        .agg(count(lit(1)).as("_missing"))
-      val v = cube.meta.valueCol
-      filtered.withDf(_.crossJoin(broadcast(missingCnt))
-        .withColumn(v,
-          when(col("_missing") > 0,
-            raise_error(lit(s"BandFilterParameterMissing: requested band absent")))
-            .otherwise(col(v)))
-        .drop("_missing"))
-    }
+    val kept = known.map(ls => dim -> ls.filter(bands.contains))
+    DataCube(cube.df.filter(col(dim).isin(bands: _*)), cube.meta, kept.toMap)
   }
 
   /** Keep rows whose label on `dimension` satisfies `condition` — the

@@ -32,6 +32,13 @@ object KernelOps {
   case object Wrap extends BorderMode          // abcd|abcd|abcd
   final case class Constant(value: Double) extends BorderMode
 
+  /** apply_kernel over the cube's (x, y) coordinates as given. A kernel
+    * step is one coordinate unit: the cell at offset (dx, dy) is the one
+    * whose coordinates are (x + dx, y + dy). So the result is a true
+    * convolution only on a grid spaced 1 apart; on any other spacing
+    * (a 0.1°-spaced raster, say) no neighbour matches and each cell gets
+    * only its centre weight times its value (times `factor`).
+    */
   def applyKernel(cube: DataCube, kernel: Seq[Seq[Double]],
       factor: Double = 1.0): DataCube = {
     val sd = cube.meta.spatialDims

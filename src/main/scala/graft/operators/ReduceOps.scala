@@ -31,29 +31,21 @@ object ReduceOps {
   }
 
   /** Reduce one dimension with an ARRAY-style reducer: the callback
-    * receives the per-group value array ordered by the reduced dimension's
-    * labels — openEO's general reducer semantics, in which the published
-    * EVI example indexes the band array with `array_element`
-    * (reference: cubes/reduce.py:13-35 passes the labeled axis to the
-    * callback). Plan shape: STILL one shuffle — `groupBy(surviving dims)`
-    * with `sort_array(collect_list(struct(dim, value)))` building the
-    * ordered array, and the callback's scalar expression tree evaluating
-    * on top of that aggregate inside the same projection. Used only when
-    * the callback composes beyond a single plain aggregate (those keep the
-    * partial-agg fast path in [[reduceDimension]]).
+    * receives each series' value array ordered by the reduced dimension's
+    * labels ([[DataCube.series]]) — openEO's general reducer semantics, in
+    * which the published EVI example indexes the band array with
+    * `array_element` (reference: cubes/reduce.py:13-35 passes the labeled
+    * axis to the callback). Plan shape: STILL one shuffle — the series
+    * `groupBy(surviving dims)`, with the callback's scalar expression tree
+    * evaluating in the projection above it. Used only when the callback
+    * composes beyond a single plain aggregate (those keep the partial-agg
+    * fast path in [[reduceDimension]]).
     */
   def reduceDimensionArray(cube: DataCube, dimension: String,
       arrayReducer: Column => Column): DataCube = {
-    cube.requireDim(dimension)
-    val keys = cube.dimColsExcept(dimension)
-    val ordered = transform(
-      sort_array(collect_list(struct(col(dimension).as("_o"),
-        cube.value.as("_v")))),
-      x => x.getField("_v"))
-    val agg = arrayReducer(ordered).as(cube.meta.valueCol)
-    val out =
-      if (keys.isEmpty) cube.df.agg(agg)
-      else cube.df.groupBy(keys: _*).agg(agg)
+    val out = cube.series(dimension).select(
+      cube.dimColsExcept(dimension) :+
+        arrayReducer(col("_vals")).as(cube.meta.valueCol): _*)
     // Scalar results normalize to double, matching the single-aggregate
     // fast path in [[reduceDimension]]; ARRAY-valued composed reducers
     // (extrema, multi-probability quantiles) keep their arrays — the old

@@ -777,14 +777,16 @@ object ProcessGraph {
           "reducer returned", lits = false)
       }
 
-      /** the `_labels` context of an ordered-array callback: the
-        * dimension's labels in native (= ordered-array) order, read only
-        * when the callback has an `array_element` node with a `label`
-        * argument
+      /** the label context of an ordered-array callback, set only when
+        * the callback has an `array_element` node with a `label` argument:
+        * `_labels`, the dimension's labels for the driver-side check, and
+        * `_keys`, each series' own labels as text (the `_keys` column of
+        * [[DataCube.series]]), which a sparse series does not share
         */
       def labelContext(cb: Graph, labels: => Seq[String]): Map[String, PValue] =
         if (!cb.readsLabels) Map.empty
-        else Map("_labels" -> ArrV(labels.map(StrV)))
+        else Map("_labels" -> ArrV(labels.map(StrV)),
+          "_keys" -> ColV(transform(col("_keys"), _.cast("string"))))
 
       /** a statistical reducer: the array fold inside an `_array` reduce,
         * else the partial-aggregation aggregate
@@ -856,8 +858,9 @@ object ProcessGraph {
           //  - anything composing array-aware processes: the callback runs
           //    with `_array` context — statistical reducers flip to array
           //    folds, cumulative/interpolate to their array forms, and
-          //    label-based array_element gets the dim's label list
-          //    (`labelsOf`, only when the callback says "label").
+          //    label-based array_element reads each series' own labels
+          //    (checked against `labelsOf`, only when the callback says
+          //    "label").
           //    Length-preserving result nodes keep the dim's
           //    labels (the reference's runtime length check, decided
           //    statically here); everything else relabels 0..n-1.
@@ -953,8 +956,7 @@ object ProcessGraph {
                 arr => run(Map("x" -> ColV(arr), "data" -> ColV(arr),
                   "_array" -> BoolV(true)) ++ labelCtx)
             CubeV(ApplyOps.applyDimensionTarget(c, dim, process, target,
-              lengthPreserving = optBool("length_preserving", false) ||
-                cb.elementwise || cb.lengthPreserving))
+              lengthPreserving = cb.elementwise || cb.lengthPreserving))
           }
           }
         case "apply_kernel" =>
@@ -2055,9 +2057,9 @@ object ProcessGraph {
           ColV(Scalar.dateShift(column("date"), num("value").toInt, str("unit")))
         // array sub-language over ArrayType columns (reference: arrays.py)
         case "array_element" =>
-          // index, or a `label` resolved against the reduced dimension's
-          // label list (injected by the ordered-array reduce as `_labels`;
-          // published NDVI graphs address bands by label)
+          // index, or a `label` resolved against the series' own labels
+          // (an ordered-array callback's `labelContext`; published NDVI
+          // graphs address bands by label)
           if (args.contains("index") && args.contains("label"))
             throw new IllegalArgumentException(
               "ArrayElementParameterConflict: the process `array_element` " +
@@ -2078,28 +2080,26 @@ object ProcessGraph {
                 case _ => ColV(graft.functions.ArrayFns.arrayElement(
                   map_values(m), num("index").toInt))
               }
-            case _ =>
-              val idx = args.get("index") match {
-                case Some(NumV(v)) => v.toInt
-                case _ => (args.get("label"), ctx.get("_labels")) match {
-                  case (Some(StrV(lab)), Some(ArrV(ls))) =>
-                    val i = ls.indexWhere {
-                      case StrV(s) => s == lab
-                      case _ => false
-                    }
-                    require(i >= 0, s"ArrayElementNotAvailable: label '$lab' " +
-                      s"not among ${ls.size} dimension labels")
-                    i
-                  case (Some(StrV(_)), _) => throw new IllegalArgumentException(
-                    "ArrayNotLabeled: array_element label access needs a " +
-                      "labeled array context")
-                  case _ => throw new IllegalArgumentException(
-                    "ArrayElementParameterMissing: the process `array_element` " +
-                      "requires either the `index` or `label` parameter to be " +
-                      "set") // reference arrays.py:74-78
-                }
+            case _ => args.get("index") match {
+              case Some(NumV(v)) => ColV(
+                graft.functions.ArrayFns.arrayElement(column("data"), v.toInt))
+              case _ => (args.get("label"), ctx.get("_labels"),
+                  ctx.get("_keys")) match {
+                case (Some(StrV(lab)), Some(ArrV(ls)), Some(ColV(keys))) =>
+                  require(ls.contains(StrV(lab)), s"ArrayElementNotAvailable: " +
+                    s"label '$lab' not among ${ls.size} dimension labels")
+                  // the label's place in this series' own labels: null
+                  // where the series lacks it (`get` is null out of range)
+                  ColV(get(column("data"), array_position(keys, lab) - 1))
+                case (Some(StrV(_)), _, _) => throw new IllegalArgumentException(
+                  "ArrayNotLabeled: array_element label access needs a " +
+                    "labeled array context")
+                case _ => throw new IllegalArgumentException(
+                  "ArrayElementParameterMissing: the process `array_element` " +
+                    "requires either the `index` or `label` parameter to be " +
+                    "set") // reference arrays.py:74-78
               }
-              ColV(graft.functions.ArrayFns.arrayElement(column("data"), idx))
+            }
           }
         case "array_concat" => (arg("array1"), arg("array2")) match {
           // both labeled: shared labels are the reference's

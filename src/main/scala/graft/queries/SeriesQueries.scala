@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core._
-import graft.functions.{ArrayFns, Reducers}
+import graft.functions.ArrayFns
 import graft.operators._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -171,9 +171,7 @@ object SeriesQueries {
     "array_hofs" -> { (s, dir) =>
       val c = eidCube(s, dir)
       val filtered = FilterOps.filterLabels(c, "eid", l => l % 13 === 0)
-      val arrs = filtered.df.groupBy(col("band")).agg(
-        sort_array(collect_list(struct(col("eid"), col("value")))).as("_s"))
-        .withColumn("arr", expr("transform(_s, p -> p.value)"))
+      val arrs = filtered.series("eid").withColumnRenamed("_vals", "arr")
       arrs.select(
         col("band"),
         size(col("arr")).as("n"),
@@ -192,10 +190,8 @@ object SeriesQueries {
     "array_constructors" -> { (s, dir) =>
       val c = eidCube(s, dir)
       val filtered = FilterOps.filterLabels(c, "eid", l => l % 13 === 0)
-      val arrs = filtered.df.groupBy(col("band")).agg(
-        sort_array(collect_list(struct(col("eid"), col("value")))).as("_s"),
-        Reducers.extremaR(col("value")).as("_ex"))
-        .withColumn("arr", expr("transform(_s, p -> p.value)"))
+      val arrs = filtered.series("eid").withColumnRenamed("_vals", "arr")
+        .withColumn("_ex", ArrayFns.arrayExtrema(col("arr")))
       arrs.select(
         col("band"),
         // array_create: tile the first two elements twice → exact sum

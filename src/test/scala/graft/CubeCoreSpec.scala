@@ -233,12 +233,20 @@ class CubeCoreSpec extends AnyFunSuite {
     intercept[Exception] { merged.df.collect() }
   }
 
-  test("filter_bands validation raises lazily for absent bands") {
+  test("filter_bands raises on the driver for a band its known labels lack") {
     val c = cube(Seq((1.0, "B1", 1.0), (1.0, "B2", 2.0)))
-    val ok = FilterOps.filterBands(c, Seq("B1"), validate = true)
+      .copy(labels = Map("band" -> Seq("B1", "B2")))
+    val ok = FilterOps.filterBands(c, Seq("B1"))
     assert(ok.df.collect().length == 1)
-    val bad = FilterOps.filterBands(c, Seq("B1", "B9"), validate = true)
-    intercept[Exception] { bad.df.collect() }
+    val (e, jobs) = JobCount(intercept[IllegalArgumentException] {
+      FilterOps.filterBands(c, Seq("B1", "B9"))
+    })
+    assert(e.getMessage.startsWith("BandFilterParameterMissing"), e.getMessage)
+    assert(e.getMessage.contains("B9") && !e.getMessage.contains("B1"))
+    assert(jobs == 0, s"$jobs Spark jobs ran for the band check")
+    // without known band labels the request is not checked
+    assert(FilterOps.filterBands(c.copy(labels = Map.empty), Seq("B1", "B9"))
+      .df.collect().length == 1)
   }
 
   test("rename_labels checked: remap, LabelExists, LabelNotAvailable, LabelMismatch") {

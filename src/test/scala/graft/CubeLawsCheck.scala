@@ -209,23 +209,4 @@ object CubeLawsCheck extends Properties("CubeLaws") {
         winSum == nonNull.map(_._2.toDouble).sum
       }
     }
-
-  property("saltedAgg equals the unsalted groupBy for sum and count") =
-    forAll(genCells, Gen.choose(1, 5)) { (cells, salt) =>
-      val nonEmpty = cells.nonEmpty
-      !nonEmpty || {
-        val df = cells.map { case (i, b, v) =>
-          (b, v.map(_.toLong).map(java.lang.Long.valueOf).orNull)
-        }.toDF("k", "v")
-        val aggs = Seq(core.Layout.SaltedAgg.sumOf(col("v"), "s"),
-          core.Layout.SaltedAgg.countAll("n"))
-        def toMap(d: org.apache.spark.sql.DataFrame) = d.collect()
-          .map(r => r.getString(0) ->
-            ((if (r.isNullAt(1)) None else Some(r.getLong(1))), r.getLong(2)))
-          .toMap
-        toMap(core.Layout.saltedAgg(df, Seq("k"), salt, aggs)) ==
-          toMap(df.groupBy(col("k"))
-            .agg(sum(col("v")).as("s"), count(lit(1)).as("n")))
-      }
-    }
 }

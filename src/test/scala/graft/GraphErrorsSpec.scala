@@ -365,6 +365,71 @@ class GraphErrorsSpec extends AnyFunSuite {
     assert(e.contains("ArrayElementNotAvailable"), e)
   }
 
+  /** `cube` without its 2024-01-02 B1 cell: that series holds only B2 */
+  private def sparseCube: DataCube =
+    cube.withDf(_.filter(!(col("t") === to_timestamp(lit("2024-01-02")) &&
+      col("band") === "B1"))).copy(labels = Map("band" -> Seq("B1", "B2")))
+
+  private def cells(c: DataCube): Set[(String, String, java.lang.Double)] =
+    c.df.select(col("t").cast("string"), col("band"), col("value"))
+      .as[(String, String, java.lang.Double)].collect().toSet
+
+  test("a label-reading reduce_dimension reads each series' own labels") {
+    // B2 − B1 per day: 2024-01-02 has no B1, so its difference is null
+    // (indexing that series by the dimension's labels read past its end)
+    val out = ProcessGraph.execute(spark, g(
+      """"r": {"process_id": "reduce_dimension",
+        |      "arguments": {"data": {"from_node": "l"}, "dimension": "band",
+        |        "reducer": {"process_graph": {
+        |          "b1": {"process_id": "array_element",
+        |                 "arguments": {"data": {"from_parameter": "data"},
+        |                               "label": "B1"}},
+        |          "b2": {"process_id": "array_element",
+        |                 "arguments": {"data": {"from_parameter": "data"},
+        |                               "label": "B2"}},
+        |          "d": {"process_id": "subtract",
+        |                "arguments": {"x": {"from_node": "b2"},
+        |                              "y": {"from_node": "b1"}},
+        |                "result": true}}}},
+        |      "result": true}""".stripMargin), _ => sparseCube)
+    val got = out.df.select(col("t").cast("string"), col("value"))
+      .as[(String, java.lang.Double)].collect().toSet
+    assert(got == Set(("2024-01-01 00:00:00", 9.0), ("2024-01-02 00:00:00", null)))
+  }
+
+  test("a label-reading apply_dimension reads each series' own labels") {
+    // every band minus the day's B2, through array_apply's context: the
+    // series keep their labels, and the one-band series resolves B2 too
+    val out = ProcessGraph.execute(spark, g(
+      """"a": {"process_id": "apply_dimension",
+        |      "arguments": {"data": {"from_node": "l"}, "dimension": "band",
+        |        "process": {"process_graph": {
+        |          "b2": {"process_id": "array_element",
+        |                 "arguments": {"data": {"from_parameter": "data"},
+        |                               "label": "B2"}},
+        |          "m": {"process_id": "array_apply",
+        |                "arguments": {"data": {"from_parameter": "data"},
+        |                  "context": {"from_node": "b2"},
+        |                  "process": {"process_graph": {
+        |                    "s": {"process_id": "subtract",
+        |                          "arguments": {"x": {"from_parameter": "x"},
+        |                            "y": {"from_parameter": "context"}},
+        |                          "result": true}}}},
+        |                "result": true}}}},
+        |      "result": true}""".stripMargin), _ => sparseCube)
+    assert(cells(out) == Set(("2024-01-01 00:00:00", "B1", -9.0),
+      ("2024-01-01 00:00:00", "B2", 0.0), ("2024-01-02 00:00:00", "B2", 0.0)))
+  }
+
+  test("BandFilterParameterMissing: filter_bands of a band the known labels lack, with no job") {
+    val (e, jobs) = JobCount(errorOf(g(
+      """"f": {"process_id": "filter_bands",
+        |      "arguments": {"data": {"from_node": "l"}, "bands": ["B1", "B9"]},
+        |      "result": true}""".stripMargin)))
+    assert(e.contains("BandFilterParameterMissing") && e.contains("B9"), e)
+    assert(jobs == 0, s"$jobs Spark jobs ran before the error")
+  }
+
   test("ArrayLabelConflict: array_concat of labeled arrays sharing a label") {
     val e = errorOf(g(
       """"a": {"process_id": "apply",

@@ -51,7 +51,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(codegen.contains("WholeStageCodegen subtree"), codegen.take(500))
   }
 
-  test("bucketed tables join with ZERO exchanges; salted agg matches plain") {
+  test("bucketed tables join with ZERO exchanges") {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
     val orders = spark.read.parquet(s"$dir/orders.parquet")
@@ -78,17 +78,6 @@ class PlanAuditSpec extends AnyFunSuite {
         plan(joined)) // the lake layout paid the shuffle once, queries never do
       assert(joined.count() == li.count())
     } finally spark.conf.set(auto, prev)
-
-    // salted two-stage aggregation: same answer as the direct groupBy
-    val aggs = Seq(
-      core.Layout.SaltedAgg.sumOf(col("l_quantity"), "q"),
-      core.Layout.SaltedAgg.countAll("n"))
-    val salted = core.Layout.saltedAgg(li, Seq("l_orderkey"), 8, aggs)
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    val plain = li.groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    assert(salted == plain)
   }
 
   test("shuffle budget: reduce=1, exact dedup=1, 2-D neighborhood=1, warp=0") {
@@ -102,6 +91,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(shuffles(ReduceOps.reduceDimensionArray(c, "t", arr =>
       graft.functions.ArrayFns.arrayMean(arr) +
         graft.functions.ArrayFns.arraySd(arr)).df) == 1)
+
+    // a length-preserving array apply_dimension: the series groupBy is the
+    // one exchange, and its output explodes back to cells with the series'
+    // labels — no rank window, no join back
+    val sorted = ApplyOps.applyDimensionTarget(c, "t",
+      arr => graft.functions.ArrayFns.arraySort(arr), lengthPreserving = true).df
+    assert(shuffles(sorted) == 1, plan(sorted))
+    assert(!plan(sorted).contains("Join") && !plan(sorted).contains("Window"),
+      plan(sorted))
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     assert(shuffles(pipeline.Dedup.exact(docs, "doc_id",
