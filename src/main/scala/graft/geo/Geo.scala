@@ -36,24 +36,6 @@ object Geo {
     crossings % 2 === 1
   }
 
-  /** Even-odd test over MULTIPLE rings — covers polygons with holes (outer
-    * ring + hole rings: a point inside a hole crosses both boundaries an
-    * even number of times) and multipolygons (disjoint outers) with the
-    * same crossing-parity arithmetic; mirrors rasterio's geometry_mask
-    * semantics (reference: cubes/mask_polygon.py:84-110).
-    */
-  def pointInPolygonMulti(px: Column, py: Column, rings: Seq[Ring]): Column = {
-    require(rings.nonEmpty, "GeometryInvalid: no rings")
-    val crossings = rings.flatMap { ring =>
-      ring.zip(ring.tail :+ ring.head).map { case ((x1, y1), (x2, y2)) =>
-        val straddles = (lit(y1) > py) =!= (lit(y2) > py)
-        val xAtY = (lit(x2) - x1) * (py - y1) / (lit(y2) - y1) + x1
-        when(straddles && px < xAtY, 1).otherwise(0)
-      }
-    }.reduce(_ + _)
-    crossings % 2 === 1
-  }
-
   /** The same predicate as SQL text (DuckDB-compatible), generated from the
     * same constants — the oracle-side twin of [[pointInPolygon]].
     */
@@ -83,11 +65,6 @@ object Geo {
   def latToMercatorY(lat: Column): Column =
     log(tan(lit(math.Pi / 4) + radians(lat) / 2)) * EarthRadius
 
-  /** EPSG:3857 → EPSG:4326 inverse: lat = 2·atan(exp(y/R)) − π/2. */
-  def mercatorXToLon(x: Column): Column = degrees(x / EarthRadius)
-  def mercatorYToLat(y: Column): Column =
-    degrees(atan(exp(y / EarthRadius)) * 2 - lit(math.Pi / 2))
-
   /** Driver-side scalar twins (for bbox reprojection before filter_bbox,
     * mirroring the reference's driver-side `_reproject_bbox`).
     */
@@ -104,23 +81,8 @@ object Geo {
   private val F = 1.0 / 298.257223563
   private val E2 = F * (2 - F)
   private val Ep2 = E2 / (1 - E2)
-  private val K0 = 0.9996
 
   def utmCentralMeridian(zone: Int): Double = zone * 6.0 - 183.0
-
-  /** Forward: (lon°, lat°) → (easting, northing) for the given zone; pass
-    * `south = true` for EPSG:327xx (adds the 10,000 km false northing).
-    */
-  def utmForward(lon: Double, lat: Double, zone: Int,
-      south: Boolean = false): (Double, Double) =
-    tmForward(lon, lat, utmCentralMeridian(zone), K0, 500000.0,
-      if (south) 10000000.0 else 0.0)
-
-  /** Inverse: (easting, northing, zone) → (lon°, lat°). */
-  def utmInverse(easting: Double, northing: Double, zone: Int,
-      south: Boolean = false): (Double, Double) =
-    tmInverse(easting, northing, utmCentralMeridian(zone), K0, 500000.0,
-      if (south) 10000000.0 else 0.0)
 
   /** GENERALIZED WGS84 Transverse Mercator (same Snyder 1987 §8 series as
     * UTM) with arbitrary central meridian, scale factor, and false origin —

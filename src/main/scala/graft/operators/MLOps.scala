@@ -145,16 +145,4 @@ object MLOps {
         s"ModelNotFound: cannot load model at $path (${e.getMessage})") }
     (model, feats)
   }
-
-  /** Batch prediction: assemble features, score on executors
-    * (reference: random_forest.py:128-161's pixel flattening is unnecessary
-    * here — rows are already the flat form).
-    */
-  def predictRandomForest(model: RandomForestRegressionModel, df: DataFrame,
-      featureCols: Seq[String]): DataFrame = {
-    val assembled = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("features")
-      .transform(df)
-    model.transform(assembled).drop("features")
-  }
 }

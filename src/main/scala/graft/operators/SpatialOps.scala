@@ -35,19 +35,6 @@ object SpatialOps {
       when(keep, cube.value).otherwise(replacement)))
   }
 
-  /** mask_polygon for polygons WITH HOLES and multipolygons: all rings
-    * (outers + holes) share one even-odd parity test
-    * (see [[Geo.pointInPolygonMulti]]).
-    */
-  def maskPolygonMulti(cube: DataCube, rings: Seq[Geo.Ring],
-      replacement: Column = lit(null), inside: Boolean = true): DataCube = {
-    val (xd, yd) = xy(cube)
-    val in = Geo.pointInPolygonMulti(col(xd), col(yd), rings)
-    val keep = if (inside) in else !in
-    cube.withDf(_.withColumn(cube.meta.valueCol,
-      when(keep, cube.value).otherwise(replacement)))
-  }
-
   /** filter_spatial: crop to the polygon's bbox, then polygon-mask — rows
     * outside are dropped entirely (reference: cubes/_filter.py:152-168).
     * The bbox pre-filter is what reaches the parquet scan as a pushed

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.geo.Geo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s.JValue
@@ -219,28 +218,12 @@ object VectorOps {
     points.unionByName(polys)
   }
 
-  /** vector_reproject EPSG:4326 → EPSG:326xx/327xx (UTM zone) over every
-    * vertex — the Snyder series in [[Geo.utmForward]] as a deterministic
-    * scalar UDF (the transcendental series is too large to unroll as a
-    * Column tree; the reference reaches the same CRS through pyproj).
-    */
-  def reprojectToUtm(df: DataFrame, geomCol: String, zone: Int,
-      south: Boolean = false): DataFrame = {
-    val fn = udf((pts: Seq[org.apache.spark.sql.Row]) =>
-      pts.map { p =>
-        val (x, y) = Geo.utmForward(p.getDouble(0), p.getDouble(1), zone, south)
-        (x, y)
-      })
-    df.withColumn(geomCol, transform(fn(col(geomCol)), p =>
-      struct(p.getField("_1").as("x"), p.getField("_2").as("y"))))
-  }
-
   /** vector_reproject between ARBITRARY registry CRSs
     * (reference: cubes/geometries.py:149-170 reprojects through pyproj's
     * any-to-any transformer): every vertex routes through
     * [[graft.geo.Crs.transform]] — 4326/3857/any Transverse-Mercator EPSG
-    * or proj-string. Per-vertex scalar UDF over the geometry array; same
-    * shape contract as the fixed-target variants above.
+    * or proj-string. Per-vertex scalar UDF over the geometry array, which
+    * keeps its `array<struct<x, y>>` shape.
     */
   def reprojectVector(df: DataFrame, geomCol: String,
       fromCrs: String, toCrs: String): DataFrame = {

@@ -738,26 +738,21 @@ object Dedup {
     out.toSeq.toDF("node", "cluster")
   }
 
-  /** Each document's PREFIX under the canonical global shingle order
-    * (document frequency ascending, shingle ascending — a total order shared
-    * by every document): the first n − ⌈t·n⌉ + 1 shingles of the n-shingle
-    * set. The prefix-filtering lemma (public SSJoin/PPJoin technique —
-    * Chaudhuri et al. ICDE'06, Xiao et al. WWW'08) guarantees two sets with
-    * Jaccard ≥ t share at least one shingle in BOTH prefixes, so a prefix
-    * inverted index is a LOSSLESS candidate generator. The excluded suffix
-    * is each doc's ⌈t·n⌉−1 globally most-frequent shingles — precisely the
-    * stop-word-class hot keys whose Σf² pairs blow up a full-index self-join
-    * at corpus scale.
-    */
-  private[graft] def jaccardPrefix(sh: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    shingleSetsWithPrefix(sh, idCol, threshold)
-      .select(col(idCol), explode(col("_prefix")).as("shingle"))
-
   /** Per-doc shingle set + its prefix in ONE aggregation: (id, _set, n_sh,
     * _prefix). The set array is collected already ordered by the canonical
     * (df, shingle) total order, so the prefix is just its leading slice —
     * no per-doc window pass.
+    *
+    * A document's PREFIX under the canonical global shingle order
+    * (document frequency ascending, shingle ascending — a total order shared
+    * by every document) is the first n − ⌈t·n⌉ + 1 shingles of its
+    * n-shingle set. The prefix-filtering lemma (public SSJoin/PPJoin
+    * technique — Chaudhuri et al. ICDE'06, Xiao et al. WWW'08) guarantees
+    * two sets with Jaccard ≥ t share at least one shingle in BOTH prefixes,
+    * so a prefix inverted index is a LOSSLESS candidate generator. The
+    * excluded suffix is each doc's ⌈t·n⌉−1 globally most-frequent shingles —
+    * precisely the stop-word-class hot keys whose Σf² pairs blow up a
+    * full-index self-join at corpus scale.
     */
   private[graft] def shingleSetsWithPrefix(sh: DataFrame, idCol: String,
       threshold: Double): DataFrame = {

@@ -895,13 +895,6 @@ object Mpeg1 {
     if (decodedAny) Some(Frame(ctx.width, ctx.height, y, cb, cr)) else None
   }
 
-  /** Decode the first I-picture of an MPEG-1 video elementary stream
-    * (sequence header required in-band). None when there is no sequence
-    * header, no I-picture, or nothing decodes.
-    */
-  def decodeIntra(bytes: Array[Byte]): Option[Frame] =
-    decodeAccessUnit(None, bytes)._2
-
   /** Context scan only — no pixel work. Used for the access units the
     * frame sampler skips, so `everyNth` still bounds decode cost while
     * the sequence context is never missed. Never throws.

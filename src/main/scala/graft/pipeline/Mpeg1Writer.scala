@@ -14,7 +14,7 @@ package graft.pipeline
   */
 object Mpeg1Writer {
 
-  private final class BitWriter {
+  private[graft] final class BitWriter {
     private val buf = scala.collection.mutable.ArrayBuffer[Byte]()
     private var cur = 0
     private var nb = 0
@@ -39,7 +39,7 @@ object Mpeg1Writer {
   private val DcSizeChroma = Array(
     "00", "01", "10", "110", "1110", "11110", "111110", "1111110", "11111110")
 
-  private def putDc(w: BitWriter, diff: Int, luma: Boolean): Unit = {
+  private[graft] def putDc(w: BitWriter, diff: Int, luma: Boolean): Unit = {
     val size = 32 - Integer.numberOfLeadingZeros(math.abs(diff)) // 0 for 0
     w.b(if (luma) DcSizeLuma(size) else DcSizeChroma(size))
     if (size > 0)
@@ -73,7 +73,7 @@ object Mpeg1Writer {
     w.align()
   }
 
-  private def seqHeader(w: BitWriter, width: Int, height: Int): Unit = {
+  private[graft] def seqHeader(w: BitWriter, width: Int, height: Int): Unit = {
     w.bits(0, 8).bits(0, 8).bits(1, 8).bits(0xb3, 8)
     w.bits(width, 12).bits(height, 12)
       .bits(1, 4).bits(1, 4) // aspect, picture_rate
@@ -150,47 +150,6 @@ object Mpeg1Writer {
       w.b("1").b("1").b("1").b("1") // four motion codes 0
     }
     w.align()
-  }
-
-  /** One D-picture access unit at uniform luma `gray`: the DC-only
-    * fast-preview picture class — each macroblock is the one-entry B.2d
-    * type bit, six predictive DC blocks with NO AC scan and NO EOB, and
-    * an end_of_macroblock bit.
-    */
-  private def dPicture(w: BitWriter, width: Int, height: Int,
-      gray: Int): Unit = {
-    require(gray >= 0 && gray <= 255, s"gray out of range: $gray")
-    w.bits(0, 8).bits(0, 8).bits(1, 8).bits(0x00, 8) // picture start code
-    w.bits(0, 10).bits(4, 3).bits(0xffff, 16).put(0) // D, vbv_delay
-    w.align()
-    w.bits(0, 8).bits(0, 8).bits(1, 8).bits(0x01, 8) // slice 1
-    w.bits(8, 5).put(0) // quantizer_scale (unused: DC only), extra_bit
-    val nMb = ((width + 15) / 16) * ((height + 15) / 16)
-    for (mb <- 0 until nMb) {
-      w.b("1").b("1") // address_increment 1, B.2d macroblock_type
-      for (blk <- 0 until 6) {
-        val luma = blk < 4
-        val diff = if (mb == 0 && blk == 0) gray - 128 else 0
-        putDc(w, diff, luma) // no EOB: D blocks are the DC alone
-      }
-      w.b("1") // end_of_macroblock
-    }
-    w.align()
-  }
-
-  /** Per-access-unit D-picture bytes for muxing, AU 0 carrying the
-    * sequence header — the D-only sequence shape the spec confines
-    * D-pictures to.
-    */
-  def dPictures(width: Int, height: Int,
-      grays: Seq[Int]): Seq[Array[Byte]] = {
-    require(grays.nonEmpty, "at least one picture")
-    grays.zipWithIndex.map { case (g, i) =>
-      val w = new BitWriter
-      if (i == 0) seqHeader(w, width, height)
-      dPicture(w, width, height, g)
-      w.bytes
-    }
   }
 
   /** STREAM-order I → P → B access units exercising all three picture

@@ -11,10 +11,9 @@ import org.apache.spark.sql.expressions.Window
   *
   * Two physical forms with identical semantics:
   *
-  *   - '''Scan-speed''' (`*F` columns): per-row higher-order-function folds
-  *     over the document's own n-gram array — zero shuffles, the filter
-  *     rides any corpus scan for free. The fold sorts the gram array and
-  *     counts runs, so memory is O(grams of ONE doc), never corpus-sized.
+  *   - '''Scan-speed''' ([[stats]]): one imperative pass per document —
+  *     zero shuffles, the filter rides any corpus scan for free, and
+  *     memory is O(grams of ONE doc), never corpus-sized.
   *   - '''Relational''' (`topNgramStats` / `dupNgramChars`): explode +
   *     map-side-combinable groupBy keyed (doc, gram) — one shuffle whose
   *     keys are document-local (no corpus-global hot keys), used by the
@@ -51,68 +50,14 @@ object Repetition {
 
   /** All four Gopher metrics — `struct(ttr, top2, top3, dup5)` — in ONE
     * imperative pass per document ([[graft.functions.RepetitionStats]]).
-    * Bit-identical to the four HOF columns below (property-spec-pinned) but
-    * ~50× cheaper: the HOF folds are interpreted per array element and each
-    * re-tokenizes + re-sorts the doc. Prefer this in corpus-scale filters;
-    * the HOF forms remain for arbitrary n and as the semantic reference.
+    * Bit-identical to the higher-order-function folds the specs keep as
+    * its semantic reference (property-spec-pinned) but ~50× cheaper: the
+    * HOF folds are interpreted per array element and each re-tokenizes +
+    * re-sorts the doc.
     */
   def stats(text: Column): Column =
     ColumnBridge.column(graft.functions.RepetitionStats(
       ColumnBridge.expression(text.cast("string"))))
-
-  // ---- scan-speed form: run-length fold over the sorted gram array ----
-
-  /** struct(cnt, gram) of the most frequent n-gram (ties → smallest gram);
-    * struct(0, "") when the doc has no n-grams. The sorted array makes equal
-    * grams adjacent, so one left-to-right fold finds the longest run; runs
-    * arrive gram-ascending, so keeping only strictly-longer runs implements
-    * the (count desc, gram asc) tie-break.
-    */
-  def topNgram(text: Column, n: Int): Column = {
-    val sorted = array_sort(wordNgrams(TextAnalysis.tokens(text), n))
-    val init = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("best"), lit("").as("bestGram"))
-    val folded = aggregate(sorted, init, (st, g) => {
-      val run = when(g === st.getField("prev"), st.getField("run") + 1L)
-        .otherwise(lit(1L))
-      val better = run > st.getField("best")
-      struct(g.as("prev"), run.as("run"),
-        when(better, run).otherwise(st.getField("best")).as("best"),
-        when(better, g).otherwise(st.getField("bestGram")).as("bestGram"))
-    })
-    struct(folded.getField("best").as("cnt"),
-      folded.getField("bestGram").as("gram"))
-  }
-
-  /** Characters covered by repeated n-grams: `Σ_{run length r ≥ 2} r·len` in
-    * one fold over the sorted gram array. When a run reaches 2 the first
-    * occurrence is retro-charged (`+2·len`); each further repeat adds `len`.
-    */
-  def dupNgramCharCount(text: Column, n: Int): Column = {
-    val sorted = array_sort(wordNgrams(TextAnalysis.tokens(text), n))
-    val init = struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("acc"))
-    val folded = aggregate(sorted, init, (st, g) => {
-      val run = when(g === st.getField("prev"), st.getField("run") + 1L)
-        .otherwise(lit(1L))
-      val add = when(run === 2L, length(g).cast("long") * 2L)
-        .otherwise(when(run > 2L, length(g).cast("long")).otherwise(lit(0L)))
-      struct(g.as("prev"), run.as("run"), (st.getField("acc") + add).as("acc"))
-    })
-    folded.getField("acc")
-  }
-
-  /** top-n-gram char fraction at scan speed (see object doc). */
-  def topNgramCharFraction(text: Column, n: Int): Column = {
-    val top = topNgram(text, n)
-    when(length(text) === 0, 0.0).otherwise(
-      top.getField("cnt") * length(top.getField("gram")) /
-        length(text).cast("double"))
-  }
-
-  /** duplicate-n-gram char fraction at scan speed (see object doc). */
-  def dupNgramCharFraction(text: Column, n: Int): Column =
-    when(length(text) === 0, 0.0)
-      .otherwise(dupNgramCharCount(text, n) / length(text).cast("double"))
 
   // ---- relational form: explode + groupBy, for oracle-mirrorable plans ----
 

@@ -327,10 +327,6 @@ object Similarity {
   def int8Codes(vec: Column, scale: Column): Column =
     transform(vec, x => round(x.cast("double") / scale).cast("long"))
 
-  /** Reconstruction from codes: qᵢ·scale. */
-  def int8Dequantize(codes: Column, scale: Column): Column =
-    transform(codes, q => q.cast("double") * scale)
-
   /** SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023, "SemDeDup:
     * Data-efficient learning at web-scale through semantic deduplication" —
     * public): cluster embeddings with the IVF coarse quantizer, list
@@ -557,15 +553,6 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("qd")).as("adist"))
-  }
-
-  def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, book: PqCodebook, k: Int): DataFrame = {
-    val scored = adcScores(queries, corpus, idCol, vecCol, book)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("rk"))
   }
 
   /** The production PQ pattern (FAISS's IVFPQ + refine): the ADC ranking

@@ -1710,13 +1710,13 @@ object ProcessGraph {
           val d = cube("data"); val t = cube("target")
           optStr("method").getOrElse("near") match {
             case "near" =>
-              // target axis labels: metadata-scale collects (axis lengths)
+              // target axis labels: known labels run no job, else one
+              // metadata-scale collect per axis
               val sd = t.meta.spatialDims
               require(sd.size == 2,
                 s"DimensionMissing: target has spatial dims $sd (need 2)")
               def labels(dim: String): Seq[Double] =
-                t.df.select(col(dim).cast("double")).distinct()
-                  .collect().map(_.getDouble(0)).sorted.toSeq
+                t.labelsOf(dim).map(_.toDouble).sorted
               CubeV(SpatialOps.resampleCubeSpatialNear(d,
                 labels(sd.head), labels(sd(1)), v => Reducers.meanR(v)))
             case "bilinear" =>

@@ -20,60 +20,52 @@ object PipelineQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Shared near-dup cluster frame for `dedup_clusters` and
-    * `dedup_survivors` — the minhash → banding → connected-components
-    * chain is the single most expensive computation in the registry, and
-    * survivor selection is BY CONSTRUCTION a filter over the cluster
-    * table, so computing the chain twice models the pipeline wrong (a
-    * production dedup job materializes clusters once and every downstream
-    * step reads them). Once-per-JVM + spark-persisted, the
-    * RasterFixture discipline: the source parquet cannot change under a
-    * running JVM. The cached frame is bounded — (doc_id, cluster) for
-    * near-dup members only, a small fraction of the corpus — and
-    * MEMORY_AND_DISK spills rather than evicts under pressure.
+  /** A memo entry built at most once: the map's lock is held only to find
+    * or add this holder, and the build runs in its `lazy val`, which one
+    * thread runs while any other thread that needs the same key waits for
+    * it. Builds of different keys run at the same time.
     */
-  private val frameCache =
-    scala.collection.mutable.HashMap[(SparkSession, String, String), DataFrame]()
-  /** Once-per-JVM eager frame memo, keyed by (session, dir, tag): a
-    * persisted DataFrame is wired to its SparkContext, so a frame cached
-    * by a stopped session must not leak into a later one in the same JVM
-    * — stopped sessions' entries are EVICTED on every access (without
-    * this the map pins dead sessions and their persisted frames for the
-    * JVM lifetime in long-lived multi-session JVMs, e.g. test suites).
-    * Safe because the source parquet cannot change under a running JVM
-    * (the RasterFixture discipline); MEMORY_AND_DISK spills rather than
-    * evicts under pressure.
+  private final class Once(build: => AnyRef) {
+    lazy val value: AnyRef = build
+  }
+
+  private val memos =
+    scala.collection.mutable.HashMap[(SparkSession, String, String), Once]()
+
+  /** Once-per-JVM memo keyed by (session, dir, tag), for frames and for
+    * trained model objects (quantizer codebooks etc., whose training runs
+    * Spark jobs — re-training per invocation turned a bench rep's wall
+    * time into mostly model fitting, the r12 `ann_pq_topk` 3.14 s spread).
+    * A persisted DataFrame is wired to its SparkContext, so an entry of a
+    * stopped session must not leak into a later one in the same JVM:
+    * stopped sessions' entries are EVICTED on every access (without this
+    * the map pins dead sessions and their persisted frames for the JVM
+    * lifetime in long-lived multi-session JVMs, e.g. test suites). Safe
+    * because the source parquet cannot change under a running JVM (the
+    * RasterFixture discipline).
+    */
+  private[graft] def memo[T <: AnyRef](tag: String, s: SparkSession,
+      dir: String)(build: => T): T = {
+    val once = memos.synchronized {
+      memos.filterInPlace { case ((sess, _, _), _) =>
+        !sess.sparkContext.isStopped
+      }
+      memos.getOrElseUpdate((s, dir, tag), new Once(build))
+    }
+    once.value.asInstanceOf[T]
+  }
+
+  /** [[memo]] for a frame, persisted and materialized eagerly so every
+    * consumer reads the cache; MEMORY_AND_DISK spills rather than evicts
+    * under pressure.
     */
   private def memoFrame(tag: String, s: SparkSession, dir: String)(
       build: => DataFrame): DataFrame =
-    frameCache.synchronized {
-      frameCache.filterInPlace { case ((sess, _, _), _) =>
-        !sess.sparkContext.isStopped
-      }
-      frameCache.getOrElseUpdate((s, dir, tag), {
-        val c = build
-        c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count() // materialize eagerly so every consumer reads the cache
-        c
-      })
-    }
-  /** Driver-side sibling of [[memoFrame]] for trained model OBJECTS
-    * (quantizer codebooks etc.): training runs Spark jobs (a count, two
-    * collects, a Lloyd pass for PQ), so re-training per invocation turns a
-    * bench rep's wall time into mostly model fitting — the r12
-    * `ann_pq_topk` 3.14 s spread. Same key + dead-session eviction
-    * discipline; the cached values are plain arrays, safe across sessions
-    * but evicted with them to bound the map.
-    */
-  private val modelCache =
-    scala.collection.mutable.HashMap[(SparkSession, String, String), AnyRef]()
-  private def memoModel[T <: AnyRef](tag: String, s: SparkSession,
-      dir: String)(build: => T): T =
-    modelCache.synchronized {
-      modelCache.filterInPlace { case ((sess, _, _), _) =>
-        !sess.sparkContext.isStopped
-      }
-      modelCache.getOrElseUpdate((s, dir, tag), build).asInstanceOf[T]
+    memo(tag, s, dir) {
+      val c = build
+      c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      c.count()
+      c
     }
 
   /** The PQ family's shared codebook (64 dims, 16×4-dim subspaces, 32
@@ -81,7 +73,7 @@ object PipelineQueries {
     * pq and ivfpq queries.
     */
   private def pqBook(s: SparkSession, dir: String): Similarity.PqCodebook =
-    memoModel("pq_codebook_64_16_32", s, dir) {
+    memo("pq_codebook_64_16_32", s, dir) {
       Similarity.pqCodebook(Tables.embeddings(s, dir), "vec_id",
         "embedding", dims = 64, m = 16, k = 32)
     }
@@ -92,7 +84,7 @@ object PipelineQueries {
     * i.e. two Spark jobs per bench rep) reads this instead.
     */
   private def ivfCents(s: SparkSession, dir: String): Array[Similarity.Centroid] =
-    memoModel("stride_centroids_16", s, dir) {
+    memo("stride_centroids_16", s, dir) {
       Similarity.strideCentroids(Tables.embeddings(s, dir), "vec_id",
         "embedding", 16)
     }
@@ -105,7 +97,7 @@ object PipelineQueries {
   // formulas only (a float log2 can land one ulp under an exact power
   // and flip the floor on one engine but not the other). ----
   private def embCount(s: SparkSession, dir: String): Long =
-    memoModel("emb_count", s, dir) {
+    memo("emb_count", s, dir) {
       java.lang.Long.valueOf(Tables.embeddings(s, dir).count())
     }.longValue()
 
@@ -127,7 +119,7 @@ object PipelineQueries {
 
   private def scaledIvfCents(
       s: SparkSession, dir: String): Array[Similarity.Centroid] =
-    memoModel("stride_centroids_scaled", s, dir) {
+    memo("stride_centroids_scaled", s, dir) {
       Similarity.strideCentroids(Tables.embeddings(s, dir), "vec_id",
         "embedding", scaledCells(embCount(s, dir)))
     }
@@ -149,6 +141,18 @@ object PipelineQueries {
       |               (11, 2048000), (12, 4096000)) t(j, thr)
       |  ON c.n >= t.thr)""".stripMargin
 
+  /** Shared near-dup cluster frame for `dedup_clusters` and
+    * `dedup_survivors` — the minhash → banding → connected-components
+    * chain is the single most expensive computation in the registry, and
+    * survivor selection is BY CONSTRUCTION a filter over the cluster
+    * table, so computing the chain twice models the pipeline wrong (a
+    * production dedup job materializes clusters once and every downstream
+    * step reads them). Once-per-JVM + spark-persisted, the
+    * RasterFixture discipline: the source parquet cannot change under a
+    * running JVM. The cached frame is bounded — (doc_id, cluster) for
+    * near-dup members only, a small fraction of the corpus — and
+    * MEMORY_AND_DISK spills rather than evicts under pressure.
+    */
   private def collapsedClusters(s: SparkSession, dir: String): DataFrame =
     memoFrame("clusters", s, dir) {
       Dedup.nearDupClustersCollapsed(Tables.documents(s, dir),

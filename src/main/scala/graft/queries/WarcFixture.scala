@@ -135,15 +135,8 @@ object WarcFixture {
     * every build; r7 paid this job on each timed `warc_extract` run).
     * Guarded by the object lock `ensureCorpus` already holds.
     */
-  private val corpusFp = scala.collection.mutable.HashMap[String, (Long, String)]()
-
-  /** Test hook: drop the memoized fingerprint for `sfDir`, simulating a
-    * fresh JVM over a possibly-rewritten corpus (the only situation where
-    * re-fingerprinting is meaningful — the memo exists precisely because
-    * the parquet cannot change under a running JVM).
-    */
-  private[graft] def forgetFingerprint(sfDir: String): Unit =
-    synchronized { corpusFp.remove(sfDir); () }
+  private[graft] val corpusFp =
+    scala.collection.mutable.HashMap[String, (Long, String)]()
 
   /** Write (idempotently, keyed by doc count + content fingerprint) a
     * sharded WARC corpus — one page per `documents` row, hash-partitioned

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** load_stac, Spark-native shape
@@ -11,19 +11,20 @@ import org.apache.spark.sql.functions._
   * bbox/time/properties → select band assets → lazy pixel load → post
   * filters. Here the catalog phase is driver-side metadata work (items are
   * small JSON), producing an ASSET TABLE: one row per (item, band asset)
-  * with href, datetime, bbox and band name. The reachable assets of a load
-  * then mount as ONE DataSourceV2 scan ([[graft.sources.v2.CubeSource]])
+  * with href, datetime, bbox and band name. The assets of a load then
+  * mount as ONE DataSourceV2 scan ([[graft.sources.v2.CubeSource]])
   * that plans every asset's chunk and strip/tile reads under the pushed
   * extent and packs them into core-sized partitions — thousands of COG
   * assets at 100 TB spread over every executor core, while a small raster
   * runs as a few tasks instead of one per chunk.
   *
-  * Pixel decode is REAL for reachable zarr stores ([[ZarrReader]], rank
-  * 2 and 3) and GeoTIFF/COG files ([[TiffReader]]); a reachable asset
-  * whose header does not parse fails the load. Only an UNREACHABLE href
-  * falls back to a deterministic fake grid, so the plumbing (asset table
-  * → cell fan-out → long-form cube with dim inference) runs end-to-end
-  * over a catalog of remote assets.
+  * Pixels decode from local zarr stores ([[ZarrReader]], rank 2 and 3)
+  * and GeoTIFF/COG files ([[TiffReader]]). Catalogs, items and assets are
+  * read from the local filesystem only: a catalog URL with another scheme
+  * fails with `StacUrlUnsupported`, an asset href that resolves to no
+  * local store or file with `AssetUnreachable`, and an asset whose header
+  * does not parse fails the load — the reference, too, raises rather than
+  * load pixels it cannot read.
   */
 object StacLoader {
 
@@ -106,18 +107,20 @@ object StacLoader {
     * `client.search()` phase (load.py:111-161): a filesystem catalog
     * instead of an API, the same item → asset-table product. Driver-side:
     * catalogs and items are kilobytes; the PIXELS fan out to executors.
+    * The catalog and its item links must be `file://` URLs or plain paths;
+    * any other scheme is a `StacUrlUnsupported` error naming the URL.
     */
   def loadCatalogItems(catalogPath: String): Seq[StacAsset] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val path = java.nio.file.Paths.get(catalogPath.stripPrefix("file://"))
+    val path = localPath(catalogPath)
     val root = JsonMethods.parse(java.nio.file.Files.readString(path))
     val base = path.toAbsolutePath.getParent
     (root \ "links") match {
       case JArray(ls) => ls.flatMap { l =>
         (l \ "rel", l \ "href") match {
           case (JString("item"), JString(href)) =>
-            val hp = java.nio.file.Paths.get(href.stripPrefix("file://"))
+            val hp = localPath(href)
             val p = if (hp.isAbsolute) hp else base.resolve(hp)
             parseItem(java.nio.file.Files.readString(p))
               .map(a => a.copy(href = itemRelative(p.getParent, a.href)))
@@ -126,6 +129,13 @@ object StacLoader {
       }
       case _ => Nil
     }
+  }
+
+  private def localPath(url: String): java.nio.file.Path = {
+    if (url.contains("://") && !url.startsWith("file://"))
+      throw new IllegalArgumentException(s"StacUrlUnsupported: $url " +
+        "(load_stac reads file catalogs only: a file:// URL or a local path)")
+    java.nio.file.Paths.get(url.stripPrefix("file://"))
   }
 
   private def itemRelative(itemDir: java.nio.file.Path, href: String)
@@ -216,28 +226,29 @@ object StacLoader {
     if (new java.io.File(path).isFile) Some(path) else None
   }
 
-  /** The asset mounted for the cube scan (its header parsed, or the
-    * parse error thrown) when its href is reachable; `None` = faked.
+  /** The asset mounted for the cube scan, its header parsed (or the parse
+    * error thrown); an href that resolves to no local zarr store or TIFF
+    * file is an `AssetUnreachable` error naming the href.
     */
-  private def mount(a: StacAsset): Option[v2.CubeSource.Asset] =
+  private def mount(a: StacAsset): v2.CubeSource.Asset =
     zarrDirOf(a).map(d => v2.CubeSource.zarr(d, a.west, a.south, a.east,
       a.north, a.band, a.datetime, a.timeLabels))
       .orElse(tiffPathOf(a).map(p => v2.CubeSource.tiff(p, a.west, a.south,
         a.east, a.north, a.band, a.datetime)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"AssetUnreachable: ${a.href} (no local zarr store or TIFF file)"))
 
-  /** Pixel load. Zarr assets whose href resolves to a reachable store
-    * decode for REAL through [[ZarrReader]], and reachable GeoTIFF/COG
+  /** Pixel load. Zarr stores decode through [[ZarrReader]] and GeoTIFF/COG
     * files through [[TiffReader]] (strips/tiles, none/LZW/JPEG/deflate/
-    * PackBits, chunky and planar band layouts, classic and BigTIFF) —
-    * one scan whose chunk and strip reads pack into core-sized
-    * partitions, row/col mapped onto the item bbox. Each reachable asset
-    * is mounted once, here: its header is parsed and carried into every
-    * later plan, and a header that does not parse (a corrupt TIFF, a zarr
-    * store of rank other than 2 or 3) or temporal labels that do not label
-    * a zarr store's axis-0 slices one each fail the load. Only an UNREACHABLE
-    * href (an object-store URI with no local copy) falls back to a
-    * deterministic fake grid; the plumbing (asset table → cell fan-out →
-    * long-form cube) is identical either way.
+    * PackBits, chunky and planar band layouts, classic and BigTIFF) — one
+    * scan whose chunk and strip reads pack into core-sized partitions,
+    * row/col mapped onto the item bbox. Each asset is mounted once, here,
+    * on the driver before any Spark job: its header is parsed and carried
+    * into every later plan. An href with no local store or file behind it
+    * (an object-store URI with no local copy) fails with
+    * `AssetUnreachable`; a header that does not parse (a corrupt TIFF, a
+    * zarr store of rank other than 2 or 3) or temporal labels that do not
+    * label a zarr store's axis-0 slices one each fail the load too.
     *
     * `projection` / `resolution` / `resampling` mirror the reference
     * loader's convenience args (cubes/load.py:94-109): decode at the native
@@ -246,19 +257,16 @@ object StacLoader {
     * resample_spatial, applied at the loader.
     */
   def loadCube(spark: SparkSession, assets: Seq[StacAsset],
-      gridSize: Int = 8,
       projection: Option[String] = None,
       resolution: Option[Double] = None,
       resampling: String = "near",
       bbox: Option[(Double, Double, Double, Double)] = None,
       timeRange: Option[(String, String)] = None): DataCube = {
-    import spark.implicits._
     // the openEO load contract (reference cubes/load.py:26-28): extents
     // that select NO items/assets are a named error, not an empty cube
     if (assets.isEmpty) throw new IllegalArgumentException(
       "NoDataAvailable: there is no data available for the given extents")
-    val (real, faked) = assets.partitionMap(a => mount(a).toLeft(a))
-    // reachable assets mount as ONE DataSourceV2 scan
+    // the assets mount as ONE DataSourceV2 scan
     // ([[graft.sources.v2.CubeSource]]): a cube-coordinate table
     // (x, y, t, bands, value) whose scan translates pushed x/y/t/bands
     // predicates into chunk-index and strip/tile ranges, then packs the
@@ -271,30 +279,10 @@ object StacLoader {
     // rank 3 is a time axis when the item declares cube:dimensions
     // temporal labels (one per axis-0 slice, or the mount fails), else
     // the common Sentinel (band, row, col).
-    val realParts =
-      if (real.isEmpty) Nil else Seq(v2.CubeSource.frame(spark, real))
-    val fakeParts =
-      if (faked.isEmpty) Nil
-      else {
-        val assetDf = faked.toDF()
-        Seq(assetDf
-          .withColumn("_i", explode(sequence(lit(0), lit(gridSize * gridSize - 1))))
-          .select(
-            (col("west") + (col("_i") % gridSize) *
-              ((col("east") - col("west")) / gridSize)).as("x"),
-            (col("south") + floor(col("_i") / gridSize) *
-              ((col("north") - col("south")) / gridSize)).as("y"),
-            to_timestamp(col("datetime")).as("t"),
-            col("band").as("bands"),
-            // fake value: stable hash of (asset, cell) — stands in for the pixel
-            (pmod(hash(col("itemId"), col("band"), col("_i")), lit(10000)) / 100.0)
-              .as("value")))
-      }
-    val unioned = (realParts ++ fakeParts).reduceLeft(_ unionByName _)
+    val unioned = v2.CubeSource.frame(spark, assets.map(mount))
     // exact closed-bounds trim (same contract as FilterOps.filterBbox):
     // the index-range pushdown above is deliberately a cell wider than the
-    // extent; this filter is the authoritative cut and also covers the
-    // fake-grid fallback assets
+    // extent; this filter is the authoritative cut
     val bboxed = bbox.fold(unioned) { case (w, s, e, n) =>
       unioned.filter(col("x").between(w, e) && col("y").between(s, n))
     }

@@ -89,14 +89,12 @@ object TiffReader {
     chain(level)
   }
 
-  /** The full IFD chain — a COG carries its overview pyramid as chained
-    * IFDs (level 0 = full resolution, then progressively reduced copies).
-    * Each is parsed with the same targeted range reads.
+  /** IFDs 0..`last` of the chain, fewer when the chain ends first — a COG
+    * carries its overview pyramid as chained IFDs (level 0 = full
+    * resolution, then progressively reduced copies). Each is parsed with
+    * the same targeted range reads.
     */
-  def readMetaAll(path: String): Seq[TiffMeta] = ifdChain(path, Int.MaxValue)
-
-  /** IFDs 0..`last` of the chain, fewer when the chain ends first. */
-  private def ifdChain(path: String, last: Int): Seq[TiffMeta] = {
+  private[graft] def ifdChain(path: String, last: Int): Seq[TiffMeta] = {
     val raf = new java.io.RandomAccessFile(path, "r")
     try {
       var out = List(readIfd(raf, None))

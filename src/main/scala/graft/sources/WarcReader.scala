@@ -277,22 +277,6 @@ object WarcReader {
     * downstream dedup/quota stages key on. This is the frame
     * `htmlExtract` → `lineDedup` → `crawl_e2e` consume.
     */
-  /** The WET projection: `conversion` records (Common Crawl's
-    * pre-extracted-text sidecar format — same WARC envelope, block IS the
-    * page text, no HTTP layer), decoded as lenient UTF-8 plus the same
-    * canonical URL / PSL domain keys as [[loadResponses]], so a pipeline
-    * can start from either container interchangeably.
-    */
-  def loadConversions(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val t = graft.pipeline.TextAnalysis
-    load(spark, paths)
-      .where(col("record_type") === "conversion")
-      .withColumn("text", col("body").cast("string"))
-      .withColumn("canonical_url", t.canonicalizeUrl(col("url")))
-      .withColumn("domain", t.registeredDomain(t.urlHost(col("canonical_url"))))
-      .drop("record_type", "body")
-  }
-
   def loadResponses(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val t = graft.pipeline.TextAnalysis
     load(spark, paths)

